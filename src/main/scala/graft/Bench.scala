@@ -1,23 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // bucketed/catalog tables land in a run-unique tmp warehouse,
-      // never in the working directory
-      .config("spark.sql.warehouse.dir",
-        graft.engine.Scratch.dir(
-        s"${System.getProperty("java.io.tmpdir")}/graft_wh_${ProcessHandle.current().pid()}"))
-      .getOrCreate()
+    val spark = GraftSession.build(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // Warmup 1: touch every table once (OS page cache + reader/codegen
     // JIT) so per-query numbers reflect steady state, not first-touch.
@@ -190,13 +176,7 @@ object Bench {
       else passBuf += timedPass()
     }
     val passes = passBuf.toSeq
-    graft.queries.MLShared.release()
-    graft.queries.SketchShared.release()
-    graft.queries.RetrievalShared.release()
-    graft.queries.BpeShared.release()
-    graft.engine.SimilarityOps.release()
-    graft.engine.DedupOps.release()
-    graft.engine.TextOps.release()
+    graft.engine.Artifacts.releaseAll()
     val results = names.indices.map { i =>
       val name = passes.head(i)._1
       val oks = passes.map(_(i)).filter(_._3).map(_._2)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,23 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Reference semantics are PySpark 3.4 non-ANSI: bad casts -> null
-      // (reference: app/ml_app.py:479-485); Spark 4 defaults ANSI on.
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // events.parquet stores TIMESTAMP(NANOS); see Tables.events.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // bucketed/catalog tables land in a run-unique tmp warehouse,
-      // never in the working directory
-      .config("spark.sql.warehouse.dir",
-        graft.engine.Scratch.dir(
-        s"${System.getProperty("java.io.tmpdir")}/graft_wh_${ProcessHandle.current().pid()}"))
-      .getOrCreate()
+    val spark = GraftSession.build(cpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // CLEAN-/tmp sweep BEFORE anything runs (VERDICT r11 #2): delete
@@ -102,13 +85,7 @@ object Verify {
       .map(sp => s"${q(sp.name)}: ${sp.dumps.map(d => q(d.path)).mkString("[", ",", "]")}")
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/dumps.json"), dumpsJson)
-    graft.queries.MLShared.release()
-    graft.queries.SketchShared.release()
-    graft.queries.RetrievalShared.release()
-    graft.queries.BpeShared.release()
-    graft.engine.SimilarityOps.release()
-    graft.engine.DedupOps.release()
-    graft.engine.TextOps.release()
+    graft.engine.Artifacts.releaseAll()
     spark.stop()
   }
 }

@@ -76,9 +76,6 @@ object CorpusOps {
     funnelReport(toks, stages)
   }
 
-  private[graft] def curationStageTableName(tag: String, part: String): String =
-    s"cur_stage_${Integer.toHexString(tag.hashCode)}_$part"
-
   private val curationStageNames =
     Seq("input", "exact_dedup", "near_dedup", "quality_gate", "decontam")
 
@@ -96,19 +93,12 @@ object CorpusOps {
     * only (the catalog form); callers with custom edges derive
     * inline. */
   def curationStagesFor(documents: DataFrame, tag: String)
-      : (DataFrame, Seq[(String, DataFrame)]) = synchronized {
-    val spark = documents.sparkSession
-    val tokT = curationStageTableName(tag, "toks")
-    if (!spark.catalog.tableExists(tokT)) {
-      val (toks, stages) = curationStageIds(documents, None)
-      toks.write.mode("overwrite").saveAsTable(tokT)
-      stages.foreach { case (nm, ids) =>
-        ids.write.mode("overwrite").saveAsTable(curationStageTableName(tag, nm))
-      }
-    }
-    (spark.read.table(tokT),
-     curationStageNames.map(nm =>
-       nm -> spark.read.table(curationStageTableName(tag, nm))))
+      : (DataFrame, Seq[(String, DataFrame)]) = {
+    lazy val (toks, stages) = curationStageIds(documents, None)
+    def stored(part: String)(build: => DataFrame) =
+      Artifacts.table(s"cur_stage_$part", Seq(tag), Seq(documents))(build)
+    (stored("toks")(toks),
+     curationStageNames.map(nm => nm -> stored(nm)(stages.toMap.apply(nm))))
   }
 
   /** The q91 pipeline's per-stage survivor id-frames — shared by the
@@ -253,12 +243,6 @@ object CorpusOps {
       ingestReport(batch, ingestStages(storedFps, storedSigs, batch, batchSigs))
   }
 
-  private[graft] def ingestStageTableName(tag: String, part: String): String =
-    s"ingest_stage_${Integer.toHexString(tag.hashCode)}_$part"
-
-  private val ingestStageNames =
-    Seq("input", "exact_vs_stored", "quality_gate", "near_dup_vs_stored")
-
   /** The PERSISTED ingest-tick keep-lists + token pricing — the q247
     * tick's per-stage survivor id-frames as corpus-version artifacts
     * (the [[curationStagesFor]] posture applied to the incremental
@@ -272,24 +256,17 @@ object CorpusOps {
     * carried state keep the inline path. */
   def ingestStagesFor(storedFps: DataFrame, storedSigs: DataFrame,
                       batch: DataFrame, batchSigs: DataFrame, tag: String)
-      : (DataFrame, Seq[(String, DataFrame)]) = synchronized {
-    val spark = batch.sparkSession
-    val tokT = ingestStageTableName(tag, "toks")
-    if (!spark.catalog.tableExists(tokT)) {
-      ingestToks(batch).write.mode("overwrite").saveAsTable(tokT)
-      val (exactKeep, gateKeep, ndKeep) =
-        ingestStages(storedFps, storedSigs, batch, batchSigs)
-      Seq("input" -> batch.select(col("doc_id")),
-          "exact_vs_stored" -> exactKeep,
-          "quality_gate" -> gateKeep,
-          "near_dup_vs_stored" -> ndKeep)
-        .foreach { case (nm, ids) =>
-          ids.write.mode("overwrite").saveAsTable(ingestStageTableName(tag, nm))
-        }
-    }
-    (spark.read.table(tokT),
-     ingestStageNames.map(nm =>
-       nm -> spark.read.table(ingestStageTableName(tag, nm))))
+      : (DataFrame, Seq[(String, DataFrame)]) = {
+    lazy val (exactKeep, gateKeep, ndKeep) =
+      ingestStages(storedFps, storedSigs, batch, batchSigs)
+    def stored(part: String)(build: => DataFrame) =
+      Artifacts.table(s"ingest_stage_$part", Seq(tag),
+        Seq(storedFps, storedSigs, batch, batchSigs))(build)
+    (stored("toks")(ingestToks(batch)),
+     Seq("input" -> stored("input")(batch.select(col("doc_id"))),
+         "exact_vs_stored" -> stored("exact_vs_stored")(exactKeep),
+         "quality_gate" -> stored("quality_gate")(gateKeep),
+         "near_dup_vs_stored" -> stored("near_dup_vs_stored")(ndKeep)))
   }
 
   /** The q220-shaped attrition rollup over a stage triple — split
@@ -693,13 +670,7 @@ object CorpusOps {
     * Deterministic exact-integer sums ⇒ stored ≡ inline — asserted
     * in CoreSpec and by every consumer's oracle. */
   def corpusCardStateFor(documents: DataFrame, tag: String): DataFrame =
-    synchronized {
-      val spark = documents.sparkSession
-      val t = s"card_state_${Integer.toHexString(tag.hashCode)}"
-      if (!spark.catalog.tableExists(t))
-        corpusCardState(documents).write.mode("overwrite").saveAsTable(t)
-      spark.read.table(t)
-    }
+    Artifacts.table("card_state", Seq(tag), Seq(documents))(corpusCardState(documents))
 
   private[engine] def cardFromState(state: DataFrame): DataFrame =
     state
@@ -1437,10 +1408,6 @@ object CorpusOps {
     keyed.withColumn("pos", row_number().over(w).cast("long"))
   }
 
-  private[graft] def epochOrderTableName(tag: String, budgetMult: Long,
-                                         maxEpochs: Long, nShards: Int): String =
-    s"epoch_order_${Integer.toHexString(tag.hashCode)}_${budgetMult}_${maxEpochs}_$nShards"
-
   /** The PERSISTED training-order rows — the loader artifact the
     * family's own contract names (every scaladoc here says "a
     * production run writes the manifest once and every consumer reads
@@ -1452,14 +1419,9 @@ object CorpusOps {
     * bit-identical to the inline derivation. */
   def epochOrderRowsFor(documents: DataFrame, tag: String,
                         budgetMult: Long = 4L, maxEpochs: Long = 4L,
-                        nShards: Int = 8): DataFrame = synchronized {
-    val spark = documents.sparkSession
-    val t = epochOrderTableName(tag, budgetMult, maxEpochs, nShards)
-    if (!spark.catalog.tableExists(t))
-      epochOrderRows(documents, budgetMult, maxEpochs, nShards)
-        .write.mode("overwrite").saveAsTable(t)
-    spark.read.table(t)
-  }
+                        nShards: Int = 8): DataFrame =
+    Artifacts.table("epoch_order", Seq(tag, budgetMult, maxEpochs, nShards), Seq(documents))(
+      epochOrderRows(documents, budgetMult, maxEpochs, nShards))
 
   /** The PERSISTED pack spans (the q297 rows WITH running mass) —
     * derived from the stored order rows with one packing cumsum, then
@@ -1467,17 +1429,10 @@ object CorpusOps {
   def epochPackRowsFor(documents: DataFrame, tag: String,
                        budgetMult: Long = 4L, maxEpochs: Long = 4L,
                        nShards: Int = 8, seqLen: Int = 2048): DataFrame =
-    synchronized {
-      val spark = documents.sparkSession
-      val t = epochOrderTableName(tag, budgetMult, maxEpochs, nShards) +
-        s"_pk$seqLen"
-      if (!spark.catalog.tableExists(t))
-        epochPackRowsFromOrder(
-            epochOrderRowsFor(documents, tag, budgetMult, maxEpochs, nShards),
-            seqLen)
-          .write.mode("overwrite").saveAsTable(t)
-      spark.read.table(t)
-    }
+    Artifacts.table("epoch_pack", Seq(tag, budgetMult, maxEpochs, nShards, seqLen),
+        Seq(documents))(
+      epochPackRowsFromOrder(
+        epochOrderRowsFor(documents, tag, budgetMult, maxEpochs, nShards), seqLen))
 
   /** The ONE derivation site for the epoch-folded permutation key:
     * admitted pairs → shuffle_key = xxhash64(doc_id·8 + epoch) and
@@ -1881,15 +1836,9 @@ object CorpusOps {
     * tree, so the stored rows are bit-identical to the inline form. */
   def annealOrderRowsFor(documents: DataFrame, tag: String,
                          budgetMult: Long = 4L, maxEpochs: Long = 4L,
-                         nShards: Int = 8): DataFrame = synchronized {
-    val spark = documents.sparkSession
-    val t = "anneal_" +
-      epochOrderTableName(tag, budgetMult, maxEpochs, nShards)
-    if (!spark.catalog.tableExists(t))
-      annealOrderRows(documents, budgetMult, maxEpochs, nShards)
-        .write.mode("overwrite").saveAsTable(t)
-    spark.read.table(t)
-  }
+                         nShards: Int = 8): DataFrame =
+    Artifacts.table("anneal_order", Seq(tag, budgetMult, maxEpochs, nShards), Seq(documents))(
+      annealOrderRows(documents, budgetMult, maxEpochs, nShards))
 
   /** The ranked anneal-order rows WITH token masses — [[annealOrder]]
     * adds the q301 shape; [[annealPack]] packs by them, so the two
@@ -2574,9 +2523,6 @@ object CorpusOps {
       .orderBy(col("artifact"), col("key"))
   }
 
-  private[graft] def manifestTableName(tag: String): String =
-    s"seq_manifest_${Integer.toHexString(tag.hashCode)}"
-
   /** The PERSISTED q105 sequence manifest — the packing family's
     * loader artifact as a catalog table (the lmModelFor pattern: one
     * packing pass per corpus version, ever; every consumer — the
@@ -2586,13 +2532,9 @@ object CorpusOps {
     * and one that re-packs the corpus to find out what to purge
     * (SCALE.md flagged the derivation as the q268 dominator). */
   def sequenceManifestFor(documents: DataFrame, tag: String,
-                          seqLen: Int = 2048): DataFrame = synchronized {
-    val spark = documents.sparkSession
-    val t = manifestTableName(tag)
-    if (!spark.catalog.tableExists(t))
-      sequenceManifest(documents, seqLen).write.mode("overwrite").saveAsTable(t)
-    spark.read.table(t)
-  }
+                          seqLen: Int = 2048): DataFrame =
+    Artifacts.table("seq_manifest", Seq(tag, seqLen), Seq(documents))(
+      sequenceManifest(documents, seqLen))
 
   /** Corpus-card takedown fold-OUT (r15, VERDICT r14 missing #1): the
     * [[corpusCardIncrementalState]] addition run backwards — the

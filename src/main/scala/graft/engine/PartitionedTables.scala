@@ -65,10 +65,10 @@ object PartitionedTables {
     * one-time MSCK equivalent; subsequent reads prune through catalog
     * partition metadata. Idempotent per session. */
   def registerCatalog(spark: SparkSession, sfDir: String): String = synchronized {
-    // sfDir-tagged (like ensureBucketed): one session may serve several
-    // scale factors, and an untagged name would silently resolve every
-    // later sfDir to the first one's data
-    val name = s"orders_by_month_${Integer.toHexString(sfDir.hashCode)}"
+    // named by the orders table's identity (like ensureBucketed): one
+    // session may serve several scale factors, and a fixed name would
+    // silently resolve every later sfDir to the first one's data
+    val name = Artifacts.nameFor("orders_by_month", Nil, Seq(Tables.orders(spark, sfDir)))
     val base = ensure(spark, sfDir)
     if (!spark.catalog.tableExists(name)) {
       spark.catalog.createTable(name, s"$base/orders_by_month", "parquet")
@@ -84,27 +84,18 @@ object PartitionedTables {
     * needs no exchange on either side (asserted on the plan in
     * ScaleSpec). At 100 TB this is THE layout decision for repeated
     * fact⋈fact joins; q45's runtime repartition expresses the same
-    * intent per-query, this persists it. Table names carry the sfDir
-    * hash (one warehouse serves multiple scale factors); idempotent
-    * per session/catalog. */
+    * intent per-query, this persists it. Both are
+    * [[Artifacts]] tables keyed by the bucket count and the source
+    * table's identity. */
   def ensureBucketed(spark: SparkSession, sfDir: String, buckets: Int = 8): (String, String) = {
-    val tag = Integer.toHexString(sfDir.hashCode)
-    val (ot, ct) = (s"orders_bkt_$tag", s"customer_bkt_$tag")
-    synchronized {
-      // guard on BOTH tables (a partial earlier failure must repair,
-      // not wedge the session) and overwrite so the repair path works
-      if (!spark.catalog.tableExists(ot) || !spark.catalog.tableExists(ct)) {
-        Tables.orders(spark, sfDir)
-          .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-          .write.mode("overwrite")
-          .bucketBy(buckets, "o_custkey").sortBy("o_custkey").saveAsTable(ot)
-        Tables.customer(spark, sfDir)
-          .select(col("c_custkey"), col("c_mktsegment"))
-          .write.mode("overwrite")
-          .bucketBy(buckets, "c_custkey").sortBy("c_custkey").saveAsTable(ct)
-      }
-    }
-    (ot, ct)
+    val orders = Tables.orders(spark, sfDir)
+    val customer = Tables.customer(spark, sfDir)
+    (Artifacts.ensure("orders_bkt", Seq(buckets), Seq(orders),
+       Some(Artifacts.Buckets(buckets, "o_custkey", "o_custkey")))(
+       orders.select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))),
+     Artifacts.ensure("customer_bkt", Seq(buckets), Seq(customer),
+       Some(Artifacts.Buckets(buckets, "c_custkey", "c_custkey")))(
+       customer.select(col("c_custkey"), col("c_mktsegment"))))
   }
 
   /** The q45 segment rollup over the BUCKETED tables: the orders ⋈

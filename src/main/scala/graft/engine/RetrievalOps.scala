@@ -332,7 +332,7 @@ object RetrievalOps {
     * postings scan); scoring is the q145 expression tree verbatim
     * (rational idf, DECIMAL-exact per-doc sum), so the oracle
     * replays it; the rank window is candidate-bounded per anchor.
-    * The positive set rides the memoized corpus closure
+    * The positive set rides the stored corpus closure
     * ([[DedupOps.clustersFor]]). */
   def hardNegatives(postings: DataFrame, doclens: DataFrame, clusters: DataFrame,
                     anchors: Seq[Long] = Seq(0L, 20L, 40L, 80L, 120L),

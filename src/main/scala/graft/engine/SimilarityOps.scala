@@ -265,48 +265,22 @@ object SimilarityOps {
             "(x, i) -> IF(x > 0.0D, shiftleft(CAST(1 AS BIGINT), i), CAST(0 AS BIGINT))), " +
             "CAST(0 AS BIGINT), (acc, b) -> acc + b))"))
 
-  private[graft] def binarySigsTableName(tag: String): String =
-    s"bin_sigs_${Integer.toHexString(tag.hashCode)}"
-
-  private[graft] def binarySigsWideTableName(tag: String): String =
-    s"bin_sigsw_${Integer.toHexString(tag.hashCode)}"
-
-  /** Persist the signature column as its own catalog table
+  /** The signature column as its own [[Artifacts]] table
     * (vec_id, sig) — the serving artifact the 32× rung reads instead
     * of the float vectors. Not a fitted model (no quantizer), so this
     * is a cache of exact deterministic integers; a re-derivation is
     * bit-identical, which is exactly what lets the oracle certify the
     * stored table by recomputing it. */
-  def ensureBinarySigsTable(embeddings: DataFrame, tag: String): String = {
-    val spark = embeddings.sparkSession
-    val t = binarySigsTableName(tag)
-    synchronized {
-      if (!spark.catalog.tableExists(t))
-        binarySignatures(embeddings).select(col("vec_id"), col("sig"))
-          .write.mode("overwrite").saveAsTable(t)
-    }
-    t
-  }
-
   def binarySigsFor(embeddings: DataFrame, tag: String): DataFrame =
-    embeddings.sparkSession.read.table(ensureBinarySigsTable(embeddings, tag))
+    Artifacts.table("bin_sigs", Seq(tag), Seq(embeddings))(
+      binarySignatures(embeddings).select(col("vec_id"), col("sig")))
 
   /** Persisted multi-word signature table (vec_id, sig ARRAY<BIGINT>)
-    * — same cache-of-exact-integers contract as
-    * [[ensureBinarySigsTable]], for the d > 64 path. */
-  def ensureBinarySigsWideTable(embeddings: DataFrame, tag: String): String = {
-    val spark = embeddings.sparkSession
-    val t = binarySigsWideTableName(tag)
-    synchronized {
-      if (!spark.catalog.tableExists(t))
-        binarySignaturesWide(embeddings).select(col("vec_id"), col("sig"))
-          .write.mode("overwrite").saveAsTable(t)
-    }
-    t
-  }
-
+    * — same cache-of-exact-integers contract as [[binarySigsFor]],
+    * for the d > 64 path. */
   def binarySigsWideFor(embeddings: DataFrame, tag: String): DataFrame =
-    embeddings.sparkSession.read.table(ensureBinarySigsWideTable(embeddings, tag))
+    Artifacts.table("bin_sigsw", Seq(tag), Seq(embeddings))(
+      binarySignaturesWide(embeddings).select(col("vec_id"), col("sig")))
 
   /** Binary-quantized search fidelity (q264) — the read path the 32×
     * rung buys: candidates rank by HAMMING distance on the 8-byte
@@ -458,14 +432,14 @@ object SimilarityOps {
     * kmeans fit, the PQ codebook fit and the IVF-PQ codebook + codes
     * build for rows the query immediately discards. Default = the full
     * ladder (q266/q274 and the wide-capability spec are unchanged);
-    * the memo key carries the rung set so subset and full reports
-    * never alias. */
+    * the stored report is keyed by the rung set so subset and full
+    * reports never alias. */
   def annLadder(embeddings: DataFrame, tag: String,
                 nQueries: Int = 5, k: Int = 10,
                 rungs: Seq[String] = AllLadderRungs): DataFrame =
-    memoReport(embeddings.sparkSession,
-      s"ladder:$tag:$nQueries:$k:${rungs.sorted.mkString("_")}") {
-      annLadderBuild(embeddings, tag, nQueries, k, rungs.toSet) }
+    Artifacts.table("ann_ladder", Seq(tag, nQueries, k, rungs.sorted), Seq(embeddings))(
+      annLadderBuild(embeddings, tag, nQueries, k, rungs.toSet))
+      .orderBy(col("method"))
 
   private def annLadderBuild(embeddings: DataFrame, tag: String,
                              nQueries: Int, k: Int,
@@ -712,15 +686,9 @@ object SimilarityOps {
     * are an eagerly-materialized localCheckpoint; at 100 TB they
     * persist as a table PARTITIONED/bucketed by `list_id`, so each
     * probe prunes to nProbe/nLists of the corpus at the scan. */
-  /** Build-count test hook: ScaleSpec asserts a persisted-index load
-    * performs ZERO quantizer fits (tests run sequentially —
-    * build.sbt pins parallelExecution := false). */
-  private[graft] var indexBuilds: Int = 0
-
   def buildIvfIndex(embeddings: DataFrame, nLists: Int = 16): IvfIndex = {
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
-    synchronized { indexBuilds += 1 }
     val spark = embeddings.sparkSession
     import spark.implicits._
     val withFv = embeddings.withColumn("fv", array_to_vector(col("embedding")))
@@ -735,123 +703,62 @@ object SimilarityOps {
     IvfIndex(assigned, centers, nLists)
   }
 
-  /** Session-lifetime index memo, keyed by (caller tag, nLists) — the
-    * [[graft.queries.MLShared]] pattern: the first query over a corpus
-    * pays the quantizer fit, every later probe reuses it. [[release]]
-    * drops the memo (Verify/Bench end-of-run).
-    *
-    * The memo is only the FAST path: behind it the index lives as a
-    * pair of CATALOG TABLES ([[ensureIvfTables]]), so a brand-new
-    * session — or a different process sharing the warehouse — loads
-    * the assignments with NO quantizer refit (asserted in ScaleSpec).
-    * That is the cross-session persistence SCALE.md claims: the build
-    * is an offline job, probes are table scans. */
-  // (session, tag, nLists)-keyed like DedupOps.clustersFor: a tag
-  // surviving a SparkSession restart must not resurrect dead plans
-  @transient private var ivfMemo
-    : Map[(org.apache.spark.sql.SparkSession, String, Int), IvfIndex] = Map.empty
-
-  /** Catalog table names for a persisted IVF index: assignments
-    * (bucketed by list_id) + centroids. Tag-hashed like
-    * [[PartitionedTables.ensureBucketed]] so one warehouse serves
-    * multiple corpora. */
-  private[graft] def ivfTableNames(tag: String, nLists: Int): (String, String) = {
-    val h = Integer.toHexString(tag.hashCode)
-    (s"ivf_assign_${h}_$nLists", s"ivf_centers_${h}_$nLists")
-  }
-
-  /** Materialize the IVF index as catalog tables if absent, then load
-    * it from the catalog. The assignments table is BUCKETED on
-    * `list_id` (the probe key): locally that pins the layout; on a
-    * cluster the same bucketing means an in-list probe with a literal
-    * `list_id IN (…)` filter (the probe set is nQueries×nProbe ints —
-    * driver-collectable by construction) prunes the scan to
-    * nProbe/nLists of the corpus before any join. Idempotent per
-    * catalog; `overwrite` keeps the repair path working after a
-    * partial failure. */
+  /** Materialize the IVF index as two [[Artifacts]] tables —
+    * assignments and centroids, keyed by (tag, nLists, the embeddings'
+    * identity) — then load it from the catalog, so a brand-new session
+    * (or another process sharing the warehouse) loads the assignments
+    * with NO quantizer refit (asserted in ScaleSpec): the build is an
+    * offline job, probes are table scans. The assignments table is
+    * BUCKETED on `list_id` (the probe key): locally that pins the
+    * layout; on a cluster the same bucketing means an in-list probe
+    * with a literal `list_id IN (…)` filter (the probe set is
+    * nQueries×nProbe ints — driver-collectable by construction) prunes
+    * the scan to nProbe/nLists of the corpus before any join. */
   def ensureIvfTables(embeddings: DataFrame, tag: String, nLists: Int = 16): (String, String) = {
-    val spark = embeddings.sparkSession
-    val (at, ct) = ivfTableNames(tag, nLists)
-    synchronized {
-      if (!spark.catalog.tableExists(at) || !spark.catalog.tableExists(ct)) {
-        val idx = buildIvfIndex(embeddings, nLists)
-        idx.assigned.select(col("vec_id"), col("vec"), col("norm"), col("list_id"))
-          .write.mode("overwrite")
-          .bucketBy(nLists, "list_id").sortBy("vec_id").saveAsTable(at)
-        idx.centers.write.mode("overwrite").saveAsTable(ct)
-      }
-    }
-    (at, ct)
+    lazy val idx = buildIvfIndex(embeddings, nLists)
+    (Artifacts.ensure("ivf_assign", Seq(tag, nLists), Seq(embeddings),
+       Some(Artifacts.Buckets(nLists, "list_id", "vec_id")))(
+       idx.assigned.select(col("vec_id"), col("vec"), col("norm"), col("list_id"))),
+     Artifacts.ensure("ivf_centers", Seq(tag, nLists), Seq(embeddings))(idx.centers))
   }
 
-  def ivfIndexFor(embeddings: DataFrame, tag: String, nLists: Int = 16): IvfIndex =
-    synchronized {
-      ivfMemo.getOrElse((embeddings.sparkSession, tag, nLists), {
-        val (at, ct) = ensureIvfTables(embeddings, tag, nLists)
-        val spark = embeddings.sparkSession
-        val idx = IvfIndex(
-          spark.read.table(at).select(col("vec_id"), col("vec"), col("norm"), col("list_id")),
-          spark.read.table(ct),
-          nLists)
-        ivfMemo += ((embeddings.sparkSession, tag, nLists) -> idx)
-        idx
-      })
-    }
+  def ivfIndexFor(embeddings: DataFrame, tag: String, nLists: Int = 16): IvfIndex = {
+    val (at, ct) = ensureIvfTables(embeddings, tag, nLists)
+    val spark = embeddings.sparkSession
+    IvfIndex(
+      spark.read.table(at).select(col("vec_id"), col("vec"), col("norm"), col("list_id")),
+      spark.read.table(ct),
+      nLists)
+  }
 
-  def release(): Unit =
-    synchronized { ivfMemo = Map.empty; pqMemo = Map.empty
-                   rebMemo = Map.empty; reportMemo = Map.empty
-                   shadowMemo = Map.empty; promoMemo = Map.empty }
-
-  /** Session-lifetime memo for the dimension-sized POLICY REPORTS
-    * (the q266 ladder, the q269/q272 nProbe sweeps): each is a
+  /** The dimension-sized POLICY REPORTS (the q266 ladder, the
+    * q269/q272 nProbe sweeps) are [[Artifacts]] tables: each is a
     * ≤ ~15-row relation derived deterministically from the persisted
     * index artifacts, and the q274 selector joins exactly the reports
-    * the three constituent queries also serve — memoizing makes the
-    * capstone READ its constituents instead of re-pricing every rung.
-    * Values are localCheckpointed (tiny), keyed by (session,
-    * descriptor); [[release]] drops them with the other memos.
-    *
-    * THE TAG PINS THE DATASET (ADVICE r15): like [[ivfIndexFor]] and
-    * every other tagged artifact here, the memo key is (session, tag,
-    * params) and deliberately ignores the DataFrame arguments — a tag
-    * names ONE corpus for the session's lifetime, so a second call
-    * with the same tag but different embeddings/codes returns the
-    * first dataset's report. Callers scoring a different corpus must
-    * use a fresh tag (the specs' `"w" + dir` pattern) or [[release]]
-    * first. */
-  @transient private var reportMemo: Map[(SparkSession, String), DataFrame] =
-    Map.empty
-  private def memoReport(spark: SparkSession, key: String)
-                        (build: => DataFrame): DataFrame =
-    synchronized {
-      reportMemo.getOrElse((spark, key), {
-        val df = build.localCheckpoint(false)
-        reportMemo += ((spark, key) -> df)
-        df
-      })
-    }
-
-  /** Memoized [[ivfProbeSweep]] over the tagged (persisted) index —
+    * the three constituent queries also serve, so the capstone READS
+    * its constituents instead of re-pricing every rung. Keyed by every
+    * parameter and the identity of the frames they score. */
+  /** Stored [[ivfProbeSweep]] over the tagged (persisted) index —
     * the form q269 and the q274 selector share. */
   def ivfProbeSweepFor(index: IvfIndex, tag: String,
                        nProbes: Seq[Int] = Seq(1, 2, 4, 8, 16),
                        nQueries: Int = 5, k: Int = 10): DataFrame =
-    memoReport(index.assigned.sparkSession,
-      s"ivfsweep:$tag:${nProbes.mkString("_")}:$nQueries:$k") {
-      ivfProbeSweep(index, nProbes, nQueries, k) }
+    Artifacts.table("ivf_sweep", Seq(tag, nProbes, nQueries, k),
+        Seq(index.assigned, index.centers))(
+      ivfProbeSweep(index, nProbes, nQueries, k))
+      .orderBy(col("n_probe"))
 
-  /** Memoized [[ivfPqProbeSweep]] over the tagged artifacts — the
+  /** Stored [[ivfPqProbeSweep]] over the tagged artifacts — the
     * form q272 and the q274 selector share. */
   def ivfPqProbeSweepFor(index: IvfIndex, cb: PqCodebook,
                          embeddings: DataFrame, storedCodes: DataFrame,
                          tag: String,
                          nProbes: Seq[Int] = Seq(1, 2, 4, 8, 16),
                          nQueries: Int = 5, k: Int = 10): DataFrame =
-    memoReport(embeddings.sparkSession,
-      s"ivfpqsweep:$tag:${nProbes.mkString("_")}:$nQueries:$k") {
-      ivfPqProbeSweep(index, cb, embeddings, storedCodes, nProbes,
-        nQueries, k) }
+    Artifacts.table("ivfpq_sweep", Seq(tag, nProbes, nQueries, k),
+        Seq(index.assigned, index.centers, cb.centers, embeddings, storedCodes))(
+      ivfPqProbeSweep(index, cb, embeddings, storedCodes, nProbes, nQueries, k))
+      .orderBy(col("n_probe"))
 
   /** Stable location of the oracle-facing IVF index dump (see
     * [[dumpIvfOracle]]). A constant because the q67 oracle SQL embeds
@@ -1214,10 +1121,6 @@ object SimilarityOps {
     * any scale (m and k are index parameters). */
   final case class PqCodebook(centers: DataFrame, m: Int, k: Int, subDim: Int)
 
-  /** Build-count test hook, like [[indexBuilds]]: ScaleSpec asserts a
-    * persisted-codebook load performs ZERO sub-quantizer fits. */
-  private[graft] var pqBuilds: Int = 0
-
   /** Fit the PQ codebook: one seeded k-means per subspace over the
     * corpus' subvector slice (m fits of k centroids each — the
     * offline, amortizable step, exactly [[buildIvfIndex]]'s position
@@ -1226,7 +1129,6 @@ object SimilarityOps {
   def buildPqCodebook(embeddings: DataFrame, m: Int = 4, k: Int = 16): PqCodebook = {
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
-    synchronized { pqBuilds += 1 }
     val spark = embeddings.sparkSession
     import spark.implicits._
     val dim = embeddings.select(size(col("embedding"))).head().getInt(0)
@@ -1246,39 +1148,22 @@ object SimilarityOps {
     PqCodebook(rows.toDF("subspace", "code", "centroid"), m, k, subDim)
   }
 
-  private[graft] def pqTableName(tag: String, m: Int, k: Int): String =
-    s"pq_centers_${Integer.toHexString(tag.hashCode)}_${m}_$k"
-
-  @transient private var pqMemo
-    : Map[(org.apache.spark.sql.SparkSession, String, Int, Int), PqCodebook] = Map.empty
-
-  /** Materialize the codebook as a catalog table if absent — the
-    * cross-session persistence contract ([[ensureIvfTables]]): a new
-    * session loads it with no quantizer refit (ScaleSpec). */
+  /** The codebook as an [[Artifacts]] table — the cross-session
+    * persistence contract ([[ensureIvfTables]]): a new session loads it
+    * with no quantizer refit (ScaleSpec). */
   def ensurePqTable(embeddings: DataFrame, tag: String,
-                    m: Int = 4, k: Int = 16): String = {
-    val spark = embeddings.sparkSession
-    val t = pqTableName(tag, m, k)
-    synchronized {
-      if (!spark.catalog.tableExists(t))
-        buildPqCodebook(embeddings, m, k).centers
-          .write.mode("overwrite").saveAsTable(t)
-    }
-    t
-  }
+                    m: Int = 4, k: Int = 16): String =
+    Artifacts.ensure("pq_centers", Seq(tag, m, k), Seq(embeddings))(
+      buildPqCodebook(embeddings, m, k).centers)
 
-  /** Session-lifetime codebook memo over the catalog table — the
-    * [[ivfIndexFor]] pattern. [[release]] drops it end-of-run. */
+  /** The stored codebook; its sub-vector width is read from the table
+    * once per session. */
   def pqCodebookFor(embeddings: DataFrame, tag: String,
-                    m: Int = 4, k: Int = 16): PqCodebook = synchronized {
-    pqMemo.getOrElse((embeddings.sparkSession, tag, m, k), {
-      val t = ensurePqTable(embeddings, tag, m, k)
-      val centers = embeddings.sparkSession.read.table(t)
-      val subDim = centers.select(size(col("centroid"))).head().getInt(0)
-      val cb = PqCodebook(centers, m, k, subDim)
-      pqMemo += ((embeddings.sparkSession, tag, m, k) -> cb)
-      cb
-    })
+                    m: Int = 4, k: Int = 16): PqCodebook = {
+    val t = ensurePqTable(embeddings, tag, m, k)
+    val centers = embeddings.sparkSession.read.table(t)
+    PqCodebook(centers, m, k,
+      Artifacts.memo(t)(centers.select(size(col("centroid"))).head().getInt(0)))
   }
 
   /** Stable oracle-facing codebook dump location (the
@@ -1367,26 +1252,16 @@ object SimilarityOps {
       .select(col("subspace"), col("n_vec"), col("err_sum"))
   }
 
-  private[graft] def pqBaselineTableName(tag: String, m: Int, k: Int): String =
-    s"pq_baseline_${Integer.toHexString(tag.hashCode)}_${m}_$k"
-
-  /** Materialize the codebook's TRAINING-ERROR baseline as a catalog
-    * table if absent — the second stored PQ artifact. Built once at
+  /** The codebook's TRAINING-ERROR baseline as an [[Artifacts]]
+    * table — the second stored PQ artifact. Built once at
     * fit time (one corpus scan); after that, drift probes
     * ([[pqDrift]]) touch only the new batch, never the stored
     * corpus — the q235/q243 incremental contract applied to codebook
     * staleness. */
   def ensurePqBaseline(embeddings: DataFrame, tag: String,
-                       m: Int = 4, k: Int = 16): String = {
-    val spark = embeddings.sparkSession
-    val t = pqBaselineTableName(tag, m, k)
-    synchronized {
-      if (!spark.catalog.tableExists(t))
-        pqErrStats(pqCodebookFor(embeddings, tag, m, k), embeddings)
-          .write.mode("overwrite").saveAsTable(t)
-    }
-    t
-  }
+                       m: Int = 4, k: Int = 16): String =
+    Artifacts.ensure("pq_baseline", Seq(tag, m, k), Seq(embeddings))(
+      pqErrStats(pqCodebookFor(embeddings, tag, m, k), embeddings))
 
   /** PQ codebook DRIFT audit — the refit trigger for the stored
     * codebook: encode ONLY the new batch (map-only, batch-sized scan)
@@ -1475,20 +1350,25 @@ object SimilarityOps {
   }
 
   /** Versioned tag for the refit codebook (q260): the v2 artifact
-    * rides the whole [[pqCodebookFor]] catalog-table + session-memo
-    * machinery under this derived tag, so it lands in a NEW catalog
-    * table (tag-hashed name) and the v1 table is never overwritten —
+    * rides [[pqCodebookFor]]'s [[Artifacts]] table under this derived
+    * tag, so it lands in a NEW catalog table and the v1 table is
+    * never overwritten —
     * old encodes stay reproducible against v1 forever. */
   private[graft] def pqV2Tag(tag: String): String = s"$tag#pqv2"
 
   /** The stored∪batch frame the v2 codebook fits and both recall
     * passes score over — vec pinned to double so the union is
     * type-stable whether the batch carries float or double arrays. */
-  private def unionCorpus(embeddings: DataFrame, batch: DataFrame): DataFrame =
+  private[graft] def unionCorpus(embeddings: DataFrame, batch: DataFrame): DataFrame =
     embeddings.select(col("vec_id"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("embedding"))
       .unionByName(batch.select(col("vec_id"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("embedding")))
+
+  /** The v2 codebook: the [[pqV2Tag]] refit over stored ∪ batch. */
+  private def pqV2CodebookFor(embeddings: DataFrame, batch: DataFrame, tag: String,
+                              m: Int, k: Int): PqCodebook =
+    pqCodebookFor(unionCorpus(embeddings, batch), pqV2Tag(tag), m, k)
 
   /** PQ REFIT applier (q260) — acting on the q244 drift flag instead
     * of just raising it (VERDICT r12 #4). Probe the batch against the
@@ -1524,7 +1404,7 @@ object SimilarityOps {
       .select(col("qid"), col("n_hits").as("n_hits_v1"), col("k"))
     val r2 =
       if (!fired) r1.select(col("qid"), col("n_hits_v1").as("n_hits_v2"))
-      else pqAdcRecall(pqCodebookFor(corpus, pqV2Tag(tag), m, k),
+      else pqAdcRecall(pqV2CodebookFor(embeddings, batch, tag, m, k),
           corpus, nQueries, topK, exactTop = Some(exEuc))
         .select(col("qid"), col("n_hits").as("n_hits_v2"))
     r1.join(r2, "qid")
@@ -1556,7 +1436,7 @@ object SimilarityOps {
                       nQueries: Int = 5, topK: Int = 10): DataFrame = {
     val corpus = unionCorpus(embeddings, batch).localCheckpoint(false)
     val cb1 = pqCodebookFor(embeddings, tag, m, k)
-    val cb2 = pqCodebookFor(corpus, pqV2Tag(tag), m, k)
+    val cb2 = pqV2CodebookFor(embeddings, batch, tag, m, k)
     def lst(cb: PqCodebook) = {
       val w = Window.partitionBy(col("qid"))
         .orderBy(col("adc_d2"), col("vec_id"))
@@ -1582,29 +1462,20 @@ object SimilarityOps {
       .orderBy(col("qid"))
   }
 
-  private[graft] def pqCodesTableName(tag: String, m: Int, k: Int): String =
-    s"pq_codes_${Integer.toHexString(tag.hashCode)}_${m}_$k"
+  /** The SERVING POINTER's table — mutable state, so it stays outside
+    * [[Artifacts]]: one per (tag, m, k), rewritten on promotion. */
+  private def pqPointerName(tag: String, m: Int, k: Int): String =
+    Artifacts.nameFor("pq_serving_ptr", Seq(tag, m, k), Nil)
 
-  private[graft] def pqPtrTableName(tag: String, m: Int, k: Int): String =
-    s"pq_serving_ptr_${Integer.toHexString(tag.hashCode)}_${m}_$k"
-
-  /** Persisted FLAT-PQ codes table for the stored corpus under the v1
-    * codebook — the serving artifact the q289 pointer resolves
-    * (the [[ensureIvfPqCodesTable]] pattern without the coarse
-    * stage). Build is one map-only corpus encode, paid once. */
+  /** Persisted FLAT-PQ codes table for a corpus under the codebook of
+    * `tag` — the serving artifact the q289 pointer resolves (the
+    * [[ensureIvfPqCodesTable]] pattern without the coarse stage).
+    * Build is one map-only corpus encode, paid once. */
   def ensurePqCodesTable(embeddings: DataFrame, tag: String,
-                         m: Int = 4, k: Int = 16): String = {
-    val spark = embeddings.sparkSession
-    val t = pqCodesTableName(tag, m, k)
-    synchronized {
-      if (!spark.catalog.tableExists(t))
-        pqEncode(pqCodebookFor(embeddings, tag, m, k), embeddings)
-          .select(col("vec_id") +:
-            (0 until m).map(s => col(s"code_$s")): _*)
-          .write.mode("overwrite").saveAsTable(t)
-    }
-    t
-  }
+                         m: Int = 4, k: Int = 16): String =
+    Artifacts.ensure("pq_codes", Seq(tag, m, k), Seq(embeddings))(
+      pqEncode(pqCodebookFor(embeddings, tag, m, k), embeddings)
+        .select(col("vec_id") +: (0 until m).map(s => col(s"code_$s")): _*))
 
   /** The SERVING POINTER — one catalog row (version, codes_table,
     * codebook_tag) naming which codes table and codebook the
@@ -1612,7 +1483,7 @@ object SimilarityOps {
     * writer; reads resolve it fresh so a flip is visible immediately. */
   def pqServingPointer(spark: SparkSession, tag: String,
                        m: Int = 4, k: Int = 16): Option[(Long, String, String)] = {
-    val t = pqPtrTableName(tag, m, k)
+    val t = pqPointerName(tag, m, k)
     if (!spark.catalog.tableExists(t)) None
     else spark.read.table(t).collect().headOption
       .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
@@ -1627,81 +1498,50 @@ object SimilarityOps {
     (ver, spark.read.table(table))
   }
 
-  /** Session-lifetime memo for the q279 shadow report — q279, the
-    * q289 promotion gate and the q292 serving-takedown cert all
-    * decide off the SAME report; memoizing makes the dependents READ
-    * it instead of re-running two ADC listings each. Keyed by
-    * (session, tag, params) — THE TAG PINS THE DATASET (the
-    * [[reportMemo]] contract). */
-  @transient private var shadowMemo
-    : Map[(SparkSession, String, Int, Int, Int, Int), DataFrame] = Map.empty
-
+  /** The stored q279 shadow report — q279, the q289 promotion gate
+    * and the q292 serving-takedown cert all decide off the SAME
+    * report, so the dependents READ it instead of re-running two ADC
+    * listings each. An [[Artifacts]] table keyed by every parameter
+    * and both frames' identity. */
   def pqShadowFor(embeddings: DataFrame, batch: DataFrame, tag: String,
                   m: Int = 4, k: Int = 16,
                   nQueries: Int = 5, topK: Int = 10): DataFrame =
-    synchronized {
-      val key = (embeddings.sparkSession, tag, m, k, nQueries, topK)
-      shadowMemo.getOrElse(key, {
-        val r = pqShadowCompare(embeddings, batch, tag, m, k,
-          nQueries, topK).localCheckpoint(false)
-        shadowMemo += (key -> r)
-        r
-      })
-    }
+    Artifacts.table("pq_shadow", Seq(tag, m, k, nQueries, topK), Seq(embeddings, batch))(
+      pqShadowCompare(embeddings, batch, tag, m, k, nQueries, topK))
+      .orderBy(col("qid"))
 
   /** The promotion DECISION + artifact ensure, factored from the cert
     * ([[pqPromoteApply]]) so q292 can route on the flipped pointer
-    * without re-deriving the q289 report: gate on the memoized shadow
+    * without re-deriving the q289 report: gate on the stored shadow
     * report, ensure v1 codes + pointer, and on approval ensure the
-    * versioned v2 codes table and flip. Deterministic per (session,
-    * tag) — memoized, so repeated callers pay the gate once. Returns
-    * (promoted, observed max churn). */
-  @transient private var promoMemo
-    : Map[(SparkSession, String, Int, Int, Int, Int, Long), (Boolean, Long)] =
-    Map.empty
-
+    * versioned v2 codes table and flip. Deterministic per parameter
+    * set and input pair — an [[Artifacts.memo]], so repeated callers
+    * pay the gate once per session. Returns (promoted, observed max
+    * churn). */
   def ensurePqPromotion(embeddings: DataFrame, batch: DataFrame, tag: String,
                         m: Int = 4, k: Int = 16,
                         nQueries: Int = 5, topK: Int = 10,
-                        maxChurnPerQuery: Long = 5L): (Boolean, Long) = {
-    val spark = embeddings.sparkSession
-    // the full shadow-gate parameter set, matching shadowMemo's key
-    // (ADVICE r17): a later call with different nQueries/topK must
-    // re-run the gate, not inherit the first call's decision
-    val key = (spark, tag, m, k, nQueries, topK, maxChurnPerQuery)
-    synchronized {
-      promoMemo.get(key) match {
-        case Some(r) => return r
-        case None =>
-      }
-    }
-    val maxChurn = pqShadowFor(embeddings, batch, tag, m, k,
-        nQueries, topK)
-      .agg(max(col("n_churned"))).head.getLong(0)
-    val promoted = maxChurn <= maxChurnPerQuery
-    val v1t = ensurePqCodesTable(embeddings, tag, m, k)
-    val ptrT = pqPtrTableName(tag, m, k)
-    val corpus = unionCorpus(embeddings, batch)
-    synchronized {
+                        maxChurnPerQuery: Long = 5L): (Boolean, Long) =
+    Artifacts.memo(Artifacts.nameFor("pq_promotion",
+        Seq(tag, m, k, nQueries, topK, maxChurnPerQuery), Seq(embeddings, batch))) {
+      val spark = embeddings.sparkSession
       import spark.implicits._
+      val maxChurn = pqShadowFor(embeddings, batch, tag, m, k, nQueries, topK)
+        .agg(max(col("n_churned"))).head.getLong(0)
+      val promoted = maxChurn <= maxChurnPerQuery
+      val v1t = ensurePqCodesTable(embeddings, tag, m, k)
+      val ptrT = pqPointerName(tag, m, k)
       if (!spark.catalog.tableExists(ptrT))
         Seq((1L, v1t, tag)).toDF("version", "codes_table", "codebook_tag")
           .write.mode("overwrite").saveAsTable(ptrT)
       if (promoted) {
         val v2tag = pqV2Tag(tag)
-        val v2t = pqCodesTableName(v2tag, m, k)
-        if (!spark.catalog.tableExists(v2t))
-          pqEncode(pqCodebookFor(corpus, v2tag, m, k), corpus)
-            .select(col("vec_id") +:
-              (0 until m).map(s => col(s"code_$s")): _*)
-            .write.mode("overwrite").saveAsTable(v2t)
+        val v2t = ensurePqCodesTable(unionCorpus(embeddings, batch), v2tag, m, k)
         Seq((2L, v2t, v2tag)).toDF("version", "codes_table", "codebook_tag")
           .write.mode("overwrite").saveAsTable(ptrT)
       }
-      promoMemo += (key -> ((promoted, maxChurn)))
+      (promoted, maxChurn)
     }
-    (promoted, maxChurn)
-  }
 
   /** PQ v2 PROMOTION applier (q289) — EXECUTE the rollout the q279
     * shadow gate approves (VERDICT r16 missing #2). The q260 refit
@@ -1712,7 +1552,7 @@ object SimilarityOps {
     *      integer rule the oracle replays from the two dumped
     *      codebooks);
     *   2. on approval, RE-ENCODE the corpus∪batch under v2 into a NEW
-    *      versioned codes table ([[pqCodesTableName]] of
+    *      versioned codes table ([[ensurePqCodesTable]] of
     *      [[pqV2Tag]] — v1's table is never touched, the q260
     *      contract) and FLIP the serving pointer to it;
     *   3. on rejection, the applier is a NO-OP on artifacts: no v2
@@ -1741,7 +1581,7 @@ object SimilarityOps {
     val corpus = unionCorpus(embeddings, batch).localCheckpoint(false)
     val (promoted, maxChurn) = ensurePqPromotion(embeddings, batch, tag,
       m, k, nQueries, topK, maxChurnPerQuery)
-    val v1t = pqCodesTableName(tag, m, k)
+    val v1t = ensurePqCodesTable(embeddings, tag, m, k)
     // every probe below re-reads PERSISTED state (pointer + tables)
     val (ptrVer, served) = pqServingCodesFor(spark, tag, m, k)
     val v1codes = spark.read.table(v1t)
@@ -1832,10 +1672,10 @@ object SimilarityOps {
                         maxChurnPerQuery: Long = 5L): DataFrame = {
     val spark = embeddings.sparkSession
     // ensure the q289 artifacts exist and the pointer reflects the
-    // gate (idempotent, memoized — same catalog tables, same decision)
+    // gate (idempotent, an Artifacts.memo — same tables, same decision)
     ensurePqPromotion(embeddings, batch, tag, m, k, nQueries, topK,
       maxChurnPerQuery)
-    val (ver, _) = pqServingCodesFor(spark, tag, m, k)
+    val (ver, served) = pqServingCodesFor(spark, tag, m, k)
     val rm = broadcast(removal.select(col("doc_id").as("vec_id")).distinct()
       .localCheckpoint(false)) // both purges + the leak probe
     val corpus = unionCorpus(embeddings, batch).localCheckpoint(false)
@@ -1849,12 +1689,9 @@ object SimilarityOps {
           col("n_before"), col("n_after"),
           (col("n_before") - col("n_after")).cast("long").as("n_removed"),
           (col("n_before") - col("n_after") === col("n_rm")).as("clean"))
-    val v1 = spark.read.table(pqCodesTableName(tag, m, k))
+    val v1 = spark.read.table(ensurePqCodesTable(embeddings, tag, m, k))
     val v1P = v1.join(rm, Seq("vec_id"), "left_anti").localCheckpoint(false)
-    val v2t = pqCodesTableName(pqV2Tag(tag), m, k)
-    val v2Opt =
-      if (spark.catalog.tableExists(v2t)) Some(spark.read.table(v2t))
-      else None
+    val v2Opt = if (ver == 2L) Some(served) else None
     val v2POpt = v2Opt.map(_.join(rm, Seq("vec_id"), "left_anti")
       .localCheckpoint(false))
     val v2Row = (v2Opt, v2POpt) match {
@@ -1866,7 +1703,7 @@ object SimilarityOps {
             "clean")
     }
     val cbServed =
-      if (ver == 2L) pqCodebookFor(corpus, pqV2Tag(tag), m, k)
+      if (ver == 2L) pqV2CodebookFor(embeddings, batch, tag, m, k)
       else pqCodebookFor(embeddings, tag, m, k)
     val servedP = if (ver == 2L) v2POpt.getOrElse(v1P) else v1P
     val queries = corpus.join(rm, Seq("vec_id"), "left_anti")
@@ -1921,8 +1758,8 @@ object SimilarityOps {
     * composition every production ANN service runs: PQ fits the
     * RESIDUAL distribution (tighter than raw vectors, since the
     * coarse quantizer has already removed the list mean), and the
-    * persisted artifact rides [[pqCodebookFor]]'s catalog-table +
-    * session-memo machinery under a derived tag. Build is offline and
+    * persisted artifact rides [[pqCodebookFor]]'s [[Artifacts]] table
+    * under a derived tag. Build is offline and
     * amortized like every index fit here; loads refit nothing. */
   def ivfPqCodebookFor(index: IvfIndex, tag: String,
                        m: Int = 4, k: Int = 16): PqCodebook =
@@ -1950,10 +1787,7 @@ object SimilarityOps {
       Seq(col("vec_id"), col("list_id").cast("long").as("list_id")) ++ codeCols: _*)
   }
 
-  private[graft] def ivfPqCodesTableName(tag: String, m: Int, k: Int): String =
-    s"ivfpq_codes_${Integer.toHexString(tag.hashCode)}_${m}_$k"
-
-  /** Materialize the persisted CODES table if absent — the third
+  /** The persisted CODES table, an [[Artifacts]] table — the third
     * stored ANN artifact (index assignments, residual codebook, now
     * the codes themselves), closing the gap q255's round-11 docstring
     * named: with codes stored WITH their list_id, the IVF-PQ read
@@ -1963,17 +1797,11 @@ object SimilarityOps {
     * the codes at the scan. Build is offline/amortized: one corpus
     * encode (map-only) + one assignment join, paid once. */
   def ensureIvfPqCodesTable(index: IvfIndex, tag: String,
-                            m: Int = 4, k: Int = 16): String = {
-    val spark = index.assigned.sparkSession
-    val t = ivfPqCodesTableName(tag, m, k)
-    synchronized {
-      if (!spark.catalog.tableExists(t))
-        pqEncodeWithList(ivfPqCodebookFor(index, tag, m, k), residualFrame(index))
-          .write.mode("overwrite")
-          .bucketBy(index.nLists, "list_id").sortBy("vec_id").saveAsTable(t)
-    }
-    t
-  }
+                            m: Int = 4, k: Int = 16): String =
+    Artifacts.ensure("ivfpq_codes", Seq(tag, m, k, index.nLists),
+        Seq(index.assigned, index.centers),
+        Some(Artifacts.Buckets(index.nLists, "list_id", "vec_id")))(
+      pqEncodeWithList(ivfPqCodebookFor(index, tag, m, k), residualFrame(index)))
 
   /** Load the persisted codes table (building it if absent) — zero
     * sub-quantizer or coarse-quantizer fits on a warm catalog
@@ -2264,25 +2092,17 @@ object SimilarityOps {
 
   /** The fitted child centroids for the flagged lists of
     * (index ⊕ batch): (parent_list_id, child_list_id, centroid) —
-    * ≤ 2·nLists rows. Memoized per (session, tag) so the q259 query
-    * and its oracle dump share one set of fits. */
-  // the FULL parameter set in the key (the promoMemo lesson, ADVICE
-  // r17): a later call with a different imbalanceFactor must re-run
-  // the rebalance decision, not inherit the first call's
-  @transient private var rebMemo
-    : Map[(org.apache.spark.sql.SparkSession, String, Long), IvfRebalance] = Map.empty
-
+    * ≤ 2·nLists rows. An [[Artifacts.memo]] keyed by every parameter
+    * and the index and batch identity, so the q259 query and its
+    * oracle dump share one set of fits. */
   def ivfRebalanceFor(index: IvfIndex, batch: DataFrame, tag: String,
-                      imbalanceFactor: Long = 2L): IvfRebalance = synchronized {
-    val spark = index.assigned.sparkSession
-    rebMemo.getOrElse((spark, tag, imbalanceFactor), {
-      val r = ivfRebalanceApply(index, batch, imbalanceFactor)
-      rebMemo += ((spark, tag, imbalanceFactor) -> r)
-      r
-    })
-  }
+                      imbalanceFactor: Long = 2L): IvfRebalance =
+    Artifacts.memo(Artifacts.nameFor("ivf_rebalance", Seq(tag, imbalanceFactor),
+        Seq(index.assigned, index.centers, batch))) {
+      ivfRebalanceApply(index, batch, imbalanceFactor)
+    }
 
-  /** Fit-count test hook like [[indexBuilds]]/[[pqBuilds]]: one tick
+  /** Fit-count test hook: one tick
     * per FLAGGED-list k=2 fit — StreamingSpec asserts the streaming
     * composition never re-fits an unflagged list. */
   private[graft] var rebFits: Int = 0

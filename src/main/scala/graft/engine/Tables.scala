@@ -1,6 +1,10 @@
 package graft.engine
 
+import scala.collection.concurrent.TrieMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Table registry: name -> parquet path under a scale-factor directory.
   *
@@ -16,9 +20,19 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  private val schemas = TrieMap.empty[(SparkSession, String, Long, Long), StructType]
+
+  /** The schema is inferred once per session and file version (path,
+    * length, mtime): inference runs a Spark job, and every stored
+    * artifact's hit path constructs its input frames to key them. */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     require(names.contains(name), s"unknown table: $name")
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    val path = s"$sfDir/$name.parquet"
+    val p = new Path(path)
+    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
+    val schema = schemas.getOrElseUpdate((spark, path, st.getLen, st.getModificationTime),
+      spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
   }
 
   def lineitem(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "lineitem")

@@ -865,13 +865,7 @@ object TextOps {
     * inline — asserted in CoreSpec and by the consumers' oracles
     * (r19, guide §1.2). */
   def positionedGramsFor(documents: DataFrame, n: Int, tag: String): DataFrame =
-    synchronized {
-      val spark = documents.sparkSession
-      val t = s"pos_grams_${Integer.toHexString(tag.hashCode)}_$n"
-      if (!spark.catalog.tableExists(t))
-        positionedGrams(documents, n).write.mode("overwrite").saveAsTable(t)
-      spark.read.table(t)
-    }
+    Artifacts.table("pos_grams", Seq(tag, n), Seq(documents))(positionedGrams(documents, n))
 
   def sharedSpans(documents: DataFrame, n: Int = 10, minShared: Int = 3,
                   maxPostings: Int = 50,
@@ -1214,8 +1208,8 @@ object TextOps {
         "i -> struct(toks[i-1] AS w1, toks[i] AS w2)) ELSE array() END")).as("p"))
       .select(col("doc_id"), col("p.w1").as("w1"), col("p.w2").as("w2"))
 
-  /** Fit-count test hook (the pqBuilds pattern): a persisted-model
-    * load must perform ZERO retokenize fits. */
+  /** Fit-count test hook: a persisted-model load must perform ZERO
+    * retokenize fits. */
   private[graft] var lmFits: Int = 0
 
   /** Fit the LM count tables over a corpus — one tokenize scan
@@ -1344,38 +1338,15 @@ object TextOps {
         (pmod(xxhash64(col("doc_id")), lit(1000000L)) < col("ratio_ppm")).as("accepted"))
   }
 
-  private[graft] def lmTableName(part: String, tag: String): String =
-    s"lm_${part}_${Integer.toHexString(tag.hashCode)}"
-
-  @transient private var lmMemo
-    : Map[(org.apache.spark.sql.SparkSession, String), LmModel] = Map.empty
-
-  /** Session-lifetime handle to the persisted LM model — the
-    * pqCodebookFor pattern: materialize the three count tables in the
-    * catalog if absent (one corpus scan, ever), then serve readers
-    * with zero refits. (session, tag)-keyed like
-    * [[DedupOps.clustersFor]] — a tag surviving a SparkSession
-    * restart must not resurrect dead plans; [[release]] end-of-run
-    * stays the hygiene rule. */
-  def lmModelFor(documents: DataFrame, tag: String): LmModel = synchronized {
-    val key = (documents.sparkSession, tag)
-    lmMemo.getOrElse(key, {
-      val spark = documents.sparkSession
-      val names = Seq("bi", "ctx", "vocab").map(lmTableName(_, tag))
-      if (!names.forall(spark.catalog.tableExists)) {
-        val m = lmModel(documents)
-        m.bigrams.write.mode("overwrite").saveAsTable(names(0))
-        m.contexts.write.mode("overwrite").saveAsTable(names(1))
-        m.vocab.write.mode("overwrite").saveAsTable(names(2))
-      }
-      val loaded = LmModel(spark.read.table(names(0)),
-        spark.read.table(names(1)), spark.read.table(names(2)))
-      lmMemo += (key -> loaded)
-      loaded
-    })
+  /** The persisted LM model — its three count tables are
+    * [[Artifacts]] tables keyed by (tag, the documents' identity): one
+    * corpus scan, ever, then readers load them with zero refits. */
+  def lmModelFor(documents: DataFrame, tag: String): LmModel = {
+    lazy val m = lmModel(documents)
+    def stored(part: String)(build: => DataFrame) =
+      Artifacts.table(s"lm_$part", Seq(tag), Seq(documents))(build)
+    LmModel(stored("bi")(m.bigrams), stored("ctx")(m.contexts), stored("vocab")(m.vocab))
   }
-
-  def release(): Unit = synchronized { lmMemo = Map.empty }
 
   /** Distinctive-terms report — per-source vocabulary that is
     * OVER-represented relative to the whole corpus, scored by

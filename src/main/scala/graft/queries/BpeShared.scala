@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
-import graft.engine.{Tables, TextOps}
+import graft.engine.{Artifacts, Tables, TextOps}
 
 /** Shared BPE training state for the tokenizer family (q108/q111).
   *
@@ -19,13 +19,11 @@ import graft.engine.{Tables, TextOps}
   * re-derives. Both relations are distinct-token-sized — millions of
   * rows at 100 TB, never corpus-sized.
   *
-  * Same contract as [[SketchShared]]/[[MLShared]]: session-lifetime
-  * memo over catalog tables keyed by the sfDir hash, released by
-  * Verify/Bench at end of run; the tables survive the memo, so a
-  * restarted session reloads the vocabulary with ZERO training rounds.
+  * Both are [[graft.engine.Artifacts]] tables keyed by (rounds, the
+  * documents table's identity), so a restarted session reloads the
+  * vocabulary with ZERO training rounds.
   */
 object BpeShared {
-  private var memo: Map[(String, Int), (DataFrame, DataFrame)] = Map.empty
 
   /** The merge schedule, in round order — q108's output. */
   def merges(s: SparkSession, dir: String, rounds: Int = 5): DataFrame =
@@ -35,23 +33,10 @@ object BpeShared {
   def words(s: SparkSession, dir: String, rounds: Int = 5): DataFrame =
     ensure(s, dir, rounds)._2
 
-  private def ensure(s: SparkSession, dir: String, rounds: Int): (DataFrame, DataFrame) =
-    synchronized {
-      val key = (dir, rounds)
-      memo.getOrElse(key, {
-        val h = Integer.toHexString(dir.hashCode)
-        val mt = s"bpe_merges_${h}_$rounds"
-        val wt = s"bpe_words_${h}_$rounds"
-        if (!s.catalog.tableExists(mt) || !s.catalog.tableExists(wt)) {
-          val (m, w) = TextOps.bpeLearnState(Tables.documents(s, dir), rounds)
-          m.write.mode("overwrite").saveAsTable(mt)
-          w.write.mode("overwrite").saveAsTable(wt)
-        }
-        val pair = (s.read.table(mt), s.read.table(wt))
-        memo += (key -> pair)
-        pair
-      })
-    }
-
-  def release(): Unit = synchronized { memo = Map.empty }
+  private def ensure(s: SparkSession, dir: String, rounds: Int): (DataFrame, DataFrame) = {
+    val docs = Tables.documents(s, dir)
+    lazy val learned = TextOps.bpeLearnState(docs, rounds)
+    (Artifacts.table("bpe_merges", Seq(rounds), Seq(docs))(learned._1),
+     Artifacts.table("bpe_words", Seq(rounds), Seq(docs))(learned._2))
+  }
 }

@@ -1506,7 +1506,7 @@ object Catalog {
 
     // INCREMENTAL entity resolution: a modular key split plays the
     // stored dim (80%) vs the arriving batch (20%); the stored alias
-    // table comes from the memoized closure, the batch resolves
+    // table comes from the stored closure, the batch resolves
     // against it via cross-block edges + star edges, and only touched
     // groups re-close. The oracle replays the stored closure, the
     // delta edge set (batch×stored + batch×batch — NEVER
@@ -2996,7 +2996,7 @@ object Catalog {
     // BM25 hard-negative mining: per anchor doc, top-k docs scoring
     // high on the anchor's own salient terms but OUTSIDE its near-dup
     // cluster (the positives — excluded and counted). Probes the
-    // stored postings + the memoized closure; the oracle recomputes
+    // stored postings + the stored closure; the oracle recomputes
     // both from scratch, certifying the stored artifacts again.
     QuerySpec(
       "q232_hard_negatives",
@@ -3841,7 +3841,7 @@ object Catalog {
     // TextDedupSpec.
     QuerySpec(
       "q61_near_dedup",
-      // reads the memoized corpus closure (DedupOps.clustersFor) —
+      // reads the stored corpus closure (DedupOps.clustersFor) —
       // the oracle still replays edges + closure from scratch, so a
       // hash match certifies the shared label table for every
       // consumer behind it
@@ -5121,7 +5121,7 @@ object Catalog {
       Some(q63OracleSql)),
 
     // probe-only: the quantizer fit + assignments are built once per
-    // (dir, nLists) via the session memo (VERDICT r4 "what's wrong" #1
+    // (embeddings, nLists) as Artifacts tables (VERDICT r4 "what's wrong" #1
     // — the index build does not belong in the query path). The
     // k-means FIT stays non-SQL, but the PROBE is pure relational
     // algebra over the persisted index state, which Verify exports to

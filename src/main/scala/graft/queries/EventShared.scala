@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.engine.{EventOps, Tables, TemporalOps}
+import graft.engine.{Artifacts, EventOps, Tables, TemporalOps}
 
 /** Shared event-derived stores for the takedown/retention sweep
   * family (q284/q286/q290).
@@ -12,7 +12,7 @@ import graft.engine.{EventOps, Tables, TemporalOps}
   * stored − removed-contribution — yet each sweep query re-derived
   * all six stores (q280 manifest, q161 sessions, q146 funnel, q147
   * retention, q199 transitions, q172 attribution) from the raw
-  * events per run. This persists each store ONCE per corpus tag as a
+  * events per run. This persists each store ONCE per events table as a
   * catalog table (the [[SketchShared]] / epoch-manifest posture:
   * pid-scoped tmp warehouse, cold pass pays the build) and serves
   * all three sweeps from the tables — the production shape, where
@@ -24,40 +24,38 @@ import graft.engine.{EventOps, Tables, TemporalOps}
   * Every store is a deterministic derivation of the events table
   * (exact-integer windows/rollups; each hash-matches its own
   * oracle), so stored ≡ inline — asserted row-for-row in CoreSpec.
-  * No memo: the `tableExists` probe is the [[graft.engine.CorpusOps.epochOrderRowsFor]]
-  * pattern, so no release hook is needed.
+  * Each is a [[graft.engine.Artifacts]] table keyed by the events
+  * table's identity.
   */
 object EventShared {
 
-  def manifest(s: SparkSession, dir: String): DataFrame =
-    tableFor(s, dir, "ev_manifest",
-      () => TemporalOps.sessionPackManifest(Tables.events(s, dir)))
+  def manifest(s: SparkSession, dir: String): DataFrame = {
+    val ev = Tables.events(s, dir)
+    Artifacts.table("ev_manifest", Nil, Seq(ev))(TemporalOps.sessionPackManifest(ev))
+  }
 
-  def sessions(s: SparkSession, dir: String): DataFrame =
-    tableFor(s, dir, "ev_sessions",
-      () => EventOps.sessionize(Tables.events(s, dir)))
+  def sessions(s: SparkSession, dir: String): DataFrame = {
+    val ev = Tables.events(s, dir)
+    Artifacts.table("ev_sessions", Nil, Seq(ev))(EventOps.sessionize(ev))
+  }
 
-  def funnel(s: SparkSession, dir: String): DataFrame =
-    tableFor(s, dir, "ev_funnel",
-      () => EventOps.funnel(Tables.events(s, dir)))
+  def funnel(s: SparkSession, dir: String): DataFrame = {
+    val ev = Tables.events(s, dir)
+    Artifacts.table("ev_funnel", Nil, Seq(ev))(EventOps.funnel(ev))
+  }
 
-  def retention(s: SparkSession, dir: String): DataFrame =
-    tableFor(s, dir, "ev_retention",
-      () => EventOps.retentionCohorts(Tables.events(s, dir)))
+  def retention(s: SparkSession, dir: String): DataFrame = {
+    val ev = Tables.events(s, dir)
+    Artifacts.table("ev_retention", Nil, Seq(ev))(EventOps.retentionCohorts(ev))
+  }
 
-  def transitions(s: SparkSession, dir: String): DataFrame =
-    tableFor(s, dir, "ev_transitions",
-      () => EventOps.eventTransitions(Tables.events(s, dir)))
+  def transitions(s: SparkSession, dir: String): DataFrame = {
+    val ev = Tables.events(s, dir)
+    Artifacts.table("ev_transitions", Nil, Seq(ev))(EventOps.eventTransitions(ev))
+  }
 
-  def attribution(s: SparkSession, dir: String): DataFrame =
-    tableFor(s, dir, "ev_attribution",
-      () => EventOps.lastTouchAttribution(Tables.events(s, dir)))
-
-  private def tableFor(s: SparkSession, dir: String, prefix: String,
-                       build: () => DataFrame): DataFrame = synchronized {
-    val t = s"${prefix}_${Integer.toHexString(dir.hashCode)}"
-    if (!s.catalog.tableExists(t))
-      build().write.mode("overwrite").saveAsTable(t)
-    s.read.table(t)
+  def attribution(s: SparkSession, dir: String): DataFrame = {
+    val ev = Tables.events(s, dir)
+    Artifacts.table("ev_attribution", Nil, Seq(ev))(EventOps.lastTouchAttribution(ev))
   }
 }

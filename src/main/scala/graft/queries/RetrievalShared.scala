@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
-import graft.engine.{RetrievalOps, Tables}
+import graft.engine.{Artifacts, RetrievalOps, Tables}
 
 /** Persisted BM25 inverted index (q145) — the [[SketchShared]]
   * contract applied to retrieval: the postings table (w, doc_id, tf)
@@ -20,41 +20,24 @@ import graft.engine.{RetrievalOps, Tables}
   * stats on w skip the non-query vocabulary — at 100 TB a probe
   * touches the query terms' row groups, not the index.
   *
-  * Session-lifetime memo keyed by the sfDir hash, released by
-  * Verify/Bench at end of run; the tables survive the memo (same
-  * warehouse ⇒ a restarted serving job reloads with zero text
-  * passes — the [[graft.engine.SimilarityOps.ensureIvfTables]]
-  * pattern).
+  * Both are [[graft.engine.Artifacts]] tables keyed by the documents
+  * table's identity: a restarted serving job over the same warehouse
+  * reloads them with zero text passes.
   */
 object RetrievalShared {
-  private var memo: Map[(String, String), DataFrame] = Map.empty
 
   /** The (w, doc_id, tf) inverted index — one tokenize pass per
     * corpus, ever. */
-  def postings(s: SparkSession, dir: String): DataFrame =
-    tableFor(s, dir, "bm25_postings",
-      () => RetrievalOps.bm25Postings(Tables.documents(s, dir))
-        .repartition(col("w")).sortWithinPartitions(col("w")))
+  def postings(s: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documents(s, dir)
+    Artifacts.table("bm25_postings", Nil, Seq(docs))(
+      RetrievalOps.bm25Postings(docs).repartition(col("w")).sortWithinPartitions(col("w")))
+  }
 
   /** The (doc_id, dl) doc-length table; N and avgdl aggregate from
     * it in one 2-column pass. */
-  def docLengths(s: SparkSession, dir: String): DataFrame =
-    tableFor(s, dir, "bm25_doclen",
-      () => RetrievalOps.bm25DocLengths(Tables.documents(s, dir)))
-
-  private def tableFor(s: SparkSession, dir: String, prefix: String,
-                       build: () => DataFrame): DataFrame = synchronized {
-    val key = (dir, prefix)
-    memo.getOrElse(key, {
-      val t = s"${prefix}_${Integer.toHexString(dir.hashCode)}"
-      if (!s.catalog.tableExists(t)) {
-        build().write.mode("overwrite").saveAsTable(t)
-      }
-      val df = s.read.table(t)
-      memo += (key -> df)
-      df
-    })
+  def docLengths(s: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documents(s, dir)
+    Artifacts.table("bm25_doclen", Nil, Seq(docs))(RetrievalOps.bm25DocLengths(docs))
   }
-
-  def release(): Unit = synchronized { memo = Map.empty }
 }

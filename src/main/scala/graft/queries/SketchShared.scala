@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
-import graft.engine.{DedupOps, Tables}
+import graft.engine.{Artifacts, DedupOps, Tables}
 
 /** Shared sketch store for the dedup family (q42/q43/q70/q73).
   *
@@ -17,20 +17,18 @@ import graft.engine.{DedupOps, Tables}
   * the only artifact the dedup family ever reads; the text corpus is
   * scanned exactly once per sketch refresh.
   *
-  * Same contract as [[MLShared]]: session-lifetime memo over a
-  * catalog table keyed by the sfDir hash, released by Verify/Bench at
-  * end of run. The table survives the memo (same warehouse ⇒ a
-  * restarted job reloads it with zero text passes — the
-  * [[graft.engine.SimilarityOps.ensureIvfTables]] pattern).
+  * Every table is a [[graft.engine.Artifacts]] table keyed by the
+  * documents table's identity, so a restarted job over the same
+  * warehouse reloads it with zero text passes.
   */
 object SketchShared {
-  private var memo: Map[(String, String), DataFrame] = Map.empty
 
   /** The (doc_id, sh, sig, simhash) sketch table — one text pass per
     * corpus, ever. */
-  def sketches(s: SparkSession, dir: String): DataFrame =
-    tableFor(s, dir, "doc_sketches",
-      () => DedupOps.docSketches(Tables.documents(s, dir)))
+  def sketches(s: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documents(s, dir)
+    Artifacts.table("doc_sketches", Nil, Seq(docs))(DedupOps.docSketches(docs))
+  }
 
   /** MinHash-LSH candidate pairs with estimated Jaccard — q42's
     * output, persisted so q70's edge union and q73's verification
@@ -40,8 +38,8 @@ object SketchShared {
     * curation jobs consume); its size is bounded by the
     * degenerate-bucket cap, never O(n²). */
   def minhashPairs(s: SparkSession, dir: String): DataFrame =
-    tableFor(s, dir, "doc_mh_pairs",
-      () => DedupOps.minhashPairsFromSigs(
+    Artifacts.table("doc_mh_pairs", Nil, Seq(Tables.documents(s, dir)))(
+      DedupOps.minhashPairsFromSigs(
         sketches(s, dir).filter(col("sig").isNotNull)
           .select(col("doc_id"), col("sig"))))
 
@@ -50,41 +48,28 @@ object SketchShared {
     * it depends only on the sample (never on a banding config): a
     * re-tune re-runs just the sample-bounded banded self-joins against
     * these stored pairs. */
-  def calibrationTruth(s: SparkSession, dir: String): DataFrame =
-    tableFor(s, dir, "doc_cal_truth",
-      () => DedupOps.jaccardPairs(Tables.documents(s, dir),
-        maxDocId = 500, threshold = 0.5).select(col("doc_i"), col("doc_j")))
+  def calibrationTruth(s: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documents(s, dir)
+    Artifacts.table("doc_cal_truth", Nil, Seq(docs))(
+      DedupOps.jaccardPairs(docs, maxDocId = 500, threshold = 0.5)
+        .select(col("doc_i"), col("doc_j")))
+  }
 
   /** DF-capped exact-Jaccard pairs over the whole corpus — q231's
     * edge source, persisted because the pair set is a corpus
     * artifact (it changes when the corpus does, not per query): the
     * incremental-split run reads stored pairs and pays only the
     * condensed closure + algebra. */
-  def dfCappedJaccardPairs(s: SparkSession, dir: String): DataFrame =
-    tableFor(s, dir, "doc_dfcap_pairs",
-      () => DedupOps.jaccardPairsDfCapped(Tables.documents(s, dir)))
+  def dfCappedJaccardPairs(s: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documents(s, dir)
+    Artifacts.table("doc_dfcap_pairs", Nil, Seq(docs))(DedupOps.jaccardPairsDfCapped(docs))
+  }
 
   /** SimHash prefix-band pairs with hamming distance — q43's output,
     * persisted for q70's edge union. */
   def simhashPairs(s: SparkSession, dir: String): DataFrame =
-    tableFor(s, dir, "doc_sim_pairs",
-      () => DedupOps.simhashPairsFromSigs(
+    Artifacts.table("doc_sim_pairs", Nil, Seq(Tables.documents(s, dir)))(
+      DedupOps.simhashPairsFromSigs(
         sketches(s, dir).filter(col("simhash").isNotNull)
           .select(col("doc_id"), col("simhash"))))
-
-  private def tableFor(s: SparkSession, dir: String, prefix: String,
-                       build: () => DataFrame): DataFrame = synchronized {
-    val key = (dir, prefix)
-    memo.getOrElse(key, {
-      val t = s"${prefix}_${Integer.toHexString(dir.hashCode)}"
-      if (!s.catalog.tableExists(t)) {
-        build().write.mode("overwrite").saveAsTable(t)
-      }
-      val df = s.read.table(t)
-      memo += (key -> df)
-      df
-    })
-  }
-
-  def release(): Unit = synchronized { memo = Map.empty }
 }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.SparkEntry
 
 /** Plan-audit utility: prints `explain("formatted")` for the named
@@ -35,20 +33,7 @@ object Explain {
                // no driver actions); q288/q291/q292 stay out (eager
                // index fits / removal collects at plan time)
                "q290_user_quarantine_roundtrip")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // bucketed/catalog tables land in a run-unique tmp warehouse,
-      // never in the working directory
-      .config("spark.sql.warehouse.dir",
-        graft.engine.Scratch.dir(
-        s"${System.getProperty("java.io.tmpdir")}/graft_wh_${ProcessHandle.current().pid()}"))
-      .getOrCreate()
+    val spark = graft.GraftSession.build("4")
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       println(s"\n========== $name ==========")

@@ -3,7 +3,6 @@ package graft.tools
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 import graft.SparkEntry
 
@@ -27,18 +26,7 @@ object Profile {
     val nWarm = args.headOption.flatMap(_.toIntOption).getOrElse(2)
     val names = (if (args.headOption.exists(_.toIntOption.isDefined)) args.drop(1)
                  else args).toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        graft.engine.Scratch.dir(
-        s"${System.getProperty("java.io.tmpdir")}/graft_wh_${ProcessHandle.current().pid()}"))
-      .getOrCreate()
+    val spark = graft.GraftSession.build(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     graft.engine.Tables.names.foreach { t =>
       try graft.engine.Tables.load(spark, sfDir, t).count()

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.engine.{PartitionedTables, Tables}
+import graft.engine.{Artifacts, PartitionedTables, Tables}
 import graft.engine.Exact._
 
 /** Scale-path evidence tests: the partitioned storage layer and the
@@ -159,14 +159,14 @@ class ScaleSpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sf)
     // first call: builds the quantizer and persists the catalog tables
     SimilarityOps.ivfIndexFor(emb, tag = sf)
-    // simulate a new session: drop the in-memory memo; the catalog
+    // simulate a new session: drop the in-session state; the catalog
     // tables survive (same warehouse — what a restarted job sees)
-    SimilarityOps.release()
-    val buildsBefore = SimilarityOps.indexBuilds
+    Artifacts.releaseAll()
+    val buildsBefore = Artifacts.builds("ivf_assign")
     val idx = SimilarityOps.ivfIndexFor(emb, tag = sf)
-    assert(SimilarityOps.indexBuilds == buildsBefore,
+    assert(Artifacts.builds("ivf_assign") == buildsBefore,
       "loading a persisted IVF index must not refit the quantizer")
-    val (at, _) = SimilarityOps.ivfTableNames(sf, 16)
+    val (at, _) = SimilarityOps.ensureIvfTables(emb, sf, 16)
     val optimized = idx.assigned.queryExecution.optimizedPlan.toString
     assert(optimized.contains("ivf_assign_"),
       s"expected the probe side to scan the catalog table $at:\n$optimized")
@@ -507,7 +507,7 @@ class ScaleSpec extends SparkSpec {
     // q235: assignment joins the batch against the BROADCAST centroid
     // frame and ranks per vec_id — never a shuffle of stored vectors
     val idx = SimilarityOps.ivfIndexFor(emb, tag = sf)
-    val builds0 = SimilarityOps.indexBuilds
+    val builds0 = Artifacts.builds("ivf_assign")
     val asg = SimilarityOps.ivfIncrementalAssign(idx,
       emb.select((col("vec_id") + lit(1000000L)).as("vec_id"), col("embedding")))
     asg.collect()
@@ -516,7 +516,7 @@ class ScaleSpec extends SparkSpec {
       s"centroids must broadcast:\n${asgPlan.take(1500)}")
     assert(asgPlan.contains("hashpartitioning(vec_id"),
       s"argmin window must key on the batch vector id:\n${asgPlan.take(1500)}")
-    assert(SimilarityOps.indexBuilds == builds0, "incremental assign must never re-fit")
+    assert(Artifacts.builds("ivf_assign") == builds0, "incremental assign must never re-fit")
     // q237: the stored-postings probe is a broadcast semi join on the
     // batch vocabulary — the stored side never hashes on w for this
     val batch = docs.filter(pmod(col("doc_id"), lit(13)) === 5)
@@ -572,7 +572,7 @@ class ScaleSpec extends SparkSpec {
     scored.collect()
     assert(TextOps.lmFits == fits0, "incremental merge+score must not refit the model")
     val mp = scored.queryExecution.executedPlan.toString
-    assert(mp.contains(TextOps.lmTableName("bi", sf)),
+    assert(mp.contains(Artifacts.nameFor("lm_bi", Seq(sf), Seq(Tables.documents(spark, sf)))),
       s"merge must read the persisted bigram table:\n${mp.take(1200)}")
   }
 

@@ -310,12 +310,12 @@ class SimilarityMultimodalSpec extends SparkSpec {
     // fixture: the q235 derived batch appends to the PERSISTED index
     // with zero quantizer refits and conserves populations
     val index = SimilarityOps.ivfIndexFor(emb, tag = sf)
-    val builds0 = SimilarityOps.indexBuilds
+    val builds0 = Artifacts.builds("ivf_assign")
     val batchFix = emb.filter(pmod(col("vec_id"), lit(7)) === 3)
       .select((col("vec_id") + lit(1000000L)).as("vec_id"),
         reverse(col("embedding")).as("embedding"))
     val fix = SimilarityOps.ivfIncrementalAppend(index, batchFix).collect()
-    assert(SimilarityOps.indexBuilds == builds0, "append must never re-fit")
+    assert(Artifacts.builds("ivf_assign") == builds0, "append must never re-fit")
     assert(fix.map(_.getLong(3)).sum == emb.count() + batchFix.count())
     assert(fix.map(_.getLong(1)).sum == emb.count(), "before = stored corpus")
   }
@@ -375,10 +375,10 @@ class SimilarityMultimodalSpec extends SparkSpec {
   }
 
   test("PQ fixture: persisted codebook, zero refits, full-corpus encode in range") {
-    val builds0 = SimilarityOps.pqBuilds
+    val builds0 = Artifacts.builds("pq_centers")
     val cb = SimilarityOps.pqCodebookFor(emb, tag = sf)
     val cb2 = SimilarityOps.pqCodebookFor(emb, tag = sf)
-    assert(SimilarityOps.pqBuilds <= builds0 + 1, "at most one fit per corpus")
+    assert(Artifacts.builds("pq_centers") <= builds0 + 1, "at most one fit per corpus")
     assert(cb2.subDim == cb.subDim && cb.subDim * cb.m == 64)
     assert(cb.centers.count() == cb.m.toLong * cb.k)
     val codes = SimilarityOps.pqEncode(cb, emb).collect()
@@ -451,7 +451,7 @@ class SimilarityMultimodalSpec extends SparkSpec {
   test("incremental semantic probe: a stored copy flags dup to its original, a novel vector does not") {
     import spark.implicits._
     val idx = SimilarityOps.ivfIndexFor(emb, tag = sf)
-    val builds0 = SimilarityOps.indexBuilds
+    val builds0 = Artifacts.builds("ivf_assign")
     val proto = emb.filter(col("vec_id") === 7).collect()(0)
       .getSeq[Float](1).toArray
     val batch = Seq(
@@ -462,7 +462,7 @@ class SimilarityMultimodalSpec extends SparkSpec {
       .map(r => r.getLong(0) ->
         ((r.getLong(1), r.get(2), Option(r.get(3)).map(_ => r.getDouble(3)),
           r.getBoolean(4)))).toMap
-    assert(SimilarityOps.indexBuilds == builds0, "probe must never refit the index")
+    assert(Artifacts.builds("ivf_assign") == builds0, "probe must never refit the index")
     val (nCand, bestMatch, bestScore, isDup) = got(7000001L)
     assert(isDup && bestMatch == 7L && bestScore.get > 0.999,
       s"stored copy must flag dup to its original: ${got(7000001L)}")
@@ -513,9 +513,9 @@ class SimilarityMultimodalSpec extends SparkSpec {
   test("PQ drift fixture: stored baseline loads with zero refits and equals a recompute") {
     val cb = SimilarityOps.pqCodebookFor(emb, tag = sf)
     val t = SimilarityOps.ensurePqBaseline(emb, tag = sf)
-    val builds0 = SimilarityOps.pqBuilds
+    val builds0 = Artifacts.builds("pq_centers")
     val t2 = SimilarityOps.ensurePqBaseline(emb, tag = sf)
-    assert(t == t2 && SimilarityOps.pqBuilds == builds0,
+    assert(t == t2 && Artifacts.builds("pq_centers") == builds0,
       "baseline reuse must not refit the quantizers")
     def key(r: org.apache.spark.sql.Row) =
       (r.getLong(0), r.getLong(1), r.getDouble(2))
@@ -529,10 +529,10 @@ class SimilarityMultimodalSpec extends SparkSpec {
     val idx = SimilarityOps.ivfIndexFor(emb, tag = sf)
     val cb = SimilarityOps.ivfPqCodebookFor(idx, tag = sf)
     val t = SimilarityOps.ensureIvfPqCodesTable(idx, tag = sf)
-    val pq0 = SimilarityOps.pqBuilds
-    val iv0 = SimilarityOps.indexBuilds
+    val pq0 = Artifacts.builds("pq_centers")
+    val iv0 = Artifacts.builds("ivf_assign")
     val codes = SimilarityOps.ivfPqCodesFor(idx, tag = sf)
-    assert(SimilarityOps.pqBuilds == pq0 && SimilarityOps.indexBuilds == iv0,
+    assert(Artifacts.builds("pq_centers") == pq0 && Artifacts.builds("ivf_assign") == iv0,
       "loading the persisted codes table must fit nothing")
     val desc = spark.sql(s"DESCRIBE EXTENDED $t")
       .collect().map(_.mkString(" ")).mkString("\n")
@@ -744,7 +744,7 @@ class SimilarityMultimodalSpec extends SparkSpec {
     assert(keyOf(served) == keyOf(scratchV2),
       "promoted serving ≡ from-scratch v2 encode")
     // v1's table is untouched by the flip (the q260 contract)
-    val v1 = spark.read.table(SimilarityOps.pqCodesTableName(tagP, 4, 16))
+    val v1 = spark.read.table(SimilarityOps.ensurePqCodesTable(emb, tagP))
     assert(keyOf(v1) ==
       keyOf(SimilarityOps.pqEncode(
         SimilarityOps.pqCodebookFor(emb, tagP), emb)),
@@ -763,13 +763,13 @@ class SimilarityMultimodalSpec extends SparkSpec {
       byStep2("pointer").getBoolean(5), "pointer stays at v1")
     assert(byStep2("availability").getBoolean(5),
       "missing == batch size is the honest no-op availability")
-    assert(!spark.catalog.tableExists(
-      SimilarityOps.pqCodesTableName(SimilarityOps.pqV2Tag(tagR), 4, 16)),
+    assert(!spark.catalog.tableExists(Artifacts.nameFor("pq_codes",
+        Seq(SimilarityOps.pqV2Tag(tagR), 4, 16), Seq(SimilarityOps.unionCorpus(emb, batch)))),
       "no v2 codes table is created on rejection")
     val (verR, servedR) = SimilarityOps.pqServingCodesFor(spark, tagR)
     assert(verR == 1L)
     assert(keyOf(servedR) ==
-      keyOf(spark.read.table(SimilarityOps.pqCodesTableName(tagR, 4, 16))),
+      keyOf(spark.read.table(SimilarityOps.ensurePqCodesTable(emb, tagR))),
       "the un-promoted path serves v1 unchanged")
   }
 
@@ -1106,20 +1106,20 @@ class SimilarityMultimodalSpec extends SparkSpec {
     val tag = s"$sf#refit-noop"
     SimilarityOps.pqCodebookFor(emb, tag) // v1 for this tag (one fit)
     SimilarityOps.ensurePqBaseline(emb, tag)
-    val v1Table = SimilarityOps.pqTableName(tag, 4, 16)
+    val v1Table = SimilarityOps.ensurePqTable(emb, tag)
     val v1Before = spark.table(v1Table).collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2)).toMap
     val batch = emb.filter(col("vec_id") % 5 === 2)
       .select((col("vec_id") + lit(9800000L)).as("vec_id"), col("embedding"))
-    val builds0 = SimilarityOps.pqBuilds
+    val builds0 = Artifacts.builds("pq_centers")
     val rep = SimilarityOps.pqRefitApply(emb, batch, tag).collect()
     assert(rep.nonEmpty && rep.forall(!_.getBoolean(1)),
       "in-distribution batch must not fire the refit trigger")
     assert(rep.forall(r => r.getLong(2) == r.getLong(3)),
       "no-op report mirrors v1 recall in the v2 column")
-    assert(SimilarityOps.pqBuilds == builds0, "no-op path must fit nothing")
-    assert(!spark.catalog.tableExists(
-        SimilarityOps.pqTableName(SimilarityOps.pqV2Tag(tag), 4, 16)),
+    assert(Artifacts.builds("pq_centers") == builds0, "no-op path must fit nothing")
+    assert(!spark.catalog.tableExists(Artifacts.nameFor("pq_centers",
+        Seq(SimilarityOps.pqV2Tag(tag), 4, 16), Seq(SimilarityOps.unionCorpus(emb, batch)))),
       "no-op path must not create the v2 table")
     val v1After = spark.table(v1Table).collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2)).toMap
@@ -1129,7 +1129,7 @@ class SimilarityMultimodalSpec extends SparkSpec {
   test("PQ refit applier: drifting batch fires, v2 is a new versioned table, v1 untouched") {
     import spark.implicits._
     SimilarityOps.pqCodebookFor(emb, tag = sf)
-    val v1Table = SimilarityOps.pqTableName(sf, 4, 16)
+    val v1Table = SimilarityOps.ensurePqTable(emb, sf)
     val v1Before = spark.table(v1Table).collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2)).toMap
     val batch = emb.filter(col("vec_id") % 5 === 2)
@@ -1140,8 +1140,8 @@ class SimilarityMultimodalSpec extends SparkSpec {
           .as("embedding"))
     val rep = SimilarityOps.pqRefitApply(emb, batch, tag = sf).collect()
     assert(rep.nonEmpty && rep.forall(_.getBoolean(1)), "drift batch must fire")
-    assert(spark.catalog.tableExists(
-        SimilarityOps.pqTableName(SimilarityOps.pqV2Tag(sf), 4, 16)),
+    assert(spark.catalog.tableExists(Artifacts.nameFor("pq_centers",
+        Seq(SimilarityOps.pqV2Tag(sf), 4, 16), Seq(SimilarityOps.unionCorpus(emb, batch)))),
       "fired path persists the v2 codebook as its own catalog table")
     val v1After = spark.table(v1Table).collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2)).toMap
@@ -1540,7 +1540,7 @@ class SimilarityMultimodalSpec extends SparkSpec {
     // table, and no packing cumsum window (the corpus re-pack) exists
     // anywhere in the plan
     val p = plan.queryExecution.executedPlan.toString
-    assert(p.contains(CorpusOps.manifestTableName(sf)),
+    assert(p.contains(Artifacts.nameFor("seq_manifest", Seq(sf, 2048), Seq(docs))),
       s"expected the stored manifest table in:\n${p.take(1500)}")
     assert(!"windowspecdefinition\\(lang".r.findFirstIn(p).isDefined,
       "the propagation must not re-derive the packing cumsum from raw docs")

@@ -8,16 +8,5 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   val sf = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.ansi.enabled", "false")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir",
-      graft.engine.Scratch.dir(
-        s"${System.getProperty("java.io.tmpdir")}/graft_wh_${ProcessHandle.current().pid()}"))
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.build("4")
 }

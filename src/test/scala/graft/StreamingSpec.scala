@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.engine.{EventOps, IngestOps, StreamOps, Tables}
+import graft.engine.{Artifacts, EventOps, IngestOps, StreamOps, Tables}
 
 /** Batch==stream equivalence for the windowed event aggregations
   * (SURVEY §7.5: streaming state has no DuckDB oracle; validated by
@@ -759,7 +759,7 @@ class StreamingSpec extends SparkSpec {
     val out = java.nio.file.Files.createTempDirectory("graft_siv_out_").toString + "/a"
     val ckpt = java.nio.file.Files.createTempDirectory("graft_siv_ckpt_").toString
     val input = MemoryStream[(Long, Array[Float])]
-    val builds0 = SimilarityOps.indexBuilds
+    val builds0 = Artifacts.builds("ivf_assign")
     val q = StreamOps.streamingIvfAssign(
       input.toDS().toDF("vec_id", "embedding"), index, out, ckpt)
     try {
@@ -768,7 +768,7 @@ class StreamingSpec extends SparkSpec {
       input.addData(f2.toSeq: _*)
       q.processAllAvailable()
     } finally q.stop()
-    assert(SimilarityOps.indexBuilds == builds0, "streaming assignment must never re-fit")
+    assert(Artifacts.builds("ivf_assign") == builds0, "streaming assignment must never re-fit")
     val streamed = spark.read.parquet(out).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1).toSeq
     val batch = SimilarityOps.ivfIncrementalAssign(index,
@@ -802,7 +802,7 @@ class StreamingSpec extends SparkSpec {
     val out = java.nio.file.Files.createTempDirectory("graft_sim_out_").toString + "/m"
     val ckpt = java.nio.file.Files.createTempDirectory("graft_sim_ckpt_").toString
     val input = MemoryStream[(Long, Array[Float])]
-    val builds0 = SimilarityOps.indexBuilds
+    val builds0 = Artifacts.builds("ivf_assign")
     val q = StreamOps.streamingIvfMaintain(
       input.toDS().toDF("vec_id", "embedding"), index, out, ckpt)
     def report() = graft.engine.TickCommit.readLatest(spark, out, "report")
@@ -832,7 +832,7 @@ class StreamingSpec extends SparkSpec {
         .collect().map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1).toSeq
       assert(streamedAssign == batchAssign)
     } finally q.stop()
-    assert(SimilarityOps.indexBuilds == builds0,
+    assert(Artifacts.builds("ivf_assign") == builds0,
       "streaming maintenance must never re-fit the quantizer")
   }
 
@@ -869,7 +869,7 @@ class StreamingSpec extends SparkSpec {
     val out = java.nio.file.Files.createTempDirectory("graft_srb_out_").toString + "/rb"
     val ckpt = java.nio.file.Files.createTempDirectory("graft_srb_ckpt_").toString
     val input = MemoryStream[(Long, Array[Float])]
-    val (builds0, fits0) = (SimilarityOps.indexBuilds, SimilarityOps.rebFits)
+    val (builds0, fits0) = (Artifacts.builds("ivf_assign"), SimilarityOps.rebFits)
     val q = StreamOps.streamingIvfRebalance(
       input.toDS().toDF("vec_id", "embedding"), index, out, ckpt)
     def report(tick: Long) = spark.read.parquet(s"$out/report")
@@ -972,7 +972,7 @@ class StreamingSpec extends SparkSpec {
           .get.count() == rep3.size,
         "the index_centers snapshot carries one row per live list")
     } finally q.stop()
-    assert(SimilarityOps.indexBuilds == builds0,
+    assert(Artifacts.builds("ivf_assign") == builds0,
       "the coarse quantizer is never re-fit in-stream")
   }
 
@@ -994,7 +994,7 @@ class StreamingSpec extends SparkSpec {
     val out = java.nio.file.Files.createTempDirectory("graft_spq_out_").toString + "/pq"
     val ckpt = java.nio.file.Files.createTempDirectory("graft_spq_ckpt_").toString
     val input = MemoryStream[(Long, Array[Float])]
-    val (ib0, pb0) = (SimilarityOps.indexBuilds, SimilarityOps.pqBuilds)
+    val (ib0, pb0) = (Artifacts.builds("ivf_assign"), Artifacts.builds("pq_centers"))
     val q = StreamOps.streamingIvfPqCodeMaintain(
       input.toDS().toDF("vec_id", "embedding"), index, cb, storedCodes, out, ckpt)
     try {
@@ -1003,7 +1003,7 @@ class StreamingSpec extends SparkSpec {
       input.addData(f2.toSeq: _*)
       q.processAllAvailable()
     } finally q.stop()
-    assert(SimilarityOps.indexBuilds == ib0 && SimilarityOps.pqBuilds == pb0,
+    assert(Artifacts.builds("ivf_assign") == ib0 && Artifacts.builds("pq_centers") == pb0,
       "streaming code maintenance must never re-fit either quantizer")
     def proj(rows: Array[org.apache.spark.sql.Row]) = rows
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)) ->
@@ -1066,7 +1066,7 @@ class StreamingSpec extends SparkSpec {
     val out = java.nio.file.Files.createTempDirectory("graft_cdc_out_").toString + "/cdc"
     val ckpt = java.nio.file.Files.createTempDirectory("graft_cdc_ckpt_").toString
     val input = MemoryStream[(Long, Array[Float], String)]
-    val (builds0, fits0) = (SimilarityOps.indexBuilds, SimilarityOps.rebFits)
+    val (builds0, fits0) = (Artifacts.builds("ivf_assign"), SimilarityOps.rebFits)
     // carry the COMPRESSED serving artifact too (q288 live): the
     // persisted codes table rides the CDC stream and must stay
     // exactly consistent with the tick's centroid set
@@ -1164,7 +1164,7 @@ class StreamingSpec extends SparkSpec {
           nProbe = 4).count() > 0L,
         "the compressed serving path answers from the repaired codes")
     } finally q.stop()
-    assert(SimilarityOps.indexBuilds == builds0,
+    assert(Artifacts.builds("ivf_assign") == builds0,
       "the coarse quantizer is never re-fit by CDC maintenance")
   }
 

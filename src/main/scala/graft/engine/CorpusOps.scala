@@ -66,13 +66,11 @@ object CorpusOps {
     * [[DedupOps.sketchEdges]] (banded bucket joins, never all-pairs)
     * — same (doc_i, doc_j) shape, no other change to the plan.
     * ScaleSpec asserts the two compositions reconcile stage-for-stage
-    * on the fixture. */
+    * on the fixture. The report prices the stored keep-lists of
+    * [[curationStagesFor]]. */
   def curationFunnel(documents: DataFrame,
-                     nearDupEdges: Option[DataFrame] = None,
-                     storedStages: Option[(DataFrame, Seq[(String, DataFrame)])] = None)
-      : DataFrame = {
-    val (toks, stages) = storedStages
-      .getOrElse(curationStageIds(documents, nearDupEdges))
+                     nearDupEdges: Option[DataFrame] = None): DataFrame = {
+    val (toks, stages) = curationStagesFor(documents, nearDupEdges)
     funnelReport(toks, stages)
   }
 
@@ -89,14 +87,14 @@ object CorpusOps {
     * dedup/closure/gate/decontam per report (r19, guide §1.2). Every
     * stage is a deterministic set derivation (md5 keeper, closure
     * labels, pure per-doc gates), so stored ≡ inline — asserted
-    * row-for-row in CoreSpec and by the oracle. Default edge source
-    * only (the catalog form); callers with custom edges derive
-    * inline. */
-  def curationStagesFor(documents: DataFrame, tag: String)
+    * row-for-row in ArtifactsSpec and by the oracle. A custom
+    * near-dup edge frame is one more store input, so each edge
+    * source keys its own keep-lists. */
+  def curationStagesFor(documents: DataFrame, nearDupEdges: Option[DataFrame] = None)
       : (DataFrame, Seq[(String, DataFrame)]) = {
-    lazy val (toks, stages) = curationStageIds(documents, None)
+    lazy val (toks, stages) = curationStageIds(documents, nearDupEdges)
     def stored(part: String)(build: => DataFrame) =
-      Artifacts.table(s"cur_stage_$part", Seq(tag), Seq(documents))(build)
+      Artifacts.table(s"cur_stage_$part", Nil, documents +: nearDupEdges.toSeq)(build)
     (stored("toks")(toks),
      curationStageNames.map(nm => nm -> stored(nm)(stages.toMap.apply(nm))))
   }
@@ -104,8 +102,8 @@ object CorpusOps {
   /** The q91 pipeline's per-stage survivor id-frames — shared by the
     * q220 funnel and its license-gated extension (q257), so the two
     * reports can never drift stage-for-stage. */
-  private def curationStageIds(documents: DataFrame,
-                               nearDupEdges: Option[DataFrame])
+  private[graft] def curationStageIds(documents: DataFrame,
+                                      nearDupEdges: Option[DataFrame])
       : (DataFrame, Seq[(String, DataFrame)]) = {
     // spread the tokenize pass (Spread scaladoc): the piece regex is
     // corpus-wide single-task work on a single-row-group scan
@@ -186,11 +184,8 @@ object CorpusOps {
     * reports reconcile row-for-row and the composition is certified
     * by one oracle. */
   def licensedCurationFunnel(documents: DataFrame,
-                             nearDupEdges: Option[DataFrame] = None,
-                             storedStages: Option[(DataFrame, Seq[(String, DataFrame)])] = None)
-      : DataFrame = {
-    val (toks, stages) = storedStages
-      .getOrElse(curationStageIds(documents, nearDupEdges))
+                             nearDupEdges: Option[DataFrame] = None): DataFrame = {
+    val (toks, stages) = curationStagesFor(documents, nearDupEdges)
     val allowedDocs = documents
       .join(broadcast(sourceLicenseDim(documents)
         .filter(col("verdict") === "allow").select(col("source"))), "source")
@@ -232,15 +227,12 @@ object CorpusOps {
     * intersected per stage; a throughput-tuned production variant
     * would semi-join the probe input down to gate survivors first.
     * Token pricing uses the q66 piece estimate, the same relation
-    * every stage rollup reads (one checkpointed scan). */
+    * every stage rollup reads. The report prices the stored
+    * keep-lists of [[ingestStagesFor]]. */
   def ingestFunnel(storedFps: DataFrame, storedSigs: DataFrame,
-                   batch: DataFrame, batchSigs: DataFrame,
-                   storedStages: Option[(DataFrame, Seq[(String, DataFrame)])] = None)
-      : DataFrame = storedStages match {
-    case Some((toks, stagesWithInput)) =>
-      ingestReportFromToks(toks, stagesWithInput)
-    case None =>
-      ingestReport(batch, ingestStages(storedFps, storedSigs, batch, batchSigs))
+                   batch: DataFrame, batchSigs: DataFrame): DataFrame = {
+    val (toks, stagesWithInput) = ingestStagesFor(storedFps, storedSigs, batch, batchSigs)
+    ingestReportFromToks(toks, stagesWithInput)
   }
 
   /** The PERSISTED ingest-tick keep-lists + token pricing — the q247
@@ -251,16 +243,16 @@ object CorpusOps {
     * report (q247 and its q262 license-gated extension) prices the
     * stored lists. Deterministic derivation (md5 keeper + fp
     * anti-join, pure gate, banded sketch probe) ⇒ stored ≡ inline —
-    * asserted in CoreSpec and by the oracle. Keyed by `tag` (the
-    * catalog's deterministic batch split); streaming ticks with
-    * carried state keep the inline path. */
+    * asserted in ArtifactsSpec and by the oracle. Keyed by the four
+    * input frames' identity; streaming ticks with carried state call
+    * [[ingestStages]] directly. */
   def ingestStagesFor(storedFps: DataFrame, storedSigs: DataFrame,
-                      batch: DataFrame, batchSigs: DataFrame, tag: String)
+                      batch: DataFrame, batchSigs: DataFrame)
       : (DataFrame, Seq[(String, DataFrame)]) = {
     lazy val (exactKeep, gateKeep, ndKeep) =
       ingestStages(storedFps, storedSigs, batch, batchSigs)
     def stored(part: String)(build: => DataFrame) =
-      Artifacts.table(s"ingest_stage_$part", Seq(tag),
+      Artifacts.table(s"ingest_stage_$part", Nil,
         Seq(storedFps, storedSigs, batch, batchSigs))(build)
     (stored("toks")(ingestToks(batch)),
      Seq("input" -> stored("input")(batch.select(col("doc_id"))),
@@ -269,9 +261,9 @@ object CorpusOps {
          "near_dup_vs_stored" -> stored("near_dup_vs_stored")(ndKeep)))
   }
 
-  /** The q220-shaped attrition rollup over a stage triple — split
-    * from [[ingestFunnel]] so [[StreamOps.streamingIngestTick]] can
-    * report AND grow its stores from one stage computation. */
+  /** The q220-shaped attrition rollup over a stage triple — so
+    * [[StreamOps.streamingIngestTick]] can report AND grow its stores
+    * from one stage computation. */
   private[engine] def ingestReport(batch: DataFrame,
       stages: (DataFrame, DataFrame, DataFrame)): DataFrame =
     ingestReportStages(batch, Seq(
@@ -291,15 +283,15 @@ object CorpusOps {
   /** The tick's token pricing — q66's piece estimate over the batch.
     * Spread (Spread scaladoc; a no-op for streaming tick batches —
     * no file source behind them). */
-  private def ingestToks(batch: DataFrame): DataFrame =
+  private[graft] def ingestToks(batch: DataFrame): DataFrame =
     Spread.byKey(batch.select(col("doc_id"), col("text")), col("doc_id"))
       .select(col("doc_id"),
         size(expr(s"regexp_extract_all(text, '${TextOps.pieceRe}', 0)"))
           .cast("long").as("n_toks"))
 
   /** The rollup core over pre-built (toks, stage id-frames incl. the
-    * input row) — shared by the inline path and the stored-stage
-    * probes ([[ingestStagesFor]]). */
+    * input row) — shared by the streaming ticks and the stored-stage
+    * funnels ([[ingestStagesFor]]). */
   private[graft] def ingestReportFromToks(toks: DataFrame,
       stagesWithInput: Seq[(String, DataFrame)]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -330,23 +322,10 @@ object CorpusOps {
     * a deny-source doc never enters the fingerprint or sketch store. */
   def licensedIngestFunnel(storedFps: DataFrame, storedSigs: DataFrame,
                            batch: DataFrame, batchSigs: DataFrame,
-                           licenseDim: DataFrame,
-                           storedStages: Option[(DataFrame, Seq[(String, DataFrame)])] = None)
-      : DataFrame = storedStages match {
-    case Some((toks, stagesWithInput)) =>
-      // the gate stage appended to the STORED q247 frames — same
-      // relational step as the inline path, over the identical
-      // near-dup survivor set
-      val allowedDocs = batch
-        .join(broadcast(licenseDim.filter(col("verdict") === "allow")
-          .select(col("source"))), "source")
-        .select(col("doc_id"))
-      val licKeep = stagesWithInput.last._2
-        .join(allowedDocs, Seq("doc_id"), "left_semi")
-      ingestReportFromToks(toks, stagesWithInput :+ ("license_gate" -> licKeep))
-    case None =>
-      ingestReportStages(batch,
-        licensedIngestStages(storedFps, storedSigs, batch, batchSigs, licenseDim))
+                           licenseDim: DataFrame): DataFrame = {
+    val (toks, stagesWithInput) = ingestStagesFor(storedFps, storedSigs, batch, batchSigs)
+    ingestReportFromToks(toks, stagesWithInput :+
+      ("license_gate" -> licenseGate(batch, licenseDim, stagesWithInput.last._2)))
   }
 
   /** The q247 stage frames plus the license gate — `batch` must carry
@@ -357,13 +336,20 @@ object CorpusOps {
       licenseDim: DataFrame): Seq[(String, DataFrame)] = {
     val (exactKeep, gateKeep, ndKeep) =
       ingestStages(storedFps, storedSigs, batch, batchSigs)
+    Seq("exact_vs_stored" -> exactKeep, "quality_gate" -> gateKeep,
+      "near_dup_vs_stored" -> ndKeep,
+      "license_gate" -> licenseGate(batch, licenseDim, ndKeep))
+  }
+
+  /** The compliance stage: the near-dup survivors whose source's
+    * registry verdict is `allow` — one broadcast semi-join. */
+  private def licenseGate(batch: DataFrame, licenseDim: DataFrame,
+                          ndKeep: DataFrame): DataFrame = {
     val allowedDocs = batch
       .join(broadcast(licenseDim.filter(col("verdict") === "allow")
         .select(col("source"))), "source")
       .select(col("doc_id"))
-    val licKeep = ndKeep.join(allowedDocs, Seq("doc_id"), "left_semi")
-    Seq("exact_vs_stored" -> exactKeep, "quality_gate" -> gateKeep,
-      "near_dup_vs_stored" -> ndKeep, "license_gate" -> licKeep)
+    ndKeep.join(allowedDocs, Seq("doc_id"), "left_semi")
   }
 
   /** The funnel's keeper sets, one frame per stage — shared by the
@@ -373,8 +359,8 @@ object CorpusOps {
     * ([[DedupOps.fingerprintStore]]'s shape): probing the store
     * instead of re-hashing stored text is what makes the exact stage
     * batch-bounded. */
-  private[engine] def ingestStages(storedFps: DataFrame, storedSigs: DataFrame,
-                                   batch: DataFrame, batchSigs: DataFrame)
+  private[graft] def ingestStages(storedFps: DataFrame, storedSigs: DataFrame,
+                                  batch: DataFrame, batchSigs: DataFrame)
       : (DataFrame, DataFrame, DataFrame) = {
     import org.apache.spark.sql.expressions.Window
     val exactKeep = batch
@@ -665,12 +651,12 @@ object CorpusOps {
     * incremental card (q243) and the takedown/retention fold-outs
     * (q273/q287/q291) all declare as their STORED input ("folds into
     * the stored card state"; "the additive corpus-card state, folded
-    * out"): one quality-scan + keeper-window pass per corpus tag,
+    * out"): one quality-scan + keeper-window pass per corpus version,
     * ever (r19, the [[epochOrderRowsFor]] / SketchShared posture).
     * Deterministic exact-integer sums ⇒ stored ≡ inline — asserted
-    * in CoreSpec and by every consumer's oracle. */
-  def corpusCardStateFor(documents: DataFrame, tag: String): DataFrame =
-    Artifacts.table("card_state", Seq(tag), Seq(documents))(corpusCardState(documents))
+    * in ArtifactsSpec and by every consumer's oracle. */
+  def corpusCardStateFor(documents: DataFrame): DataFrame =
+    Artifacts.table("card_state", Nil, Seq(documents))(corpusCardState(documents))
 
   private[engine] def cardFromState(state: DataFrame): DataFrame =
     state
@@ -1385,9 +1371,8 @@ object CorpusOps {
     * permutation is (shard, pos_in_shard), one hash-partitioned
     * shuffle + in-partition sort. */
   def epochTrainingOrder(documents: DataFrame, budgetMult: Long = 4L,
-                         maxEpochs: Long = 4L, nShards: Int = 8,
-                         storedOrder: Option[DataFrame] = None): DataFrame =
-    storedOrder.getOrElse(epochOrderRows(documents, budgetMult, maxEpochs, nShards))
+                         maxEpochs: Long = 4L, nShards: Int = 8): DataFrame =
+    epochOrderRowsFor(documents, budgetMult, maxEpochs, nShards)
       .select(col("doc_id"), col("epoch"), col("shuffle_key"), col("shard"),
         col("pos"))
       .orderBy(col("shard"), col("pos"))
@@ -1399,8 +1384,8 @@ object CorpusOps {
     * scan. Per-shard rank windows follow the [[seededShuffle]]
     * posture: nShards IS the parallelism knob (production uses
     * thousands), each task streams one shard in order. */
-  private def epochOrderRows(documents: DataFrame, budgetMult: Long,
-                             maxEpochs: Long, nShards: Int): DataFrame = {
+  private[graft] def epochOrderRows(documents: DataFrame, budgetMult: Long,
+                                    maxEpochs: Long, nShards: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val keyed = epochKeyedRows(documents, budgetMult, maxEpochs, nShards)
     val w = Window.partitionBy(col("shard"))
@@ -1417,22 +1402,23 @@ object CorpusOps {
     * re-tokenizing and re-ranking the corpus per query (r19, guide
     * §1.2). Deterministic integer chain ⇒ the stored rows are
     * bit-identical to the inline derivation. */
-  def epochOrderRowsFor(documents: DataFrame, tag: String,
-                        budgetMult: Long = 4L, maxEpochs: Long = 4L,
-                        nShards: Int = 8): DataFrame =
-    Artifacts.table("epoch_order", Seq(tag, budgetMult, maxEpochs, nShards), Seq(documents))(
+  def epochOrderRowsFor(documents: DataFrame, budgetMult: Long = 4L,
+                        maxEpochs: Long = 4L, nShards: Int = 8): DataFrame =
+    Artifacts.table("epoch_order", Seq(budgetMult, maxEpochs, nShards), Seq(documents))(
       epochOrderRows(documents, budgetMult, maxEpochs, nShards))
 
   /** The PERSISTED pack spans (the q297 rows WITH running mass) —
     * derived from the stored order rows with one packing cumsum, then
-    * probed by q297/q298/q300/q302/q304 (and the q303 v1 side). */
-  def epochPackRowsFor(documents: DataFrame, tag: String,
-                       budgetMult: Long = 4L, maxEpochs: Long = 4L,
-                       nShards: Int = 8, seqLen: Int = 2048): DataFrame =
-    Artifacts.table("epoch_pack", Seq(tag, budgetMult, maxEpochs, nShards, seqLen),
+    * probed by q297/q298/q300/q302/q304 and both q303 sides.
+    * [[epochPack]], [[loaderResume]], [[epochSpacing]] and the other
+    * pack consumers read these rows, so their sequence spans are
+    * provably identical (one code path, one cumsum). */
+  def epochPackRowsFor(documents: DataFrame, budgetMult: Long = 4L,
+                       maxEpochs: Long = 4L, nShards: Int = 8,
+                       seqLen: Int = 2048): DataFrame =
+    Artifacts.table("epoch_pack", Seq(budgetMult, maxEpochs, nShards, seqLen),
         Seq(documents))(
-      epochPackRowsFromOrder(
-        epochOrderRowsFor(documents, tag, budgetMult, maxEpochs, nShards), seqLen))
+      epochPackRows(epochOrderRowsFor(documents, budgetMult, maxEpochs, nShards), seqLen))
 
   /** The ONE derivation site for the epoch-folded permutation key:
     * admitted pairs → shuffle_key = xxhash64(doc_id·8 + epoch) and
@@ -1470,28 +1456,16 @@ object CorpusOps {
     * hash-match oracle (q297). */
   def epochPack(documents: DataFrame, budgetMult: Long = 4L,
                 maxEpochs: Long = 4L, nShards: Int = 8,
-                seqLen: Int = 2048,
-                storedPack: Option[DataFrame] = None): DataFrame =
-    storedPack.getOrElse(
-        epochPackRows(documents, budgetMult, maxEpochs, nShards, seqLen))
+                seqLen: Int = 2048): DataFrame =
+    epochPackRowsFor(documents, budgetMult, maxEpochs, nShards, seqLen)
       .select(col("shard"), col("pos"), col("doc_id"), col("epoch"),
         col("n_toks"), col("start_seq"), col("end_seq"), col("tok_offset"),
         col("n_seqs"))
       .orderBy(col("shard"), col("pos"))
 
-  /** The pack rows WITH the running mass (`cum`) and no display sort
-    * — [[epochPack]] adds the q297 shape; [[loaderResume]] and
-    * [[epochSpacing]] consume these directly so the three artifacts'
-    * sequence spans are provably identical (one code path, one
-    * cumsum). */
-  private def epochPackRows(documents: DataFrame, budgetMult: Long,
-                            maxEpochs: Long, nShards: Int,
-                            seqLen: Int): DataFrame =
-    epochPackRowsFromOrder(
-      epochOrderRows(documents, budgetMult, maxEpochs, nShards), seqLen)
-
-  private def epochPackRowsFromOrder(orderRows: DataFrame,
-                                     seqLen: Int): DataFrame =
+  /** The pack rows WITH the running mass (`cum`) and no display sort,
+    * cut from the order rows — the build body of [[epochPackRowsFor]]. */
+  private[graft] def epochPackRows(orderRows: DataFrame, seqLen: Int): DataFrame =
     keyedOrderedCumsum(orderRows.filter(col("n_toks") > 0),
         Seq("shard"), Seq("pos"), "n_toks", "cum")
       .withColumn("start_seq", expr(s"(cum - n_toks) DIV $seqLen"))
@@ -1503,12 +1477,14 @@ object CorpusOps {
     * run writes once and every progress/resume consumer reads:
     * the q297 spans WITH their source label and running mass.
     * [[graft.engine.StreamOps.streamingLoaderProgress]] pins this as
-    * its static manifest; at 100 TB it would be a partitioned table
-    * (by shard, ordered by start_seq) so delta reads prune. */
+    * its static manifest. A projection of the stored
+    * [[epochPackRowsFor]] table, so it is written once per corpus and
+    * parameter set; at 100 TB that table would be partitioned by
+    * shard and ordered by start_seq so delta reads prune. */
   def epochPackManifest(documents: DataFrame, budgetMult: Long = 4L,
                         maxEpochs: Long = 4L, nShards: Int = 8,
                         seqLen: Int = 2048): DataFrame =
-    epochPackRows(documents, budgetMult, maxEpochs, nShards, seqLen)
+    epochPackRowsFor(documents, budgetMult, maxEpochs, nShards, seqLen)
       .select(col("shard"), col("pos"), col("doc_id"), col("epoch"),
         col("source"), col("n_toks"), col("cum"), col("start_seq"),
         col("end_seq"))
@@ -1526,16 +1502,12 @@ object CorpusOps {
     * restart. Conservation (pinned in CoreSpec): per shard, consumed
     * mass across retained spans + total mass of dropped spans =
     * min(S·seqLen, shard mass). Pure integer arithmetic over the
-    * shared pack rows → full hash-match oracle; cost = the q297
-    * bound (the filter prunes output, not work — at 100 TB the
-    * pack rows would be a materialized table and this is a
-    * predicate-pushed scan of it). */
+    * stored pack rows → full hash-match oracle; cost = one
+    * predicate-pushed scan of the [[epochPackRowsFor]] table. */
   def loaderResume(documents: DataFrame, budgetMult: Long = 4L,
                    maxEpochs: Long = 4L, nShards: Int = 8,
-                   seqLen: Int = 2048, resumeStep: Long = 2L,
-                   storedPack: Option[DataFrame] = None): DataFrame =
-    storedPack.getOrElse(
-        epochPackRows(documents, budgetMult, maxEpochs, nShards, seqLen))
+                   seqLen: Int = 2048, resumeStep: Long = 2L): DataFrame =
+    epochPackRowsFor(documents, budgetMult, maxEpochs, nShards, seqLen)
       .filter(col("end_seq") >= resumeStep)
       .withColumn("consumed_toks",
         greatest(lit(0L), lit(resumeStep * seqLen) - (col("cum") - col("n_toks")))
@@ -1567,11 +1539,9 @@ object CorpusOps {
     * posture (nShards IS the parallelism knob). */
   def shuffleQualityAudit(documents: DataFrame, budgetMult: Long = 4L,
                           maxEpochs: Long = 4L, nShards: Int = 8,
-                          marginMult: Long = 2L,
-                          storedOrder: Option[DataFrame] = None): DataFrame = {
+                          marginMult: Long = 2L): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val rows = storedOrder
-      .getOrElse(epochOrderRows(documents, budgetMult, maxEpochs, nShards))
+    val rows = epochOrderRowsFor(documents, budgetMult, maxEpochs, nShards)
       .select(col("shard"), col("pos"), col("source"))
       .localCheckpoint(false)
     val w = Window.partitionBy(col("shard")).orderBy(col("pos"))
@@ -1623,13 +1593,11 @@ object CorpusOps {
     * shared pack rows + a per-doc aggregate. */
   def epochSpacing(documents: DataFrame, budgetMult: Long = 4L,
                    maxEpochs: Long = 4L, nShards: Int = 8,
-                   seqLen: Int = 2048, minGapSteps: Long = 1L,
-                   storedPack: Option[DataFrame] = None): DataFrame = {
+                   seqLen: Int = 2048, minGapSteps: Long = 1L): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val wd = Window.partitionBy(col("doc_id"))
       .orderBy(col("start_seq"), col("shard"), col("epoch"))
-    storedPack.getOrElse(
-        epochPackRows(documents, budgetMult, maxEpochs, nShards, seqLen))
+    epochPackRowsFor(documents, budgetMult, maxEpochs, nShards, seqLen)
       .withColumn("gap", col("start_seq") - lag(col("start_seq"), 1).over(wd))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).cast("long").as("n_reps"),
@@ -1658,9 +1626,8 @@ object CorpusOps {
     * bound — a production run mod-reduces; the catalog form stays
     * exact so the oracle can certify it. */
   def orderCommitment(documents: DataFrame, budgetMult: Long = 4L,
-                      maxEpochs: Long = 4L, nShards: Int = 8,
-                      storedOrder: Option[DataFrame] = None): DataFrame =
-    storedOrder.getOrElse(epochOrderRows(documents, budgetMult, maxEpochs, nShards))
+                      maxEpochs: Long = 4L, nShards: Int = 8): DataFrame =
+    epochOrderRowsFor(documents, budgetMult, maxEpochs, nShards)
       .withColumn("h", col("shuffle_key").cast("decimal(38,0)"))
       .groupBy(col("shard"))
       .agg(count(lit(1)).cast("long").as("n_pairs"),
@@ -1681,10 +1648,8 @@ object CorpusOps {
     * the shared pack rows → one group-by over the q297 bound. */
   def packEfficiency(documents: DataFrame, budgetMult: Long = 4L,
                      maxEpochs: Long = 4L, nShards: Int = 8,
-                     seqLen: Int = 2048,
-                     storedPack: Option[DataFrame] = None): DataFrame =
-    storedPack.getOrElse(
-        epochPackRows(documents, budgetMult, maxEpochs, nShards, seqLen))
+                     seqLen: Int = 2048): DataFrame =
+    epochPackRowsFor(documents, budgetMult, maxEpochs, nShards, seqLen)
       .groupBy(col("shard"))
       .agg(count(lit(1)).cast("long").as("n_spans"),
            (max(col("end_seq")) + 1L).cast("long").as("n_seqs"),
@@ -1713,24 +1678,19 @@ object CorpusOps {
     * identical prefix pins the running mass, so every sequence fully
     * inside it is byte-identical; the sequence the first dirty span
     * touches is not). A shard with no disagreement reuses everything.
-    * Cost: two pack chains + one co-partitioned full-outer join on
-    * (shard, pos) — the price of CERTIFYING reuse; a production run
-    * diffs stored manifests instead of recomputing both sides. */
+    * Cost: one co-partitioned full-outer join on (shard, pos) of the
+    * two corpora's stored pack manifests ([[epochPackRowsFor]]) — the
+    * price of CERTIFYING reuse; each side's pack chain is built once
+    * per corpus version. */
   def packInvalidation(documentsV1: DataFrame, documentsV2: DataFrame,
                        budgetMult: Long = 4L, maxEpochs: Long = 4L,
-                       nShards: Int = 8, seqLen: Int = 2048,
-                       storedPackV1: Option[DataFrame] = None): DataFrame = {
-    def shape(rows: DataFrame, p: String) =
-      rows.select(col("shard"), col("pos"), col("doc_id").as(s"${p}_doc"),
-        col("epoch").as(s"${p}_epoch"), col("n_toks").as(s"${p}_toks"),
-        col("cum").as(s"${p}_cum"), col("end_seq").as(s"${p}_end"))
+                       nShards: Int = 8, seqLen: Int = 2048): DataFrame = {
     def side(docs: DataFrame, p: String) =
-      shape(epochPackRows(docs, budgetMult, maxEpochs, nShards, seqLen), p)
-    // the v1 side is the CURRENT corpus's stored manifest when the
-    // caller has one ("a production run diffs stored manifests") — the
-    // v2 side is inherently a fresh pack over the changed corpus
-    val v1 = storedPackV1.map(shape(_, "v1")).getOrElse(side(documentsV1, "v1"))
-    val j = v1.join(side(documentsV2, "v2"),
+      epochPackRowsFor(docs, budgetMult, maxEpochs, nShards, seqLen)
+        .select(col("shard"), col("pos"), col("doc_id").as(s"${p}_doc"),
+          col("epoch").as(s"${p}_epoch"), col("n_toks").as(s"${p}_toks"),
+          col("cum").as(s"${p}_cum"), col("end_seq").as(s"${p}_end"))
+    val j = side(documentsV1, "v1").join(side(documentsV2, "v2"),
         Seq("shard", "pos"), "full_outer")
       .withColumn("dirty",
         col("v1_doc").isNull || col("v2_doc").isNull ||
@@ -1777,10 +1737,8 @@ object CorpusOps {
     * real run writes anyway). */
   def batchMixture(documents: DataFrame, budgetMult: Long = 4L,
                    maxEpochs: Long = 4L, nShards: Int = 8,
-                   seqLen: Int = 2048, maxSharePpm: Long = 500000L,
-                   storedPack: Option[DataFrame] = None): DataFrame = {
-    val contrib = storedPack.getOrElse(
-        epochPackRows(documents, budgetMult, maxEpochs, nShards, seqLen))
+                   seqLen: Int = 2048, maxSharePpm: Long = 500000L): DataFrame = {
+    val contrib = epochPackRowsFor(documents, budgetMult, maxEpochs, nShards, seqLen)
       .select(col("shard"), col("doc_id"), col("source"), col("n_toks"),
         col("cum"), explode(expr("sequence(start_seq, end_seq)")).as("step"))
       .withColumn("toks_in_step",
@@ -1823,9 +1781,8 @@ object CorpusOps {
     * the [[TextOps.qualityScore]] exact-reproducible expression tree,
     * so the oracle replays the full order bit-exactly. */
   def annealOrder(documents: DataFrame, budgetMult: Long = 4L,
-                  maxEpochs: Long = 4L, nShards: Int = 8,
-                  storedOrder: Option[DataFrame] = None): DataFrame =
-    storedOrder.getOrElse(annealOrderRows(documents, budgetMult, maxEpochs, nShards))
+                  maxEpochs: Long = 4L, nShards: Int = 8): DataFrame =
+    annealOrderRowsFor(documents, budgetMult, maxEpochs, nShards)
       .select(col("shard"), col("pos"), col("doc_id"), col("epoch"),
         col("is_anneal"), col("quality"))
       .orderBy(col("shard"), col("pos"))
@@ -1834,18 +1791,17 @@ object CorpusOps {
     * pattern on the q301 permutation, shared by q301 and the q309
     * pack. The quality double is the exact-reproducible expression
     * tree, so the stored rows are bit-identical to the inline form. */
-  def annealOrderRowsFor(documents: DataFrame, tag: String,
-                         budgetMult: Long = 4L, maxEpochs: Long = 4L,
-                         nShards: Int = 8): DataFrame =
-    Artifacts.table("anneal_order", Seq(tag, budgetMult, maxEpochs, nShards), Seq(documents))(
+  def annealOrderRowsFor(documents: DataFrame, budgetMult: Long = 4L,
+                         maxEpochs: Long = 4L, nShards: Int = 8): DataFrame =
+    Artifacts.table("anneal_order", Seq(budgetMult, maxEpochs, nShards), Seq(documents))(
       annealOrderRows(documents, budgetMult, maxEpochs, nShards))
 
   /** The ranked anneal-order rows WITH token masses — [[annealOrder]]
     * adds the q301 shape; [[annealPack]] packs by them, so the two
     * artifacts' permutations are provably identical (the
     * order/pack sharing pattern of [[epochOrderRows]]). */
-  private def annealOrderRows(documents: DataFrame, budgetMult: Long,
-                              maxEpochs: Long, nShards: Int): DataFrame = {
+  private[graft] def annealOrderRows(documents: DataFrame, budgetMult: Long,
+                                     maxEpochs: Long, nShards: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val qual = TextOps.qualityScore(documents).select(col("doc_id"), col("quality"))
     val keyed = epochKeyedRows(documents, budgetMult, maxEpochs, nShards,
@@ -1869,11 +1825,9 @@ object CorpusOps {
     * span arithmetic reports). Same cost shape as [[epochPack]]. */
   def annealPack(documents: DataFrame, budgetMult: Long = 4L,
                  maxEpochs: Long = 4L, nShards: Int = 8,
-                 seqLen: Int = 2048,
-                 storedOrder: Option[DataFrame] = None): DataFrame =
+                 seqLen: Int = 2048): DataFrame =
     keyedOrderedCumsum(
-        storedOrder.getOrElse(
-            annealOrderRows(documents, budgetMult, maxEpochs, nShards))
+        annealOrderRowsFor(documents, budgetMult, maxEpochs, nShards)
           .filter(col("n_toks") > 0),
         Seq("shard"), Seq("pos"), "n_toks", "cum")
       .withColumn("start_seq", expr(s"(cum - n_toks) DIV $seqLen"))
@@ -2531,9 +2485,8 @@ object CorpusOps {
     * the difference between a takedown that reads a manifest table
     * and one that re-packs the corpus to find out what to purge
     * (SCALE.md flagged the derivation as the q268 dominator). */
-  def sequenceManifestFor(documents: DataFrame, tag: String,
-                          seqLen: Int = 2048): DataFrame =
-    Artifacts.table("seq_manifest", Seq(tag, seqLen), Seq(documents))(
+  def sequenceManifestFor(documents: DataFrame, seqLen: Int = 2048): DataFrame =
+    Artifacts.table("seq_manifest", Seq(seqLen), Seq(documents))(
       sequenceManifest(documents, seqLen))
 
   /** Corpus-card takedown fold-OUT (r15, VERDICT r14 missing #1): the

@@ -126,11 +126,12 @@ object DedupOps {
   /** The PERSISTED per-document fingerprint column (doc_id, fp_md5) —
     * the stored-artifact form of "never re-hash stored text" that the
     * takedown fold-outs (q273/q287) and the keeper store both read:
-    * one md5 pass over the corpus per tag, ever (r19, the
+    * one md5 pass over the corpus per version, ever (r19, the
     * SketchShared posture). md5 is a pure per-row function ⇒ stored
-    * ≡ inline — asserted in CoreSpec and by the consumers' oracles. */
-  def docFingerprintsFor(documents: DataFrame, tag: String): DataFrame =
-    Artifacts.table("doc_fps", Seq(tag), Seq(documents))(
+    * ≡ inline — asserted in ArtifactsSpec and by the consumers'
+    * oracles. */
+  def docFingerprintsFor(documents: DataFrame): DataFrame =
+    Artifacts.table("doc_fps", Nil, Seq(documents))(
       documents.select(col("doc_id"), md5(col("text")).as("fp_md5")))
 
   /** [[fingerprintStore]] derived from a stored per-doc fingerprint
@@ -548,18 +549,6 @@ object DedupOps {
       .select(col("doc_id"), coalesce(col("n_dup_of"), lit(0L)).as("n_dup_of"))
       .withColumn("kept", col("n_dup_of") === 0)
       .orderBy(col("doc_id"))
-  }
-
-  /** [[verifiedJaccardPairs]] over a PREBUILT sketch frame
-    * ([[docSketches]] / the SketchShared catalog table): both the
-    * shingle sets and the signatures come from the shared pass, so the
-    * query itself scans no document text at all. Value-identical to
-    * the standalone form (TextDedupSpec). */
-  def verifiedJaccardPairsFromSketches(sketches: DataFrame, threshold: Double = 0.5,
-                                       numHashes: Int = 32): DataFrame = {
-    val shArr = sketches.filter(col("sh").isNotNull).select(col("doc_id"), col("sh"))
-    val sigs = sketches.filter(col("sig").isNotNull).select(col("doc_id"), col("sig"))
-    verifiedJaccardCore(shArr, sigs, threshold, numHashes)
   }
 
   private def verifiedJaccardCore(shArr: DataFrame, sigs: DataFrame,
@@ -1058,10 +1047,10 @@ object DedupOps {
     * demonstrator closure) — a corpus artifact like the sketch pair
     * tables; consumers that only need the (doc_id, cluster_id) map
     * (q232's positive-exclusion set) share one closure per corpus.
-    * An [[Artifacts]] table keyed by (tag, the documents' identity):
-    * the same tag over a different corpus builds its own table. */
-  def clustersFor(documents: DataFrame, tag: String): DataFrame =
-    Artifacts.table("dedup_clusters", Seq(tag), Seq(documents))(
+    * An [[Artifacts]] table keyed by the documents' identity: a
+    * different corpus builds its own table. */
+  def clustersFor(documents: DataFrame): DataFrame =
+    Artifacts.table("dedup_clusters", Nil, Seq(documents))(
       connectedComponentsAuto(documents.select(col("doc_id")),
         jaccardPairs(documents).select(col("doc_i"), col("doc_j"))))
 
@@ -1070,8 +1059,8 @@ object DedupOps {
     * the whole point of the incremental form), so consumers share one
     * closure+hash build per corpus. Keyed like [[clustersFor]]; read
     * back in doc_id order, as built. */
-  def clusterSplitFor(documents: DataFrame, tag: String): DataFrame =
-    Artifacts.table("dedup_split", Seq(tag), Seq(documents))(
+  def clusterSplitFor(documents: DataFrame): DataFrame =
+    Artifacts.table("dedup_split", Nil, Seq(documents))(
       clusterAwareSplit(documents,
         jaccardPairs(documents).select(col("doc_i"), col("doc_j"))))
       .orderBy(col("doc_id"))
@@ -1196,10 +1185,10 @@ object DedupOps {
   /** Stored [[entityGroups]] — the alias table is a CATALOG
     * artifact (built once per dim refresh, read by every consumer),
     * so q222 (the table itself) and q223 (facts joined through it)
-    * share ONE closure build. An [[Artifacts]] table keyed by (tag,
-    * the dim's identity); read back in p_partkey order, as built. */
-  def entityGroupsFor(part: DataFrame, tag: String): DataFrame =
-    Artifacts.table("entity_groups", Seq(tag), Seq(part))(entityGroups(part))
+    * share ONE closure build. An [[Artifacts]] table keyed by the
+    * dim's identity; read back in p_partkey order, as built. */
+  def entityGroupsFor(part: DataFrame): DataFrame =
+    Artifacts.table("entity_groups", Nil, Seq(part))(entityGroups(part))
       .orderBy(col("p_partkey"))
 
   /** ENTITY-ALIAS takedown (q276, r15 — the last store from VERDICT

@@ -51,6 +51,20 @@ object RetrievalOps {
         size(expr(s"regexp_extract_all(lower(text), '${TextOps.tokenRe}', 0)"))
           .cast("long").as("dl"))
 
+  /** The persisted [[bm25Postings]] of `documents` — one tokenize
+    * pass per corpus, ever. Stored clustered by term
+    * (repartition(w) + sortWithinPartitions(w)), so a probe's literal
+    * `isin` prune pushes to the parquet scan and row-group min/max
+    * stats on w skip the non-query vocabulary. */
+  def bm25PostingsFor(documents: DataFrame): DataFrame =
+    Artifacts.table("bm25_postings", Nil, Seq(documents))(
+      bm25Postings(documents).repartition(col("w")).sortWithinPartitions(col("w")))
+
+  /** The persisted [[bm25DocLengths]] of `documents`; N and avgdl
+    * aggregate from it in one 2-column pass. */
+  def bm25DocLengthsFor(documents: DataFrame): DataFrame =
+    Artifacts.table("bm25_doclen", Nil, Seq(documents))(bm25DocLengths(documents))
+
   /** BM25 top-k per query (k1 = 1.2, b = 0.75), probing a stored
     * index — no text pass at query time.
     *
@@ -305,15 +319,14 @@ object RetrievalOps {
       .orderBy(col("qid"))
   }
 
-  /** One-shot form: build the index frames inline and probe them —
-    * the ad-hoc path when no persisted index exists (see
-    * [[graft.queries.RetrievalShared]] for the stored-table path the
-    * catalog uses). */
+  /** BM25 top-k over a corpus: probes its persisted index
+    * ([[bm25PostingsFor]], [[bm25DocLengthsFor]]), building the two
+    * tables on first use. */
   def bm25TopK(documents: DataFrame,
                queries: Seq[String] = defaultQueries,
                k: Int = 10, k1: Double = 1.2, b: Double = 0.75): DataFrame =
     bm25TopKFromIndex(
-      bm25Postings(documents), bm25DocLengths(documents), queries, k, k1, b)
+      bm25PostingsFor(documents), bm25DocLengthsFor(documents), queries, k, k1, b)
 
   /** BM25 HARD-NEGATIVE mining — the contrastive-training data step
     * q201's cluster triplets approximate with random negatives: for

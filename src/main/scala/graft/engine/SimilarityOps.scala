@@ -271,15 +271,15 @@ object SimilarityOps {
     * is a cache of exact deterministic integers; a re-derivation is
     * bit-identical, which is exactly what lets the oracle certify the
     * stored table by recomputing it. */
-  def binarySigsFor(embeddings: DataFrame, tag: String): DataFrame =
-    Artifacts.table("bin_sigs", Seq(tag), Seq(embeddings))(
+  def binarySigsFor(embeddings: DataFrame): DataFrame =
+    Artifacts.table("bin_sigs", Nil, Seq(embeddings))(
       binarySignatures(embeddings).select(col("vec_id"), col("sig")))
 
   /** Persisted multi-word signature table (vec_id, sig ARRAY<BIGINT>)
     * — same cache-of-exact-integers contract as [[binarySigsFor]],
     * for the d > 64 path. */
-  def binarySigsWideFor(embeddings: DataFrame, tag: String): DataFrame =
-    Artifacts.table("bin_sigsw", Seq(tag), Seq(embeddings))(
+  def binarySigsWideFor(embeddings: DataFrame): DataFrame =
+    Artifacts.table("bin_sigsw", Nil, Seq(embeddings))(
       binarySignaturesWide(embeddings).select(col("vec_id"), col("sig")))
 
   /** Binary-quantized search fidelity (q264) — the read path the 32×
@@ -289,31 +289,26 @@ object SimilarityOps {
     * per query join BACK to the float vectors (candidate-bounded) for
     * the exact cosine re-rank, and the report counts hits inside the
     * exact top-k (the q242/q255 integer shape: n_candidates, n_hits,
-    * k). `storedSigs` is the persisted signature table
-    * ([[binarySigsFor]]) — the catalog query probes the stored
-    * artifact, q255-style; None recomputes inline (same values by
-    * exact-integer determinism). Queries broadcast (nQueries rows);
-    * the only corpus-sized work is the signature scan and the exact
-    * baseline it is measured against. */
+    * k). The signatures are read from the persisted signature table
+    * ([[binarySigsFor]]), q255-style, built on first use. Queries
+    * broadcast (nQueries rows); the only corpus-sized work is the
+    * signature scan and the exact baseline it is measured against. */
   def binaryHammingRecall(embeddings: DataFrame, nQueries: Int = 5,
                           k: Int = 10, nCandidates: Int = 50,
-                          storedSigs: Option[DataFrame] = None,
                           exactTop: Option[DataFrame] = None): DataFrame =
-    hammingRecallImpl(embeddings,
-      storedSigs.getOrElse(binarySignatures(embeddings)),
+    hammingRecallImpl(embeddings, binarySigsFor(embeddings),
       bit_count(col("sig").bitwiseXOR(col("qsig"))),
       nQueries, k, nCandidates, exactTop)
 
   /** d > 64 fidelity report: identical chain to [[binaryHammingRecall]]
     * but over [[binarySignaturesWide]] long-ARRAY signatures, with the
     * Hamming distance as the SUMMED PER-WORD POPCOUNT of the xor — the
-    * corpus-sized stage still carries only (vec_id, 8·m-byte sig). */
+    * corpus-sized stage still carries only (vec_id, 8·m-byte sig),
+    * read from the persisted [[binarySigsWideFor]] table. */
   def binaryHammingRecallWide(embeddings: DataFrame, nQueries: Int = 5,
                               k: Int = 10, nCandidates: Int = 50,
-                              storedSigs: Option[DataFrame] = None,
                               exactTop: Option[DataFrame] = None): DataFrame =
-    hammingRecallImpl(embeddings,
-      storedSigs.getOrElse(binarySignaturesWide(embeddings)),
+    hammingRecallImpl(embeddings, binarySigsWideFor(embeddings),
       expr("aggregate(zip_with(sig, qsig, (x, y) -> CAST(bit_count(x ^ y) AS BIGINT)), " +
         "CAST(0 AS BIGINT), (acc, v) -> acc + v)"),
       nQueries, k, nCandidates, exactTop)
@@ -434,17 +429,17 @@ object SimilarityOps {
     * ladder (q266/q274 and the wide-capability spec are unchanged);
     * the stored report is keyed by the rung set so subset and full
     * reports never alias. */
-  def annLadder(embeddings: DataFrame, tag: String,
+  def annLadder(embeddings: DataFrame,
                 nQueries: Int = 5, k: Int = 10,
                 rungs: Seq[String] = AllLadderRungs): DataFrame =
-    Artifacts.table("ann_ladder", Seq(tag, nQueries, k, rungs.sorted), Seq(embeddings))(
-      annLadderBuild(embeddings, tag, nQueries, k, rungs.toSet))
+    Artifacts.table("ann_ladder", Seq(nQueries, k, rungs.sorted), Seq(embeddings))(
+      annLadderBuild(embeddings, nQueries, k, rungs.toSet))
       .orderBy(col("method"))
 
-  private def annLadderBuild(embeddings: DataFrame, tag: String,
-                             nQueries: Int, k: Int,
-                             rungs: Set[String]): DataFrame = {
-    lazy val idx = ivfIndexFor(embeddings, tag)
+  private[graft] def annLadderBuild(embeddings: DataFrame,
+                                    nQueries: Int, k: Int,
+                                    rungs: Set[String]): DataFrame = {
+    lazy val idx = ivfIndexFor(embeddings)
     // each exact baseline computed ONCE and shared by its rungs — the
     // dominant corpus scan runs twice (one per metric), not six times;
     // lazy so a rung subset never materializes a baseline only the
@@ -480,13 +475,9 @@ object SimilarityOps {
     // embeddings despite the q275 wide machinery existing)
     def binRep =
       if (dim <= 64)
-        binaryHammingRecall(embeddings, nQueries, k,
-          storedSigs = Some(binarySigsFor(embeddings, tag)),
-          exactTop = Some(exCos))
+        binaryHammingRecall(embeddings, nQueries, k, exactTop = Some(exCos))
       else
-        binaryHammingRecallWide(embeddings, nQueries, k,
-          storedSigs = Some(binarySigsWideFor(embeddings, tag)),
-          exactTop = Some(exCos))
+        binaryHammingRecallWide(embeddings, nQueries, k, exactTop = Some(exCos))
     val parts = Seq.newBuilder[DataFrame]
     if (rungs("binary_sign64"))
       parts += rung("binary_sign64", 8L * ((dim + 63) / 64), binRep)
@@ -497,12 +488,12 @@ object SimilarityOps {
         int8Recall(embeddings, nQueries, k, exactTop = Some(exCos)))
     if (rungs("pq4x16"))
       parts += rung("pq4x16", 4L,
-        pqAdcRecall(pqCodebookFor(embeddings, tag), embeddings, nQueries, k,
+        pqAdcRecall(pqCodebookFor(embeddings), embeddings, nQueries, k,
           exactTop = Some(exEuc)))
     if (rungs("ivf16_pq4"))
       parts += rung("ivf16_pq4", 12L,
-        ivfPqRecall(idx, ivfPqCodebookFor(idx, tag), embeddings,
-          ivfPqCodesFor(idx, tag), nQueries, k, exactTop = Some(exEuc)))
+        ivfPqRecall(idx, ivfPqCodebookFor(idx), embeddings,
+          ivfPqCodesFor(idx), nQueries, k, exactTop = Some(exEuc)))
     if (rungs("trunc")) parts += mat
     parts.result().reduce(_ unionByName _)
       .orderBy(col("method"))
@@ -533,26 +524,26 @@ object SimilarityOps {
     * (each already plan-audited); the selector itself is a
     * tiers × configs (≤ 6 × ~15 rows) theta-join + a per-tier
     * row_number — dimension-sized, corpus-free. */
-  def servingPolicySelector(embeddings: DataFrame, tag: String,
+  def servingPolicySelector(embeddings: DataFrame,
       tiers: Seq[Long] = Seq(500000L, 700000L, 800000L, 900000L,
         950000L, 1000000L),
       nQueries: Int = 5, k: Int = 10): DataFrame = {
     import embeddings.sparkSession.implicits._
-    val idx = ivfIndexFor(embeddings, tag)
+    val idx = ivfIndexFor(embeddings)
     val n = embeddings.count()
     val dim = embeddings.select(size(col("embedding")).as("d")).limit(1).head.getInt(0)
     val fullScan = lit(nQueries.toLong * (n - 1))
-    val ladder = annLadder(embeddings, tag, nQueries, k)
+    val ladder = annLadder(embeddings, nQueries, k)
       .filter(col("method") =!= "ivf16_pq4")
       .select(col("method").as("config"), col("bytes_per_vec"),
         fullScan.as("n_candidates"), col("sum_hits"), col("sum_k"),
         col("recall_ppm"))
-    val exactDial = ivfProbeSweepFor(idx, tag, nQueries = nQueries, k = k)
+    val exactDial = ivfProbeSweepFor(idx, nQueries = nQueries, k = k)
       .select(concat(lit("ivf_exact_np"), col("n_probe")).as("config"),
         lit(8L * dim + 8L).as("bytes_per_vec"),
         col("n_candidates"), col("sum_hits"), col("sum_k"), col("recall_ppm"))
-    val compressedDial = ivfPqProbeSweepFor(idx, ivfPqCodebookFor(idx, tag),
-        embeddings, ivfPqCodesFor(idx, tag), tag, nQueries = nQueries, k = k)
+    val compressedDial = ivfPqProbeSweepFor(idx, ivfPqCodebookFor(idx),
+        embeddings, ivfPqCodesFor(idx), nQueries = nQueries, k = k)
       .select(concat(lit("ivf16_pq4_np"), col("n_probe")).as("config"),
         lit(12L).as("bytes_per_vec"),
         col("n_candidates"), col("sum_hits"), col("sum_k"), col("recall_ppm"))
@@ -704,7 +695,7 @@ object SimilarityOps {
   }
 
   /** Materialize the IVF index as two [[Artifacts]] tables —
-    * assignments and centroids, keyed by (tag, nLists, the embeddings'
+    * assignments and centroids, keyed by (nLists, the embeddings'
     * identity) — then load it from the catalog, so a brand-new session
     * (or another process sharing the warehouse) loads the assignments
     * with NO quantizer refit (asserted in ScaleSpec): the build is an
@@ -714,16 +705,16 @@ object SimilarityOps {
     * with a literal `list_id IN (…)` filter (the probe set is
     * nQueries×nProbe ints — driver-collectable by construction) prunes
     * the scan to nProbe/nLists of the corpus before any join. */
-  def ensureIvfTables(embeddings: DataFrame, tag: String, nLists: Int = 16): (String, String) = {
+  def ensureIvfTables(embeddings: DataFrame, nLists: Int = 16): (String, String) = {
     lazy val idx = buildIvfIndex(embeddings, nLists)
-    (Artifacts.ensure("ivf_assign", Seq(tag, nLists), Seq(embeddings),
+    (Artifacts.ensure("ivf_assign", Seq(nLists), Seq(embeddings),
        Some(Artifacts.Buckets(nLists, "list_id", "vec_id")))(
        idx.assigned.select(col("vec_id"), col("vec"), col("norm"), col("list_id"))),
-     Artifacts.ensure("ivf_centers", Seq(tag, nLists), Seq(embeddings))(idx.centers))
+     Artifacts.ensure("ivf_centers", Seq(nLists), Seq(embeddings))(idx.centers))
   }
 
-  def ivfIndexFor(embeddings: DataFrame, tag: String, nLists: Int = 16): IvfIndex = {
-    val (at, ct) = ensureIvfTables(embeddings, tag, nLists)
+  def ivfIndexFor(embeddings: DataFrame, nLists: Int = 16): IvfIndex = {
+    val (at, ct) = ensureIvfTables(embeddings, nLists)
     val spark = embeddings.sparkSession
     IvfIndex(
       spark.read.table(at).select(col("vec_id"), col("vec"), col("norm"), col("list_id")),
@@ -738,24 +729,23 @@ object SimilarityOps {
     * the three constituent queries also serve, so the capstone READS
     * its constituents instead of re-pricing every rung. Keyed by every
     * parameter and the identity of the frames they score. */
-  /** Stored [[ivfProbeSweep]] over the tagged (persisted) index —
-    * the form q269 and the q274 selector share. */
-  def ivfProbeSweepFor(index: IvfIndex, tag: String,
+  /** Stored [[ivfProbeSweep]] over the persisted index — the form
+    * q269 and the q274 selector share. */
+  def ivfProbeSweepFor(index: IvfIndex,
                        nProbes: Seq[Int] = Seq(1, 2, 4, 8, 16),
                        nQueries: Int = 5, k: Int = 10): DataFrame =
-    Artifacts.table("ivf_sweep", Seq(tag, nProbes, nQueries, k),
+    Artifacts.table("ivf_sweep", Seq(nProbes, nQueries, k),
         Seq(index.assigned, index.centers))(
       ivfProbeSweep(index, nProbes, nQueries, k))
       .orderBy(col("n_probe"))
 
-  /** Stored [[ivfPqProbeSweep]] over the tagged artifacts — the
+  /** Stored [[ivfPqProbeSweep]] over the persisted artifacts — the
     * form q272 and the q274 selector share. */
   def ivfPqProbeSweepFor(index: IvfIndex, cb: PqCodebook,
                          embeddings: DataFrame, storedCodes: DataFrame,
-                         tag: String,
                          nProbes: Seq[Int] = Seq(1, 2, 4, 8, 16),
                          nQueries: Int = 5, k: Int = 10): DataFrame =
-    Artifacts.table("ivfpq_sweep", Seq(tag, nProbes, nQueries, k),
+    Artifacts.table("ivfpq_sweep", Seq(nProbes, nQueries, k),
         Seq(index.assigned, index.centers, cb.centers, embeddings, storedCodes))(
       ivfPqProbeSweep(index, cb, embeddings, storedCodes, nProbes, nQueries, k))
       .orderBy(col("n_probe"))
@@ -778,9 +768,9 @@ object SimilarityOps {
     * Verify-only side channel (called from graft.Verify, never from
     * Bench): both relations are index-metadata-sized — nVectors ints
     * and nLists small arrays, NOT the corpus — at any scale. */
-  def dumpIvfOracle(embeddings: DataFrame, tag: String, nLists: Int = 16,
+  def dumpIvfOracle(embeddings: DataFrame, nLists: Int = 16,
                     path: String = IvfOracleDumpPath): Unit = {
-    val idx = ivfIndexFor(embeddings, tag, nLists)
+    val idx = ivfIndexFor(embeddings, nLists)
     idx.assigned.select(col("vec_id"), col("list_id"))
       .coalesce(1).write.mode("overwrite").parquet(s"$path/assign")
     idx.centers.coalesce(1).write.mode("overwrite").parquet(s"$path/centers")
@@ -1151,16 +1141,14 @@ object SimilarityOps {
   /** The codebook as an [[Artifacts]] table — the cross-session
     * persistence contract ([[ensureIvfTables]]): a new session loads it
     * with no quantizer refit (ScaleSpec). */
-  def ensurePqTable(embeddings: DataFrame, tag: String,
-                    m: Int = 4, k: Int = 16): String =
-    Artifacts.ensure("pq_centers", Seq(tag, m, k), Seq(embeddings))(
+  def ensurePqTable(embeddings: DataFrame, m: Int = 4, k: Int = 16): String =
+    Artifacts.ensure("pq_centers", Seq(m, k), Seq(embeddings))(
       buildPqCodebook(embeddings, m, k).centers)
 
   /** The stored codebook; its sub-vector width is read from the table
     * once per session. */
-  def pqCodebookFor(embeddings: DataFrame, tag: String,
-                    m: Int = 4, k: Int = 16): PqCodebook = {
-    val t = ensurePqTable(embeddings, tag, m, k)
+  def pqCodebookFor(embeddings: DataFrame, m: Int = 4, k: Int = 16): PqCodebook = {
+    val t = ensurePqTable(embeddings, m, k)
     val centers = embeddings.sparkSession.read.table(t)
     PqCodebook(centers, m, k,
       Artifacts.memo(t)(centers.select(size(col("centroid"))).head().getInt(0)))
@@ -1172,10 +1160,9 @@ object SimilarityOps {
     * embeds it literally). Verify-only side channel. */
   val PqOracleDumpPath = "/tmp/graft_pq_oracle"
 
-  def dumpPqOracle(embeddings: DataFrame, tag: String,
-                   m: Int = 4, k: Int = 16,
+  def dumpPqOracle(embeddings: DataFrame, m: Int = 4, k: Int = 16,
                    path: String = PqOracleDumpPath): Unit =
-    pqCodebookFor(embeddings, tag, m, k).centers
+    pqCodebookFor(embeddings, m, k).centers
       .coalesce(1).write.mode("overwrite").parquet(s"$path/centers")
 
   /** PQ ENCODE — each vector's m nearest sub-centroids (d2 argmin,
@@ -1258,10 +1245,9 @@ object SimilarityOps {
     * ([[pqDrift]]) touch only the new batch, never the stored
     * corpus — the q235/q243 incremental contract applied to codebook
     * staleness. */
-  def ensurePqBaseline(embeddings: DataFrame, tag: String,
-                       m: Int = 4, k: Int = 16): String =
-    Artifacts.ensure("pq_baseline", Seq(tag, m, k), Seq(embeddings))(
-      pqErrStats(pqCodebookFor(embeddings, tag, m, k), embeddings))
+  def ensurePqBaseline(embeddings: DataFrame, m: Int = 4, k: Int = 16): String =
+    Artifacts.ensure("pq_baseline", Seq(m, k), Seq(embeddings))(
+      pqErrStats(pqCodebookFor(embeddings, m, k), embeddings))
 
   /** PQ codebook DRIFT audit — the refit trigger for the stored
     * codebook: encode ONLY the new batch (map-only, batch-sized scan)
@@ -1349,11 +1335,11 @@ object SimilarityOps {
       .select(col("qid"), col("vec_id"), col("adc_d2"))
   }
 
-  /** Versioned tag for the refit codebook (q260): the v2 artifact
-    * rides [[pqCodebookFor]]'s [[Artifacts]] table under this derived
-    * tag, so it lands in a NEW catalog table and the v1 table is
-    * never overwritten —
-    * old encodes stay reproducible against v1 forever. */
+  /** The serving pointer's `codebook_tag` for the refit codebook
+    * (q260/q289). The v2 codebook itself is [[pqCodebookFor]] over
+    * stored ∪ batch, so it lands in a NEW catalog table and the v1
+    * table is never overwritten — old encodes stay reproducible
+    * against v1 forever. */
   private[graft] def pqV2Tag(tag: String): String = s"$tag#pqv2"
 
   /** The stored∪batch frame the v2 codebook fits and both recall
@@ -1365,17 +1351,17 @@ object SimilarityOps {
       .unionByName(batch.select(col("vec_id"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("embedding")))
 
-  /** The v2 codebook: the [[pqV2Tag]] refit over stored ∪ batch. */
-  private def pqV2CodebookFor(embeddings: DataFrame, batch: DataFrame, tag: String,
+  /** The v2 codebook: the refit over stored ∪ batch. */
+  private def pqV2CodebookFor(embeddings: DataFrame, batch: DataFrame,
                               m: Int, k: Int): PqCodebook =
-    pqCodebookFor(unionCorpus(embeddings, batch), pqV2Tag(tag), m, k)
+    pqCodebookFor(unionCorpus(embeddings, batch), m, k)
 
   /** PQ REFIT applier (q260) — acting on the q244 drift flag instead
     * of just raising it (VERDICT r12 #4). Probe the batch against the
     * STORED training baseline ([[pqDrift]] — m metadata rows, batch
     * touched once); if ANY subspace fires the refit trigger, fit
-    * codebook v2 over stored∪batch as a NEW versioned catalog table
-    * ([[pqV2Tag]] — v1 is never overwritten) and report ADC top-k
+    * codebook v2 over stored∪batch as a NEW catalog table (its own
+    * [[Artifacts]] key — v1 is never overwritten) and report ADC top-k
     * recall v1 vs v2 over the grown corpus ([[pqAdcRecall]] twice —
     * the serve/retire decision for the stored artifact). If no
     * subspace fires, the applier is a NO-OP on artifacts: no v2 fit,
@@ -1388,12 +1374,12 @@ object SimilarityOps {
     * codebook build is; each recall pass is the q242 plan (LUT
     * broadcast, corpus scanned once). Output is nQueries rows of
     * pure integers + the trigger boolean. */
-  def pqRefitApply(embeddings: DataFrame, batch: DataFrame, tag: String,
+  def pqRefitApply(embeddings: DataFrame, batch: DataFrame,
                    m: Int = 4, k: Int = 16, refitRatio: Double = 2.0,
                    nQueries: Int = 5, topK: Int = 10): DataFrame = {
     val spark = embeddings.sparkSession
-    val cb1 = pqCodebookFor(embeddings, tag, m, k)
-    val baseline = spark.read.table(ensurePqBaseline(embeddings, tag, m, k))
+    val cb1 = pqCodebookFor(embeddings, m, k)
+    val baseline = spark.read.table(ensurePqBaseline(embeddings, m, k))
     // m rows by construction — bounded driver decision
     val fired = pqDrift(cb1, baseline, batch, refitRatio)
       .filter(col("refit")).limit(1).count() > 0
@@ -1404,7 +1390,7 @@ object SimilarityOps {
       .select(col("qid"), col("n_hits").as("n_hits_v1"), col("k"))
     val r2 =
       if (!fired) r1.select(col("qid"), col("n_hits_v1").as("n_hits_v2"))
-      else pqAdcRecall(pqV2CodebookFor(embeddings, batch, tag, m, k),
+      else pqAdcRecall(pqV2CodebookFor(embeddings, batch, m, k),
           corpus, nQueries, topK, exactTop = Some(exEuc))
         .select(col("qid"), col("n_hits").as("n_hits_v2"))
     r1.join(r2, "qid")
@@ -1424,19 +1410,19 @@ object SimilarityOps {
     * "how different will what users see be" — from the two ADC frames
     * alone, no exact baseline scan.
     *
-    * v1 is the stored-corpus codebook, v2 the [[pqV2Tag]] refit
-    * artifact over stored ∪ batch (the same table q260's fired branch
+    * v1 is the stored-corpus codebook, v2 the refit artifact over
+    * stored ∪ batch (the same table q260's fired branch
     * builds — one artifact, two reports). Both listings rank the SAME
     * stored ∪ batch corpus, so every difference is attributable to
     * the codebook, not the candidate set. Scale: two ADC scans (the
     * pointwise q242 shape) + top-k-sized joins; output is
     * queries × 1 rows, all exact integers. */
-  def pqShadowCompare(embeddings: DataFrame, batch: DataFrame, tag: String,
+  def pqShadowCompare(embeddings: DataFrame, batch: DataFrame,
                       m: Int = 4, k: Int = 16,
                       nQueries: Int = 5, topK: Int = 10): DataFrame = {
     val corpus = unionCorpus(embeddings, batch).localCheckpoint(false)
-    val cb1 = pqCodebookFor(embeddings, tag, m, k)
-    val cb2 = pqV2CodebookFor(embeddings, batch, tag, m, k)
+    val cb1 = pqCodebookFor(embeddings, m, k)
+    val cb2 = pqV2CodebookFor(embeddings, batch, m, k)
     def lst(cb: PqCodebook) = {
       val w = Window.partitionBy(col("qid"))
         .orderBy(col("adc_d2"), col("vec_id"))
@@ -1467,14 +1453,14 @@ object SimilarityOps {
   private def pqPointerName(tag: String, m: Int, k: Int): String =
     Artifacts.nameFor("pq_serving_ptr", Seq(tag, m, k), Nil)
 
-  /** Persisted FLAT-PQ codes table for a corpus under the codebook of
-    * `tag` — the serving artifact the q289 pointer resolves (the
-    * [[ensureIvfPqCodesTable]] pattern without the coarse stage).
-    * Build is one map-only corpus encode, paid once. */
-  def ensurePqCodesTable(embeddings: DataFrame, tag: String,
-                         m: Int = 4, k: Int = 16): String =
-    Artifacts.ensure("pq_codes", Seq(tag, m, k), Seq(embeddings))(
-      pqEncode(pqCodebookFor(embeddings, tag, m, k), embeddings)
+  /** Persisted FLAT-PQ codes table for a corpus under its own
+    * [[pqCodebookFor]] codebook — the serving artifact the q289
+    * pointer resolves (the [[ensureIvfPqCodesTable]] pattern without
+    * the coarse stage). Build is one map-only corpus encode, paid
+    * once. */
+  def ensurePqCodesTable(embeddings: DataFrame, m: Int = 4, k: Int = 16): String =
+    Artifacts.ensure("pq_codes", Seq(m, k), Seq(embeddings))(
+      pqEncode(pqCodebookFor(embeddings, m, k), embeddings)
         .select(col("vec_id") +: (0 until m).map(s => col(s"code_$s")): _*))
 
   /** The SERVING POINTER — one catalog row (version, codes_table,
@@ -1503,11 +1489,11 @@ object SimilarityOps {
     * report, so the dependents READ it instead of re-running two ADC
     * listings each. An [[Artifacts]] table keyed by every parameter
     * and both frames' identity. */
-  def pqShadowFor(embeddings: DataFrame, batch: DataFrame, tag: String,
+  def pqShadowFor(embeddings: DataFrame, batch: DataFrame,
                   m: Int = 4, k: Int = 16,
                   nQueries: Int = 5, topK: Int = 10): DataFrame =
-    Artifacts.table("pq_shadow", Seq(tag, m, k, nQueries, topK), Seq(embeddings, batch))(
-      pqShadowCompare(embeddings, batch, tag, m, k, nQueries, topK))
+    Artifacts.table("pq_shadow", Seq(m, k, nQueries, topK), Seq(embeddings, batch))(
+      pqShadowCompare(embeddings, batch, m, k, nQueries, topK))
       .orderBy(col("qid"))
 
   /** The promotion DECISION + artifact ensure, factored from the cert
@@ -1526,17 +1512,17 @@ object SimilarityOps {
         Seq(tag, m, k, nQueries, topK, maxChurnPerQuery), Seq(embeddings, batch))) {
       val spark = embeddings.sparkSession
       import spark.implicits._
-      val maxChurn = pqShadowFor(embeddings, batch, tag, m, k, nQueries, topK)
+      val maxChurn = pqShadowFor(embeddings, batch, m, k, nQueries, topK)
         .agg(max(col("n_churned"))).head.getLong(0)
       val promoted = maxChurn <= maxChurnPerQuery
-      val v1t = ensurePqCodesTable(embeddings, tag, m, k)
+      val v1t = ensurePqCodesTable(embeddings, m, k)
       val ptrT = pqPointerName(tag, m, k)
       if (!spark.catalog.tableExists(ptrT))
         Seq((1L, v1t, tag)).toDF("version", "codes_table", "codebook_tag")
           .write.mode("overwrite").saveAsTable(ptrT)
       if (promoted) {
         val v2tag = pqV2Tag(tag)
-        val v2t = ensurePqCodesTable(unionCorpus(embeddings, batch), v2tag, m, k)
+        val v2t = ensurePqCodesTable(unionCorpus(embeddings, batch), m, k)
         Seq((2L, v2t, v2tag)).toDF("version", "codes_table", "codebook_tag")
           .write.mode("overwrite").saveAsTable(ptrT)
       }
@@ -1552,9 +1538,8 @@ object SimilarityOps {
     *      integer rule the oracle replays from the two dumped
     *      codebooks);
     *   2. on approval, RE-ENCODE the corpus∪batch under v2 into a NEW
-    *      versioned codes table ([[ensurePqCodesTable]] of
-    *      [[pqV2Tag]] — v1's table is never touched, the q260
-    *      contract) and FLIP the serving pointer to it;
+    *      codes table ([[ensurePqCodesTable]] over stored ∪ batch —
+    *      v1's table is never touched, the q260 contract) and FLIP the serving pointer to it;
     *   3. on rejection, the applier is a NO-OP on artifacts: no v2
     *      codes table, pointer still v1 (asserted in
     *      SimilarityMultimodalSpec alongside promoted-path ≡
@@ -1581,7 +1566,7 @@ object SimilarityOps {
     val corpus = unionCorpus(embeddings, batch).localCheckpoint(false)
     val (promoted, maxChurn) = ensurePqPromotion(embeddings, batch, tag,
       m, k, nQueries, topK, maxChurnPerQuery)
-    val v1t = ensurePqCodesTable(embeddings, tag, m, k)
+    val v1t = ensurePqCodesTable(embeddings, m, k)
     // every probe below re-reads PERSISTED state (pointer + tables)
     val (ptrVer, served) = pqServingCodesFor(spark, tag, m, k)
     val v1codes = spark.read.table(v1t)
@@ -1689,7 +1674,7 @@ object SimilarityOps {
           col("n_before"), col("n_after"),
           (col("n_before") - col("n_after")).cast("long").as("n_removed"),
           (col("n_before") - col("n_after") === col("n_rm")).as("clean"))
-    val v1 = spark.read.table(ensurePqCodesTable(embeddings, tag, m, k))
+    val v1 = spark.read.table(ensurePqCodesTable(embeddings, m, k))
     val v1P = v1.join(rm, Seq("vec_id"), "left_anti").localCheckpoint(false)
     val v2Opt = if (ver == 2L) Some(served) else None
     val v2POpt = v2Opt.map(_.join(rm, Seq("vec_id"), "left_anti")
@@ -1703,8 +1688,8 @@ object SimilarityOps {
             "clean")
     }
     val cbServed =
-      if (ver == 2L) pqV2CodebookFor(embeddings, batch, tag, m, k)
-      else pqCodebookFor(embeddings, tag, m, k)
+      if (ver == 2L) pqV2CodebookFor(embeddings, batch, m, k)
+      else pqCodebookFor(embeddings, m, k)
     val servedP = if (ver == 2L) v2POpt.getOrElse(v1P) else v1P
     val queries = corpus.join(rm, Seq("vec_id"), "left_anti")
       .filter(col("vec_id") < nQueries)
@@ -1739,10 +1724,10 @@ object SimilarityOps {
     * trigger from first principles. Verify-only. */
   val PqV2OracleDumpPath = "/tmp/graft_pqv2_oracle"
 
-  def dumpPqV2Oracle(embeddings: DataFrame, batch: DataFrame, tag: String,
+  def dumpPqV2Oracle(embeddings: DataFrame, batch: DataFrame,
                      m: Int = 4, k: Int = 16,
                      path: String = PqV2OracleDumpPath): Unit =
-    dumpPqOracle(unionCorpus(embeddings, batch), pqV2Tag(tag), m, k, path)
+    dumpPqOracle(unionCorpus(embeddings, batch), m, k, path)
 
   /** Per-vector IVF RESIDUALS — each stored vector minus its list's
     * coarse centroid, the frame the residual codebook fits and
@@ -1758,22 +1743,20 @@ object SimilarityOps {
     * composition every production ANN service runs: PQ fits the
     * RESIDUAL distribution (tighter than raw vectors, since the
     * coarse quantizer has already removed the list mean), and the
-    * persisted artifact rides [[pqCodebookFor]]'s [[Artifacts]] table
-    * under a derived tag. Build is offline and
+    * persisted artifact is [[pqCodebookFor]]'s [[Artifacts]] table
+    * over the residual frame. Build is offline and
     * amortized like every index fit here; loads refit nothing. */
-  def ivfPqCodebookFor(index: IvfIndex, tag: String,
-                       m: Int = 4, k: Int = 16): PqCodebook =
-    pqCodebookFor(residualFrame(index), s"$tag#ivfres", m, k)
+  def ivfPqCodebookFor(index: IvfIndex, m: Int = 4, k: Int = 16): PqCodebook =
+    pqCodebookFor(residualFrame(index), m, k)
 
   /** Stable oracle-facing dump of the residual codebook (the
     * [[PqOracleDumpPath]] contract, separate path because the q255
     * oracle reads both this AND the IVF dump). Verify-only. */
   val IvfPqOracleDumpPath = "/tmp/graft_ivfpq_oracle"
 
-  def dumpIvfPqOracle(index: IvfIndex, tag: String,
-                      m: Int = 4, k: Int = 16,
+  def dumpIvfPqOracle(index: IvfIndex, m: Int = 4, k: Int = 16,
                       path: String = IvfPqOracleDumpPath): Unit =
-    ivfPqCodebookFor(index, tag, m, k).centers
+    ivfPqCodebookFor(index, m, k).centers
       .coalesce(1).write.mode("overwrite").parquet(s"$path/centers")
 
   /** Residual-PQ encode KEEPING the coarse list id — the row shape the
@@ -1796,20 +1779,18 @@ object SimilarityOps {
     * probe with a literal `list_id IN (…)` prunes to nProbe/nLists of
     * the codes at the scan. Build is offline/amortized: one corpus
     * encode (map-only) + one assignment join, paid once. */
-  def ensureIvfPqCodesTable(index: IvfIndex, tag: String,
-                            m: Int = 4, k: Int = 16): String =
-    Artifacts.ensure("ivfpq_codes", Seq(tag, m, k, index.nLists),
+  def ensureIvfPqCodesTable(index: IvfIndex, m: Int = 4, k: Int = 16): String =
+    Artifacts.ensure("ivfpq_codes", Seq(m, k, index.nLists),
         Seq(index.assigned, index.centers),
         Some(Artifacts.Buckets(index.nLists, "list_id", "vec_id")))(
-      pqEncodeWithList(ivfPqCodebookFor(index, tag, m, k), residualFrame(index)))
+      pqEncodeWithList(ivfPqCodebookFor(index, m, k), residualFrame(index)))
 
   /** Load the persisted codes table (building it if absent) — zero
     * sub-quantizer or coarse-quantizer fits on a warm catalog
     * (ScaleSpec). */
-  def ivfPqCodesFor(index: IvfIndex, tag: String,
-                    m: Int = 4, k: Int = 16): DataFrame = {
+  def ivfPqCodesFor(index: IvfIndex, m: Int = 4, k: Int = 16): DataFrame = {
     val spark = index.assigned.sparkSession
-    spark.read.table(ensureIvfPqCodesTable(index, tag, m, k))
+    spark.read.table(ensureIvfPqCodesTable(index, m, k))
   }
 
   /** INCREMENTAL codes for a NEW batch (q256) — the maintenance path
@@ -2095,9 +2076,9 @@ object SimilarityOps {
     * ≤ 2·nLists rows. An [[Artifacts.memo]] keyed by every parameter
     * and the index and batch identity, so the q259 query and its
     * oracle dump share one set of fits. */
-  def ivfRebalanceFor(index: IvfIndex, batch: DataFrame, tag: String,
+  def ivfRebalanceFor(index: IvfIndex, batch: DataFrame,
                       imbalanceFactor: Long = 2L): IvfRebalance =
-    Artifacts.memo(Artifacts.nameFor("ivf_rebalance", Seq(tag, imbalanceFactor),
+    Artifacts.memo(Artifacts.nameFor("ivf_rebalance", Seq(imbalanceFactor),
         Seq(index.assigned, index.centers, batch))) {
       ivfRebalanceApply(index, batch, imbalanceFactor)
     }
@@ -2349,9 +2330,9 @@ object SimilarityOps {
     * itself is iterative/seeded, certified the q67 way). */
   val IvfRebOracleDumpPath = "/tmp/graft_ivfreb_oracle"
 
-  def dumpIvfRebalanceOracle(index: IvfIndex, batch: DataFrame, tag: String,
+  def dumpIvfRebalanceOracle(index: IvfIndex, batch: DataFrame,
                              path: String = IvfRebOracleDumpPath): Unit =
-    ivfRebalanceFor(index, batch, tag).children
+    ivfRebalanceFor(index, batch).children
       .coalesce(1).write.mode("overwrite").parquet(s"$path/children")
 
   /** IVF-PQ CODES REPAIR (q288) — make the persisted codes table

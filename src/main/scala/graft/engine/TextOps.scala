@@ -826,6 +826,34 @@ object TextOps {
            sum(when(col("fails"), col("n_tokens")).otherwise(0L)).as("tokens_fail"))
       .orderBy(col("rule"))
 
+  /** The positioned word-n-gram frame (doc_id, pos, g) — the
+    * positional-postings artifact the span family is the
+    * shuffle-friendly (suffix-array-equivalent) form of. Spread: the
+    * tokenize+gram explosion is the ops' CPU center and a
+    * single-row-group scan would run it on one task (Spread
+    * scaladoc). */
+  private[graft] def positionedGrams(documents: DataFrame, n: Int): DataFrame =
+    Spread.byKey(documents.select(col("doc_id"), col("text")), col("doc_id"))
+      .select(col("doc_id"),
+        expr(s"regexp_extract_all(lower(text), '$tokenRe', 0)").as("toks"))
+      .select(col("doc_id"), explode(expr(
+        s"CASE WHEN size(toks) >= $n THEN transform(sequence(1, size(toks) - ${n - 1}), " +
+        s"i -> struct(i AS pos, array_join(slice(toks, i, $n), ' ') AS g)) " +
+        "ELSE array() END")).as("pg"))
+      .select(col("doc_id"), col("pg.pos").as("pos"), col("pg.g").as("g"))
+
+  /** The PERSISTED positioned-gram frame — q113/q133/q140 all consume
+    * the IDENTICAL (doc_id, pos, g) construction, so it is persisted
+    * once per (corpus, n) like the token postings
+    * ([[RetrievalOps.bm25PostingsFor]]'s stored-index posture): a
+    * production excision pipeline materializes the positional
+    * postings once per corpus snapshot and every span pass probes
+    * them. Pure per-row derivation (regex + slices) ⇒ stored ≡
+    * inline — asserted in ArtifactsSpec and by the consumers' oracles
+    * (r19, guide §1.2). */
+  def positionedGramsFor(documents: DataFrame, n: Int): DataFrame =
+    Artifacts.table("pos_grams", Seq(n), Seq(documents))(positionedGrams(documents, n))
+
   /** Cross-document repeated-SPAN detection — the boilerplate /
     * copied-passage finder that doc-level near-dedup cannot express:
     * positioned word n-grams join on the gram, and each shared
@@ -838,49 +866,13 @@ object TextOps {
     * bucket discipline — a universal boilerplate gram would square
     * the join); the gram string itself is the join key, so the oracle
     * needs no hash replay. One gram shuffle + one pair aggregate;
-    * never all-pairs. */
-  /** The positioned word-n-gram frame (doc_id, pos, g) — the
-    * positional-postings artifact the span family is the
-    * shuffle-friendly (suffix-array-equivalent) form of. Spread: the
-    * tokenize+gram explosion is the ops' CPU center and a
-    * single-row-group scan would run it on one task (Spread
-    * scaladoc). */
-  private def positionedGrams(documents: DataFrame, n: Int): DataFrame =
-    Spread.byKey(documents.select(col("doc_id"), col("text")), col("doc_id"))
-      .select(col("doc_id"),
-        expr(s"regexp_extract_all(lower(text), '$tokenRe', 0)").as("toks"))
-      .select(col("doc_id"), explode(expr(
-        s"CASE WHEN size(toks) >= $n THEN transform(sequence(1, size(toks) - ${n - 1}), " +
-        s"i -> struct(i AS pos, array_join(slice(toks, i, $n), ' ') AS g)) " +
-        "ELSE array() END")).as("pg"))
-      .select(col("doc_id"), col("pg.pos").as("pos"), col("pg.g").as("g"))
-
-  /** The PERSISTED positioned-gram frame — q113/q133/q140 all consume
-    * the IDENTICAL (doc_id, pos, g) construction, so the catalog
-    * persists it once per (corpus tag, n) like the token postings
-    * ([[graft.queries.RetrievalShared]]'s stored-index posture): a
-    * production excision pipeline materializes the positional
-    * postings once per corpus snapshot and every span pass probes
-    * them. Pure per-row derivation (regex + slices) ⇒ stored ≡
-    * inline — asserted in CoreSpec and by the consumers' oracles
-    * (r19, guide §1.2). */
-  def positionedGramsFor(documents: DataFrame, n: Int, tag: String): DataFrame =
-    Artifacts.table("pos_grams", Seq(tag, n), Seq(documents))(positionedGrams(documents, n))
-
+    * never all-pairs. The positioned grams are read from the stored
+    * [[positionedGramsFor]] table, which feeds four consumers here
+    * (the postings count, the semi-join probe and both self-join
+    * sides), each a scan of the table. */
   def sharedSpans(documents: DataFrame, n: Int = 10, minShared: Int = 3,
-                  maxPostings: Int = 50,
-                  storedGrams: Option[DataFrame] = None): DataFrame = {
-    // positioned grams materialize ONCE (the verifiedJaccardPairs
-    // checkpoint discipline): the frame feeds FOUR consumers — the
-    // postings count, the semi-join probe, and both self-join sides —
-    // and without the checkpoint each re-runs the tokenize+explode
-    // scan (plan-audited: 4 Generate+Scan subtrees; measured 2.98 →
-    // 1.40 s at sf0.1). Size is bounded by the corpus's token count —
-    // the same data the postings-count shuffle moves anyway. A stored
-    // frame ([[positionedGramsFor]]) needs no checkpoint — each
-    // consumer scans the table.
-    val ng = storedGrams.getOrElse(
-      positionedGrams(documents, n).localCheckpoint(false))
+                  maxPostings: Int = 50): DataFrame = {
+    val ng = positionedGramsFor(documents, n)
     // lower bound 2: a gram with one posting can never produce a
     // cross-doc hit, and singletons are the overwhelming majority of
     // positioned grams — the bound turns the self-join input from
@@ -936,16 +928,13 @@ object TextOps {
     *
     * Determinism: positions are exact integers; `grp = pos − rn` is
     * the classic gaps-and-islands key; output is totally ordered by
-    * (doc_id, span_start). The oracle replays the identical chain. */
+    * (doc_id, span_start). The oracle replays the identical chain.
+    * The positioned grams are the stored [[positionedGramsFor]]
+    * table, scanned by both the postings count and the probe. */
   def duplicateSpans(documents: DataFrame, n: Int = 10,
-                     maxPostings: Int = 50,
-                     storedGrams: Option[DataFrame] = None): DataFrame = {
+                     maxPostings: Int = 50): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // same positioned-gram construction as sharedSpans; checkpointed
-    // because it feeds both the postings count and the probe (a
-    // stored frame needs no checkpoint — see sharedSpans)
-    val ng = storedGrams.getOrElse(
-      positionedGrams(documents, n).localCheckpoint(false))
+    val ng = positionedGramsFor(documents, n)
     // cross-doc duplication requires >= 2 DISTINCT docs (a gram
     // repeated within one doc is repetitionSignals' business, not a
     // dedup cut); total-postings cap as in sharedSpans. Semi-join, no
@@ -988,8 +977,7 @@ object TextOps {
     * partition order. Every doc with ≥1 token gets a row (n_cut = 0
     * for untouched docs — the accounting the corpus card needs). */
   def exciseDuplicateSpans(documents: DataFrame, n: Int = 10,
-                           maxPostings: Int = 50,
-                           storedGrams: Option[DataFrame] = None): DataFrame = {
+                           maxPostings: Int = 50): DataFrame = {
     val toks = documents
       .select(col("doc_id"),
         expr(s"regexp_extract_all(lower(text), '$tokenRe', 0)").as("toks"))
@@ -997,7 +985,7 @@ object TextOps {
       .select(col("doc_id"),
         posexplode(col("toks")).as(Seq("p0", "tok")))
       .select(col("doc_id"), (col("p0") + 1).cast("long").as("tpos"), col("tok"))
-    val covered = duplicateSpans(documents, n, maxPostings, storedGrams)
+    val covered = duplicateSpans(documents, n, maxPostings)
       .select(col("doc_id"),
         explode(expr("sequence(span_start, span_start + span_tokens - 1)")).as("tpos"))
       .distinct()
@@ -1339,12 +1327,12 @@ object TextOps {
   }
 
   /** The persisted LM model — its three count tables are
-    * [[Artifacts]] tables keyed by (tag, the documents' identity): one
+    * [[Artifacts]] tables keyed by the documents' identity: one
     * corpus scan, ever, then readers load them with zero refits. */
-  def lmModelFor(documents: DataFrame, tag: String): LmModel = {
+  def lmModelFor(documents: DataFrame): LmModel = {
     lazy val m = lmModel(documents)
     def stored(part: String)(build: => DataFrame) =
-      Artifacts.table(s"lm_$part", Seq(tag), Seq(documents))(build)
+      Artifacts.table(s"lm_$part", Nil, Seq(documents))(build)
     LmModel(stored("bi")(m.bigrams), stored("ctx")(m.contexts), stored("vocab")(m.vocab))
   }
 

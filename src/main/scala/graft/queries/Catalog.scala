@@ -40,12 +40,12 @@ object Catalog {
     * SQL replays fitted index state (dedupe key = path; each dump is
     * memoized upstream so repeated registration costs one write). */
   private val ivfDump = OracleDump(SimilarityOps.IvfOracleDumpPath,
-    (s, dir) => SimilarityOps.dumpIvfOracle(Tables.embeddings(s, dir), tag = dir))
+    (s, dir) => SimilarityOps.dumpIvfOracle(Tables.embeddings(s, dir)))
   private val pqDump = OracleDump(SimilarityOps.PqOracleDumpPath,
-    (s, dir) => SimilarityOps.dumpPqOracle(Tables.embeddings(s, dir), tag = dir))
+    (s, dir) => SimilarityOps.dumpPqOracle(Tables.embeddings(s, dir)))
   private val ivfPqDump = OracleDump(SimilarityOps.IvfPqOracleDumpPath,
     (s, dir) => SimilarityOps.dumpIvfPqOracle(
-      SimilarityOps.ivfIndexFor(Tables.embeddings(s, dir), tag = dir), tag = dir))
+      SimilarityOps.ivfIndexFor(Tables.embeddings(s, dir))))
 
   /** STORE-MEMBERSHIP dumps (r16, VERDICT r15 #4): the takedown
     * oracles previously ASSUMED the persisted sketch and
@@ -61,12 +61,11 @@ object Catalog {
       .coalesce(1).write.mode("overwrite")
       .parquet("/tmp/graft_sketch_oracle/docids"))
   private val binSigDump = OracleDump("/tmp/graft_binsig_oracle",
-    (s, dir) => SimilarityOps.binarySigsFor(Tables.embeddings(s, dir), tag = dir)
+    (s, dir) => SimilarityOps.binarySigsFor(Tables.embeddings(s, dir))
       .select(col("vec_id")).coalesce(1).write.mode("overwrite")
       .parquet("/tmp/graft_binsig_oracle/vecids"))
   private val binSigWideDump = OracleDump("/tmp/graft_binsigw_oracle",
-    (s, dir) => SimilarityOps.binarySigsWideFor(wideEmbeddings(s, dir),
-        tag = "w" + dir)
+    (s, dir) => SimilarityOps.binarySigsWideFor(wideEmbeddings(s, dir))
       .select(col("vec_id")).coalesce(1).write.mode("overwrite")
       .parquet("/tmp/graft_binsigw_oracle/vecids"))
 
@@ -102,13 +101,13 @@ object Catalog {
     (s, dir) => {
       val emb = Tables.embeddings(s, dir)
       SimilarityOps.dumpIvfRebalanceOracle(
-        SimilarityOps.ivfIndexFor(emb, tag = dir), rebalanceBatch(emb), tag = dir)
+        SimilarityOps.ivfIndexFor(emb), rebalanceBatch(emb))
     })
 
   private val pqV2Dump = OracleDump(SimilarityOps.PqV2OracleDumpPath,
     (s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      SimilarityOps.dumpPqV2Oracle(emb, driftBatch(emb), tag = dir)
+      SimilarityOps.dumpPqV2Oracle(emb, driftBatch(emb))
     })
 
   /** Shared by q45 (runtime co-partitioning) and q69 (persisted
@@ -1521,7 +1520,7 @@ object Catalog {
         val storedDim = part.filter(pmod(col("p_partkey"), lit(10)) < 8)
         val batch = part.filter(pmod(col("p_partkey"), lit(10)) >= 8)
         DedupOps.incrementalEntityGroups(
-          DedupOps.entityGroupsFor(storedDim, tag = s"$dir:stored"),
+          DedupOps.entityGroupsFor(storedDim),
           storedDim, batch)
       },
       Some("""WITH RECURSIVE
@@ -1584,7 +1583,7 @@ object Catalog {
       (s, dir) => {
         val docs = Tables.documents(s, dir)
         val storedAssign = DedupOps.clusterSplitFor(
-          docs.filter(col("doc_id") < 400), tag = s"$dir:storedSplit")
+          docs.filter(col("doc_id") < 400))
         val pairs = SketchShared.dfCappedJaccardPairs(s, dir)
         DedupOps.incrementalClusterSplit(
           storedAssign,
@@ -1669,9 +1668,7 @@ object Catalog {
     QuerySpec(
       "q295_epoch_order",
       (s, dir) => CorpusOps.epochTrainingOrder(Tables.documents(s, dir),
-        budgetMult = 4L,
-        storedOrder = Some(CorpusOps.epochOrderRowsFor(
-          Tables.documents(s, dir), tag = dir))),
+        budgetMult = 4L),
       Some(q295OracleSql)),
 
     // the capstone the q293→q294→q295 chain feeds: the admitted
@@ -1682,9 +1679,7 @@ object Catalog {
     QuerySpec(
       "q297_epoch_pack",
       (s, dir) => CorpusOps.epochPack(Tables.documents(s, dir),
-        budgetMult = 4L,
-        storedPack = Some(CorpusOps.epochPackRowsFor(
-          Tables.documents(s, dir), tag = dir))),
+        budgetMult = 4L),
       Some(s"""WITH $epochPackCtes
               |SELECT shard, pos, doc_id, epoch, n_toks, start_seq, end_seq,
               |       tok_offset,
@@ -1701,9 +1696,7 @@ object Catalog {
     QuerySpec(
       "q298_loader_resume",
       (s, dir) => CorpusOps.loaderResume(Tables.documents(s, dir),
-        budgetMult = 4L,
-        storedPack = Some(CorpusOps.epochPackRowsFor(
-          Tables.documents(s, dir), tag = dir))),
+        budgetMult = 4L),
       Some(s"""WITH $epochPackCtes
               |SELECT shard, pos, doc_id, epoch, n_toks, start_seq, end_seq,
               |       CAST(GREATEST(start_seq, 2) AS BIGINT) AS resume_seq,
@@ -1720,9 +1713,7 @@ object Catalog {
     QuerySpec(
       "q299_shuffle_quality",
       (s, dir) => CorpusOps.shuffleQualityAudit(Tables.documents(s, dir),
-        budgetMult = 4L,
-        storedOrder = Some(CorpusOps.epochOrderRowsFor(
-          Tables.documents(s, dir), tag = dir))),
+        budgetMult = 4L),
       Some(s"""WITH $epochOrderSrcCtes,
               |mk AS (SELECT shard, pos, source,
               |         lag(source) OVER (PARTITION BY shard ORDER BY pos) AS prev_src
@@ -1766,9 +1757,7 @@ object Catalog {
     QuerySpec(
       "q300_epoch_spacing",
       (s, dir) => CorpusOps.epochSpacing(Tables.documents(s, dir),
-        budgetMult = 4L,
-        storedPack = Some(CorpusOps.epochPackRowsFor(
-          Tables.documents(s, dir), tag = dir))),
+        budgetMult = 4L),
       Some(s"""WITH $epochPackCtes,
               |g AS (SELECT doc_id, start_seq,
               |        start_seq - lag(start_seq) OVER (PARTITION BY doc_id
@@ -1792,9 +1781,7 @@ object Catalog {
     QuerySpec(
       "q301_anneal_order",
       (s, dir) => CorpusOps.annealOrder(Tables.documents(s, dir),
-        budgetMult = 4L,
-        storedOrder = Some(CorpusOps.annealOrderRowsFor(
-          Tables.documents(s, dir), tag = dir))),
+        budgetMult = 4L),
       Some(q301OracleSql)),
 
     // pack-efficiency report: per shard, sequences/spans, spans per
@@ -1805,9 +1792,7 @@ object Catalog {
     QuerySpec(
       "q302_pack_efficiency",
       (s, dir) => CorpusOps.packEfficiency(Tables.documents(s, dir),
-        budgetMult = 4L,
-        storedPack = Some(CorpusOps.epochPackRowsFor(
-          Tables.documents(s, dir), tag = dir))),
+        budgetMult = 4L),
       Some(s"""WITH $epochPackCtes
               |SELECT shard, CAST(COUNT(*) AS BIGINT) AS n_spans,
               |       CAST(MAX(end_seq) + 1 AS BIGINT) AS n_seqs,
@@ -1833,9 +1818,7 @@ object Catalog {
       (s, dir) => CorpusOps.packInvalidation(
         Tables.documents(s, dir),
         Tables.documents(s, dir).filter(expr("doc_id % 37 != 0")),
-        budgetMult = 4L,
-        storedPackV1 = Some(CorpusOps.epochPackRowsFor(
-          Tables.documents(s, dir), tag = dir))),
+        budgetMult = 4L),
       Some(q303OracleSql)),
 
     // per-step batch-mixture audit: in the data-parallel reading,
@@ -1846,9 +1829,7 @@ object Catalog {
     QuerySpec(
       "q304_batch_mixture",
       (s, dir) => CorpusOps.batchMixture(Tables.documents(s, dir),
-        budgetMult = 4L,
-        storedPack = Some(CorpusOps.epochPackRowsFor(
-          Tables.documents(s, dir), tag = dir))),
+        budgetMult = 4L),
       Some(s"""WITH $epochPackCtes,
               |ex AS (SELECT p.shard, p.doc_id, d.source, p.n_toks, p.cum, e.step
               |       FROM pk2 p JOIN documents d ON p.doc_id = d.doc_id,
@@ -1881,9 +1862,7 @@ object Catalog {
     QuerySpec(
       "q309_anneal_pack",
       (s, dir) => CorpusOps.annealPack(Tables.documents(s, dir),
-        budgetMult = 4L,
-        storedOrder = Some(CorpusOps.annealOrderRowsFor(
-          Tables.documents(s, dir), tag = dir))),
+        budgetMult = 4L),
       Some(q309OracleSql)),
 
     // training-order reproducibility commitment: per shard, Σh and
@@ -1893,9 +1872,7 @@ object Catalog {
     QuerySpec(
       "q307_order_commitment",
       (s, dir) => CorpusOps.orderCommitment(Tables.documents(s, dir),
-        budgetMult = 4L,
-        storedOrder = Some(CorpusOps.epochOrderRowsFor(
-          Tables.documents(s, dir), tag = dir))),
+        budgetMult = 4L),
       Some(s"""WITH $epochOrderCtes
               |SELECT shard, CAST(COUNT(*) AS BIGINT) AS n_pairs,
               |       CAST(SUM(CAST(shuffle_key AS HUGEINT)) AS VARCHAR)
@@ -1966,7 +1943,7 @@ object Catalog {
     QuerySpec(
       "q227_cluster_split",
       (s, dir) => DedupOps.clusterAwareSplitFromClusters(
-        DedupOps.clustersFor(Tables.documents(s, dir), tag = dir)),
+        DedupOps.clustersFor(Tables.documents(s, dir))),
       Some(q227OracleSql)),
 
     // the certified end-to-end chain: cluster-aware split (q227) →
@@ -1981,7 +1958,7 @@ object Catalog {
         val docs = Tables.documents(s, dir)
         CorpusOps.leakageSafePipelineReport(docs,
           DedupOps.clusterAwareSplitFromClusters(
-            DedupOps.clustersFor(docs, tag = dir)))
+            DedupOps.clustersFor(docs)))
       },
       Some(q236OracleSql)),
 
@@ -2782,7 +2759,7 @@ object Catalog {
           .select((col("doc_id") + lit(1000000L)).as("doc_id"),
             concat(col("text"), lit(" zqx"),
               pmod(col("doc_id"), lit(5)).cast("string")).as("text"))
-        val stored = TextOps.lmModelFor(docs, tag = dir)
+        val stored = TextOps.lmModelFor(docs)
         TextOps.lmScoreWith(TextOps.lmModelMerge(stored, batch), batch)
       },
       Some(s"""WITH alltx AS (
@@ -3002,7 +2979,7 @@ object Catalog {
       "q232_hard_negatives",
       (s, dir) => RetrievalOps.hardNegatives(
         RetrievalShared.postings(s, dir), RetrievalShared.docLengths(s, dir),
-        DedupOps.clustersFor(Tables.documents(s, dir), tag = dir)),
+        DedupOps.clustersFor(Tables.documents(s, dir))),
       Some(q232OracleSql)),
 
     // Stored-index coverage audit: the engine reads the PERSISTED
@@ -3339,7 +3316,7 @@ object Catalog {
     QuerySpec(
       "q223_entity_revenue",
       (s, dir) => DedupOps.entityRevenue(Tables.lineitem(s, dir),
-        DedupOps.entityGroupsFor(Tables.part(s, dir), tag = dir)),
+        DedupOps.entityGroupsFor(Tables.part(s, dir))),
       Some(s"""WITH RECURSIVE pr AS (
               |  SELECT a.p_partkey AS doc_i, b.p_partkey AS doc_j
               |  FROM part a JOIN part b
@@ -3370,7 +3347,7 @@ object Catalog {
     // lookup table a pipeline joins through.
     QuerySpec(
       "q222_entity_groups",
-      (s, dir) => DedupOps.entityGroupsFor(Tables.part(s, dir), tag = dir),
+      (s, dir) => DedupOps.entityGroupsFor(Tables.part(s, dir)),
       Some("""WITH RECURSIVE pr AS (
              |  SELECT a.p_partkey AS doc_i, b.p_partkey AS doc_j
              |  FROM part a JOIN part b
@@ -3489,9 +3466,7 @@ object Catalog {
     // all-pairs.
     QuerySpec(
       "q113_shared_spans",
-      (s, dir) => TextOps.sharedSpans(Tables.documents(s, dir),
-        storedGrams = Some(TextOps.positionedGramsFor(
-          Tables.documents(s, dir), 10, dir))),
+      (s, dir) => TextOps.sharedSpans(Tables.documents(s, dir)),
       Some("""WITH tok AS (
              |  SELECT doc_id, regexp_extract_all(lower(text), '[A-Za-z0-9_]+') AS t FROM documents),
              |ng AS (
@@ -3520,9 +3495,7 @@ object Catalog {
     // q113; the island merge is a per-doc window, never all-pairs.
     QuerySpec(
       "q133_duplicate_spans",
-      (s, dir) => TextOps.duplicateSpans(Tables.documents(s, dir),
-        storedGrams = Some(TextOps.positionedGramsFor(
-          Tables.documents(s, dir), 10, dir))),
+      (s, dir) => TextOps.duplicateSpans(Tables.documents(s, dir)),
       Some("""WITH tok AS (
              |  SELECT doc_id, regexp_extract_all(lower(text), '[A-Za-z0-9_]+') AS t FROM documents),
              |ng AS (
@@ -3547,9 +3520,7 @@ object Catalog {
     // keeps an accounting row, n_cut = 0 when untouched.
     QuerySpec(
       "q140_span_excision",
-      (s, dir) => TextOps.exciseDuplicateSpans(Tables.documents(s, dir),
-        storedGrams = Some(TextOps.positionedGramsFor(
-          Tables.documents(s, dir), 10, dir))),
+      (s, dir) => TextOps.exciseDuplicateSpans(Tables.documents(s, dir)),
       Some("""WITH tok AS (
              |  SELECT doc_id, regexp_extract_all(lower(text), '[A-Za-z0-9_]+') AS t FROM documents),
              |tp AS (SELECT doc_id, CAST(i AS BIGINT) AS tpos, t[i] AS tok
@@ -3846,7 +3817,7 @@ object Catalog {
       // hash match certifies the shared label table for every
       // consumer behind it
       (s, dir) => DedupOps.nearDedupFromClusters(
-        DedupOps.clustersFor(Tables.documents(s, dir), tag = dir)),
+        DedupOps.clustersFor(Tables.documents(s, dir))),
       Some("""WITH RECURSIVE sh AS (
              |  SELECT DISTINCT doc_id, s FROM (
              |    SELECT doc_id, substr(text, unnest(range(1, length(text) - 3)), 5) AS s
@@ -3876,7 +3847,7 @@ object Catalog {
     QuerySpec(
       "q201_contrastive_triplets",
       (s, dir) => CorpusOps.contrastiveTripletsFromClusters(
-        DedupOps.clustersFor(Tables.documents(s, dir), tag = dir)),
+        DedupOps.clustersFor(Tables.documents(s, dir))),
       Some(q201OracleSql)),
 
     // duplication-aware training weights over the same closure: every
@@ -3885,7 +3856,7 @@ object Catalog {
     QuerySpec(
       "q209_dup_weights",
       (s, dir) => DedupOps.dupTrainingWeightsFromClusters(
-        DedupOps.clustersFor(Tables.documents(s, dir), tag = dir)),
+        DedupOps.clustersFor(Tables.documents(s, dir))),
       Some("""WITH RECURSIVE sh AS (
              |  SELECT DISTINCT doc_id, s FROM (
              |    SELECT doc_id, substr(text, unnest(range(1, length(text) - 3)), 5) AS s
@@ -3919,7 +3890,7 @@ object Catalog {
       "q139_canonical_by_quality",
       (s, dir) => DedupOps.canonicalByQualityFromClusters(
         Tables.documents(s, dir),
-        DedupOps.clustersFor(Tables.documents(s, dir), tag = dir)),
+        DedupOps.clustersFor(Tables.documents(s, dir))),
       Some("""WITH RECURSIVE sh AS (
              |  SELECT DISTINCT doc_id, s FROM (
              |    SELECT doc_id, substr(text, unnest(range(1, length(text) - 3)), 5) AS s
@@ -3953,7 +3924,7 @@ object Catalog {
     QuerySpec(
       "q130_cluster_histogram",
       (s, dir) => DedupOps.clusterSizeHistogramFromClusters(
-        DedupOps.clustersFor(Tables.documents(s, dir), tag = dir)),
+        DedupOps.clustersFor(Tables.documents(s, dir))),
       Some("""WITH RECURSIVE sh AS (
              |  SELECT DISTINCT doc_id, s FROM (
              |    SELECT doc_id, substr(text, unnest(range(1, length(text) - 3)), 5) AS s
@@ -4501,8 +4472,7 @@ object Catalog {
     // with the per-stage drop — the run's own datasheet.
     QuerySpec(
       "q220_curation_funnel",
-      (s, dir) => CorpusOps.curationFunnel(Tables.documents(s, dir),
-        storedStages = Some(CorpusOps.curationStagesFor(Tables.documents(s, dir), dir))),
+      (s, dir) => CorpusOps.curationFunnel(Tables.documents(s, dir)),
       Some(q220OracleSql)),
 
     // License/compliance gate composed into the q220 funnel (VERDICT
@@ -4513,8 +4483,7 @@ object Catalog {
     // what the oracle certifies.
     QuerySpec(
       "q257_license_funnel",
-      (s, dir) => CorpusOps.licensedCurationFunnel(Tables.documents(s, dir),
-        storedStages = Some(CorpusOps.curationStagesFor(Tables.documents(s, dir), dir))),
+      (s, dir) => CorpusOps.licensedCurationFunnel(Tables.documents(s, dir)),
       Some(q257OracleSql)),
 
     // The q116 accounting pattern on the compliance dimension: every
@@ -4550,11 +4519,7 @@ object Catalog {
         CorpusOps.ingestFunnel(
           DedupOps.fingerprintStore(docs.filter(col("doc_id") < 450)),
           sk.filter(col("doc_id") < 450),
-          batch, sk.filter(col("doc_id") >= 450),
-          storedStages = Some(CorpusOps.ingestStagesFor(
-            DedupOps.fingerprintStore(docs.filter(col("doc_id") < 450)),
-            sk.filter(col("doc_id") < 450),
-            batch, sk.filter(col("doc_id") >= 450), dir)))
+          batch, sk.filter(col("doc_id") >= 450))
       },
       Some(q247OracleSql)),
 
@@ -4576,11 +4541,7 @@ object Catalog {
           DedupOps.fingerprintStore(docs.filter(col("doc_id") < 450)),
           sk.filter(col("doc_id") < 450),
           batch, sk.filter(col("doc_id") >= 450),
-          CorpusOps.sourceLicenseDim(docs),
-          storedStages = Some(CorpusOps.ingestStagesFor(
-            DedupOps.fingerprintStore(docs.filter(col("doc_id") < 450)),
-            sk.filter(col("doc_id") < 450),
-            batch, sk.filter(col("doc_id") >= 450), dir)))
+          CorpusOps.sourceLicenseDim(docs))
       },
       Some(q262OracleSql)),
 
@@ -4924,9 +4885,9 @@ object Catalog {
             when(pmod(col("doc_id"), lit(2)) === 0,
               concat(col("text"), lit(" r11"))).otherwise(col("text")).as("text"))
         CorpusOps.corpusCardIncremental(
-          CorpusOps.corpusCardStateFor(docs, dir),
+          CorpusOps.corpusCardStateFor(docs),
           DedupOps.fingerprintStoreFromFps(
-            DedupOps.docFingerprintsFor(docs, dir)), batch)
+            DedupOps.docFingerprintsFor(docs)), batch)
       },
       Some(s"""WITH b AS (
              |  SELECT doc_id + 3000000 AS doc_id, lang, source,
@@ -5131,7 +5092,7 @@ object Catalog {
     QuerySpec(
       "q67_ivf_topk",
       (s, dir) => SimilarityOps.ivfTopK(
-        SimilarityOps.ivfIndexFor(Tables.embeddings(s, dir), tag = dir),
+        SimilarityOps.ivfIndexFor(Tables.embeddings(s, dir)),
         nQueries = 5, k = 10, nProbe = 4),
       Some("""WITH v AS (
              |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e,
@@ -5170,7 +5131,7 @@ object Catalog {
     QuerySpec(
       "q121_ivf_list_stats",
       (s, dir) => SimilarityOps.ivfListStats(
-        SimilarityOps.ivfIndexFor(Tables.embeddings(s, dir), tag = dir)),
+        SimilarityOps.ivfIndexFor(Tables.embeddings(s, dir))),
       Some("""WITH a AS (
              |  SELECT list_id FROM read_parquet('/tmp/graft_ivf_oracle/assign/*.parquet')),
              |c AS (
@@ -5187,7 +5148,7 @@ object Catalog {
       "q221_ivf_purity",
       (s, dir) => SimilarityOps.ivfLabelPurity(
         Tables.embeddings(s, dir),
-        SimilarityOps.ivfIndexFor(Tables.embeddings(s, dir), tag = dir)),
+        SimilarityOps.ivfIndexFor(Tables.embeddings(s, dir))),
       Some("""WITH a AS (
              |  SELECT vec_id, CAST(list_id AS BIGINT) AS list_id
              |  FROM read_parquet('/tmp/graft_ivf_oracle/assign/*.parquet')),
@@ -5212,7 +5173,7 @@ object Catalog {
       "q212_index_coverage",
       (s, dir) => SimilarityOps.ivfCoverageAudit(
         Tables.embeddings(s, dir),
-        SimilarityOps.ivfIndexFor(Tables.embeddings(s, dir), tag = dir)),
+        SimilarityOps.ivfIndexFor(Tables.embeddings(s, dir))),
       Some("""WITH a AS (
              |  SELECT vec_id FROM read_parquet('/tmp/graft_ivf_oracle/assign/*.parquet')),
              |v AS (SELECT vec_id FROM embeddings)
@@ -5347,7 +5308,7 @@ object Catalog {
           .select((col("vec_id") + lit(1000000L)).as("vec_id"),
             reverse(col("embedding")).as("embedding"))
         SimilarityOps.ivfIncrementalAppend(
-          SimilarityOps.ivfIndexFor(emb, tag = dir), batch)
+          SimilarityOps.ivfIndexFor(emb), batch)
       },
       Some("""WITH centers AS (
              |  SELECT c_list_id, CAST(centroid AS DOUBLE[]) AS c
@@ -5414,7 +5375,7 @@ object Catalog {
             when(pmod(col("vec_id"), lit(14)) === 3, col("embedding"))
               .otherwise(reverse(col("embedding"))).as("embedding"))
         SimilarityOps.ivfSemanticProbe(
-          SimilarityOps.ivfIndexFor(emb, tag = dir), batch)
+          SimilarityOps.ivfIndexFor(emb), batch)
       },
       Some("""WITH v AS (
              |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e,
@@ -5468,7 +5429,7 @@ object Catalog {
       "q241_pq_codes",
       (s, dir) => {
         val emb = Tables.embeddings(s, dir)
-        SimilarityOps.pqEncode(SimilarityOps.pqCodebookFor(emb, tag = dir), emb)
+        SimilarityOps.pqEncode(SimilarityOps.pqCodebookFor(emb), emb)
       },
       Some("""WITH cb AS (
              |  SELECT CAST(subspace AS BIGINT) AS subspace,
@@ -5513,7 +5474,7 @@ object Catalog {
       "q242_pq_adc_recall",
       (s, dir) => {
         val emb = Tables.embeddings(s, dir)
-        SimilarityOps.pqAdcRecall(SimilarityOps.pqCodebookFor(emb, tag = dir), emb)
+        SimilarityOps.pqAdcRecall(SimilarityOps.pqCodebookFor(emb), emb)
       },
       Some(q242OracleSql),
       dumps = Seq(pqDump)),
@@ -5533,8 +5494,8 @@ object Catalog {
       (s, dir) => {
         val emb = Tables.embeddings(s, dir)
         SimilarityOps.pqDrift(
-          SimilarityOps.pqCodebookFor(emb, tag = dir),
-          s.read.table(SimilarityOps.ensurePqBaseline(emb, tag = dir)),
+          SimilarityOps.pqCodebookFor(emb),
+          s.read.table(SimilarityOps.ensurePqBaseline(emb)),
           driftBatch(emb))
       },
       Some("""WITH cb AS (
@@ -5603,10 +5564,10 @@ object Catalog {
       "q255_ivfpq_recall",
       (s, dir) => {
         val emb = Tables.embeddings(s, dir)
-        val idx = SimilarityOps.ivfIndexFor(emb, tag = dir)
+        val idx = SimilarityOps.ivfIndexFor(emb)
         SimilarityOps.ivfPqRecall(
-          idx, SimilarityOps.ivfPqCodebookFor(idx, tag = dir), emb,
-          SimilarityOps.ivfPqCodesFor(idx, tag = dir))
+          idx, SimilarityOps.ivfPqCodebookFor(idx), emb,
+          SimilarityOps.ivfPqCodesFor(idx))
       },
       Some(q255OracleSql),
       dumps = Seq(ivfDump, ivfPqDump)),
@@ -5626,13 +5587,13 @@ object Catalog {
       (s, dir) => {
         import org.apache.spark.sql.functions.{col, lit, pmod, reverse}
         val emb = Tables.embeddings(s, dir)
-        val idx = SimilarityOps.ivfIndexFor(emb, tag = dir)
-        val cb = SimilarityOps.ivfPqCodebookFor(idx, tag = dir)
+        val idx = SimilarityOps.ivfIndexFor(emb)
+        val cb = SimilarityOps.ivfPqCodebookFor(idx)
         val batch = emb.filter(pmod(col("vec_id"), lit(7)) === 3)
           .select((col("vec_id") + lit(1000000L)).as("vec_id"),
             reverse(col("embedding")).as("embedding"))
         SimilarityOps.ivfPqCodeMaintain(
-          SimilarityOps.ivfPqCodesFor(idx, tag = dir),
+          SimilarityOps.ivfPqCodesFor(idx),
           SimilarityOps.ivfPqIncrementalCodes(idx, cb, batch))
       },
       Some("""WITH a AS (
@@ -5722,8 +5683,8 @@ object Catalog {
       (s, dir) => {
         val emb = Tables.embeddings(s, dir)
         SimilarityOps.ivfRebalanceFor(
-          SimilarityOps.ivfIndexFor(emb, tag = dir),
-          rebalanceBatch(emb), tag = dir).report
+          SimilarityOps.ivfIndexFor(emb),
+          rebalanceBatch(emb)).report
       },
       Some("""WITH centers AS (
              |  SELECT CAST(c_list_id AS BIGINT) AS list_id, CAST(centroid AS DOUBLE[]) AS c
@@ -5807,7 +5768,7 @@ object Catalog {
       "q260_pq_refit",
       (s, dir) => {
         val emb = Tables.embeddings(s, dir)
-        SimilarityOps.pqRefitApply(emb, driftBatch(emb), tag = dir)
+        SimilarityOps.pqRefitApply(emb, driftBatch(emb))
       },
       Some("""WITH cb1 AS (
              |  SELECT CAST(subspace AS BIGINT) AS subspace,
@@ -5958,7 +5919,7 @@ object Catalog {
       "q279_index_ab_shadow",
       (s, dir) => {
         val emb = Tables.embeddings(s, dir)
-        SimilarityOps.pqShadowFor(emb, driftBatch(emb), tag = dir)
+        SimilarityOps.pqShadowFor(emb, driftBatch(emb))
       },
       Some(q279OracleSql),
       dumps = Seq(pqDump, pqV2Dump)),
@@ -6001,8 +5962,7 @@ object Catalog {
       "q264_binary_ann",
       (s, dir) => {
         val emb = Tables.embeddings(s, dir)
-        SimilarityOps.binaryHammingRecall(emb,
-          storedSigs = Some(SimilarityOps.binarySigsFor(emb, tag = dir)))
+        SimilarityOps.binaryHammingRecall(emb)
       },
       Some(q264OracleSql)),
 
@@ -6020,8 +5980,7 @@ object Catalog {
       "q275_binary_ann_wide",
       (s, dir) => {
         val emb = wideEmbeddings(s, dir)
-        SimilarityOps.binaryHammingRecallWide(emb,
-          storedSigs = Some(SimilarityOps.binarySigsWideFor(emb, tag = "w" + dir)))
+        SimilarityOps.binaryHammingRecallWide(emb)
       },
       Some(q275OracleSql)),
 
@@ -6033,7 +5992,7 @@ object Catalog {
     // certifies, so the capstone cannot drift from its constituents.
     QuerySpec(
       "q266_ann_ladder",
-      (s, dir) => SimilarityOps.annLadder(Tables.embeddings(s, dir), tag = dir),
+      (s, dir) => SimilarityOps.annLadder(Tables.embeddings(s, dir)),
       Some(s"""SELECT method, bytes_per_vec, sum_hits, sum_k,
               |       CAST(sum_hits * 1000000 // sum_k AS BIGINT) AS recall_ppm
               |FROM (
@@ -6067,8 +6026,7 @@ object Catalog {
     QuerySpec(
       "q269_nprobe_sweep",
       (s, dir) => SimilarityOps.ivfProbeSweepFor(
-        SimilarityOps.ivfIndexFor(Tables.embeddings(s, dir), tag = dir),
-        tag = dir),
+        SimilarityOps.ivfIndexFor(Tables.embeddings(s, dir))),
       Some(q269OracleSql),
       dumps = Seq(ivfDump)),
 
@@ -6090,7 +6048,7 @@ object Catalog {
         import org.apache.spark.sql.functions.{lit, pmod}
         val docs = Tables.documents(s, dir)
         val emb = Tables.embeddings(s, dir)
-        val idx = SimilarityOps.ivfIndexFor(emb, tag = dir)
+        val idx = SimilarityOps.ivfIndexFor(emb)
         CorpusOps.takedownPropagation(
           docs,
           docs.filter(pmod(col("doc_id"), lit(17)) === 4).select(col("doc_id")),
@@ -6098,8 +6056,8 @@ object Catalog {
           RetrievalShared.docLengths(s, dir),
           SketchShared.sketches(s, dir),
           idx.assigned,
-          SimilarityOps.ivfPqCodesFor(idx, tag = dir),
-          storedManifest = Some(CorpusOps.sequenceManifestFor(docs, tag = dir)))
+          SimilarityOps.ivfPqCodesFor(idx),
+          storedManifest = Some(CorpusOps.sequenceManifestFor(docs)))
       },
       Some("""WITH rm AS (
              |  SELECT DISTINCT doc_id FROM documents WHERE doc_id % 17 = 4),
@@ -6225,7 +6183,7 @@ object Catalog {
         import org.apache.spark.sql.functions.{lit, pmod}
         val docs = Tables.documents(s, dir)
         val emb = Tables.embeddings(s, dir)
-        val idx = SimilarityOps.ivfIndexFor(emb, tag = dir)
+        val idx = SimilarityOps.ivfIndexFor(emb)
         CorpusOps.takedownApply(
           docs,
           docs.filter(pmod(col("doc_id"), lit(17)) === 4).select(col("doc_id")),
@@ -6233,8 +6191,8 @@ object Catalog {
           RetrievalShared.docLengths(s, dir),
           SketchShared.sketches(s, dir),
           idx.assigned,
-          SimilarityOps.ivfPqCodesFor(idx, tag = dir),
-          storedManifest = Some(CorpusOps.sequenceManifestFor(docs, tag = dir)))
+          SimilarityOps.ivfPqCodesFor(idx),
+          storedManifest = Some(CorpusOps.sequenceManifestFor(docs)))
       },
       Some(q270OracleSqlOver("doc_id % 17 = 4")),
       dumps = Seq(ivfDump, sketchDump)),
@@ -6258,12 +6216,12 @@ object Catalog {
         CorpusOps.takedownStores(
           docs,
           docs.filter(pmod(col("doc_id"), lit(17)) === 4).select(col("doc_id")),
-          TextOps.lmModelFor(docs, tag = dir),
-          CorpusOps.corpusCardStateFor(docs, dir),
-          DedupOps.docFingerprintsFor(docs, dir),
-          SimilarityOps.binarySigsFor(Tables.embeddings(s, dir), tag = dir),
+          TextOps.lmModelFor(docs),
+          CorpusOps.corpusCardStateFor(docs),
+          DedupOps.docFingerprintsFor(docs),
+          SimilarityOps.binarySigsFor(Tables.embeddings(s, dir)),
           binarySigsWide = Some(SimilarityOps.binarySigsWideFor(
-            wideEmbeddings(s, dir), tag = "w" + dir)))
+            wideEmbeddings(s, dir))))
       },
       Some(q273OracleSqlOver("doc_id % 17 = 4")),
       dumps = Seq(binSigDump, binSigWideDump)),
@@ -6287,7 +6245,7 @@ object Catalog {
         import org.apache.spark.sql.functions.{expr, md5}
         val docs = Tables.documents(s, dir)
         val emb = Tables.embeddings(s, dir)
-        val idx = SimilarityOps.ivfIndexFor(emb, tag = dir)
+        val idx = SimilarityOps.ivfIndexFor(emb)
         CorpusOps.docRetentionSweep(
           docs,
           expr("CAST(date_add(DATE'2024-01-01', CAST(doc_id % 28 AS INT)) AS TIMESTAMP)"),
@@ -6296,13 +6254,13 @@ object Catalog {
           RetrievalShared.docLengths(s, dir),
           SketchShared.sketches(s, dir),
           idx.assigned,
-          SimilarityOps.ivfPqCodesFor(idx, tag = dir),
-          TextOps.lmModelFor(docs, tag = dir),
-          CorpusOps.corpusCardStateFor(docs, dir),
-          SimilarityOps.binarySigsFor(emb, tag = dir),
-          storedManifest = Some(CorpusOps.sequenceManifestFor(docs, tag = dir)),
+          SimilarityOps.ivfPqCodesFor(idx),
+          TextOps.lmModelFor(docs),
+          CorpusOps.corpusCardStateFor(docs),
+          SimilarityOps.binarySigsFor(emb),
+          storedManifest = Some(CorpusOps.sequenceManifestFor(docs)),
           binarySigsWide = Some(SimilarityOps.binarySigsWideFor(
-            wideEmbeddings(s, dir), tag = "w" + dir)))
+            wideEmbeddings(s, dir))))
       },
       Some(s"""SELECT * FROM (${q270OracleSqlOver("doc_id % 28 < 7")})
               |UNION ALL
@@ -6352,23 +6310,22 @@ object Catalog {
         import org.apache.spark.sql.functions.{lit, md5, pmod}
         val docs = Tables.documents(s, dir)
         val emb = Tables.embeddings(s, dir)
-        val idx = SimilarityOps.ivfIndexFor(emb, tag = dir)
+        val idx = SimilarityOps.ivfIndexFor(emb)
         CorpusOps.quarantineRoundTrip(
           docs, emb,
           docs.filter(pmod(col("doc_id"), lit(17)) === 4).select(col("doc_id")),
           RetrievalShared.postings(s, dir),
           RetrievalShared.docLengths(s, dir),
           SketchShared.sketches(s, dir),
-          DedupOps.docFingerprintsFor(docs, dir),
-          TextOps.lmModelFor(docs, tag = dir),
-          CorpusOps.corpusCardStateFor(docs, dir),
+          DedupOps.docFingerprintsFor(docs),
+          TextOps.lmModelFor(docs),
+          CorpusOps.corpusCardStateFor(docs),
           idx,
-          SimilarityOps.ivfPqCodesFor(idx, tag = dir),
-          SimilarityOps.ivfPqCodebookFor(idx, tag = dir),
-          SimilarityOps.binarySigsFor(emb, tag = dir),
+          SimilarityOps.ivfPqCodesFor(idx),
+          SimilarityOps.ivfPqCodebookFor(idx),
+          SimilarityOps.binarySigsFor(emb),
           wide = Some((wideEmbeddings(s, dir),
-            SimilarityOps.binarySigsWideFor(wideEmbeddings(s, dir),
-              tag = "w" + dir))))
+            SimilarityOps.binarySigsWideFor(wideEmbeddings(s, dir)))))
       },
       Some(s"""WITH rm AS (SELECT DISTINCT doc_id FROM documents WHERE doc_id % 17 = 4),
               |keep AS (SELECT * FROM documents
@@ -6475,7 +6432,7 @@ object Catalog {
           part,
           part.filter(pmod(col("p_partkey"), lit(17)) === 4)
             .select(col("p_partkey")),
-          DedupOps.entityGroupsFor(part, tag = dir))
+          DedupOps.entityGroupsFor(part))
       },
       Some("""WITH RECURSIVE rm AS (
              |  SELECT p_partkey FROM part WHERE p_partkey % 17 = 4),
@@ -6536,15 +6493,15 @@ object Catalog {
         import org.apache.spark.sql.functions.{lit, pmod}
         val docs = Tables.documents(s, dir)
         val emb = Tables.embeddings(s, dir)
-        val idx = SimilarityOps.ivfIndexFor(emb, tag = dir)
+        val idx = SimilarityOps.ivfIndexFor(emb)
         CorpusOps.takedownServingCert(
           docs.filter(pmod(col("doc_id"), lit(17)) === 6)
             .select(col("doc_id")),
           RetrievalShared.postings(s, dir),
           RetrievalShared.docLengths(s, dir),
           emb, idx,
-          SimilarityOps.pqCodebookFor(emb, tag = dir),
-          SimilarityOps.binarySigsFor(emb, tag = dir))
+          SimilarityOps.pqCodebookFor(emb),
+          SimilarityOps.binarySigsFor(emb))
       },
       Some(q277OracleSql),
       dumps = Seq(ivfDump, pqDump)),
@@ -6562,13 +6519,13 @@ object Catalog {
         import org.apache.spark.sql.functions.{lit, pmod}
         val docs = Tables.documents(s, dir)
         val emb = Tables.embeddings(s, dir)
-        val idx = SimilarityOps.ivfIndexFor(emb, tag = dir)
+        val idx = SimilarityOps.ivfIndexFor(emb)
         CorpusOps.takedownServingCertIvfPq(
           docs.filter(pmod(col("doc_id"), lit(17)) === 6)
             .select(col("doc_id")),
           emb, idx,
-          SimilarityOps.ivfPqCodebookFor(idx, tag = dir),
-          SimilarityOps.ivfPqCodesFor(idx, tag = dir))
+          SimilarityOps.ivfPqCodebookFor(idx),
+          SimilarityOps.ivfPqCodesFor(idx))
       },
       Some(s"""WITH rm AS (SELECT DISTINCT doc_id FROM documents WHERE doc_id % 17 = 6),
              |a AS (
@@ -6659,7 +6616,7 @@ object Catalog {
       (s, dir) => {
         import org.apache.spark.sql.functions.{lit, pmod, not}
         val emb = Tables.embeddings(s, dir)
-        val idx = SimilarityOps.ivfIndexFor(emb, tag = dir)
+        val idx = SimilarityOps.ivfIndexFor(emb)
         val purged = SimilarityOps.IvfIndex(
           idx.assigned.filter(not(
             col("list_id").cast("long") < 3 &&
@@ -6729,10 +6686,10 @@ object Catalog {
       "q272_ivfpq_nprobe_sweep",
       (s, dir) => {
         val emb = Tables.embeddings(s, dir)
-        val idx = SimilarityOps.ivfIndexFor(emb, tag = dir)
+        val idx = SimilarityOps.ivfIndexFor(emb)
         SimilarityOps.ivfPqProbeSweepFor(idx,
-          SimilarityOps.ivfPqCodebookFor(idx, tag = dir), emb,
-          SimilarityOps.ivfPqCodesFor(idx, tag = dir), tag = dir)
+          SimilarityOps.ivfPqCodebookFor(idx), emb,
+          SimilarityOps.ivfPqCodesFor(idx))
       },
       Some(q272OracleSql),
       dumps = Seq(ivfDump, ivfPqDump)),
@@ -6750,7 +6707,7 @@ object Catalog {
     QuerySpec(
       "q274_serving_policy",
       (s, dir) => SimilarityOps.servingPolicySelector(
-        Tables.embeddings(s, dir), tag = dir),
+        Tables.embeddings(s, dir)),
       Some(s"""WITH cfg AS (
               |  SELECT 'binary_sign64' AS config, CAST(8 AS BIGINT) AS bytes_per_vec,
               |         CAST(5 * ((SELECT COUNT(*) FROM embeddings) - 1) AS BIGINT) AS n_candidates,
@@ -6820,7 +6777,7 @@ object Catalog {
       // cold pass paid ~15 s of quantizer fits for discarded rows. The
       // filter stays as the output contract; the full wide ladder
       // remains exercised by SimilarityMultimodalSpec.
-      (s, dir) => SimilarityOps.annLadder(wideEmbeddings(s, dir), tag = "w" + dir,
+      (s, dir) => SimilarityOps.annLadder(wideEmbeddings(s, dir),
           rungs = Seq("binary_sign64", "int8_sym127", "trunc"))
         .filter(col("method").isin(
           "binary_sign64", "int8_sym127", "trunc_16", "trunc_32"))
@@ -6859,13 +6816,13 @@ object Catalog {
       "q288_ivfpq_codes_repair",
       (s, dir) => {
         val emb = Tables.embeddings(s, dir)
-        val idx = SimilarityOps.ivfIndexFor(emb, tag = dir)
+        val idx = SimilarityOps.ivfIndexFor(emb)
         SimilarityOps.ivfPqCodesRepair(
-          SimilarityOps.ivfPqCodesFor(idx, tag = dir),
+          SimilarityOps.ivfPqCodesFor(idx),
           idx,
-          SimilarityOps.ivfRebalanceFor(idx, rebalanceBatch(emb), tag = dir)
+          SimilarityOps.ivfRebalanceFor(idx, rebalanceBatch(emb))
             .updated,
-          SimilarityOps.ivfPqCodebookFor(idx, tag = dir)).report
+          SimilarityOps.ivfPqCodebookFor(idx)).report
       },
       Some("""WITH centers AS (
              |  SELECT CAST(c_list_id AS BIGINT) AS list_id, CAST(centroid AS DOUBLE[]) AS c

@@ -23,7 +23,7 @@ import graft.engine.{Artifacts, EventOps, Tables, TemporalOps}
   *
   * Every store is a deterministic derivation of the events table
   * (exact-integer windows/rollups; each hash-matches its own
-  * oracle), so stored ≡ inline — asserted row-for-row in CoreSpec.
+  * oracle), so stored ≡ inline — asserted row-for-row in ArtifactsSpec.
   * Each is a [[graft.engine.Artifacts]] table keyed by the events
   * table's identity.
   */

@@ -1948,140 +1948,4 @@ class CoreSpec extends SparkSpec {
           "declare matching OracleDump(s) on the QuerySpec")
     }
   }
-
-  test("stored epoch order/pack/anneal tables are bit-identical to the inline derivation") {
-    // r19: the loader family's consumers probe persisted order/pack
-    // manifests (the SketchShared posture its scaladocs declare). The
-    // store must change NOTHING: every consumer's rows — q295 order,
-    // q297 pack, q307 commitments, q301/q309 anneal — are row-for-row
-    // identical whether derived inline or read from the table.
-    val docs = Tables.documents(spark, sf)
-    val tag = s"coretest_$sf"
-    def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.collect().map(_.toString).sorted.toSeq
-    val ordStored = CorpusOps.epochOrderRowsFor(docs, tag)
-    assert(sortedRows(CorpusOps.epochTrainingOrder(docs,
-        storedOrder = Some(ordStored))) ==
-      sortedRows(CorpusOps.epochTrainingOrder(docs)),
-      "stored training order must equal the inline derivation")
-    val packStored = CorpusOps.epochPackRowsFor(docs, tag)
-    assert(sortedRows(CorpusOps.epochPack(docs,
-        storedPack = Some(packStored))) ==
-      sortedRows(CorpusOps.epochPack(docs)),
-      "stored pack spans must equal the inline derivation")
-    assert(sortedRows(CorpusOps.orderCommitment(docs,
-        storedOrder = Some(ordStored))) ==
-      sortedRows(CorpusOps.orderCommitment(docs)),
-      "stored-order commitments must equal the inline derivation")
-    val annStored = CorpusOps.annealOrderRowsFor(docs, tag)
-    assert(sortedRows(CorpusOps.annealPack(docs,
-        storedOrder = Some(annStored))) ==
-      sortedRows(CorpusOps.annealPack(docs)),
-      "stored anneal pack must equal the inline derivation")
-  }
-
-  test("shared event stores are bit-identical to the inline derivations") {
-    // r19: the takedown/retention sweeps (q284/q286/q290) read the six
-    // event-derived stores from EventShared tables instead of
-    // re-deriving them per query. The store must change NOTHING: each
-    // table's rows equal the declared store query's own derivation.
-    def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.collect().map(_.toString).sorted.toSeq
-    val ev = Tables.events(spark, sf)
-    val pairs = Seq(
-      ("manifest", graft.queries.EventShared.manifest(spark, sf),
-        TemporalOps.sessionPackManifest(ev)),
-      ("sessions", graft.queries.EventShared.sessions(spark, sf),
-        EventOps.sessionize(ev)),
-      ("funnel", graft.queries.EventShared.funnel(spark, sf),
-        EventOps.funnel(ev)),
-      ("retention", graft.queries.EventShared.retention(spark, sf),
-        EventOps.retentionCohorts(ev)),
-      ("transitions", graft.queries.EventShared.transitions(spark, sf),
-        EventOps.eventTransitions(ev)),
-      ("attribution", graft.queries.EventShared.attribution(spark, sf),
-        EventOps.lastTouchAttribution(ev)))
-    pairs.foreach { case (name, stored, inline) =>
-      // dtypes, not full schema: the parquet roundtrip relaxes
-      // nullability (true for every stored column), which the dumped
-      // query output erases anyway — names/types must hold exactly
-      assert(stored.dtypes.toSeq == inline.dtypes.toSeq,
-        s"$name: stored column names/types must equal the inline derivation's")
-      assert(sortedRows(stored) == sortedRows(inline),
-        s"$name: stored rows must equal the inline derivation")
-    }
-  }
-
-  test("stored card state and doc fingerprints are bit-identical to the inline derivations") {
-    // r19: q243/q273/q287/q291 read the mergeable card state and the
-    // per-doc fingerprint column from persisted tables (their own
-    // scaladocs call both STORED artifacts). The store must change
-    // NOTHING, including the keeper rollup derived from stored fps.
-    import org.apache.spark.sql.functions.{col, md5}
-    def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.collect().map(_.toString).sorted.toSeq
-    val docs = Tables.documents(spark, sf)
-    val tag = s"coretest_docstores_$sf"
-    assert(sortedRows(CorpusOps.corpusCardStateFor(docs, tag)) ==
-      sortedRows(CorpusOps.corpusCardState(docs)),
-      "stored card state must equal the inline derivation")
-    val fpsStored = DedupOps.docFingerprintsFor(docs, tag)
-    assert(sortedRows(fpsStored) ==
-      sortedRows(docs.select(col("doc_id"), md5(col("text")).as("fp_md5"))),
-      "stored doc fingerprints must equal the inline md5 pass")
-    assert(sortedRows(DedupOps.fingerprintStoreFromFps(fpsStored)) ==
-      sortedRows(DedupOps.fingerprintStore(docs)),
-      "the keeper store derived from stored fps must equal the text re-hash")
-    // positioned-gram store (q113/q133/q140): the span reports must be
-    // row-for-row identical whether grams derive inline or from the table
-    val pg = TextOps.positionedGramsFor(docs, 10, tag)
-    assert(sortedRows(TextOps.sharedSpans(docs, storedGrams = Some(pg))) ==
-      sortedRows(TextOps.sharedSpans(docs)),
-      "stored positioned grams must replay sharedSpans exactly")
-    assert(sortedRows(TextOps.duplicateSpans(docs, storedGrams = Some(pg))) ==
-      sortedRows(TextOps.duplicateSpans(docs)),
-      "stored positioned grams must replay duplicateSpans exactly")
-  }
-
-  test("stored funnel stage tables are bit-identical to the inline derivation") {
-    // r19: q220/q257 price the SAME curation keep-lists and q247/q262
-    // the SAME ingest-tick keep-lists (their scaladocs declare the
-    // stage frames shared by construction), so the catalog persists
-    // each list once per corpus version (the SketchShared posture).
-    // The store must change NOTHING: every funnel report is
-    // row-for-row identical whether the stages derive inline or read
-    // from the tables.
-    import org.apache.spark.sql.functions.col
-    val docs = Tables.documents(spark, sf)
-    val tag = s"coretest_funnel_$sf"
-    def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.collect().map(_.toString).sorted.toSeq
-    val curStored = CorpusOps.curationStagesFor(docs, tag)
-    assert(sortedRows(CorpusOps.curationFunnel(docs,
-        storedStages = Some(curStored))) ==
-      sortedRows(CorpusOps.curationFunnel(docs)),
-      "stored curation stages must replay the q220 funnel exactly")
-    assert(sortedRows(CorpusOps.licensedCurationFunnel(docs,
-        storedStages = Some(curStored))) ==
-      sortedRows(CorpusOps.licensedCurationFunnel(docs)),
-      "stored curation stages must replay the q257 funnel exactly")
-    val sk = DedupOps.docSketches(docs)
-      .filter(col("sig").isNotNull).select(col("doc_id"), col("sig"))
-    val fps = DedupOps.fingerprintStore(docs.filter(col("doc_id") < 450))
-    val storedSigs = sk.filter(col("doc_id") < 450)
-    val batch = docs.filter(col("doc_id") >= 450)
-    val batchSigs = sk.filter(col("doc_id") >= 450)
-    val ingStored =
-      CorpusOps.ingestStagesFor(fps, storedSigs, batch, batchSigs, tag)
-    assert(sortedRows(CorpusOps.ingestFunnel(fps, storedSigs, batch, batchSigs,
-        storedStages = Some(ingStored))) ==
-      sortedRows(CorpusOps.ingestFunnel(fps, storedSigs, batch, batchSigs)),
-      "stored ingest stages must replay the q247 funnel exactly")
-    val dim = CorpusOps.sourceLicenseDim(docs)
-    assert(sortedRows(CorpusOps.licensedIngestFunnel(fps, storedSigs, batch,
-        batchSigs, dim, storedStages = Some(ingStored))) ==
-      sortedRows(CorpusOps.licensedIngestFunnel(fps, storedSigs, batch,
-        batchSigs, dim)),
-      "stored ingest stages must replay the q262 funnel exactly")
-  }
 }

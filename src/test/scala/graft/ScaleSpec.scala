@@ -158,15 +158,15 @@ class ScaleSpec extends SparkSpec {
     import graft.engine.SimilarityOps
     val emb = Tables.embeddings(spark, sf)
     // first call: builds the quantizer and persists the catalog tables
-    SimilarityOps.ivfIndexFor(emb, tag = sf)
+    SimilarityOps.ivfIndexFor(emb)
     // simulate a new session: drop the in-session state; the catalog
     // tables survive (same warehouse — what a restarted job sees)
     Artifacts.releaseAll()
     val buildsBefore = Artifacts.builds("ivf_assign")
-    val idx = SimilarityOps.ivfIndexFor(emb, tag = sf)
+    val idx = SimilarityOps.ivfIndexFor(emb)
     assert(Artifacts.builds("ivf_assign") == buildsBefore,
       "loading a persisted IVF index must not refit the quantizer")
-    val (at, _) = SimilarityOps.ensureIvfTables(emb, sf, 16)
+    val (at, _) = SimilarityOps.ensureIvfTables(emb, 16)
     val optimized = idx.assigned.queryExecution.optimizedPlan.toString
     assert(optimized.contains("ivf_assign_"),
       s"expected the probe side to scan the catalog table $at:\n$optimized")
@@ -204,16 +204,17 @@ class ScaleSpec extends SparkSpec {
     // reappearance means the single-materialization dedup broke and
     // the pass runs per join side again)
     assert(occurrences(CorpusOps.packSequences(docs), "regexp_extract_all") == 0)
-    // the r18 loader family consumes the pack/order rows through the
-    // same checkpointed narrow projections — zero regex copies in any
-    // consumer plan; annealOrder adds exactly the quality pass (two
-    // regexp_extract_all: token count + stopword count), once
-    assert(occurrences(CorpusOps.loaderResume(docs), "regexp_extract_all") == 0)
-    assert(occurrences(CorpusOps.shuffleQualityAudit(docs), "regexp_extract_all") == 0)
-    assert(occurrences(CorpusOps.epochSpacing(docs), "regexp_extract_all") == 0)
-    assert(occurrences(CorpusOps.packEfficiency(docs), "regexp_extract_all") == 0)
-    assert(occurrences(CorpusOps.batchMixture(docs), "regexp_extract_all") == 0)
-    assert(occurrences(CorpusOps.annealOrder(docs), "regexp_extract_all") == 2)
+    // the r18 loader family reads stored order/pack/anneal tables; the
+    // build bodies of those tables consume the token counts through
+    // the same checkpointed narrow projection — zero regex copies in
+    // the order rows (read by shuffleQualityAudit/orderCommitment) and
+    // the pack rows (read by loaderResume, epochSpacing, packEfficiency
+    // and batchMixture); the anneal order adds exactly the quality
+    // pass (two regexp_extract_all: token count + stopword count), once
+    val orderRows = CorpusOps.epochOrderRows(docs, 4L, 4L, 8)
+    assert(occurrences(orderRows, "regexp_extract_all") == 0)
+    assert(occurrences(CorpusOps.epochPackRows(orderRows, 2048), "regexp_extract_all") == 0)
+    assert(occurrences(CorpusOps.annealOrderRows(docs, 4L, 4L, 8), "regexp_extract_all") == 2)
   }
 
   test("shared-span postings cap bounds a boilerplate-flooded corpus") {
@@ -403,8 +404,9 @@ class ScaleSpec extends SparkSpec {
     assert(spPlan.contains("hashpartitioning(doc_id"),
       s"spacing window must key on doc_id:\n${spPlan.take(2000)}")
     // q301: the anneal rank partitions by shard (nShards is the
-    // parallelism knob) and there is no global Sort below the window
-    val ann = CorpusOps.annealOrder(docs)
+    // parallelism knob) and there is no global Sort below the window —
+    // asserted on the build body of the stored anneal-order table
+    val ann = CorpusOps.annealOrderRows(docs, 4L, 4L, 8)
     ann.collect()
     val annPlan = ann.queryExecution.executedPlan.toString
     assert(annPlan.contains("hashpartitioning(shard"),
@@ -506,7 +508,7 @@ class ScaleSpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sf)
     // q235: assignment joins the batch against the BROADCAST centroid
     // frame and ranks per vec_id — never a shuffle of stored vectors
-    val idx = SimilarityOps.ivfIndexFor(emb, tag = sf)
+    val idx = SimilarityOps.ivfIndexFor(emb)
     val builds0 = Artifacts.builds("ivf_assign")
     val asg = SimilarityOps.ivfIncrementalAssign(idx,
       emb.select((col("vec_id") + lit(1000000L)).as("vec_id"), col("embedding")))
@@ -543,7 +545,7 @@ class ScaleSpec extends SparkSpec {
   test("r11 PQ/LM maintenance: literal-inlined encode, stored-table reads, metadata joins") {
     import graft.engine.{SimilarityOps, Tables, TextOps}
     val emb = Tables.embeddings(spark, sf)
-    val cb = SimilarityOps.pqCodebookFor(emb, tag = sf)
+    val cb = SimilarityOps.pqCodebookFor(emb)
     // q244 probe: the encode inlines the codebook as literals, so the
     // error-stats plan is a pure map + ONE global agg — no join node
     // of any kind (a fanout join here would be the 64x-row regression
@@ -555,7 +557,7 @@ class ScaleSpec extends SparkSpec {
     // the drift report's baseline x probe join is m-row metadata on
     // both sides: anything but a broadcast is a plan bug
     val dr = SimilarityOps.pqDrift(cb,
-      spark.read.table(SimilarityOps.ensurePqBaseline(emb, tag = sf)), emb)
+      spark.read.table(SimilarityOps.ensurePqBaseline(emb)), emb)
     dr.collect()
     val dp = dr.queryExecution.executedPlan.toString
     assert(!dp.contains("SortMergeJoin"),
@@ -563,7 +565,7 @@ class ScaleSpec extends SparkSpec {
     // q245: with the model served from the persisted tables, a merge +
     // score touches the BATCH text and the lm_* catalog tables only —
     // zero refits (lmFits flat) and the scan set says so
-    val stored = TextOps.lmModelFor(Tables.documents(spark, sf), tag = sf)
+    val stored = TextOps.lmModelFor(Tables.documents(spark, sf))
     val fits0 = TextOps.lmFits
     val batch = Tables.documents(spark, sf)
       .filter(pmod(col("doc_id"), lit(17)) === 3)
@@ -572,7 +574,7 @@ class ScaleSpec extends SparkSpec {
     scored.collect()
     assert(TextOps.lmFits == fits0, "incremental merge+score must not refit the model")
     val mp = scored.queryExecution.executedPlan.toString
-    assert(mp.contains(Artifacts.nameFor("lm_bi", Seq(sf), Seq(Tables.documents(spark, sf)))),
+    assert(mp.contains(Artifacts.nameFor("lm_bi", Nil, Seq(Tables.documents(spark, sf)))),
       s"merge must read the persisted bigram table:\n${mp.take(1200)}")
   }
 
@@ -590,7 +592,7 @@ class ScaleSpec extends SparkSpec {
     // q246: the probe reads the stored assignment table and the batch
     // — stored embeddings parquet is scanned zero times
     val probe = SimilarityOps.ivfSemanticProbe(
-      SimilarityOps.ivfIndexFor(Tables.embeddings(spark, sf), tag = sf),
+      SimilarityOps.ivfIndexFor(Tables.embeddings(spark, sf)),
       Tables.embeddings(spark, sf)
         .select((col("vec_id") + lit(7000000L)).as("vec_id"), col("embedding")))
     probe.collect()

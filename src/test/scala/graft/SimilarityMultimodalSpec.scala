@@ -279,7 +279,7 @@ class SimilarityMultimodalSpec extends SparkSpec {
     assert(got(1L) == ((2L, 0L, 1L, 500000L)), "tie breaks to the smaller label")
     // fixture: lists conserve the table, purity within (0, 1]
     val fix = SimilarityOps.ivfLabelPurity(emb,
-      SimilarityOps.ivfIndexFor(emb, tag = sf)).collect()
+      SimilarityOps.ivfIndexFor(emb)).collect()
     assert(fix.map(_.getLong(1)).sum == emb.count())
     fix.foreach { r =>
       assert(r.getLong(4) > 0L && r.getLong(4) <= 1000000L)
@@ -309,7 +309,7 @@ class SimilarityMultimodalSpec extends SparkSpec {
     assert(rows.values.map(_._3).sum == 10L, "population conserved")
     // fixture: the q235 derived batch appends to the PERSISTED index
     // with zero quantizer refits and conserves populations
-    val index = SimilarityOps.ivfIndexFor(emb, tag = sf)
+    val index = SimilarityOps.ivfIndexFor(emb)
     val builds0 = Artifacts.builds("ivf_assign")
     val batchFix = emb.filter(pmod(col("vec_id"), lit(7)) === 3)
       .select((col("vec_id") + lit(1000000L)).as("vec_id"),
@@ -330,7 +330,7 @@ class SimilarityMultimodalSpec extends SparkSpec {
       == ((5L, 5L, 1L, 1L, false)))
     // the real persisted index covers the fixture exactly
     val fix = SimilarityOps.ivfCoverageAudit(emb,
-      SimilarityOps.ivfIndexFor(emb, tag = sf)).collect()(0)
+      SimilarityOps.ivfIndexFor(emb)).collect()(0)
     assert(fix.getBoolean(4), s"fixture index must cover: $fix")
   }
 
@@ -376,8 +376,8 @@ class SimilarityMultimodalSpec extends SparkSpec {
 
   test("PQ fixture: persisted codebook, zero refits, full-corpus encode in range") {
     val builds0 = Artifacts.builds("pq_centers")
-    val cb = SimilarityOps.pqCodebookFor(emb, tag = sf)
-    val cb2 = SimilarityOps.pqCodebookFor(emb, tag = sf)
+    val cb = SimilarityOps.pqCodebookFor(emb)
+    val cb2 = SimilarityOps.pqCodebookFor(emb)
     assert(Artifacts.builds("pq_centers") <= builds0 + 1, "at most one fit per corpus")
     assert(cb2.subDim == cb.subDim && cb.subDim * cb.m == 64)
     assert(cb.centers.count() == cb.m.toLong * cb.k)
@@ -418,7 +418,7 @@ class SimilarityMultimodalSpec extends SparkSpec {
     rows.foreach(r => assert(r.getLong(1) == 10L && r.getLong(2) == 10L,
       s"planted-cluster recall must be perfect: $r"))
     // fixture: report covers every query, hits bounded by k
-    val fixCb = SimilarityOps.pqCodebookFor(emb, tag = sf)
+    val fixCb = SimilarityOps.pqCodebookFor(emb)
     val fix = SimilarityOps.pqAdcRecall(fixCb, emb).collect()
     assert(fix.length == 5)
     fix.foreach(r => assert(r.getLong(1) >= 0L && r.getLong(1) <= r.getLong(2)))
@@ -450,7 +450,7 @@ class SimilarityMultimodalSpec extends SparkSpec {
 
   test("incremental semantic probe: a stored copy flags dup to its original, a novel vector does not") {
     import spark.implicits._
-    val idx = SimilarityOps.ivfIndexFor(emb, tag = sf)
+    val idx = SimilarityOps.ivfIndexFor(emb)
     val builds0 = Artifacts.builds("ivf_assign")
     val proto = emb.filter(col("vec_id") === 7).collect()(0)
       .getSeq[Float](1).toArray
@@ -511,10 +511,10 @@ class SimilarityMultimodalSpec extends SparkSpec {
   }
 
   test("PQ drift fixture: stored baseline loads with zero refits and equals a recompute") {
-    val cb = SimilarityOps.pqCodebookFor(emb, tag = sf)
-    val t = SimilarityOps.ensurePqBaseline(emb, tag = sf)
+    val cb = SimilarityOps.pqCodebookFor(emb)
+    val t = SimilarityOps.ensurePqBaseline(emb)
     val builds0 = Artifacts.builds("pq_centers")
-    val t2 = SimilarityOps.ensurePqBaseline(emb, tag = sf)
+    val t2 = SimilarityOps.ensurePqBaseline(emb)
     assert(t == t2 && Artifacts.builds("pq_centers") == builds0,
       "baseline reuse must not refit the quantizers")
     def key(r: org.apache.spark.sql.Row) =
@@ -526,12 +526,12 @@ class SimilarityMultimodalSpec extends SparkSpec {
   }
 
   test("IVF-PQ codes table: persisted with list_id, zero refits on reload, incremental ≡ build") {
-    val idx = SimilarityOps.ivfIndexFor(emb, tag = sf)
-    val cb = SimilarityOps.ivfPqCodebookFor(idx, tag = sf)
-    val t = SimilarityOps.ensureIvfPqCodesTable(idx, tag = sf)
+    val idx = SimilarityOps.ivfIndexFor(emb)
+    val cb = SimilarityOps.ivfPqCodebookFor(idx)
+    val t = SimilarityOps.ensureIvfPqCodesTable(idx)
     val pq0 = Artifacts.builds("pq_centers")
     val iv0 = Artifacts.builds("ivf_assign")
-    val codes = SimilarityOps.ivfPqCodesFor(idx, tag = sf)
+    val codes = SimilarityOps.ivfPqCodesFor(idx)
     assert(Artifacts.builds("pq_centers") == pq0 && Artifacts.builds("ivf_assign") == iv0,
       "loading the persisted codes table must fit nothing")
     val desc = spark.sql(s"DESCRIBE EXTENDED $t")
@@ -565,7 +565,7 @@ class SimilarityMultimodalSpec extends SparkSpec {
 
   test("IVF rebalance applier: crafted flood flags, split clears, untouched lists reconcile") {
     import spark.implicits._
-    val index = SimilarityOps.ivfIndexFor(emb, tag = sf)
+    val index = SimilarityOps.ivfIndexFor(emb)
     val n = emb.count()
     val sizes = index.assigned
       .selectExpr("CAST(list_id AS BIGINT) AS list_id").groupBy("list_id").count()
@@ -641,9 +641,9 @@ class SimilarityMultimodalSpec extends SparkSpec {
 
   test("IVF-PQ codes repair: repaired table ≡ from-scratch encode after a split AND a merge; re-encode is touched-bounded") {
     import spark.implicits._
-    val index = SimilarityOps.ivfIndexFor(emb, tag = sf)
-    val cb = SimilarityOps.ivfPqCodebookFor(index, tag = sf)
-    val codes = SimilarityOps.ivfPqCodesFor(index, tag = sf).localCheckpoint(false)
+    val index = SimilarityOps.ivfIndexFor(emb)
+    val cb = SimilarityOps.ivfPqCodebookFor(index)
+    val codes = SimilarityOps.ivfPqCodesFor(index).localCheckpoint(false)
     def key(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))))
@@ -740,19 +740,24 @@ class SimilarityMultimodalSpec extends SparkSpec {
     assert(ver == 2L)
     // the promoted path serves ≡ a from-scratch v2 encode of the union
     val scratchV2 = SimilarityOps.pqEncode(
-      SimilarityOps.pqCodebookFor(corpus, SimilarityOps.pqV2Tag(tagP)), corpus)
+      SimilarityOps.pqCodebookFor(corpus), corpus)
     assert(keyOf(served) == keyOf(scratchV2),
       "promoted serving ≡ from-scratch v2 encode")
     // v1's table is untouched by the flip (the q260 contract)
-    val v1 = spark.read.table(SimilarityOps.ensurePqCodesTable(emb, tagP))
+    val v1 = spark.read.table(SimilarityOps.ensurePqCodesTable(emb))
     assert(keyOf(v1) ==
       keyOf(SimilarityOps.pqEncode(
-        SimilarityOps.pqCodebookFor(emb, tagP), emb)),
+        SimilarityOps.pqCodebookFor(emb), emb)),
       "v1 codes table still equals the v1 encode of the stored corpus")
     // REJECT: an impossible gate — the applier must be a no-op on
-    // artifacts (no v2 codes table, pointer still v1)
+    // artifacts (no v2 codes table, pointer still v1). The v2 tables
+    // are keyed by the stored ∪ batch identity, so the rejected
+    // promotion gets a batch of its own: the approved one above
+    // already built the v2 codes for `batch`
     val tagR = sf + "#promoR"
-    val rep2 = SimilarityOps.pqPromoteApply(emb, batch, tagR,
+    val batchR = emb.filter(col("vec_id") < 3)
+      .select((col("vec_id") + lit(5100000L)).as("vec_id"), col("embedding"))
+    val rep2 = SimilarityOps.pqPromoteApply(emb, batchR, tagR,
       maxChurnPerQuery = -1L).collect()
     val byStep2 = rep2.filter(_.getLong(1) == 0L)
       .map(r => r.getString(0) -> r).toMap
@@ -764,12 +769,12 @@ class SimilarityMultimodalSpec extends SparkSpec {
     assert(byStep2("availability").getBoolean(5),
       "missing == batch size is the honest no-op availability")
     assert(!spark.catalog.tableExists(Artifacts.nameFor("pq_codes",
-        Seq(SimilarityOps.pqV2Tag(tagR), 4, 16), Seq(SimilarityOps.unionCorpus(emb, batch)))),
+        Seq(4, 16), Seq(SimilarityOps.unionCorpus(emb, batchR)))),
       "no v2 codes table is created on rejection")
     val (verR, servedR) = SimilarityOps.pqServingCodesFor(spark, tagR)
     assert(verR == 1L)
     assert(keyOf(servedR) ==
-      keyOf(spark.read.table(SimilarityOps.ensurePqCodesTable(emb, tagR))),
+      keyOf(spark.read.table(SimilarityOps.ensurePqCodesTable(emb))),
       "the un-promoted path serves v1 unchanged")
   }
 
@@ -788,7 +793,7 @@ class SimilarityMultimodalSpec extends SparkSpec {
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("embedding"))
       .unionByName(batch.select(col("vec_id"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("embedding")))
-    val cb2 = SimilarityOps.pqCodebookFor(corpus, SimilarityOps.pqV2Tag(tagT))
+    val cb2 = SimilarityOps.pqCodebookFor(corpus)
     val q0 = corpus.filter(col("vec_id") < 5)
       .select(col("vec_id").as("qid"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("qvec"))
@@ -833,13 +838,6 @@ class SimilarityMultimodalSpec extends SparkSpec {
       assert(r.getLong(1) == 50L, "candidate budget honored")
       assert(r.getLong(2) >= 0L && r.getLong(2) <= r.getLong(3) && r.getLong(3) == 10L)
     }
-    // the persisted-signature probe is row-identical to the inline
-    // recompute (exact-integer determinism is the persistence contract)
-    def proj(rs: Array[org.apache.spark.sql.Row]) =
-      rs.map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    val stored = SimilarityOps.binaryHammingRecall(emb,
-      storedSigs = Some(SimilarityOps.binarySigsFor(emb, tag = sf)))
-    assert(proj(stored.collect()) == proj(rep), "stored sigs ≡ inline sigs")
   }
 
   test("wide binary signatures: word 0 equals the single-long form; d > 64 chain is exact") {
@@ -872,15 +870,10 @@ class SimilarityMultimodalSpec extends SparkSpec {
       assert(r.getLong(1) == 50L, "candidate budget honored")
       assert(r.getLong(2) >= 0L && r.getLong(2) <= r.getLong(3) && r.getLong(3) == 10L)
     }
-    def proj(rs: Array[org.apache.spark.sql.Row]) =
-      rs.map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    val stored = SimilarityOps.binaryHammingRecallWide(wideEmb,
-      storedSigs = Some(SimilarityOps.binarySigsWideFor(wideEmb, tag = "w" + sf)))
-    assert(proj(stored.collect()) == proj(rep), "stored wide sigs ≡ inline sigs")
   }
 
   test("ANN ladder aggregates exactly its constituent rung reports") {
-    val lad = SimilarityOps.annLadder(emb, tag = sf).collect()
+    val lad = SimilarityOps.annLadder(emb).collect()
       .map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
     assert(lad.keySet == Set("binary_sign64", "int8_sym127", "ivf16_pq4",
@@ -893,10 +886,9 @@ class SimilarityMultimodalSpec extends SparkSpec {
     }
     // cross-check two rungs against the certified per-query reports
     val pq = SimilarityOps.pqAdcRecall(
-        SimilarityOps.pqCodebookFor(emb, tag = sf), emb).collect()
+        SimilarityOps.pqCodebookFor(emb), emb).collect()
     assert(lad("pq4x16")._2 == pq.map(_.getLong(1)).sum)
-    val bin = SimilarityOps.binaryHammingRecall(emb,
-      storedSigs = Some(SimilarityOps.binarySigsFor(emb, tag = sf))).collect()
+    val bin = SimilarityOps.binaryHammingRecall(emb).collect()
     assert(lad("binary_sign64")._2 == bin.map(_.getLong(2)).sum)
     // storage-cost column carries the documented constants
     assert(lad("binary_sign64")._1 == 8L && lad("int8_sym127")._1 == 72L &&
@@ -905,15 +897,15 @@ class SimilarityMultimodalSpec extends SparkSpec {
   }
 
   test("serving-policy selector picks the provably cheapest qualifying config per tier") {
-    val sel = SimilarityOps.servingPolicySelector(emb, tag = sf).collect()
+    val sel = SimilarityOps.servingPolicySelector(emb).collect()
       .map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5), r.getLong(6)))).toMap
     // rebuild the config table straight from the constituent PUBLIC
     // reports — the selector's winner must equal an independent argmin
     // over those rows, so its numbers ARE the reports' verbatim
-    val idx = SimilarityOps.ivfIndexFor(emb, tag = sf)
+    val idx = SimilarityOps.ivfIndexFor(emb)
     val n = emb.count()
-    val lad = SimilarityOps.annLadder(emb, tag = sf).collect()
+    val lad = SimilarityOps.annLadder(emb).collect()
       .filter(_.getString(0) != "ivf16_pq4")
       .map(r => (r.getString(0), r.getLong(1), 5L * (n - 1),
         r.getLong(2), r.getLong(3), r.getLong(4)))
@@ -921,8 +913,8 @@ class SimilarityMultimodalSpec extends SparkSpec {
       .map(r => (s"ivf_exact_np${r.getLong(0)}", 8L * 64 + 8,
         r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
     val cp = SimilarityOps.ivfPqProbeSweep(idx,
-        SimilarityOps.ivfPqCodebookFor(idx, sf), emb,
-        SimilarityOps.ivfPqCodesFor(idx, sf)).collect()
+        SimilarityOps.ivfPqCodebookFor(idx), emb,
+        SimilarityOps.ivfPqCodesFor(idx)).collect()
       .map(r => (s"ivf16_pq4_np${r.getLong(0)}", 12L,
         r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
     val cfgs = lad ++ ex ++ cp
@@ -945,7 +937,7 @@ class SimilarityMultimodalSpec extends SparkSpec {
     val wideEmb = emb.select(col("vec_id"),
       expr("concat(transform(embedding, x -> CAST(x AS DOUBLE)), " +
            "transform(embedding, x -> 0.5D - CAST(x AS DOUBLE)))").as("embedding"))
-    val lad = SimilarityOps.annLadder(wideEmb, tag = "w" + sf).collect()
+    val lad = SimilarityOps.annLadder(wideEmb).collect()
       .map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
     assert(lad.keySet == Set("binary_sign64", "int8_sym127", "ivf16_pq4",
@@ -956,14 +948,12 @@ class SimilarityMultimodalSpec extends SparkSpec {
     assert(lad.values.forall(_._3 == 50L), s"Σk must be 5·10 per rung: $lad")
     // the binary rung is SCORED by the wide path over the persisted
     // wide-sig table (the single-long form raises at d > 64)
-    val bin = SimilarityOps.binaryHammingRecallWide(wideEmb,
-      storedSigs = Some(SimilarityOps.binarySigsWideFor(wideEmb, tag = "w" + sf)))
-      .collect()
+    val bin = SimilarityOps.binaryHammingRecallWide(wideEmb).collect()
     assert(lad("binary_sign64")._2 == bin.map(_.getLong(2)).sum,
       "wide ladder binary rung must aggregate binaryHammingRecallWide")
     // the selector composes over the wide artifacts end-to-end: one
     // row per tier, each winner actually meeting its tier
-    val sel = SimilarityOps.servingPolicySelector(wideEmb, tag = "w" + sf)
+    val sel = SimilarityOps.servingPolicySelector(wideEmb)
       .collect()
     assert(sel.length == 6, s"one winner per tier: ${sel.length}")
     sel.foreach(r => assert(r.getLong(6) >= r.getLong(0),
@@ -985,9 +975,9 @@ class SimilarityMultimodalSpec extends SparkSpec {
     val wideEmb = emb.select(col("vec_id"),
       expr("concat(transform(embedding, x -> CAST(x AS DOUBLE)), " +
            "transform(embedding, x -> 0.5D - CAST(x AS DOUBLE)))").as("embedding"))
-    val idx = SimilarityOps.ivfIndexFor(wideEmb, tag = "w" + sf)
-    val cb = SimilarityOps.pqCodebookFor(wideEmb, tag = "w" + sf)
-    val sigs = SimilarityOps.binarySigsWideFor(wideEmb, tag = "w" + sf)
+    val idx = SimilarityOps.ivfIndexFor(wideEmb)
+    val cb = SimilarityOps.pqCodebookFor(wideEmb)
+    val sigs = SimilarityOps.binarySigsWideFor(wideEmb)
     val rm = docs.filter(pmod(col("doc_id"), lit(17)) === 6)
       .select(col("doc_id"))
     val cert = CorpusOps.takedownServingCert(rm,
@@ -1017,7 +1007,7 @@ class SimilarityMultimodalSpec extends SparkSpec {
     val wideEmb = emb.select(col("vec_id"),
       expr("concat(transform(embedding, x -> CAST(x AS DOUBLE)), " +
            "transform(embedding, x -> 0.5D - CAST(x AS DOUBLE)))").as("embedding"))
-    val wSigs = SimilarityOps.binarySigsWideFor(wideEmb, tag = "w" + sf)
+    val wSigs = SimilarityOps.binarySigsWideFor(wideEmb)
       .localCheckpoint(false)
     val rm = docs.filter(pmod(col("doc_id"), lit(17)) === 4)
       .select(col("doc_id")).localCheckpoint(false)
@@ -1026,8 +1016,8 @@ class SimilarityMultimodalSpec extends SparkSpec {
     assert(nRm > 0, "fixture must remove at least one wide signature")
     val fp = docs.select(col("doc_id"), md5(col("text")).as("fp_md5"))
     val led = CorpusOps.takedownStores(docs, rm,
-        TextOps.lmModelFor(docs, tag = sf), CorpusOps.corpusCardState(docs),
-        fp, SimilarityOps.binarySigsFor(emb, tag = sf),
+        TextOps.lmModelFor(docs), CorpusOps.corpusCardState(docs),
+        fp, SimilarityOps.binarySigsFor(emb),
         binarySigsWide = Some(wSigs)).collect()
       .map(r => (r.getString(0), r.getString(1)) ->
         ((r.getLong(2), r.getLong(3), r.getLong(4), r.getBoolean(5)))).toMap
@@ -1037,15 +1027,15 @@ class SimilarityMultimodalSpec extends SparkSpec {
     // quarantine round-trip: the wide store purges AND restores
     // commitment-identical from the quarantined wide vectors
     import graft.queries.{RetrievalShared, SketchShared}
-    val idx = SimilarityOps.ivfIndexFor(emb, tag = sf)
+    val idx = SimilarityOps.ivfIndexFor(emb)
     val qled = CorpusOps.quarantineRoundTrip(docs, emb, rm,
         RetrievalShared.postings(spark, sf),
         RetrievalShared.docLengths(spark, sf),
         SketchShared.sketches(spark, sf), fp,
-        TextOps.lmModelFor(docs, tag = sf), CorpusOps.corpusCardState(docs),
-        idx, SimilarityOps.ivfPqCodesFor(idx, tag = sf),
-        SimilarityOps.ivfPqCodebookFor(idx, tag = sf),
-        SimilarityOps.binarySigsFor(emb, tag = sf),
+        TextOps.lmModelFor(docs), CorpusOps.corpusCardState(docs),
+        idx, SimilarityOps.ivfPqCodesFor(idx),
+        SimilarityOps.ivfPqCodebookFor(idx),
+        SimilarityOps.binarySigsFor(emb),
         wide = Some((wideEmb, wSigs))).collect()
       .map(r => r.getString(0) ->
         ((r.getLong(2), r.getLong(3), r.getLong(4), r.getBoolean(5)))).toMap
@@ -1076,7 +1066,7 @@ class SimilarityMultimodalSpec extends SparkSpec {
 
   test("IVF rebalance convergence loop: a one-split-resistant flood clears in a later round") {
     import spark.implicits._
-    val index = SimilarityOps.ivfIndexFor(emb, tag = sf)
+    val index = SimilarityOps.ivfIndexFor(emb)
     // the q259 catalog flood: 1/7 of the corpus near (100, …) — round
     // 1 separates flood from stored but the flood child stays over
     // the gate; round 2 halves the flood along its jitter
@@ -1100,26 +1090,25 @@ class SimilarityMultimodalSpec extends SparkSpec {
 
   test("PQ refit applier: in-distribution batch is a no-op on artifacts") {
     import spark.implicits._
-    // a PRIVATE tag: other suites legitimately run q260 (which fires
-    // and persists a v2 for the shared sf tag) in the same session —
-    // the no-op claim must be tested on artifacts only this test owns
-    val tag = s"$sf#refit-noop"
-    SimilarityOps.pqCodebookFor(emb, tag) // v1 for this tag (one fit)
-    SimilarityOps.ensurePqBaseline(emb, tag)
-    val v1Table = SimilarityOps.ensurePqTable(emb, tag)
+    // the v2 artifacts are keyed by the stored ∪ batch identity, and
+    // this batch (vec_id + 9800000) is used by no other test, so the
+    // no-op claim is tested on artifacts only this test could create
+    SimilarityOps.pqCodebookFor(emb) // v1 (at most one fit)
+    SimilarityOps.ensurePqBaseline(emb)
+    val v1Table = SimilarityOps.ensurePqTable(emb)
     val v1Before = spark.table(v1Table).collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2)).toMap
     val batch = emb.filter(col("vec_id") % 5 === 2)
       .select((col("vec_id") + lit(9800000L)).as("vec_id"), col("embedding"))
     val builds0 = Artifacts.builds("pq_centers")
-    val rep = SimilarityOps.pqRefitApply(emb, batch, tag).collect()
+    val rep = SimilarityOps.pqRefitApply(emb, batch).collect()
     assert(rep.nonEmpty && rep.forall(!_.getBoolean(1)),
       "in-distribution batch must not fire the refit trigger")
     assert(rep.forall(r => r.getLong(2) == r.getLong(3)),
       "no-op report mirrors v1 recall in the v2 column")
     assert(Artifacts.builds("pq_centers") == builds0, "no-op path must fit nothing")
     assert(!spark.catalog.tableExists(Artifacts.nameFor("pq_centers",
-        Seq(SimilarityOps.pqV2Tag(tag), 4, 16), Seq(SimilarityOps.unionCorpus(emb, batch)))),
+        Seq(4, 16), Seq(SimilarityOps.unionCorpus(emb, batch)))),
       "no-op path must not create the v2 table")
     val v1After = spark.table(v1Table).collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2)).toMap
@@ -1128,8 +1117,8 @@ class SimilarityMultimodalSpec extends SparkSpec {
 
   test("PQ refit applier: drifting batch fires, v2 is a new versioned table, v1 untouched") {
     import spark.implicits._
-    SimilarityOps.pqCodebookFor(emb, tag = sf)
-    val v1Table = SimilarityOps.ensurePqTable(emb, sf)
+    SimilarityOps.pqCodebookFor(emb)
+    val v1Table = SimilarityOps.ensurePqTable(emb)
     val v1Before = spark.table(v1Table).collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2)).toMap
     val batch = emb.filter(col("vec_id") % 5 === 2)
@@ -1138,10 +1127,10 @@ class SimilarityMultimodalSpec extends SparkSpec {
           "x -> CAST(x AS DOUBLE) * 3.0D), " +
           "transform(slice(embedding, 17, 48), x -> CAST(x AS DOUBLE)))")
           .as("embedding"))
-    val rep = SimilarityOps.pqRefitApply(emb, batch, tag = sf).collect()
+    val rep = SimilarityOps.pqRefitApply(emb, batch).collect()
     assert(rep.nonEmpty && rep.forall(_.getBoolean(1)), "drift batch must fire")
     assert(spark.catalog.tableExists(Artifacts.nameFor("pq_centers",
-        Seq(SimilarityOps.pqV2Tag(sf), 4, 16), Seq(SimilarityOps.unionCorpus(emb, batch)))),
+        Seq(4, 16), Seq(SimilarityOps.unionCorpus(emb, batch)))),
       "fired path persists the v2 codebook as its own catalog table")
     val v1After = spark.table(v1Table).collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2)).toMap
@@ -1222,10 +1211,10 @@ class SimilarityMultimodalSpec extends SparkSpec {
     val idx = SimilarityOps.buildIvfIndex(corpus, nLists = 4)
     val flood = (0 until 100).map(i => (600000L + i, pt(0, 10f)))
       .toDF("vec_id", "embedding")
-    val strict = SimilarityOps.ivfRebalanceFor(idx, flood, tag = "memo_key_t")
+    val strict = SimilarityOps.ivfRebalanceFor(idx, flood)
     assert(strict.report.collect().exists(_.getBoolean(2)),
       "factor 2 must flag and split the flooded list")
-    val lax = SimilarityOps.ivfRebalanceFor(idx, flood, tag = "memo_key_t",
+    val lax = SimilarityOps.ivfRebalanceFor(idx, flood,
       imbalanceFactor = 1000000L)
     assert(!lax.report.collect().exists(_.getBoolean(2)),
       "a laxer gate under the same tag must re-run, not inherit the split")
@@ -1280,7 +1269,7 @@ class SimilarityMultimodalSpec extends SparkSpec {
   }
 
   test("nProbe sweep: candidates and recall ladder up; full probe is exact") {
-    val idx = SimilarityOps.ivfIndexFor(emb, tag = sf)
+    val idx = SimilarityOps.ivfIndexFor(emb)
     val sweep = SimilarityOps.ivfProbeSweep(idx).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
     assert(sweep.map(_._1).toSeq == Seq(1L, 2L, 4L, 8L, 16L))
@@ -1310,14 +1299,14 @@ class SimilarityMultimodalSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf)
     val removedId = 10L
     val removal = docs.filter(col("doc_id") === removedId).select(col("doc_id"))
-    val idx = SimilarityOps.ivfIndexFor(emb, tag = sf)
+    val idx = SimilarityOps.ivfIndexFor(emb)
     val res = CorpusOps.takedownPropagation(
       docs, removal,
       RetrievalShared.postings(spark, sf.toString),
       RetrievalShared.docLengths(spark, sf.toString),
       SketchShared.sketches(spark, sf.toString),
       idx.assigned,
-      SimilarityOps.ivfPqCodesFor(idx, tag = sf)).collect()
+      SimilarityOps.ivfPqCodesFor(idx)).collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4)))
     def sec(a: String) = res.filter(_._1 == a).toSeq
     // conservation on EVERY row, by recount not by construction trust
@@ -1372,7 +1361,7 @@ class SimilarityMultimodalSpec extends SparkSpec {
   }
 
   test("IVF merge applier: underfull lists dissolve to their true nearest survivors") {
-    val idx = SimilarityOps.ivfIndexFor(emb, tag = sf)
+    val idx = SimilarityOps.ivfIndexFor(emb)
     // the q271 fixture: a deletion-heavy purge leaves lists 0-2 at
     // ~14% of their population — the underfull gate must fire
     val purged = SimilarityOps.IvfIndex(
@@ -1418,9 +1407,9 @@ class SimilarityMultimodalSpec extends SparkSpec {
   }
 
   test("IVF-PQ nProbe sweep: candidates ladder up, every rung equals the audited q255 chain") {
-    val idx = SimilarityOps.ivfIndexFor(emb, tag = sf)
-    val cb = SimilarityOps.ivfPqCodebookFor(idx, tag = sf)
-    val codes = SimilarityOps.ivfPqCodesFor(idx, tag = sf)
+    val idx = SimilarityOps.ivfIndexFor(emb)
+    val cb = SimilarityOps.ivfPqCodebookFor(idx)
+    val codes = SimilarityOps.ivfPqCodesFor(idx)
     val sweep = SimilarityOps.ivfPqProbeSweep(idx, cb, emb, codes).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
     assert(sweep.map(_._1).toSeq == Seq(1L, 2L, 4L, 8L, 16L))
@@ -1448,13 +1437,13 @@ class SimilarityMultimodalSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf)
     val removedId = 10L
     val removal = docs.filter(col("doc_id") === removedId).select(col("doc_id"))
-    val idx = SimilarityOps.ivfIndexFor(emb, tag = sf)
+    val idx = SimilarityOps.ivfIndexFor(emb)
     val postings = RetrievalShared.postings(spark, sf)
     val args = (docs, removal, postings,
       RetrievalShared.docLengths(spark, sf),
       SketchShared.sketches(spark, sf),
       idx.assigned,
-      SimilarityOps.ivfPqCodesFor(idx, tag = sf))
+      SimilarityOps.ivfPqCodesFor(idx))
     val res = CorpusOps.takedownApply(args._1, args._2, args._3, args._4,
         args._5, args._6, args._7).collect()
       .map(r => (r.getString(0), r.getString(1)) ->
@@ -1498,13 +1487,13 @@ class SimilarityMultimodalSpec extends SparkSpec {
     val removal = docs.filter(col("doc_id").isin(10L, 11L)).select(col("doc_id"))
     val subStore = DedupOps.docSketches(
       docs.filter(pmod(col("doc_id"), lit(2)) === 0))
-    val idx = SimilarityOps.ivfIndexFor(emb, tag = sf)
+    val idx = SimilarityOps.ivfIndexFor(emb)
     val plan = CorpusOps.takedownPropagation(
         docs, removal,
         RetrievalShared.postings(spark, sf),
         RetrievalShared.docLengths(spark, sf),
         subStore, idx.assigned,
-        SimilarityOps.ivfPqCodesFor(idx, tag = sf)).collect()
+        SimilarityOps.ivfPqCodesFor(idx)).collect()
     val skKeys = plan.filter(_.getString(0) == "sketches")
       .map(_.getString(1)).toSet
     assert(skKeys == Set("10"),
@@ -1514,7 +1503,7 @@ class SimilarityMultimodalSpec extends SparkSpec {
         RetrievalShared.postings(spark, sf),
         RetrievalShared.docLengths(spark, sf),
         subStore, idx.assigned,
-        SimilarityOps.ivfPqCodesFor(idx, tag = sf)).collect()
+        SimilarityOps.ivfPqCodesFor(idx)).collect()
       .filter(_.getString(0) == "sketches").head
     assert(ap.getLong(2) == subStore.count(),
       "apply's n_before must count the actual store rows")
@@ -1526,21 +1515,21 @@ class SimilarityMultimodalSpec extends SparkSpec {
     import graft.queries.{RetrievalShared, SketchShared}
     val docs = Tables.documents(spark, sf)
     val removal = docs.filter(col("doc_id") === 10L).select(col("doc_id"))
-    val idx = SimilarityOps.ivfIndexFor(emb, tag = sf)
-    val stored = CorpusOps.sequenceManifestFor(docs, tag = sf)
+    val idx = SimilarityOps.ivfIndexFor(emb)
+    val stored = CorpusOps.sequenceManifestFor(docs)
     val plan = CorpusOps.takedownPropagation(
       docs, removal,
       RetrievalShared.postings(spark, sf),
       RetrievalShared.docLengths(spark, sf),
       SketchShared.sketches(spark, sf),
       idx.assigned,
-      SimilarityOps.ivfPqCodesFor(idx, tag = sf),
+      SimilarityOps.ivfPqCodesFor(idx),
       storedManifest = Some(stored))
     // plan shape: the sequence sections read the PERSISTED manifest
     // table, and no packing cumsum window (the corpus re-pack) exists
     // anywhere in the plan
     val p = plan.queryExecution.executedPlan.toString
-    assert(p.contains(Artifacts.nameFor("seq_manifest", Seq(sf, 2048), Seq(docs))),
+    assert(p.contains(Artifacts.nameFor("seq_manifest", Seq(2048), Seq(docs))),
       s"expected the stored manifest table in:\n${p.take(1500)}")
     assert(!"windowspecdefinition\\(lang".r.findFirstIn(p).isDefined,
       "the propagation must not re-derive the packing cumsum from raw docs")
@@ -1559,7 +1548,7 @@ class SimilarityMultimodalSpec extends SparkSpec {
         RetrievalShared.docLengths(spark, sf),
         SketchShared.sketches(spark, sf),
         idx.assigned,
-        SimilarityOps.ivfPqCodesFor(idx, tag = sf),
+        SimilarityOps.ivfPqCodesFor(idx),
         storedManifest = Some(stale)).collect()
       .filter(_.getString(0) == "manifest_cert")
       .map(r => r.getString(1) -> r.getLong(2)).toMap
@@ -1572,7 +1561,7 @@ class SimilarityMultimodalSpec extends SparkSpec {
         RetrievalShared.docLengths(spark, sf),
         SketchShared.sketches(spark, sf),
         idx.assigned,
-        SimilarityOps.ivfPqCodesFor(idx, tag = sf),
+        SimilarityOps.ivfPqCodesFor(idx),
         storedManifest = Some(stale)).collect()
       .filter(_.getString(0) == "manifest_cert")
     assert(staleApply.exists(!_.getBoolean(5)),
@@ -1584,13 +1573,13 @@ class SimilarityMultimodalSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf)
     val removal = docs.filter(pmod(col("doc_id"), lit(17)) === 6)
       .select(col("doc_id"))
-    val idx = SimilarityOps.ivfIndexFor(emb, tag = sf)
+    val idx = SimilarityOps.ivfIndexFor(emb)
     val res = CorpusOps.takedownServingCert(removal,
         RetrievalShared.postings(spark, sf),
         RetrievalShared.docLengths(spark, sf),
         emb, idx,
-        SimilarityOps.pqCodebookFor(emb, tag = sf),
-        SimilarityOps.binarySigsFor(emb, tag = sf)).collect()
+        SimilarityOps.pqCodebookFor(emb),
+        SimilarityOps.binarySigsFor(emb)).collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5), r.getBoolean(6)))).toMap
     assert(res.keySet == Set("bm25", "exact_cosine", "ivf_exact", "pq_adc",
@@ -1619,12 +1608,12 @@ class SimilarityMultimodalSpec extends SparkSpec {
 
   test("takedown cert covers the compressed read path: zero leakage, availability, 1:1 backfill") {
     val docs = Tables.documents(spark, sf)
-    val idx = SimilarityOps.ivfIndexFor(emb, tag = sf)
+    val idx = SimilarityOps.ivfIndexFor(emb)
     val r = CorpusOps.takedownServingCertIvfPq(
         docs.filter(pmod(col("doc_id"), lit(17)) === 6).select(col("doc_id")),
         emb, idx,
-        SimilarityOps.ivfPqCodebookFor(idx, tag = sf),
-        SimilarityOps.ivfPqCodesFor(idx, tag = sf)).collect()
+        SimilarityOps.ivfPqCodebookFor(idx),
+        SimilarityOps.ivfPqCodesFor(idx)).collect()
     assert(r.length == 1 && r.head.getString(0) == "ivfpq_adc")
     val row = r.head
     assert(row.getLong(4) == 0L && row.getBoolean(6),
@@ -1637,11 +1626,10 @@ class SimilarityMultimodalSpec extends SparkSpec {
 
   test("index A/B shadow: identical codebooks are churn-free; the drift refit moves listings coherently") {
     val e = emb.localCheckpoint(false)
-    // self-compare under a fresh tag: v2 fits the SAME corpus with the
-    // same seed, so both listings must be identical — zero churn, zero
-    // rank displacement, full overlap
-    val self = SimilarityOps.pqShadowCompare(e, e.filter(lit(false)),
-        tag = sf + "#shadowself").collect()
+    // self-compare: v2 fits the SAME corpus with the same seed, so
+    // both listings must be identical — zero churn, zero rank
+    // displacement, full overlap
+    val self = SimilarityOps.pqShadowCompare(e, e.filter(lit(false))).collect()
     assert(self.length == 5)
     self.foreach { r =>
       assert(r.getLong(2) == r.getLong(1) && r.getLong(3) == 0L &&
@@ -1654,7 +1642,7 @@ class SimilarityMultimodalSpec extends SparkSpec {
           "x -> CAST(x AS DOUBLE) * 3.0D), " +
           "transform(slice(embedding, 17, 48), x -> CAST(x AS DOUBLE)))")
           .as("embedding"))
-    val rep = SimilarityOps.pqShadowCompare(e, drift, tag = sf).collect()
+    val rep = SimilarityOps.pqShadowCompare(e, drift).collect()
     assert(rep.length == 5)
     rep.foreach { r =>
       val (k, ov, ch, rl) = (r.getLong(1), r.getLong(2), r.getLong(3),

@@ -751,7 +751,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     import graft.engine.{SimilarityOps, StreamOps, Tables}
     val emb = Tables.embeddings(spark, sf)
-    val index = SimilarityOps.ivfIndexFor(emb, tag = sf)
+    val index = SimilarityOps.ivfIndexFor(emb)
     val feed = emb.filter(col("vec_id") % 5 === 2)
       .select(col("vec_id") + lit(3000000L), col("embedding"))
       .as[(Long, Array[Float])].collect().sortBy(_._1)
@@ -786,7 +786,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     import graft.engine.{SimilarityOps, StreamOps, Tables}
     val emb = Tables.embeddings(spark, sf)
-    val index = SimilarityOps.ivfIndexFor(emb, tag = sf)
+    val index = SimilarityOps.ivfIndexFor(emb)
     // tick 1: ordinary vectors (shifted copies of stored ones); tick 2:
     // a planted far cluster — one far-away point repeated, so every row
     // argmins into the SAME list and pushes it past 2× its fair share
@@ -842,7 +842,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     import graft.engine.{SimilarityOps, StreamOps, Tables}
     val emb = Tables.embeddings(spark, sf)
-    val index = SimilarityOps.ivfIndexFor(emb, tag = sf)
+    val index = SimilarityOps.ivfIndexFor(emb)
     val nStored = emb.count()
     // tick 0: ordinary vectors — no list crosses the gate, ZERO fits;
     // tick 1: the q259-style jittered far-cluster flood — its landing
@@ -982,9 +982,9 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     import graft.engine.{SimilarityOps, StreamOps, Tables}
     val emb = Tables.embeddings(spark, sf)
-    val index = SimilarityOps.ivfIndexFor(emb, tag = sf)
-    val cb = SimilarityOps.ivfPqCodebookFor(index, tag = sf)
-    val storedCodes = SimilarityOps.ivfPqCodesFor(index, tag = sf)
+    val index = SimilarityOps.ivfIndexFor(emb)
+    val cb = SimilarityOps.ivfPqCodebookFor(index)
+    val storedCodes = SimilarityOps.ivfPqCodesFor(index)
     // the exact q256 batch, split across two ticks
     val batch = emb.filter(col("vec_id") % 7 === 3)
       .select((col("vec_id") + lit(1000000L)).as("vec_id"),
@@ -1033,7 +1033,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     import graft.engine.{SimilarityOps, StreamOps, Tables}
     val emb = Tables.embeddings(spark, sf)
-    val index = SimilarityOps.ivfIndexFor(emb, tag = sf)
+    val index = SimilarityOps.ivfIndexFor(emb)
     val nStored = emb.count()
     val counts0 = index.assigned
       .groupBy(col("list_id").cast("long").as("l")).count().collect()
@@ -1070,8 +1070,8 @@ class StreamingSpec extends SparkSpec {
     // carry the COMPRESSED serving artifact too (q288 live): the
     // persisted codes table rides the CDC stream and must stay
     // exactly consistent with the tick's centroid set
-    val cdcCb = SimilarityOps.ivfPqCodebookFor(index, tag = sf)
-    val codes0 = SimilarityOps.ivfPqCodesFor(index, tag = sf)
+    val cdcCb = SimilarityOps.ivfPqCodebookFor(index)
+    val codes0 = SimilarityOps.ivfPqCodesFor(index)
     val q = StreamOps.streamingIvfCdc(
       input.toDS().toDF("vec_id", "embedding", "op"), index, out, ckpt,
       codes = Some(codes0), cb = Some(cdcCb))
@@ -1593,17 +1593,17 @@ class StreamingSpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sf).localCheckpoint(false)
     val postings = RetrievalShared.postings(spark, sf).localCheckpoint(false)
     val doclens = RetrievalShared.docLengths(spark, sf).localCheckpoint(false)
-    val idx = SimilarityOps.ivfIndexFor(emb, tag = sf)
-    val cb = SimilarityOps.pqCodebookFor(emb, tag = sf)
-    val sigs = SimilarityOps.binarySigsFor(emb, tag = sf).localCheckpoint(false)
+    val idx = SimilarityOps.ivfIndexFor(emb)
+    val cb = SimilarityOps.pqCodebookFor(emb)
+    val sigs = SimilarityOps.binarySigsFor(emb).localCheckpoint(false)
     val rmIds = docs.filter(pmod(col("doc_id"), lit(17)) === 6)
       .select(col("doc_id")).collect().map(_.getLong(0)).sorted
     val (t1, t2) = rmIds.splitAt(rmIds.length / 2)
     val out = java.nio.file.Files.createTempDirectory("graft_ssm_out_").toString + "/serve"
     val ckpt = java.nio.file.Files.createTempDirectory("graft_ssm_ckpt_").toString
     val input = MemoryStream[Long]
-    val ivfPqCb = SimilarityOps.ivfPqCodebookFor(idx, tag = sf)
-    val ivfPqCodes = SimilarityOps.ivfPqCodesFor(idx, tag = sf)
+    val ivfPqCb = SimilarityOps.ivfPqCodebookFor(idx)
+    val ivfPqCodes = SimilarityOps.ivfPqCodesFor(idx)
       .localCheckpoint(false)
     val q = StreamOps.streamingTakedownServe(input.toDS().toDF("doc_id"),
       postings, doclens, emb, idx, cb, sigs, ivfPqCodes, ivfPqCb, out, ckpt)
@@ -2246,7 +2246,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     import graft.engine.{SimilarityOps, StreamOps, Tables, TickCommit}
     val emb = Tables.embeddings(spark, sf)
-    val index = SimilarityOps.ivfIndexFor(emb, tag = sf)
+    val index = SimilarityOps.ivfIndexFor(emb)
     val feed = emb.filter(col("vec_id") % 11 === 4)
       .select(col("vec_id") + lit(9700000L), col("embedding"))
       .as[(Long, Array[Float])].collect().sortBy(_._1)
@@ -2288,7 +2288,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     import graft.engine.{SimilarityOps, StreamOps, Tables, TickCommit}
     val emb = Tables.embeddings(spark, sf)
-    val index = SimilarityOps.ivfIndexFor(emb, tag = sf)
+    val index = SimilarityOps.ivfIndexFor(emb)
     def feed(m: Int, base: Long) = emb.filter(col("vec_id") % 13 === m)
       .select(col("vec_id") + lit(base), col("embedding"))
       .as[(Long, Array[Float])].collect().sortBy(_._1)
@@ -2460,7 +2460,7 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[(Long, Array[Float])]
     val q = StreamOps.streamingSemanticDedup(
       input.toDS().toDF("vec_id", "embedding"),
-      SimilarityOps.ivfIndexFor(emb, tag = sf), out, ckpt)
+      SimilarityOps.ivfIndexFor(emb), out, ckpt)
     try {
       input.addData(b1: _*)
       q.processAllAvailable()

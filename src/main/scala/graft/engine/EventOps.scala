@@ -59,6 +59,19 @@ object EventOps {
       .orderBy(col("stage_idx"))
   }
 
+  /** The stored [[funnel]] of `events` — one of the six event-derived
+    * stores the takedown/retention sweeps correct
+    * ([[userTakedown]], [[retentionSweep]], [[userQuarantineRoundTrip]]).
+    * Each is a deterministic derivation of the events (exact-integer
+    * windows and rollups; each hash-matches its own oracle), stored
+    * once per events table and keyed by its identity: the sweeps'
+    * contract is "correct the STORED artifacts", and in production the
+    * stores exist because earlier jobs wrote them. The store-building
+    * queries themselves (q280/q161/q146/q147/q199/q172) run the build
+    * bodies the oracle certifies. */
+  def funnelFor(events: DataFrame): DataFrame =
+    Artifacts.table("ev_funnel", Nil, Seq(events))(funnel(events))
+
   /** Weekly retention cohorts: cohort = ISO week of a user's FIRST
     * event; a user counts as retained at offset k if they have any
     * event in cohort week + k. Classic triangle matrix, here as rows
@@ -91,6 +104,10 @@ object EventOps {
       .orderBy(col("cohort_week"), col("week_offset"))
   }
 
+  /** The stored [[retentionCohorts]] of `events` (see [[funnelFor]]). */
+  def retentionCohortsFor(events: DataFrame): DataFrame =
+    Artifacts.table("ev_retention", Nil, Seq(events))(retentionCohorts(events))
+
   /** Last-touch attribution: every purchase credits the same user's
     * most recent PRIOR marketing event (view or click) — the
     * conversion-credit assignment behind ROI rollups. The carrier is
@@ -121,6 +138,11 @@ object EventOps {
         (col("ts_us") - col("attr_us")).as("gap_us"))
       .orderBy(col("purchase_id"))
   }
+
+  /** The stored [[lastTouchAttribution]] of `events` (see
+    * [[funnelFor]]). */
+  def lastTouchAttributionFor(events: DataFrame): DataFrame =
+    Artifacts.table("ev_attribution", Nil, Seq(events))(lastTouchAttribution(events))
 
   /** Per-user activity coverage: each event opens a [ts, ts+padSec)
     * activity interval; overlapping/touching intervals merge
@@ -287,6 +309,11 @@ object EventOps {
            (max(col("ts_us")) - min(col("ts_us"))).as("duration_us"))
       .orderBy(col("user_id"), col("session_id"))
   }
+
+  /** The stored [[sessionize]] of `events` at the default gap (see
+    * [[funnelFor]]). */
+  def sessionsFor(events: DataFrame): DataFrame =
+    Artifacts.table("ev_sessions", Nil, Seq(events))(sessionize(events))
 
   /** Linear multi-touch attribution — every marketing event within
     * the lookback window shares a purchase's credit equally (the
@@ -588,12 +615,11 @@ object EventOps {
     * the only full event passes are the distinct-user anchor and the
     * removed-slice semi-join — the two passes a post-purge cert owes
     * (the q277 posture). Declarative end-to-end: no driver-side
-    * action anywhere. */
-  def userTakedown(events: DataFrame, removal: DataFrame,
-                   manifest: DataFrame, sessions: DataFrame,
-                   funnelStore: DataFrame, retentionStore: DataFrame,
-                   transitionStore: DataFrame,
-                   attributionStore: DataFrame): DataFrame = {
+    * action anywhere. The stores are the six stored tables of `events`
+    * itself ([[funnelFor]] and its siblings), built on first use. */
+  def userTakedown(events: DataFrame, removal: DataFrame): DataFrame = {
+    val (manifest, sessions, funnelStore, retentionStore, transitionStore,
+      attributionStore) = sweepStores(events)
     val rmU = broadcast(removal.select(col("user_id")).distinct()
       .localCheckpoint(false)) // every section probes it
     val rmEvents = events.join(rmU, Seq("user_id"), "left_semi")
@@ -712,6 +738,14 @@ object EventOps {
       .orderBy(col("artifact"), col("key"))
   }
 
+  /** The six stored tables of `events` the sweeps correct:
+    * (manifest, sessions, funnel, retention, transitions,
+    * attribution). */
+  private def sweepStores(events: DataFrame)
+      : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) =
+    (TemporalOps.sessionPackManifestFor(events), sessionsFor(events), funnelFor(events),
+     retentionCohortsFor(events), eventTransitionsFor(events), lastTouchAttributionFor(events))
+
   /** AGE-BASED RETENTION SWEEP (q286, r16) — the TIME-keyed
     * complement to the id-keyed takedown family: a data-retention
     * policy ("drop everything older than the horizon") expires every
@@ -750,12 +784,11 @@ object EventOps {
     * Scale: the expired slice and the touched users' kept events
     * bound all window work; untouched users never rescan; the only
     * full-event passes are one count/distinct anchor aggregate and
-    * the slice filters themselves. Declarative end-to-end. */
-  def retentionSweep(events: DataFrame, cutoff: String,
-                     manifest: DataFrame, sessions: DataFrame,
-                     funnelStore: DataFrame, retentionStore: DataFrame,
-                     transitionStore: DataFrame,
-                     attributionStore: DataFrame): DataFrame = {
+    * the slice filters themselves. Declarative end-to-end. Reads the
+    * six stored tables of `events` itself, as [[userTakedown]]. */
+  def retentionSweep(events: DataFrame, cutoff: String): DataFrame = {
+    val (manifest, sessions, funnelStore, retentionStore, transitionStore,
+      attributionStore) = sweepStores(events)
     val cut = lit(cutoff).cast("timestamp")
     val expired = events.filter(col("ts") < cut)
       .localCheckpoint(false) // edges + boundary + reach + cells + aggs
@@ -999,13 +1032,11 @@ object EventOps {
     * Scale: the removal set broadcasts; purges are anti-joins;
     * re-derivations and d-frames are quarantine-bounded window work;
     * the identity probes are commitment aggregates. Declarative
-    * end-to-end. */
-  def userQuarantineRoundTrip(events: DataFrame, removal: DataFrame,
-                              manifest: DataFrame, sessions: DataFrame,
-                              funnelStore: DataFrame,
-                              retentionStore: DataFrame,
-                              transitionStore: DataFrame,
-                              attributionStore: DataFrame): DataFrame = {
+    * end-to-end. Reads the six stored tables of `events` itself, as
+    * [[userTakedown]]. */
+  def userQuarantineRoundTrip(events: DataFrame, removal: DataFrame): DataFrame = {
+    val (manifest, sessions, funnelStore, retentionStore, transitionStore,
+      attributionStore) = sweepStores(events)
     val rmU = broadcast(removal.select(col("user_id")).distinct()
       .localCheckpoint(false)) // every purge + the quarantine slice
     // the QUARANTINE: only these raw events are retained
@@ -1226,4 +1257,8 @@ object EventOps {
         col("n_from"), col("p_ppm"))
       .orderBy(col("event_type"), col("next_type"))
   }
+
+  /** The stored [[eventTransitions]] of `events` (see [[funnelFor]]). */
+  def eventTransitionsFor(events: DataFrame): DataFrame =
+    Artifacts.table("ev_transitions", Nil, Seq(events))(eventTransitions(events))
 }

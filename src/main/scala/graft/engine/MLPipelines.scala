@@ -10,6 +10,7 @@ import org.apache.spark.ml.regression.LinearRegression
 import org.apache.spark.ml.stat.Correlation
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** ML pipeline surface (SURVEY §2.10, M1-M9) — the reference's entire
   * extensibility layer re-expressed in Scala spark.ml.
@@ -184,6 +185,74 @@ object MLPipelines {
     val km = new KMeans().setK(k).setSeed(42).setFeaturesCol("features")
     new Pipeline().setStages(enc.stages ++ Array[PipelineStage](assembler, km)).fit(features)
   }
+
+  /** The shared feature table of (orders, customer), persisted, and
+    * its fitted encoder stages — what every ML catalog query (q50-q53,
+    * q57, q65, q177) consumes. Round 1 built, cached and unpersisted
+    * the table per query: four build/cache cycles plus 15 serial
+    * distinct-count jobs per bench run. Here the table is built and
+    * the stages are fitted once per input version (a deliberate shared
+    * materialization: the fits iterate it), and the table re-persists
+    * if an external clearCache() evicted it. Every value below is an
+    * [[Artifacts.memo]] keyed by the inputs' identity, so rewriting
+    * `orders` lands on new keys instead of serving the old fit; query
+    * evaluation order is not assumed (Verify iterates an unordered
+    * Map), so each builds whatever it is missing on first touch. */
+  def featuresFor(orders: DataFrame, customer: DataFrame): (DataFrame, FittedEncoders) = {
+    val f = memoFor("ml_features", orders, customer) {
+      // Spark's cache matches a plan by its paths, not the files' contents:
+      // drop a table cached before the files were rewritten
+      featureTable(orders, customer).unpersist().persist()
+    }
+    if (f.storageLevel == StorageLevel.NONE) f.persist()
+    (f, memoFor("ml_encoders", orders, customer)(fitEncoders(f)))
+  }
+
+  /** The shared [[classification]] fit: (model, median threshold,
+    * auc). The inference queries (q57, q65) reuse q52's fit instead of
+    * re-training. */
+  def classificationFor(orders: DataFrame, customer: DataFrame): (PipelineModel, Double, Double) =
+    memoFor("ml_classification", orders, customer) {
+      val (f, enc) = featuresFor(orders, customer)
+      classification(f, enc)
+    }
+
+  /** The shared [[regression]] fit: (model, rmse). A seeded fit over
+    * the shared feature table is deterministic, so refitting per query
+    * run is pure waste. */
+  def regressionFor(orders: DataFrame, customer: DataFrame): (PipelineModel, Double) =
+    memoFor("ml_regression", orders, customer) {
+      val (f, enc) = featuresFor(orders, customer)
+      regression(f, enc)
+    }
+
+  /** The shared [[clustering]] fit (k=5, seed=42). */
+  def clusteringFor(orders: DataFrame, customer: DataFrame): PipelineModel =
+    memoFor("ml_clustering", orders, customer) {
+      val (f, enc) = featuresFor(orders, customer)
+      clustering(f, enc0 = enc)
+    }
+
+  /** The shared [[paramSweep]] report. Its 4 seeded fits are far too
+    * expensive to redo per query call; the report itself is a 4-row
+    * grid, so the memo keeps the VALUES and rebuilds the tiny frame
+    * per call. */
+  def sweepFor(orders: DataFrame, customer: DataFrame): DataFrame = {
+    val data = memoFor("ml_sweep", orders, customer) {
+      val (f, enc) = featuresFor(orders, customer)
+      paramSweep(f, enc).collect() // 4-row grid report
+        .map(r => (r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getLong(3))).toSeq
+    }
+    val spark = orders.sparkSession
+    import spark.implicits._
+    data.toDF("reg_param", "elastic_net", "rmse", "is_best")
+      .orderBy("reg_param", "elastic_net")
+  }
+
+  /** An in-session ML value over (orders, customer), keyed by `fit`
+    * and the inputs' identity. */
+  private def memoFor[T](fit: String, orders: DataFrame, customer: DataFrame)(value: => T): T =
+    Artifacts.memo(Artifacts.nameFor(fit, Nil, Seq(orders, customer)))(value)
 
   /** PCA over the embedding table — the dimensionality probe an
     * embedding pipeline runs before ANN indexing or whitening: fit

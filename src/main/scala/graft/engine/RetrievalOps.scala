@@ -52,7 +52,10 @@ object RetrievalOps {
           .cast("long").as("dl"))
 
   /** The persisted [[bm25Postings]] of `documents` — one tokenize
-    * pass per corpus, ever. Stored clustered by term
+    * pass per corpus, ever: every retrieval probe reads the stored
+    * index, the serving posture the reference uses everywhere
+    * (requests read materialized aggregates, never the fact table —
+    * reference: app/ml_app.py:99-139). Stored clustered by term
     * (repartition(w) + sortWithinPartitions(w)), so a probe's literal
     * `isin` prune pushes to the parquet scan and row-group min/max
     * stats on w skip the non-query vocabulary. */
@@ -318,15 +321,6 @@ object RetrievalOps {
           .as("reciprocal_rank"))
       .orderBy(col("qid"))
   }
-
-  /** BM25 top-k over a corpus: probes its persisted index
-    * ([[bm25PostingsFor]], [[bm25DocLengthsFor]]), building the two
-    * tables on first use. */
-  def bm25TopK(documents: DataFrame,
-               queries: Seq[String] = defaultQueries,
-               k: Int = 10, k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    bm25TopKFromIndex(
-      bm25PostingsFor(documents), bm25DocLengthsFor(documents), queries, k, k1, b)
 
   /** BM25 HARD-NEGATIVE mining — the contrastive-training data step
     * q201's cluster triplets approximate with random negatives: for

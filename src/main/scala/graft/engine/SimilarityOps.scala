@@ -1151,7 +1151,8 @@ object SimilarityOps {
     val t = ensurePqTable(embeddings, m, k)
     val centers = embeddings.sparkSession.read.table(t)
     PqCodebook(centers, m, k,
-      Artifacts.memo(t)(centers.select(size(col("centroid"))).head().getInt(0)))
+      Artifacts.memo(Artifacts.nameFor("pq_centers", Seq(m, k), Seq(embeddings)))(
+        centers.select(size(col("centroid"))).head().getInt(0)))
   }
 
   /** Stable oracle-facing codebook dump location (the

@@ -615,12 +615,13 @@ object StreamOps {
       }
   }
 
-  /** Streaming incremental near-dedup — [[DedupOps.incrementalNearDedup]]
-    * (q109) moved to WHERE IT BELONGS in production: the landing zone.
-    * Each micro-batch of arriving documents is minhash-signed once and
-    * band-probed against the STORED corpus sketch table (the
-    * SketchShared shape: sketches computed at ingest, never re-derived
-    * from history text), and the per-doc verdicts (doc_id, n_dup_of,
+  /** Streaming incremental near-dedup —
+    * [[DedupOps.incrementalNearDedupFromSigs]] (q109) moved to WHERE IT
+    * BELONGS in production: the landing zone. Each micro-batch of
+    * arriving documents is minhash-signed once and band-probed against
+    * the STORED corpus sketch table (the [[DedupOps.docSketchesFor]]
+    * shape: sketches computed at ingest, never re-derived from history
+    * text), and the per-doc verdicts (doc_id, n_dup_of,
     * kept) append to the verdict sink — so near-duplicates of the
     * corpus are flagged as data lands instead of in a terminal batch
     * job (the reference's only ingest is a driver-side REST poll —

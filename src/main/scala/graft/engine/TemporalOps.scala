@@ -151,6 +151,12 @@ object TemporalOps {
       .orderBy(col("user_id"), col("session_id"))
   }
 
+  /** The stored [[sessionPackManifest]] of `events` at the default gap
+    * and sequence length — the manifest store the user-level sweeps
+    * correct (see [[EventOps.funnelFor]]). */
+  def sessionPackManifestFor(events: DataFrame): DataFrame =
+    Artifacts.table("ev_manifest", Nil, Seq(events))(sessionPackManifest(events))
+
   /** INCREMENTAL conversation packing (q281) — the batch-incremental
     * form completing the q280 one-shot / streaming-twin triple: a new
     * slice of events folds into the STORED manifest without ever

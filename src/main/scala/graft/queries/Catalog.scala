@@ -57,7 +57,7 @@ object Catalog {
     * key multiplicity is preserved (no DISTINCT) so the counts match
     * the engine's row-level probes exactly. */
   private val sketchDump = OracleDump("/tmp/graft_sketch_oracle",
-    (s, dir) => SketchShared.sketches(s, dir).select(col("doc_id"))
+    (s, dir) => DedupOps.docSketchesFor(Tables.documents(s, dir)).select(col("doc_id"))
       .coalesce(1).write.mode("overwrite")
       .parquet("/tmp/graft_sketch_oracle/docids"))
   private val binSigDump = OracleDump("/tmp/graft_binsig_oracle",
@@ -126,7 +126,7 @@ object Catalog {
   private def inferSlice(s: SparkSession, dir: String,
                          model: org.apache.spark.ml.PipelineModel): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val (feats, _) = MLShared.features(s, dir)
+    val (feats, _) = MLPipelines.featuresFor(Tables.orders(s, dir), Tables.customer(s, dir))
     val in = feats.orderBy(col("o_orderkey")).limit(20)
     MLPipelines.withConfidence(model.transform(in))
       .select(col("o_orderkey"), col("pred_label"), col("confidence"))
@@ -1584,7 +1584,7 @@ object Catalog {
         val docs = Tables.documents(s, dir)
         val storedAssign = DedupOps.clusterSplitFor(
           docs.filter(col("doc_id") < 400))
-        val pairs = SketchShared.dfCappedJaccardPairs(s, dir)
+        val pairs = DedupOps.dfCappedJaccardPairsFor(Tables.documents(s, dir))
         DedupOps.incrementalClusterSplit(
           storedAssign,
           pairs.filter(col("doc_i") < 400 && col("doc_j") >= 400),
@@ -2084,13 +2084,7 @@ object Catalog {
         val ev = Tables.events(s, dir)
         EventOps.userTakedown(
           ev,
-          ev.filter(pmod(col("user_id"), lit(13)) === 5).select(col("user_id")),
-          EventShared.manifest(s, dir),
-          EventShared.sessions(s, dir),
-          EventShared.funnel(s, dir),
-          EventShared.retention(s, dir),
-          EventShared.transitions(s, dir),
-          EventShared.attribution(s, dir))
+          ev.filter(pmod(col("user_id"), lit(13)) === 5).select(col("user_id")))
       },
       Some(q284OracleSql)),
 
@@ -2111,13 +2105,7 @@ object Catalog {
       (s, dir) => {
         val ev = Tables.events(s, dir)
         EventOps.retentionSweep(
-          ev, "2024-01-05 00:00:00",
-          EventShared.manifest(s, dir),
-          EventShared.sessions(s, dir),
-          EventShared.funnel(s, dir),
-          EventShared.retention(s, dir),
-          EventShared.transitions(s, dir),
-          EventShared.attribution(s, dir))
+          ev, "2024-01-05 00:00:00")
       },
       Some(q286OracleSql)),
 
@@ -2141,13 +2129,7 @@ object Catalog {
         val ev = Tables.events(s, dir)
         EventOps.userQuarantineRoundTrip(
           ev,
-          ev.filter(pmod(col("user_id"), lit(13)) === 5).select(col("user_id")),
-          EventShared.manifest(s, dir),
-          EventShared.sessions(s, dir),
-          EventShared.funnel(s, dir),
-          EventShared.retention(s, dir),
-          EventShared.transitions(s, dir),
-          EventShared.attribution(s, dir))
+          ev.filter(pmod(col("user_id"), lit(13)) === 5).select(col("user_id")))
       },
       Some(q290OracleSql)),
 
@@ -2874,11 +2856,14 @@ object Catalog {
     // postings only ever flow.
     QuerySpec(
       "q145_bm25_topk",
-      // probes the persisted inverted index (RetrievalShared) — no
+      // probes the persisted inverted index (bm25PostingsFor) — no
       // text pass at query time; the oracle recomputes from scratch,
       // so a hash match also certifies the stored index
-      (s, dir) => RetrievalOps.bm25TopKFromIndex(
-        RetrievalShared.postings(s, dir), RetrievalShared.docLengths(s, dir)),
+      (s, dir) => {
+        val docs = Tables.documents(s, dir)
+        RetrievalOps.bm25TopKFromIndex(
+          RetrievalOps.bm25PostingsFor(docs), RetrievalOps.bm25DocLengthsFor(docs))
+      },
       Some(s"""WITH q(qid, w) AS (
              |  VALUES (0, 'hash'), (0, 'join'), (1, 'table'), (1, 'scan'),
              |         (2, 'stream'), (2, 'filter')),
@@ -2914,7 +2899,8 @@ object Catalog {
     QuerySpec(
       "q248_query_expansion",
       (s, dir) => RetrievalOps.queryExpansion(
-        RetrievalShared.postings(s, dir), RetrievalShared.docLengths(s, dir)),
+        RetrievalOps.bm25PostingsFor(Tables.documents(s, dir)),
+        RetrievalOps.bm25DocLengthsFor(Tables.documents(s, dir))),
       Some(s"""WITH q(qid, w) AS (
              |  VALUES (0, 'hash'), (0, 'join'), (1, 'table'), (1, 'scan'),
              |         (2, 'stream'), (2, 'filter')),
@@ -2978,7 +2964,8 @@ object Catalog {
     QuerySpec(
       "q232_hard_negatives",
       (s, dir) => RetrievalOps.hardNegatives(
-        RetrievalShared.postings(s, dir), RetrievalShared.docLengths(s, dir),
+        RetrievalOps.bm25PostingsFor(Tables.documents(s, dir)),
+        RetrievalOps.bm25DocLengthsFor(Tables.documents(s, dir)),
         DedupOps.clustersFor(Tables.documents(s, dir))),
       Some(q232OracleSql)),
 
@@ -2991,7 +2978,8 @@ object Catalog {
       "q239_postings_coverage",
       (s, dir) => RetrievalOps.postingsCoverageAudit(
         Tables.documents(s, dir),
-        RetrievalShared.postings(s, dir), RetrievalShared.docLengths(s, dir)),
+        RetrievalOps.bm25PostingsFor(Tables.documents(s, dir)),
+        RetrievalOps.bm25DocLengthsFor(Tables.documents(s, dir))),
       Some("""WITH d AS (
              |  SELECT doc_id,
              |         CAST(len(regexp_extract_all(lower(text), '[A-Za-z0-9_]+')) AS BIGINT) AS dl
@@ -3018,7 +3006,8 @@ object Catalog {
           .filter(pmod(col("doc_id"), lit(13)) === 5)
           .withColumn("doc_id", col("doc_id") + lit(2000000L))
         RetrievalOps.bm25IncrementalAppend(
-          RetrievalShared.postings(s, dir), RetrievalShared.docLengths(s, dir), batch)
+          RetrievalOps.bm25PostingsFor(Tables.documents(s, dir)),
+          RetrievalOps.bm25DocLengthsFor(Tables.documents(s, dir)), batch)
       },
       Some("""WITH b AS (
              |  SELECT doc_id + 2000000 AS doc_id, text FROM documents WHERE doc_id % 13 = 5),
@@ -3550,11 +3539,11 @@ object Catalog {
     // The real tokenizer-training loop: 5 character-level BPE merge
     // rounds over the distinct-word frequency table; the oracle
     // replays every round unrolled (see q108OracleSql). Trained ONCE
-    // per corpus via BpeShared (catalog tables) — q111 applies the
+    // per corpus as catalog tables (TextOps.bpeMergesFor) — q111 applies the
     // same stored state instead of re-running the rounds.
     QuerySpec(
       "q108_bpe_learn",
-      (s, dir) => BpeShared.merges(s, dir),
+      (s, dir) => TextOps.bpeMergesFor(Tables.documents(s, dir)),
       Some(q108OracleSql)),
 
     // The learned vocabulary applied back to the corpus: per-lang
@@ -3564,7 +3553,7 @@ object Catalog {
     QuerySpec(
       "q111_bpe_vocab_report",
       (s, dir) => TextOps.bpeVocabReportFromState(
-        Tables.documents(s, dir), BpeShared.words(s, dir)),
+        Tables.documents(s, dir), TextOps.bpeWordsFor(Tables.documents(s, dir))),
       Some(q111OracleSql)),
 
     // encode-time segmentation: the STORED merge schedule (a
@@ -3576,7 +3565,7 @@ object Catalog {
     QuerySpec(
       "q118_bpe_segment_cost",
       (s, dir) => {
-        val m = BpeShared.merges(s, dir).collect() // bounded: ≤ rounds rows
+        val m = TextOps.bpeMergesFor(Tables.documents(s, dir)).collect() // bounded: ≤ rounds rows
           .map(r => (r.getString(1), r.getString(2))).toSeq
         TextOps.bpeSegmentCost(Tables.documents(s, dir), m)
       },
@@ -3590,12 +3579,12 @@ object Catalog {
       "q240_bpe_drift",
       (s, dir) => {
         import org.apache.spark.sql.functions.{col, concat, lit, pmod}
-        val m = BpeShared.merges(s, dir).collect() // bounded: <= rounds rows
+        val m = TextOps.bpeMergesFor(Tables.documents(s, dir)).collect() // bounded: <= rounds rows
           .map(r => (r.getString(1), r.getString(2))).toSeq
         val batch = Tables.documents(s, dir)
           .filter(pmod(col("doc_id"), lit(17)) === 3)
           .withColumn("text", concat(col("text"), lit(" zzdrift zzdrift")))
-        TextOps.bpeDriftReport(batch, m, BpeShared.words(s, dir))
+        TextOps.bpeDriftReport(batch, m, TextOps.bpeWordsFor(Tables.documents(s, dir)))
       },
       Some(q240OracleSql))
   )
@@ -3789,18 +3778,17 @@ object Catalog {
              |ORDER BY doc_i, doc_j""".stripMargin)),
 
     // q42/q43/q70/q73 all draw on ONE persisted sketch pass
-    // (SketchShared): the (doc_id, sh, sig, simhash) column table plus
-    // the two candidate-pair tables built from it — value-identical to
-    // the standalone per-query forms (TextDedupSpec equivalence test).
+    // (DedupOps.docSketchesFor): the (doc_id, sh, sig, simhash) column
+    // table plus the two candidate-pair tables built from it.
     QuerySpec(
       "q42_minhash_lsh_pairs",
-      (s, dir) => SketchShared.minhashPairs(s, dir)
+      (s, dir) => DedupOps.minhashPairsFor(Tables.documents(s, dir))
         .orderBy(col("doc_i"), col("doc_j")),
       Some(q42OracleSql)),
 
     QuerySpec(
       "q43_simhash_pairs",
-      (s, dir) => SketchShared.simhashPairs(s, dir)
+      (s, dir) => DedupOps.simhashPairsFor(Tables.documents(s, dir))
         .orderBy(col("doc_i"), col("doc_j")),
       Some(q43OracleSql)),
 
@@ -3808,8 +3796,8 @@ object Catalog {
     // components -> canonical corpus. Edges here are the
     // SQL-expressible exact-Jaccard pairs (q41), so DuckDB can
     // reproduce the transitive closure with a recursive CTE; the
-    // sketch-edge production pipeline (nearDedupSketch) is covered by
-    // TextDedupSpec.
+    // sketch-edge production pipeline (nearDedupSketchFromSketches) is
+    // covered by TextDedupSpec.
     QuerySpec(
       "q61_near_dedup",
       // reads the stored corpus closure (DedupOps.clustersFor) —
@@ -3972,13 +3960,13 @@ object Catalog {
     // incremental NEAR-dedup: the new batch band-joins the STORED
     // corpus signatures — catches the reformatted copies q92's byte
     // hash misses; cost scales with the batch, never history². The
-    // stored side IS the SketchShared table: the suite query re-reads
+    // stored side IS the docSketchesFor table: the suite query re-reads
     // sketches computed once at "ingest", re-shingling nothing.
     QuerySpec(
       "q109_incremental_near_dedup",
       (s, dir) => {
         import org.apache.spark.sql.functions.col
-        val sk = SketchShared.sketches(s, dir)
+        val sk = DedupOps.docSketchesFor(Tables.documents(s, dir))
           .filter(col("sig").isNotNull).select(col("doc_id"), col("sig"))
         DedupOps.incrementalNearDedupFromSigs(
           Tables.documents(s, dir).filter(col("doc_id") >= 450).select(col("doc_id")),
@@ -4056,7 +4044,8 @@ object Catalog {
       "q70_near_dedup_sketch",
       (s, dir) => DedupOps.nearDedupFromPairSets(
         Tables.documents(s, dir),
-        SketchShared.minhashPairs(s, dir), SketchShared.simhashPairs(s, dir)),
+        DedupOps.minhashPairsFor(Tables.documents(s, dir)),
+        DedupOps.simhashPairsFor(Tables.documents(s, dir))),
       Some(q70OracleSql)),
 
     // LSH candidates verified with EXACT Jaccard on the pair's shingle
@@ -4064,7 +4053,8 @@ object Catalog {
     QuerySpec(
       "q73_verified_jaccard",
       (s, dir) => DedupOps.verifiedJaccardPairsFromShared(
-        SketchShared.sketches(s, dir), SketchShared.minhashPairs(s, dir)),
+        DedupOps.docSketchesFor(Tables.documents(s, dir)),
+        DedupOps.minhashPairsFor(Tables.documents(s, dir))),
       Some(q73OracleSql)),
 
     // banding calibration: candidates/recall/precision per (bands,
@@ -4074,7 +4064,8 @@ object Catalog {
     QuerySpec(
       "q159_lsh_tuning",
       (s, dir) => DedupOps.lshTuningReportFromTruth(
-        SketchShared.sketches(s, dir), SketchShared.calibrationTruth(s, dir)),
+        DedupOps.docSketchesFor(Tables.documents(s, dir)),
+        DedupOps.calibrationTruthFor(Tables.documents(s, dir))),
       Some(q159OracleSql)),
 
     // sparse-vector all-pairs similarity over the STORED postings:
@@ -4083,7 +4074,8 @@ object Catalog {
     // sqrt + one division at the end.
     QuerySpec(
       "q160_sparse_cosine_pairs",
-      (s, dir) => RetrievalOps.sparseCosinePairs(RetrievalShared.postings(s, dir)),
+      (s, dir) => RetrievalOps.sparseCosinePairs(
+        RetrievalOps.bm25PostingsFor(Tables.documents(s, dir))),
       Some("""WITH p AS (
              |  SELECT w, doc_id, CAST(COUNT(*) AS BIGINT) AS tf FROM (
              |    SELECT doc_id, unnest(regexp_extract_all(lower(text), '[A-Za-z0-9_]+')) AS w
@@ -4365,7 +4357,8 @@ object Catalog {
     QuerySpec(
       "q152_hybrid_rerank",
       (s, dir) => RetrievalOps.hybridRerank(
-        RetrievalShared.postings(s, dir), RetrievalShared.docLengths(s, dir),
+        RetrievalOps.bm25PostingsFor(Tables.documents(s, dir)),
+        RetrievalOps.bm25DocLengthsFor(Tables.documents(s, dir)),
         Tables.embeddings(s, dir)),
       Some(q152OracleSql)),
 
@@ -4376,7 +4369,8 @@ object Catalog {
     QuerySpec(
       "q173_rrf_fusion",
       (s, dir) => RetrievalOps.rrfFusion(
-        RetrievalShared.postings(s, dir), RetrievalShared.docLengths(s, dir),
+        RetrievalOps.bm25PostingsFor(Tables.documents(s, dir)),
+        RetrievalOps.bm25DocLengthsFor(Tables.documents(s, dir)),
         Tables.embeddings(s, dir)),
       Some(q173OracleSql)),
 
@@ -4387,7 +4381,8 @@ object Catalog {
     QuerySpec(
       "q180_retrieval_metrics",
       (s, dir) => RetrievalOps.retrievalMetrics(
-        RetrievalShared.postings(s, dir), RetrievalShared.docLengths(s, dir)),
+        RetrievalOps.bm25PostingsFor(Tables.documents(s, dir)),
+        RetrievalOps.bm25DocLengthsFor(Tables.documents(s, dir))),
       Some(q180OracleSql)),
 
     // q134's sqrt-weighted token budget keyed on the registered
@@ -4513,7 +4508,7 @@ object Catalog {
       (s, dir) => {
         import org.apache.spark.sql.functions.col
         val docs = Tables.documents(s, dir)
-        val sk = SketchShared.sketches(s, dir)
+        val sk = DedupOps.docSketchesFor(Tables.documents(s, dir))
           .filter(col("sig").isNotNull).select(col("doc_id"), col("sig"))
         val batch = docs.filter(col("doc_id") >= 450)
         CorpusOps.ingestFunnel(
@@ -4534,7 +4529,7 @@ object Catalog {
       (s, dir) => {
         import org.apache.spark.sql.functions.col
         val docs = Tables.documents(s, dir)
-        val sk = SketchShared.sketches(s, dir)
+        val sk = DedupOps.docSketchesFor(Tables.documents(s, dir))
           .filter(col("sig").isNotNull).select(col("doc_id"), col("sig"))
         val batch = docs.filter(col("doc_id") >= 450)
         CorpusOps.licensedIngestFunnel(
@@ -6037,7 +6032,7 @@ object Catalog {
     // assignments, IVF-PQ codes (certified 1:1 with assignments),
     // affected packed sequences (via the q105 manifest) and the q115
     // shards needing rebuild. The Spark side reads the STORED
-    // artifacts (RetrievalShared / SketchShared / ivf catalog tables);
+    // artifacts (bm25, sketch and ivf catalog tables);
     // the oracle recomputes every membership from raw text minus the
     // removal set — the stored-artifact certification pattern — so a
     // hash match proves both the stores and the accounting
@@ -6052,9 +6047,9 @@ object Catalog {
         CorpusOps.takedownPropagation(
           docs,
           docs.filter(pmod(col("doc_id"), lit(17)) === 4).select(col("doc_id")),
-          RetrievalShared.postings(s, dir),
-          RetrievalShared.docLengths(s, dir),
-          SketchShared.sketches(s, dir),
+          RetrievalOps.bm25PostingsFor(Tables.documents(s, dir)),
+          RetrievalOps.bm25DocLengthsFor(Tables.documents(s, dir)),
+          DedupOps.docSketchesFor(Tables.documents(s, dir)),
           idx.assigned,
           SimilarityOps.ivfPqCodesFor(idx),
           storedManifest = Some(CorpusOps.sequenceManifestFor(docs)))
@@ -6187,9 +6182,9 @@ object Catalog {
         CorpusOps.takedownApply(
           docs,
           docs.filter(pmod(col("doc_id"), lit(17)) === 4).select(col("doc_id")),
-          RetrievalShared.postings(s, dir),
-          RetrievalShared.docLengths(s, dir),
-          SketchShared.sketches(s, dir),
+          RetrievalOps.bm25PostingsFor(Tables.documents(s, dir)),
+          RetrievalOps.bm25DocLengthsFor(Tables.documents(s, dir)),
+          DedupOps.docSketchesFor(Tables.documents(s, dir)),
           idx.assigned,
           SimilarityOps.ivfPqCodesFor(idx),
           storedManifest = Some(CorpusOps.sequenceManifestFor(docs)))
@@ -6250,9 +6245,9 @@ object Catalog {
           docs,
           expr("CAST(date_add(DATE'2024-01-01', CAST(doc_id % 28 AS INT)) AS TIMESTAMP)"),
           "2024-01-08 00:00:00",
-          RetrievalShared.postings(s, dir),
-          RetrievalShared.docLengths(s, dir),
-          SketchShared.sketches(s, dir),
+          RetrievalOps.bm25PostingsFor(Tables.documents(s, dir)),
+          RetrievalOps.bm25DocLengthsFor(Tables.documents(s, dir)),
+          DedupOps.docSketchesFor(Tables.documents(s, dir)),
           idx.assigned,
           SimilarityOps.ivfPqCodesFor(idx),
           TextOps.lmModelFor(docs),
@@ -6314,9 +6309,9 @@ object Catalog {
         CorpusOps.quarantineRoundTrip(
           docs, emb,
           docs.filter(pmod(col("doc_id"), lit(17)) === 4).select(col("doc_id")),
-          RetrievalShared.postings(s, dir),
-          RetrievalShared.docLengths(s, dir),
-          SketchShared.sketches(s, dir),
+          RetrievalOps.bm25PostingsFor(Tables.documents(s, dir)),
+          RetrievalOps.bm25DocLengthsFor(Tables.documents(s, dir)),
+          DedupOps.docSketchesFor(Tables.documents(s, dir)),
           DedupOps.docFingerprintsFor(docs),
           TextOps.lmModelFor(docs),
           CorpusOps.corpusCardStateFor(docs),
@@ -6497,8 +6492,8 @@ object Catalog {
         CorpusOps.takedownServingCert(
           docs.filter(pmod(col("doc_id"), lit(17)) === 6)
             .select(col("doc_id")),
-          RetrievalShared.postings(s, dir),
-          RetrievalShared.docLengths(s, dir),
+          RetrievalOps.bm25PostingsFor(Tables.documents(s, dir)),
+          RetrievalOps.bm25DocLengthsFor(Tables.documents(s, dir)),
           emb, idx,
           SimilarityOps.pqCodebookFor(emb),
           SimilarityOps.binarySigsFor(emb))
@@ -8114,7 +8109,7 @@ object Catalog {
 
   // ---------------------------------------------------------------- //
   // §2.10 ML pipelines (M1-M9) — not SQL-expressible; rows-only here,
-  // semantics covered by MLSpec. All four draw on [[MLShared]]: ONE
+  // semantics covered by MLSpec. All draw on [[MLPipelines.featuresFor]]: ONE
   // persisted feature table + ONE set of fitted encoder stages per
   // run (round 1 rebuilt/cached/unpersisted per query — the top bench
   // cost); Verify/Bench release the shared cache at end of run.
@@ -10938,7 +10933,7 @@ object Catalog {
     QuerySpec(
       "q50_ml_correlation",
       (s, dir) => {
-        val (feats, enc) = MLShared.features(s, dir)
+        val (feats, enc) = MLPipelines.featuresFor(Tables.orders(s, dir), Tables.customer(s, dir))
         MLPipelines.correlationMatrix(feats, enc)
       },
       Some(q50OracleSql)),
@@ -10947,8 +10942,8 @@ object Catalog {
       "q51_ml_regression",
       (s, dir) => {
         import s.implicits._
-        val (feats, _) = MLShared.features(s, dir)
-        val (_, rmse) = MLShared.regression(s, dir)
+        val (feats, _) = MLPipelines.featuresFor(Tables.orders(s, dir), Tables.customer(s, dir))
+        val (_, rmse) = MLPipelines.regressionFor(Tables.orders(s, dir), Tables.customer(s, dir))
         val n = feats.count()
         Seq(("linear_regression", n, rmse)).toDF("model", "n_rows", "rmse")
       },
@@ -10958,7 +10953,8 @@ object Catalog {
       "q52_ml_classification",
       (s, dir) => {
         import s.implicits._
-        val (_, median, auc) = MLShared.classification(s, dir)
+        val (_, median, auc) =
+          MLPipelines.classificationFor(Tables.orders(s, dir), Tables.customer(s, dir))
         Seq(("logistic_regression", median, auc)).toDF("model", "median_threshold", "auc")
       },
       None),
@@ -10967,8 +10963,8 @@ object Catalog {
       "q53_ml_kmeans",
       (s, dir) => {
         import org.apache.spark.sql.functions.{col, count, lit}
-        val (feats, _) = MLShared.features(s, dir)
-        val model = MLShared.clustering(s, dir)
+        val (feats, _) = MLPipelines.featuresFor(Tables.orders(s, dir), Tables.customer(s, dir))
+        val model = MLPipelines.clusteringFor(Tables.orders(s, dir), Tables.customer(s, dir))
         model.transform(feats)
           .groupBy(col("prediction"))
           .agg(count(lit(1)).as("n_rows"))
@@ -10990,7 +10986,7 @@ object Catalog {
     // winner minimality + determinism. Memoized like the other fits.
     QuerySpec(
       "q177_ml_param_sweep",
-      (s, dir) => MLShared.sweep(s, dir),
+      (s, dir) => MLPipelines.sweepFor(Tables.orders(s, dir), Tables.customer(s, dir)),
       None)
   )
 
@@ -11166,7 +11162,8 @@ object Catalog {
       QuerySpec(
         "q57_classify_infer",
         (s, dir) => {
-          val (model, _, _) = MLShared.classification(s, dir)
+          val (model, _, _) =
+            MLPipelines.classificationFor(Tables.orders(s, dir), Tables.customer(s, dir))
           inferSlice(s, dir, model)
         },
         None),
@@ -11177,7 +11174,8 @@ object Catalog {
       QuerySpec(
         "q65_model_persist_infer",
         (s, dir) => {
-          val (model, _, _) = MLShared.classification(s, dir)
+          val (model, _, _) =
+            MLPipelines.classificationFor(Tables.orders(s, dir), Tables.customer(s, dir))
           val path = tmp("model", dir)
           MLPipelines.saveModel(model, path)
           inferSlice(s, dir, MLPipelines.loadModel(path))

@@ -5,7 +5,6 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
 
 import graft.engine._
-import graft.queries.{BpeShared, EventShared, SketchShared}
 
 /** The artifact store's contract: a stored artifact is keyed by every
   * parameter and its inputs' identity, warm reads build nothing, and
@@ -76,7 +75,7 @@ class ArtifactsSpec extends SparkSpec {
     def table(name: String) = spark.read.table(name)
     lazy val idx = SimilarityOps.ivfIndexFor(emb)
     // the q247 ingest split over the stored sketch table
-    val sk = SketchShared.sketches(spark, sf)
+    val sk = DedupOps.docSketchesFor(docs)
       .filter(col("sig").isNotNull).select(col("doc_id"), col("sig"))
     val fps = DedupOps.fingerprintStore(docs.filter(col("doc_id") < 450))
     val storedSigs = sk.filter(col("doc_id") < 450)
@@ -117,7 +116,7 @@ class ArtifactsSpec extends SparkSpec {
         Seq("bi" -> m.bigrams, "ctx" -> m.contexts, "vocab" -> m.vocab)
       })
     def bpe(rounds: Int) = parts("bpe", s"rounds=$rounds", "bpe_", Seq("merges", "words"),
-      Seq("merges" -> BpeShared.merges(spark, sf, rounds), "words" -> BpeShared.words(spark, sf, rounds)),
+      Seq("merges" -> TextOps.bpeMergesFor(docs, rounds), "words" -> TextOps.bpeWordsFor(docs, rounds)),
       { val (m, w) = TextOps.bpeLearnState(docs, rounds); Seq("merges" -> m, "words" -> w) })
     def bucketed(n: Int) = {
       lazy val (ot, ct) = PartitionedTables.ensureBucketed(spark, sf, n)
@@ -205,23 +204,22 @@ class ArtifactsSpec extends SparkSpec {
       one("dedup_split", DedupOps.clusterSplitFor(docs),
         DedupOps.clusterAwareSplit(docs, DedupOps.jaccardPairs(docs).select(col("doc_i"), col("doc_j")))) ++
       one("entity_groups", DedupOps.entityGroupsFor(part), DedupOps.entityGroups(part)) ++
-      one("doc_sketches", SketchShared.sketches(spark, sf), DedupOps.docSketches(docs)) ++
-      one("doc_mh_pairs", SketchShared.minhashPairs(spark, sf),
-        DedupOps.minhashPairsFromSigs(sk)) ++
-      one("doc_sim_pairs", SketchShared.simhashPairs(spark, sf),
-        DedupOps.simhashPairsFromSigs(SketchShared.sketches(spark, sf)
+      one("doc_sketches", DedupOps.docSketchesFor(docs), DedupOps.docSketches(docs)) ++
+      one("doc_mh_pairs", DedupOps.minhashPairsFor(docs), DedupOps.minhashPairsFromSigs(sk)) ++
+      one("doc_sim_pairs", DedupOps.simhashPairsFor(docs),
+        DedupOps.simhashPairsFromSigs(DedupOps.docSketchesFor(docs)
           .filter(col("simhash").isNotNull).select(col("doc_id"), col("simhash")))) ++
-      one("doc_cal_truth", SketchShared.calibrationTruth(spark, sf),
+      one("doc_cal_truth", DedupOps.calibrationTruthFor(docs),
         DedupOps.jaccardPairs(docs, maxDocId = 500, threshold = 0.5)
           .select(col("doc_i"), col("doc_j"))) ++
-      one("doc_dfcap_pairs", SketchShared.dfCappedJaccardPairs(spark, sf),
+      one("doc_dfcap_pairs", DedupOps.dfCappedJaccardPairsFor(docs),
         DedupOps.jaccardPairsDfCapped(docs)) ++
-      one("ev_manifest", EventShared.manifest(spark, sf), TemporalOps.sessionPackManifest(ev)) ++
-      one("ev_sessions", EventShared.sessions(spark, sf), EventOps.sessionize(ev)) ++
-      one("ev_funnel", EventShared.funnel(spark, sf), EventOps.funnel(ev)) ++
-      one("ev_retention", EventShared.retention(spark, sf), EventOps.retentionCohorts(ev)) ++
-      one("ev_transitions", EventShared.transitions(spark, sf), EventOps.eventTransitions(ev)) ++
-      one("ev_attribution", EventShared.attribution(spark, sf), EventOps.lastTouchAttribution(ev)) ++
+      one("ev_manifest", TemporalOps.sessionPackManifestFor(ev), TemporalOps.sessionPackManifest(ev)) ++
+      one("ev_sessions", EventOps.sessionsFor(ev), EventOps.sessionize(ev)) ++
+      one("ev_funnel", EventOps.funnelFor(ev), EventOps.funnel(ev)) ++
+      one("ev_retention", EventOps.retentionCohortsFor(ev), EventOps.retentionCohorts(ev)) ++
+      one("ev_transitions", EventOps.eventTransitionsFor(ev), EventOps.eventTransitions(ev)) ++
+      one("ev_attribution", EventOps.lastTouchAttributionFor(ev), EventOps.lastTouchAttribution(ev)) ++
       one("bm25_postings", RetrievalOps.bm25PostingsFor(docs), RetrievalOps.bm25Postings(docs)) ++
       one("bm25_doclen", RetrievalOps.bm25DocLengthsFor(docs), RetrievalOps.bm25DocLengths(docs)) ++
       one("bin_sigs", SimilarityOps.binarySigsFor(emb),
@@ -308,6 +306,15 @@ class ArtifactsSpec extends SparkSpec {
     assert(offenders { case (f, _, t) =>
       f != "StreamOps.scala" && "var \\w*[mM]emo\\b".r.findFirstIn(t).isDefined }.isEmpty,
       "an in-session memo var outside Artifacts")
+    // one form per stored input: the engine's *For builders, not
+    // accessor objects over a fixture directory; an in-session value
+    // is keyed like a table (a `(name, dir)` key outlives a rewrite)
+    val sharedObjects = offenders { case (_, _, t) => """\bobject \w*Shared\b""".r.findFirstIn(t).isDefined }
+    assert(sharedObjects.isEmpty, s"a *Shared accessor object:\n${sharedObjects.mkString("\n")}")
+    val looseMemoKeys = offenders { case (_, _, t) =>
+      """Artifacts\.memo\((?!Artifacts\.nameFor\()""".r.findFirstIn(t).isDefined }
+    assert(looseMemoKeys.isEmpty,
+      s"an Artifacts.memo key that is not an Artifacts.nameFor:\n${looseMemoKeys.mkString("\n")}")
     // operators read their own stored inputs: the only Option dual
     // paths left are the manifest-certificate operators (a staleness
     // check on a caller-supplied manifest) and StreamOps' carried state

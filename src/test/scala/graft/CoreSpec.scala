@@ -1163,9 +1163,9 @@ class CoreSpec extends SparkSpec {
   }
 
   test("rrf fusion score is exactly the two-term reciprocal sum, ranked descending") {
-    import graft.queries.RetrievalShared
+    val docs = Tables.documents(spark, sf)
     val fused = RetrievalOps.rrfFusion(
-      RetrievalShared.postings(spark, sf), RetrievalShared.docLengths(spark, sf),
+      RetrievalOps.bm25PostingsFor(docs), RetrievalOps.bm25DocLengthsFor(docs),
       Tables.embeddings(spark, sf)).collect()
     assert(fused.nonEmpty)
     fused.foreach { r =>
@@ -1846,10 +1846,7 @@ class CoreSpec extends SparkSpec {
       .toDF("user_id", "event_id", "ts", "event_type")
     val rm = Seq(1L, 3L).toDF("user_id")
     val mani = TemporalOps.sessionPackManifest(ev)
-    val led = EventOps.userQuarantineRoundTrip(ev, rm,
-        mani, EventOps.sessionize(ev), EventOps.funnel(ev),
-        EventOps.retentionCohorts(ev), EventOps.eventTransitions(ev),
-        EventOps.lastTouchAttribution(ev)).collect()
+    val led = EventOps.userQuarantineRoundTrip(ev, rm).collect()
       .map(r => r.getString(0) ->
         ((r.getLong(2), r.getLong(3), r.getLong(4), r.getBoolean(5)))).toMap
     led.foreach { case (a, (nb, _, nr, clean)) =>
@@ -1893,11 +1890,7 @@ class CoreSpec extends SparkSpec {
       (3L, 7L, t("2024-01-02 10:00:00"), "view"),
       (3L, 8L, t("2024-01-02 10:10:00"), "purchase"))
       .toDF("user_id", "event_id", "ts", "event_type")
-    val led = EventOps.retentionSweep(ev, "2024-01-08 00:00:00",
-        TemporalOps.sessionPackManifest(ev), EventOps.sessionize(ev),
-        EventOps.funnel(ev), EventOps.retentionCohorts(ev),
-        EventOps.eventTransitions(ev), EventOps.lastTouchAttribution(ev))
-      .collect()
+    val led = EventOps.retentionSweep(ev, "2024-01-08 00:00:00").collect()
       .map(r => (r.getString(0), r.getString(1)) ->
         ((r.getLong(2), r.getLong(3), r.getBoolean(5)))).toMap
     assert(led.values.forall(_._3), s"every probe must be clean: $led")

@@ -123,12 +123,32 @@ class MLSpec extends SparkSpec {
   }
 
   test("param sweep reports the full grid and flags exactly the min-rmse candidate") {
-    val rows = graft.queries.MLShared.sweep(spark, sf).collect()
+    val rows = MLPipelines.sweepFor(Tables.orders(spark, sf), Tables.customer(spark, sf)).collect()
     assert(rows.length == 4, "2x2 grid")
     assert(rows.forall(r => r.getDouble(2) > 0 && !r.getDouble(2).isNaN))
     val best = rows.filter(_.getLong(3) == 1L)
     assert(best.length == 1, "exactly one winner")
     val minRmse = rows.map(_.getDouble(2)).min
     assert(best(0).getDouble(2) == minRmse, "winner carries the minimum validation rmse")
+  }
+
+  test("rewriting orders under the same directory refits: no stale shared fit") {
+    val dir = Files.createTempDirectory("graft_ml_rewrite_")
+    Seq("orders", "customer").foreach { t =>
+      Files.copy(java.nio.file.Paths.get(s"$sf/$t.parquet"), dir.resolve(s"$t.parquet"))
+    }
+    val q51 = graft.queries.Catalog.specs.find(_.name == "q51_ml_regression").get
+    def nRows(): Long = q51.run(spark, dir.toString).collect().head.getLong(1)
+    assert(nRows() == feats.count())
+    // a strict subset, swapped in for the same orders path
+    val subset = Tables.orders(spark, sf).filter(col("o_orderkey") % 3 =!= 0)
+    val want = MLPipelines.featureTable(subset, Tables.customer(spark, sf)).count()
+    assert(want < feats.count(), "the rewrite must drop feature rows")
+    val staged = dir.resolve("orders_subset").toString
+    subset.coalesce(1).write.parquet(staged)
+    val part = new java.io.File(staged).listFiles().find(_.getName.endsWith(".parquet")).get
+    Files.move(part.toPath, dir.resolve("orders.parquet"),
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    assert(nRows() == want, "q51 must fit the rewritten orders, not serve the old fit")
   }
 }

@@ -629,13 +629,13 @@ class PropertySpec extends SparkSpec {
       val ts = base + rnd.nextInt(40) * 3600000L + rnd.nextInt(30) * 60000L
       (u, i.toLong, new java.sql.Timestamp(ts), types(rnd.nextInt(types.length)))
     }
+    // read straight from its local rows: a stable identity, so the
+    // sweeps below build the six stores of `ev` once and share them
     val ev = events.toDF("user_id", "event_id", "ts", "event_type")
-      .localCheckpoint(false)
     def stores(e: org.apache.spark.sql.DataFrame) = (
       TemporalOps.sessionPackManifest(e), EventOps.sessionize(e),
       EventOps.funnel(e), EventOps.retentionCohorts(e),
       EventOps.eventTransitions(e), EventOps.lastTouchAttribution(e))
-    val (mani, sess, fun, ret, trans, attr) = stores(ev)
     def ledgerMap(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(3)).toMap
     // the DECREMENT/RE-DERIVE path must equal a full REBUILD over the
@@ -666,8 +666,7 @@ class PropertySpec extends SparkSpec {
       val rmUsers = (0 until 10).filter(_ => rs.nextBoolean()).map(_.toLong)
       if (rmUsers.nonEmpty && rmUsers.size < 10) {
         val rm = rmUsers.toDF("user_id")
-        val led = ledgerMap(EventOps.userTakedown(
-          ev, rm, mani, sess, fun, ret, trans, attr))
+        val led = ledgerMap(EventOps.userTakedown(ev, rm))
         check(s"rm=$rmUsers", led,
           ev.join(rm, Seq("user_id"), "left_anti").localCheckpoint(false))
       }
@@ -678,8 +677,7 @@ class PropertySpec extends SparkSpec {
     Seq(times(times.length / 4), times(times.length / 2),
         times(3 * times.length / 4)).foreach { cut =>
       val cs = java.time.Instant.ofEpochMilli(cut).toString
-      val led = ledgerMap(EventOps.retentionSweep(
-        ev, cs, mani, sess, fun, ret, trans, attr))
+      val led = ledgerMap(EventOps.retentionSweep(ev, cs))
       check(s"cut=$cs", led,
         ev.filter(col("ts") >= lit(cs).cast("timestamp"))
           .localCheckpoint(false))
@@ -691,9 +689,7 @@ class PropertySpec extends SparkSpec {
       val rs = new Random(200 + s)
       val rmUsers = (0 until 10).filter(_ => rs.nextBoolean()).map(_.toLong)
       if (rmUsers.nonEmpty && rmUsers.size < 10) {
-        val rows = EventOps.userQuarantineRoundTrip(
-            ev, rmUsers.toDF("user_id"),
-            mani, sess, fun, ret, trans, attr).collect()
+        val rows = EventOps.userQuarantineRoundTrip(ev, rmUsers.toDF("user_id")).collect()
         rows.foreach { r =>
           assert(r.getBoolean(5),
             s"rm=$rmUsers: ${r.getString(0)} must restore row-identical")

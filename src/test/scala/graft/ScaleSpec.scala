@@ -105,7 +105,7 @@ class ScaleSpec extends SparkSpec {
     // are shallow, so propagation must finish far below the maxIter
     // guard (recorded per scale factor in SCALE.md)
     assert(st.rounds <= 8, s"expected shallow clusters, took ${st.rounds} rounds")
-    val sketch = DedupOps.minhashPairs(docs)
+    val sketch = DedupOps.minhashPairsFor(docs)
       .filter(col("est_jaccard") >= 0.5).select(col("doc_i"), col("doc_j"))
     val (_, st2) = DedupOps.connectedComponentsWithStats(
       docs.select(col("doc_id")), sketch)
@@ -580,11 +580,11 @@ class ScaleSpec extends SparkSpec {
 
   test("r11 retrieval/probe ops never re-tokenize the corpus") {
     import graft.engine.{RetrievalOps, SimilarityOps, Tables}
-    import graft.queries.RetrievalShared
     // q248: both retrieval stages and the mining stage run off the
     // stored postings — the executed plan has no tokenize anywhere
+    val docs = Tables.documents(spark, sf)
     val exp = RetrievalOps.queryExpansion(
-      RetrievalShared.postings(spark, sf), RetrievalShared.docLengths(spark, sf))
+      RetrievalOps.bm25PostingsFor(docs), RetrievalOps.bm25DocLengthsFor(docs))
     exp.collect()
     val ep = exp.queryExecution.executedPlan.toString
     assert(!ep.contains("regexp_extract_all"),
@@ -715,32 +715,39 @@ class ScaleSpec extends SparkSpec {
   test("r16 user takedown + retention sweep: user-keyed windows only, slice filters reach the scans") {
     import graft.engine.{EventOps, TemporalOps}
     val ev = Tables.events(spark, sf)
-    def ledgers(cut: Option[String]) = {
-      val stores = (TemporalOps.sessionPackManifest(ev),
-        EventOps.sessionize(ev), EventOps.funnel(ev),
-        EventOps.retentionCohorts(ev), EventOps.eventTransitions(ev),
-        EventOps.lastTouchAttribution(ev))
-      cut match {
-        case Some(c) => EventOps.retentionSweep(ev, c, stores._1, stores._2,
-          stores._3, stores._4, stores._5, stores._6)
-        case None =>
-          import org.apache.spark.sql.functions.pmod
-          EventOps.userTakedown(ev,
-            ev.filter(pmod(col("user_id"), lit(5)) === 2).select(col("user_id")),
-            stores._1, stores._2, stores._3, stores._4, stores._5, stores._6)
-      }
+    // every window partitions on user_id — no corpus-global window
+    // anywhere; returns the window count
+    def userKeyedWindows(name: String, plan: String): Int = {
+      val specs = "windowspecdefinition\\(([^)]*)\\)".r
+        .findAllMatchIn(plan).map(_.group(1)).toSeq
+      specs.foreach { s =>
+        assert(s.contains("user_id"), s"$name window must key on user_id: $s") }
+      specs.size
+    }
+    // the six stores the sweeps correct, as their build bodies plan
+    // (retention cohorts is a per-user min and a distinct: no window)
+    val storeWindows = Seq(
+        "ev_manifest" -> TemporalOps.sessionPackManifest(ev),
+        "ev_sessions" -> EventOps.sessionize(ev), "ev_funnel" -> EventOps.funnel(ev),
+        "ev_retention" -> EventOps.retentionCohorts(ev),
+        "ev_transitions" -> EventOps.eventTransitions(ev),
+        "ev_attribution" -> EventOps.lastTouchAttribution(ev)).map { case (name, build) =>
+      name -> userKeyedWindows(name, build.queryExecution.executedPlan.toString) }
+    assert(storeWindows.count(_._2 > 0) == 5, s"store windows: $storeWindows")
+    def ledgers(cut: Option[String]) = cut match {
+      case Some(c) => EventOps.retentionSweep(ev, c)
+      case None =>
+        import org.apache.spark.sql.functions.pmod
+        EventOps.userTakedown(ev,
+          ev.filter(pmod(col("user_id"), lit(5)) === 2).select(col("user_id")))
     }
     for ((name, plan) <- Seq(
         "q284" -> ledgers(None).queryExecution.executedPlan.toString,
         "q286" -> ledgers(Some("2024-01-05 00:00:00"))
           .queryExecution.executedPlan.toString)) {
-      // every window in the whole ledger plan (store builds included)
-      // must partition on user_id — no corpus-global window anywhere
-      val specs = "windowspecdefinition\\(([^)]*)\\)".r
-        .findAllMatchIn(plan).map(_.group(1)).toSeq
-      assert(specs.nonEmpty, s"$name expected windows:\n${plan.take(1200)}")
-      specs.foreach { s =>
-        assert(s.contains("user_id"), s"$name window must key on user_id: $s") }
+      // the operators read the stored tables; every window left in the
+      // ledger plan partitions on user_id too
+      assert(userKeyedWindows(name, plan) > 0, s"$name expected windows:\n${plan.take(1200)}")
       // no driver-side action: the ledger is one declarative plan
       // (this would throw before reaching here if it collected)
       assert(plan.contains("BroadcastHashJoin") ||

@@ -970,7 +970,6 @@ class SimilarityMultimodalSpec extends SparkSpec {
     // run on a d > 64 corpus despite the wide-sig store existing.
     // hammingOf now adapts to the signature type — drive the FULL
     // cert over the 128-d fixture with the wide store.
-    import graft.queries.RetrievalShared
     val docs = Tables.documents(spark, sf)
     val wideEmb = emb.select(col("vec_id"),
       expr("concat(transform(embedding, x -> CAST(x AS DOUBLE)), " +
@@ -981,8 +980,8 @@ class SimilarityMultimodalSpec extends SparkSpec {
     val rm = docs.filter(pmod(col("doc_id"), lit(17)) === 6)
       .select(col("doc_id"))
     val cert = CorpusOps.takedownServingCert(rm,
-        RetrievalShared.postings(spark, sf),
-        RetrievalShared.docLengths(spark, sf),
+        RetrievalOps.bm25PostingsFor(Tables.documents(spark, sf)),
+        RetrievalOps.bm25DocLengthsFor(Tables.documents(spark, sf)),
         wideEmb, idx, cb, sigs).collect()
       .map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
@@ -1026,12 +1025,11 @@ class SimilarityMultimodalSpec extends SparkSpec {
       s"wide row must purge through the ledger: ${led(("binary_sigs_wide", "all"))}")
     // quarantine round-trip: the wide store purges AND restores
     // commitment-identical from the quarantined wide vectors
-    import graft.queries.{RetrievalShared, SketchShared}
     val idx = SimilarityOps.ivfIndexFor(emb)
     val qled = CorpusOps.quarantineRoundTrip(docs, emb, rm,
-        RetrievalShared.postings(spark, sf),
-        RetrievalShared.docLengths(spark, sf),
-        SketchShared.sketches(spark, sf), fp,
+        RetrievalOps.bm25PostingsFor(Tables.documents(spark, sf)),
+        RetrievalOps.bm25DocLengthsFor(Tables.documents(spark, sf)),
+        DedupOps.docSketchesFor(Tables.documents(spark, sf)), fp,
         TextOps.lmModelFor(docs), CorpusOps.corpusCardState(docs),
         idx, SimilarityOps.ivfPqCodesFor(idx),
         SimilarityOps.ivfPqCodebookFor(idx),
@@ -1295,16 +1293,15 @@ class SimilarityMultimodalSpec extends SparkSpec {
   }
 
   test("takedown propagation: one removed doc flags exactly its artifact rows, df reconciles") {
-    import graft.queries.{RetrievalShared, SketchShared}
     val docs = Tables.documents(spark, sf)
     val removedId = 10L
     val removal = docs.filter(col("doc_id") === removedId).select(col("doc_id"))
     val idx = SimilarityOps.ivfIndexFor(emb)
     val res = CorpusOps.takedownPropagation(
       docs, removal,
-      RetrievalShared.postings(spark, sf.toString),
-      RetrievalShared.docLengths(spark, sf.toString),
-      SketchShared.sketches(spark, sf.toString),
+      RetrievalOps.bm25PostingsFor(Tables.documents(spark, sf.toString)),
+      RetrievalOps.bm25DocLengthsFor(Tables.documents(spark, sf.toString)),
+      DedupOps.docSketchesFor(Tables.documents(spark, sf.toString)),
       idx.assigned,
       SimilarityOps.ivfPqCodesFor(idx)).collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4)))
@@ -1433,15 +1430,14 @@ class SimilarityMultimodalSpec extends SparkSpec {
   }
 
   test("takedown apply: purge executes clean, token mass conserves, plan and apply reconcile") {
-    import graft.queries.{RetrievalShared, SketchShared}
     val docs = Tables.documents(spark, sf)
     val removedId = 10L
     val removal = docs.filter(col("doc_id") === removedId).select(col("doc_id"))
     val idx = SimilarityOps.ivfIndexFor(emb)
-    val postings = RetrievalShared.postings(spark, sf)
+    val postings = RetrievalOps.bm25PostingsFor(Tables.documents(spark, sf))
     val args = (docs, removal, postings,
-      RetrievalShared.docLengths(spark, sf),
-      SketchShared.sketches(spark, sf),
+      RetrievalOps.bm25DocLengthsFor(Tables.documents(spark, sf)),
+      DedupOps.docSketchesFor(Tables.documents(spark, sf)),
       idx.assigned,
       SimilarityOps.ivfPqCodesFor(idx))
     val res = CorpusOps.takedownApply(args._1, args._2, args._3, args._4,
@@ -1480,7 +1476,6 @@ class SimilarityMultimodalSpec extends SparkSpec {
     // from the store's own rows, never from an assumed 1:1 with
     // documents — a future quality-filtered store must change the
     // counts (and therefore hash-mismatch a 1:1-assuming oracle).
-    import graft.queries.RetrievalShared
     import org.apache.spark.sql.functions.pmod
     val docs = Tables.documents(spark, sf)
     // one removed doc IN the subsetted store (even id), one NOT (odd)
@@ -1490,8 +1485,8 @@ class SimilarityMultimodalSpec extends SparkSpec {
     val idx = SimilarityOps.ivfIndexFor(emb)
     val plan = CorpusOps.takedownPropagation(
         docs, removal,
-        RetrievalShared.postings(spark, sf),
-        RetrievalShared.docLengths(spark, sf),
+        RetrievalOps.bm25PostingsFor(Tables.documents(spark, sf)),
+        RetrievalOps.bm25DocLengthsFor(Tables.documents(spark, sf)),
         subStore, idx.assigned,
         SimilarityOps.ivfPqCodesFor(idx)).collect()
     val skKeys = plan.filter(_.getString(0) == "sketches")
@@ -1500,8 +1495,8 @@ class SimilarityMultimodalSpec extends SparkSpec {
       s"only STORE-resident removed docs may plan a sketch purge: $skKeys")
     val ap = CorpusOps.takedownApply(
         docs, removal,
-        RetrievalShared.postings(spark, sf),
-        RetrievalShared.docLengths(spark, sf),
+        RetrievalOps.bm25PostingsFor(Tables.documents(spark, sf)),
+        RetrievalOps.bm25DocLengthsFor(Tables.documents(spark, sf)),
         subStore, idx.assigned,
         SimilarityOps.ivfPqCodesFor(idx)).collect()
       .filter(_.getString(0) == "sketches").head
@@ -1512,16 +1507,15 @@ class SimilarityMultimodalSpec extends SparkSpec {
   }
 
   test("takedown probes the STORED manifest (plan-audited); a stale manifest fails loudly") {
-    import graft.queries.{RetrievalShared, SketchShared}
     val docs = Tables.documents(spark, sf)
     val removal = docs.filter(col("doc_id") === 10L).select(col("doc_id"))
     val idx = SimilarityOps.ivfIndexFor(emb)
     val stored = CorpusOps.sequenceManifestFor(docs)
     val plan = CorpusOps.takedownPropagation(
       docs, removal,
-      RetrievalShared.postings(spark, sf),
-      RetrievalShared.docLengths(spark, sf),
-      SketchShared.sketches(spark, sf),
+      RetrievalOps.bm25PostingsFor(Tables.documents(spark, sf)),
+      RetrievalOps.bm25DocLengthsFor(Tables.documents(spark, sf)),
+      DedupOps.docSketchesFor(Tables.documents(spark, sf)),
       idx.assigned,
       SimilarityOps.ivfPqCodesFor(idx),
       storedManifest = Some(stored))
@@ -1544,9 +1538,9 @@ class SimilarityMultimodalSpec extends SparkSpec {
       docs.filter(col("doc_id") =!= 11L), seqLen = 2048)
     val staleCert = CorpusOps.takedownPropagation(
         docs, removal,
-        RetrievalShared.postings(spark, sf),
-        RetrievalShared.docLengths(spark, sf),
-        SketchShared.sketches(spark, sf),
+        RetrievalOps.bm25PostingsFor(Tables.documents(spark, sf)),
+        RetrievalOps.bm25DocLengthsFor(Tables.documents(spark, sf)),
+        DedupOps.docSketchesFor(Tables.documents(spark, sf)),
         idx.assigned,
         SimilarityOps.ivfPqCodesFor(idx),
         storedManifest = Some(stale)).collect()
@@ -1557,9 +1551,9 @@ class SimilarityMultimodalSpec extends SparkSpec {
     // the apply's cert row flags the same staleness via clean = false
     val staleApply = CorpusOps.takedownApply(
         docs, removal,
-        RetrievalShared.postings(spark, sf),
-        RetrievalShared.docLengths(spark, sf),
-        SketchShared.sketches(spark, sf),
+        RetrievalOps.bm25PostingsFor(Tables.documents(spark, sf)),
+        RetrievalOps.bm25DocLengthsFor(Tables.documents(spark, sf)),
+        DedupOps.docSketchesFor(Tables.documents(spark, sf)),
         idx.assigned,
         SimilarityOps.ivfPqCodesFor(idx),
         storedManifest = Some(stale)).collect()
@@ -1569,14 +1563,13 @@ class SimilarityMultimodalSpec extends SparkSpec {
   }
 
   test("takedown serving cert: no surface serves a removed doc; pointwise surfaces backfill 1:1") {
-    import graft.queries.RetrievalShared
     val docs = Tables.documents(spark, sf)
     val removal = docs.filter(pmod(col("doc_id"), lit(17)) === 6)
       .select(col("doc_id"))
     val idx = SimilarityOps.ivfIndexFor(emb)
     val res = CorpusOps.takedownServingCert(removal,
-        RetrievalShared.postings(spark, sf),
-        RetrievalShared.docLengths(spark, sf),
+        RetrievalOps.bm25PostingsFor(Tables.documents(spark, sf)),
+        RetrievalOps.bm25DocLengthsFor(Tables.documents(spark, sf)),
         emb, idx,
         SimilarityOps.pqCodebookFor(emb),
         SimilarityOps.binarySigsFor(emb)).collect()

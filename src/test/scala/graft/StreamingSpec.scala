@@ -715,7 +715,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     val docs = graft.engine.Tables.documents(spark, sf)
-    // stored corpus sketches (the SketchShared shape) for history,
+    // stored corpus sketches (the docSketchesFor shape) for history,
     // new docs arriving as a stream split across TWO micro-batches —
     // each doc's verdict depends only on (doc, store), so the split
     // point must not matter
@@ -738,7 +738,8 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
     val streamed = spark.read.parquet(out).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).sortBy(_._1)
-    val batch = graft.engine.DedupOps.incrementalNearDedup(docs, splitId = 450).collect()
+    val batch = graft.queries.Catalog.specs.find(_.name == "q109_incremental_near_dedup").get
+      .run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).sortBy(_._1)
     assert(streamed.length == batch.length && streamed.toSeq == batch.toSeq,
       s"streaming near-dedup diverged from q109 (${streamed.length} vs ${batch.length} rows)")
@@ -1172,11 +1173,11 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
-    import graft.engine.{StreamOps, Tables}
-    import graft.queries.{RetrievalShared, SketchShared}
-    val postings = RetrievalShared.postings(spark, sf).localCheckpoint(false)
-    val doclens = RetrievalShared.docLengths(spark, sf).localCheckpoint(false)
-    val sketches = SketchShared.sketches(spark, sf).localCheckpoint(false)
+    import graft.engine.{DedupOps, RetrievalOps, StreamOps, Tables}
+    val docs = Tables.documents(spark, sf)
+    val postings = RetrievalOps.bm25PostingsFor(docs).localCheckpoint(false)
+    val doclens = RetrievalOps.bm25DocLengthsFor(docs).localCheckpoint(false)
+    val sketches = DedupOps.docSketchesFor(docs).localCheckpoint(false)
     val out = java.nio.file.Files.createTempDirectory("graft_std_out_").toString + "/td"
     val ckpt = java.nio.file.Files.createTempDirectory("graft_std_ckpt_").toString
     val input = MemoryStream[Long]
@@ -1587,12 +1588,11 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
-    import graft.engine.{CorpusOps, SimilarityOps, StreamOps, Tables}
-    import graft.queries.RetrievalShared
+    import graft.engine.{CorpusOps, RetrievalOps, SimilarityOps, StreamOps, Tables}
     val docs = Tables.documents(spark, sf)
     val emb = Tables.embeddings(spark, sf).localCheckpoint(false)
-    val postings = RetrievalShared.postings(spark, sf).localCheckpoint(false)
-    val doclens = RetrievalShared.docLengths(spark, sf).localCheckpoint(false)
+    val postings = RetrievalOps.bm25PostingsFor(docs).localCheckpoint(false)
+    val doclens = RetrievalOps.bm25DocLengthsFor(docs).localCheckpoint(false)
     val idx = SimilarityOps.ivfIndexFor(emb)
     val cb = SimilarityOps.pqCodebookFor(emb)
     val sigs = SimilarityOps.binarySigsFor(emb).localCheckpoint(false)

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.engine._
@@ -11,6 +12,22 @@ import graft.functions.RollingHash
 class TextDedupSpec extends SparkSpec {
 
   private def docs = Tables.documents(spark, sf)
+
+  // Ad-hoc corpora run the build bodies the stored forms wrap
+  // (DedupOps.*For persists these same bodies over a corpus's one
+  // sketch pass), so a test writes no catalog table per corpus.
+  private def sketchesOf(corpus: DataFrame): DataFrame =
+    DedupOps.docSketches(corpus).localCheckpoint(false)
+  private def sigsOf(sketches: DataFrame): DataFrame =
+    sketches.filter(col("sig").isNotNull).select(col("doc_id"), col("sig"))
+  private def simsOf(sketches: DataFrame): DataFrame =
+    sketches.filter(col("simhash").isNotNull).select(col("doc_id"), col("simhash"))
+  private def minhashPairsOf(corpus: DataFrame): DataFrame =
+    DedupOps.minhashPairsFromSigs(sigsOf(sketchesOf(corpus)))
+  private def simhashPairsOf(corpus: DataFrame, maxBucket: Int = 10000): DataFrame =
+    DedupOps.simhashPairsFromSigs(simsOf(sketchesOf(corpus)), maxBucket = maxBucket)
+  private def clustersOf(corpus: DataFrame, edges: DataFrame): DataFrame =
+    DedupOps.connectedComponentsAuto(corpus.select(col("doc_id")), edges)
 
   test("rolling_hash expression matches an independent implementation") {
     val rows = TextOps.rollingFingerprints(docs).limit(20).collect()
@@ -52,7 +69,7 @@ class TextDedupSpec extends SparkSpec {
     val nearDup = base
       .withColumn("doc_id", lit(1000000L))
       .withColumn("text", concat(col("text"), lit(" tail")))
-    val pairs = DedupOps.minhashPairs(docs.unionByName(nearDup))
+    val pairs = minhashPairsOf(docs.unionByName(nearDup))
       .filter(col("doc_i") === 0 && col("doc_j") === 1000000L)
       .collect()
     assert(pairs.length == 1, "near-dup pair should survive LSH banding")
@@ -61,7 +78,7 @@ class TextDedupSpec extends SparkSpec {
 
   test("simhash banding finds an injected duplicate at hamming 0 (full corpus, no cap)") {
     val dup = docs.filter(col("doc_id") === 0).withColumn("doc_id", lit(1000000L))
-    val pairs = DedupOps.simhashPairs(docs.unionByName(dup))
+    val pairs = simhashPairsOf(docs.unionByName(dup))
       .filter(col("doc_i") === 0 && col("doc_j") === 1000000L)
       .collect()
     assert(pairs.length == 1 && pairs.head.getLong(2) == 0L,
@@ -73,7 +90,8 @@ class TextDedupSpec extends SparkSpec {
     // hamming scan over the signatures finds no pair <= maxHamming that
     // banding missed (the bands-1 >= maxHamming guarantee).
     val maxHamming = 3
-    val found = DedupOps.simhashPairs(docs, bands = 4, maxHamming = maxHamming)
+    val found = DedupOps.simhashPairsFromSigs(simsOf(sketchesOf(docs)), bands = 4,
+        maxHamming = maxHamming)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(found.values.forall(_ <= maxHamming))
     val sigs = DedupOps.simhashSignatures(docs)
@@ -169,8 +187,8 @@ class TextDedupSpec extends SparkSpec {
       .withColumn("doc_id", lit(1000000L))
       .withColumn("text", concat(col("text"), lit(" tail")))
     val exactDup = base.withColumn("doc_id", lit(1000001L))
-    val deduped = DedupOps.nearDedupSketch(
-      docs.unionByName(nearDup).unionByName(exactDup))
+    val corpus = docs.unionByName(nearDup).unionByName(exactDup)
+    val deduped = DedupOps.nearDedupSketchFromSketches(corpus, sketchesOf(corpus))
     val kept = deduped.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(!kept.contains(1000000L) && !kept.contains(1000001L),
       "injected duplicates must be absorbed, not kept")
@@ -178,15 +196,17 @@ class TextDedupSpec extends SparkSpec {
   }
 
   test("merged-bucket sketch pipeline equals the union of the standalone pair generators") {
-    // nearDedupSketch runs ONE self-join over the merged minhash ∪
-    // simhash bucket space; its clusters must be identical to feeding
-    // nearDedup the two standalone pair sets unioned — the merge is a
-    // shuffle optimization, not a semantics change
-    val merged = DedupOps.nearDedupSketch(docs)
+    // nearDedupSketchFromSketches runs ONE self-join over the merged
+    // minhash ∪ simhash bucket space; its clusters must be identical
+    // to feeding nearDedup the two standalone pair sets unioned (q70's
+    // nearDedupFromPairSets) — the merge is a shuffle optimization,
+    // not a semantics change
+    val sketches = sketchesOf(docs)
+    val merged = DedupOps.nearDedupSketchFromSketches(docs, sketches)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val mh = DedupOps.minhashPairs(docs)
+    val mh = DedupOps.minhashPairsFromSigs(sigsOf(sketches))
       .filter(col("est_jaccard") >= 0.5).select(col("doc_i"), col("doc_j"))
-    val sh = DedupOps.simhashPairs(docs, maxHamming = 3)
+    val sh = DedupOps.simhashPairsFromSigs(simsOf(sketches), maxHamming = 3)
       .select(col("doc_i"), col("doc_j"))
     val standalone = DedupOps.nearDedup(docs, mh.union(sh).distinct())
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -239,7 +259,9 @@ class TextDedupSpec extends SparkSpec {
     // exhaustive ground truth on the capped subset, same 0.15 threshold
     val truth = DedupOps.jaccardPairs(docs, threshold = 0.15)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(3)).toMap
-    val verified = DedupOps.verifiedJaccardPairs(docs, threshold = 0.15)
+    val sketches = sketchesOf(docs)
+    val verified = DedupOps.verifiedJaccardPairsFromShared(sketches,
+        DedupOps.minhashPairsFromSigs(sigsOf(sketches)), threshold = 0.15)
       .filter(col("doc_i") < 60 && col("doc_j") < 60)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(verified.nonEmpty)
@@ -261,9 +283,9 @@ class TextDedupSpec extends SparkSpec {
                 col("doc_j").isin(floodIds.toSeq: _*)).count()
     // default cap (10k) leaves the 31-member bucket alone: all C(31,2)
     // identical pairs surface at hamming 0
-    assert(floodPairs(DedupOps.simhashPairs(flooded)) == 31L * 30 / 2)
+    assert(floodPairs(simhashPairsOf(flooded)) == 31L * 30 / 2)
     // cap 10 excludes the flood bucket from pair generation entirely
-    assert(floodPairs(DedupOps.simhashPairs(flooded, maxBucket = 10)) == 0L)
+    assert(floodPairs(simhashPairsOf(flooded, maxBucket = 10)) == 0L)
   }
 
   test("jaccard pairs are within [0,1] and thresholded") {
@@ -275,25 +297,19 @@ class TextDedupSpec extends SparkSpec {
   }
 
   test("shared sketch pass: every family member equals its standalone form") {
-    // the one-pass sketch frame (what SketchShared persists) must make
-    // q42/q43/q70/q73 value-identical to the per-query standalone paths
-    val sketches = DedupOps.docSketches(docs).localCheckpoint(false)
-    val sigs = sketches.filter(col("sig").isNotNull).select(col("doc_id"), col("sig"))
-    val sims = sketches.filter(col("simhash").isNotNull).select(col("doc_id"), col("simhash"))
-    assert(DedupOps.minhashPairsFromSigs(sigs).collect().toSeq ==
-           DedupOps.minhashPairs(docs).collect().toSeq)
-    assert(DedupOps.simhashPairsFromSigs(sims).collect().toSeq ==
-           DedupOps.simhashPairs(docs).collect().toSeq)
-    assert(DedupOps.nearDedupSketchFromSketches(docs, sketches).collect().toSeq ==
-           DedupOps.nearDedupSketch(docs).collect().toSeq)
-    // the stored-pair-set forms (what the catalog runs): q70 from the
-    // two materialized pair sets, q73 from the estimate pairs
-    val mhPairs = DedupOps.minhashPairsFromSigs(sigs).localCheckpoint(false)
-    val simPairs = DedupOps.simhashPairsFromSigs(sims).localCheckpoint(false)
+    // the one-pass sketch frame (what docSketchesFor persists) carries
+    // exactly the standalone per-sketch signatures, so q42/q43 and the
+    // streaming probes (which sign with minhashSignatures) agree
+    val sketches = sketchesOf(docs)
+    def keyed(df: DataFrame) = df.collect().map(r => r.getLong(0) -> r.get(1)).toMap
+    assert(keyed(sigsOf(sketches)) == keyed(DedupOps.minhashSignatures(docs)))
+    assert(keyed(simsOf(sketches)) == keyed(DedupOps.simhashSignatures(docs)))
+    // the stored-pair-set form (what the catalog runs for q70) equals
+    // the merged-bucket sketch pipeline
+    val mhPairs = DedupOps.minhashPairsFromSigs(sigsOf(sketches)).localCheckpoint(false)
+    val simPairs = DedupOps.simhashPairsFromSigs(simsOf(sketches)).localCheckpoint(false)
     assert(DedupOps.nearDedupFromPairSets(docs, mhPairs, simPairs).collect().toSeq ==
-           DedupOps.nearDedupSketch(docs).collect().toSeq)
-    assert(DedupOps.verifiedJaccardPairsFromShared(sketches, mhPairs).collect().toSeq ==
-           DedupOps.verifiedJaccardPairs(docs).collect().toSeq)
+           DedupOps.nearDedupSketchFromSketches(docs, sketches).collect().toSeq)
   }
 
   test("incremental packing continues streams exactly and opens new ones at zero") {
@@ -489,7 +505,11 @@ class TextDedupSpec extends SparkSpec {
       (501L, "novel content never seen before in any earlier batch at all", "en", "s"),
       (502L, "tiny", "en", "s")                               // shingle-less-ish, no match -> kept
     ).toDF("doc_id", "text", "lang", "source")
-    val got = DedupOps.incrementalNearDedup(corpus, splitId = 100)
+    // the new batch's signatures band-join the stored history's
+    val sigs = DedupOps.minhashSignatures(corpus)
+    val got = DedupOps.incrementalNearDedupFromSigs(
+      corpus.filter(col("doc_id") >= 100).select(col("doc_id")),
+      sigs.filter(col("doc_id") >= 100), sigs.filter(col("doc_id") < 100))
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
     assert(got(500L)._2 == false && got(500L)._1 >= 1, "near-copy of history must drop")
     assert(got(501L) == (0L, true) && got(502L) == (0L, true), "novel docs must keep")
@@ -499,23 +519,14 @@ class TextDedupSpec extends SparkSpec {
       corpus.filter(col("doc_id") < 100), corpus.filter(col("doc_id") >= 100))
       .collect().map(_.getLong(0)).toSet
     assert(exact.contains(500L), "byte-exact dedup should NOT catch the near copy")
-    // prebuilt-signature entry point (the SketchShared path) is
-    // value-identical to the standalone form
-    val sigs = DedupOps.minhashSignatures(corpus)
-    val fromSigs = DedupOps.incrementalNearDedupFromSigs(
-      corpus.filter(col("doc_id") >= 100).select(col("doc_id")),
-      sigs.join(corpus.filter(col("doc_id") >= 100).select(col("doc_id")), "doc_id"),
-      sigs.join(corpus.filter(col("doc_id") < 100).select(col("doc_id")), "doc_id"))
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
-    assert(fromSigs == got, "FromSigs form diverged from standalone")
   }
 
   test("BPE learning: greedy non-overlapping merges, weighted counts, tie-break") {
     import spark.implicits._
     def learn(texts: Seq[String], rounds: Int): Seq[(Long, String, String, Long)] =
-      TextOps.bpeLearn(
+      TextOps.bpeLearnState(
         texts.zipWithIndex.map { case (t, i) => (i.toLong, t, "en", "s") }
-          .toDF("doc_id", "text", "lang", "source"), rounds)
+          .toDF("doc_id", "text", "lang", "source"), rounds)._1
         .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
     // "aaa" twice: round 1 merges (a,a) with weight 2 pairs x freq 2;
     // greedy left-to-right gives [aa, a], so round 2 merges (aa, a)
@@ -679,7 +690,7 @@ class TextDedupSpec extends SparkSpec {
 
   test("BPE vocab report: more merge rounds never inflate units-per-token") {
     def ratio(rounds: Int): Map[String, Double] =
-      TextOps.bpeVocabReport(docs, rounds).collect()
+      TextOps.bpeVocabReportFromState(docs, TextOps.bpeWordsFor(docs, rounds)).collect()
         .map(r => r.getString(0) -> r.getDouble(3)).toMap
     val r0 = ratio(0) // char-split baseline: avg word length
     val r3 = ratio(3)
@@ -690,17 +701,6 @@ class TextDedupSpec extends SparkSpec {
       assert(r5(lang) >= 1.0, s"$lang: cannot compress below one unit per token")
     }
     assert(r5.exists { case (l, v) => v < r0(l) }, "five merges should compress something")
-  }
-
-  test("BPE vocab report from prebuilt state equals the standalone form") {
-    // the BpeShared path: train once, apply from the stored word
-    // table — must be value-identical to learn-and-apply in one call
-    val (_, words) = TextOps.bpeLearnState(docs, 5)
-    def key(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
-    assert(key(TextOps.bpeVocabReportFromState(docs, words)) ==
-           key(TextOps.bpeVocabReport(docs, 5)),
-      "FromState form diverged from standalone")
   }
 
   test("sequence decontamination: every sequence a flagged doc touches is dropped") {
@@ -944,7 +944,7 @@ class TextDedupSpec extends SparkSpec {
     ).toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")).cast("long"))
     val edges = Seq((1L, 2L), (2L, 3L)).toDF("doc_i", "doc_j")
-    val rows = DedupOps.canonicalByQuality(corpus, edges).collect()
+    val rows = DedupOps.canonicalByQualityFromClusters(corpus, clustersOf(corpus, edges)).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(3)))
     // cluster label is the min doc_id (1); representative is doc 2
     assert(rows.toSet == Set((1L, 2L, 3L), (9L, 9L, 1L)),
@@ -1022,12 +1022,11 @@ class TextDedupSpec extends SparkSpec {
       (5L, "yet another unrelated qqq text entirely", "en", "s"),
     ).toDF("doc_id", "text", "lang", "source").withColumn("n_chars", length(col("text")))
     val edges = DedupOps.jaccardPairs(corpus).select(col("doc_i"), col("doc_j"))
-    val hist = DedupOps.clusterSizeHistogram(corpus, edges).collect()
+    val hist = DedupOps.clusterSizeHistogramFromClusters(clustersOf(corpus, edges)).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(hist == Map(1L -> ((2L, 2L)), 3L -> ((1L, 3L))))
     // fixture corpus: histogram conserves every document
-    val fixEdges = DedupOps.jaccardPairs(docs).select(col("doc_i"), col("doc_j"))
-    val fix = DedupOps.clusterSizeHistogram(docs, fixEdges).collect()
+    val fix = DedupOps.clusterSizeHistogramFromClusters(DedupOps.clustersFor(docs)).collect()
     assert(fix.map(_.getLong(2)).sum == docs.count())
   }
 
@@ -1346,15 +1345,15 @@ class TextDedupSpec extends SparkSpec {
 
   test("production funnel over sketch edges: reconciles per stage and sees past the demonstrator cap") {
     // inject a near-dup of doc 70 — ABOVE jaccardPairs' maxDocId=60
-    // demonstrator cap, so only the production (sketchEdges) path can
+    // demonstrator cap, so only the production (sketch edge) path can
     // catch it
     val nearDup = docs.filter(col("doc_id") === 70)
       .withColumn("doc_id", lit(1000000L))
       .withColumn("text", concat(col("text"), lit(" tail")))
     val corpus = docs.unionByName(nearDup).localCheckpoint(false)
+    val sketchEdges = DedupOps.sketchEdgesFromSketches(sketchesOf(corpus))
     val demo = CorpusOps.curationFunnel(corpus).collect()
-    val prod = CorpusOps.curationFunnel(corpus,
-      Some(DedupOps.sketchEdges(corpus))).collect()
+    val prod = CorpusOps.curationFunnel(corpus, Some(sketchEdges)).collect()
     // edge-independent stages agree between the two compositions
     Seq(0, 1).foreach { i =>
       assert(demo(i).getLong(2) == prod(i).getLong(2) &&
@@ -1364,8 +1363,7 @@ class TextDedupSpec extends SparkSpec {
     // the production near-dup stage reconciles with the standalone
     // operators composed the same way
     val exactKeep = DedupOps.exactDedup(corpus).select(col("doc_id"))
-    val roots = DedupOps.connectedComponents(
-        corpus.select(col("doc_id")), DedupOps.sketchEdges(corpus))
+    val roots = DedupOps.connectedComponents(corpus.select(col("doc_id")), sketchEdges)
       .filter(col("doc_id") === col("cluster_id")).select(col("doc_id"))
     assert(prod(2).getLong(2) == exactKeep.join(roots, "doc_id").count())
     // ...and it absorbs the injected dup the capped demonstrator CAN'T
@@ -1389,7 +1387,7 @@ class TextDedupSpec extends SparkSpec {
     val corpus = (1L to 7L).map(i => (i, s"text $i", "en", "s"))
       .toDF("doc_id", "text", "lang", "source").withColumn("n_chars", length(col("text")))
     val edges = Seq((1L, 2L), (2L, 3L)).toDF("doc_i", "doc_j") // {1,2,3} + 4 singletons
-    val got = DedupOps.dupTrainingWeights(corpus, edges).collect()
+    val got = DedupOps.dupTrainingWeightsFromClusters(clustersOf(corpus, edges)).collect()
       .map(r => r.getLong(0) -> ((r.getLong(2), r.getLong(3)))).toMap
     assert(got.size == 7)
     Seq(1L, 2L, 3L).foreach(d => assert(got(d) == ((3L, 333333L))))
@@ -1404,7 +1402,7 @@ class TextDedupSpec extends SparkSpec {
       .toDF("doc_id", "text", "lang", "source").withColumn("n_chars", length(col("text")))
     // planted closure: {1,2,3} one cluster (1-2, 2-3), rest singletons
     val edges = Seq((1L, 2L), (2L, 3L)).toDF("doc_i", "doc_j")
-    val got = CorpusOps.contrastiveTriplets(corpus, edges).collect()
+    val got = CorpusOps.contrastiveTripletsFromClusters(clustersOf(corpus, edges)).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(got.map(_._1).toSet == Set(1L, 2L, 3L), "every cluster member anchors")
     // positive = smallest OTHER member
@@ -1526,7 +1524,8 @@ class TextDedupSpec extends SparkSpec {
         (tf + 1.2 * ((1.0 - 0.75) + 0.75 * dl / (sumdl.toDouble / nn)))
       math.floor(raw * 1.0e9).toLong
     }
-    val got = RetrievalOps.bm25TopK(corpus).collect()
+    val got = RetrievalOps.bm25TopKFromIndex(RetrievalOps.bm25Postings(corpus),
+        RetrievalOps.bm25DocLengths(corpus)).collect()
       .map(r => (r.getLong(0), r.getLong(2)) -> (r.getLong(1), r.getLong(3), r.getLong(4))).toMap
     // q0 "hash join": d1 (hash tf3 df2, join tf2 df1) must outrank d2 (hash tf1)
     assert(got((0L, 1L))._1 == 1L && got((0L, 2L))._1 == 2L)
@@ -1539,7 +1538,8 @@ class TextDedupSpec extends SparkSpec {
     // q2 "stream filter": no doc contains either term — no rows
     assert(!got.keys.exists(_._1 == 2L))
     // fixture corpus: dense ranks from 1, scores non-increasing per query
-    val fix = RetrievalOps.bm25TopK(docs).collect()
+    val fix = RetrievalOps.bm25TopKFromIndex(RetrievalOps.bm25PostingsFor(docs),
+      RetrievalOps.bm25DocLengthsFor(docs)).collect()
     fix.groupBy(_.getLong(0)).foreach { case (qid, rs) =>
       val sorted = rs.sortBy(_.getLong(1))
       assert(sorted.map(_.getLong(1)).toSeq == (1L to rs.length).toSeq, s"qid $qid ranks dense")
@@ -1679,18 +1679,17 @@ class TextDedupSpec extends SparkSpec {
     val composedDl = dl.unionByName(RetrievalOps.bm25DocLengths(batch))
     val union = stored.unionByName(batch)
     val a = RetrievalOps.bm25TopKFromIndex(composedP, composedDl).collect().map(_.toString).toSeq
-    val b = RetrievalOps.bm25TopK(union).collect().map(_.toString).toSeq
+    val b = RetrievalOps.bm25TopKFromIndex(RetrievalOps.bm25Postings(union),
+      RetrievalOps.bm25DocLengths(union)).collect().map(_.toString).toSeq
     assert(a == b, "appended index must probe identically to a from-scratch build")
   }
 
   test("bm25 persisted-index probe matches the inline computation, prune pushes to the scan") {
-    import graft.queries.RetrievalShared
-    // bm25TopK reads the persisted index too, so the inline side
-    // probes the index frames built in this plan
+    // the inline side probes the index frames built in this plan
     val inline = RetrievalOps.bm25TopKFromIndex(RetrievalOps.bm25Postings(docs),
       RetrievalOps.bm25DocLengths(docs)).collect().map(_.toString).toSeq
     val probe = RetrievalOps.bm25TopKFromIndex(
-      RetrievalShared.postings(spark, sf), RetrievalShared.docLengths(spark, sf))
+      RetrievalOps.bm25PostingsFor(docs), RetrievalOps.bm25DocLengthsFor(docs))
     assert(probe.collect().map(_.toString).toSeq == inline,
       "stored-index probe must be bit-identical to the from-scratch scorer")
     // the literal query-term prune must reach the postings scan as a
@@ -1698,7 +1697,7 @@ class TextDedupSpec extends SparkSpec {
     // reading the whole index. (The probe's own executed plan hides
     // the scan behind the candidate-set checkpoint, so assert on the
     // pruned-postings subplan the checkpoint materializes.)
-    val pruned = RetrievalShared.postings(spark, sf)
+    val pruned = RetrievalOps.bm25PostingsFor(docs)
       .filter(col("w").isin("hash", "join", "table", "scan", "stream", "filter"))
     val scanPlan = pruned.queryExecution.executedPlan.toString
     assert(scanPlan.contains("PushedFilters") && scanPlan.contains("In(w"),
@@ -1763,8 +1762,8 @@ class TextDedupSpec extends SparkSpec {
   }
 
   test("LSH tuning report: nested band refinement gives monotone candidates and recall") {
-    val sigs = DedupOps.docSketches(docs)
-    val rows = DedupOps.lshTuningReport(sigs, docs).collect()
+    val rows = DedupOps.lshTuningReportFromTruth(DedupOps.docSketchesFor(docs),
+      DedupOps.calibrationTruthFor(docs)).collect()
     assert(rows.map(r => (r.getLong(0), r.getLong(1))).toSeq ==
       Seq((4L, 8L), (8L, 4L), (16L, 2L)))
     rows.foreach { r =>
@@ -1946,7 +1945,7 @@ class TextDedupSpec extends SparkSpec {
 
   test("license gate composes onto the INCREMENTAL funnel: q262 stages 0-3 = q247, stage 4 = allow ∩ admitted") {
     val docs = Tables.documents(spark, sf)
-    val sk = graft.queries.SketchShared.sketches(spark, sf)
+    val sk = DedupOps.docSketchesFor(docs)
       .filter(col("sig").isNotNull).select(col("doc_id"), col("sig"))
     val storedFps = DedupOps.fingerprintStore(docs.filter(col("doc_id") < 450))
     val storedSigs = sk.filter(col("doc_id") < 450)
@@ -2076,7 +2075,7 @@ class TextDedupSpec extends SparkSpec {
     val fp = docs.select(col("doc_id"), md5(col("text")).as("fp_md5"))
     val st0 = CorpusOps.corpusCardState(docs)
     val stP = CorpusOps.corpusCardTakedownState(st0, fp, docs, rm)
-    val stR = CorpusOps.corpusCardRestoreState(stP, fp, docs, rm)
+    val stR = CorpusOps.corpusCardRestoreStateFrom(stP, fp, docs, CorpusOps.preppedRemoval(rm))
     def m(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getString(0), r.getString(1)) ->
         ((r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))).toMap

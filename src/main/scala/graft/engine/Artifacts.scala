@@ -22,8 +22,12 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * plan plus the (path, length, mtime) of every file it reads,
   * computed on the driver with no Spark job. The same call over
   * different data, or with any parameter changed, therefore lands on a
-  * different table; the same call in a fresh session over an
-  * unchanged warehouse lands on the same one. An input whose identity
+  * different table; the same call again in the same process lands on
+  * the same one. The store lasts for one process: `GraftSession.build`
+  * gives each process its own warehouse and the catalog lives in
+  * memory, so a new process builds every table again. A table built
+  * over another stored table is keyed by that table's file paths,
+  * which are per process. An input whose identity
   * cannot be computed stably (a plan over an in-memory RDD — a
   * `localCheckpoint` or `createDataFrame(rdd)` — or an unnamed UDF)
   * gets a one-off name, so it always rebuilds and is never served
@@ -34,8 +38,8 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * [[memo]] holds the few in-session values that are not plain
   * frames (fitted models, the persisted ML feature frame, decisions
   * with side effects); [[releaseAll]] drops them all. Catalog tables
-  * outlive the release, so a released session reloads every table
-  * artifact with zero builds.
+  * outlive the release, so the same process reloads every table
+  * artifact after it with zero builds.
   */
 object Artifacts {
 
@@ -137,7 +141,7 @@ object Artifacts {
   }
 
   /** Drop every in-session value (persisted frames are unpersisted);
-    * the catalog tables stay, as they would across a restart. */
+    * the catalog tables stay for the rest of the process. */
   def releaseAll(): Unit = synchronized {
     memos.values.foreach {
       case d: Dataset[_] => d.unpersist()

@@ -75,8 +75,8 @@ object DedupOps {
     * retrieval families) scans it instead of re-shingling and
     * re-tokenizing the corpus per query (VERDICT r6: the 4× recompute
     * was ~7.8 s of the 45 s suite at sf0.1). An [[Artifacts]] table
-    * keyed by the documents' identity, so a restarted job over the
-    * same warehouse reloads it with zero text passes. */
+    * keyed by the documents' identity, so later queries in the same
+    * process reload it with zero text passes. */
   def docSketchesFor(documents: DataFrame): DataFrame =
     Artifacts.table("doc_sketches", Nil, Seq(documents))(docSketches(documents))
 

@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, StreamingQ
 import org.apache.spark.sql.types.StructType
 
 import Exact._
+import TickCommit.Tick
 
 /** Event-time windowing over the `events` table — SURVEY §2.9.
   *
@@ -723,47 +724,27 @@ object StreamOps {
     * across a planted far-cluster boundary). State is nLists longs —
     * executor-memory-free at any corpus scale; durable state is the
     * assign sink + the per-tick atomic counts/report snapshot
-    * ([[TickCommit]], r18): the old "rebuild counts from
+    * ([[TickCommit.sink]], r18): the old "rebuild counts from
     * `outPath/assign`" restart recipe would double-fold the crashed
     * tick (its assign partition is already written when the tick
-    * replays). This sink SELF-RESUMES — a same-checkpoint restart
-    * against the same outPath loads the committed counts snapshot
-    * automatically — and a replayed committed tick is skipped whole. */
+    * replays). */
   def streamingIvfMaintain(vectors: DataFrame, index: SimilarityOps.IvfIndex,
                            outPath: String, checkpointDir: String,
-                           imbalanceFactor: Long = 2L): StreamingQuery = {
-    val spark = vectors.sparkSession
-    var counts = TickCommit.readLatest(spark, outPath, "counts")
-      .getOrElse(index.centers
-        .select(col("c_list_id").cast("long").as("list_id"), lit(0L).as("n_new")))
-      .localCheckpoint(false)
-    vectors.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, tick: Long) =>
-        TickCommit.bind(spark, outPath, checkpointDir)
-        if (!batch.isEmpty && !TickCommit.isCommitted(spark, outPath, tick)) {
-          val assigned = SimilarityOps.ivfIncrementalAssign(index, batch)
-            .localCheckpoint(false) // sink write + count fold
-          assigned.write.mode("overwrite").parquet(s"$outPath/assign/tick=$tick")
-          // fold into a LOCAL successor and assign the var only after
-          // every write lands — a retried tick must not double-fold
-          val counts2 = counts.unionByName(
-              assigned.groupBy(col("list_id")).agg(count(lit(1)).as("n_new")))
-            .groupBy(col("list_id"))
-            .agg(sum(col("n_new")).cast("long").as("n_new"))
-            .localCheckpoint(false) // next fold + report
-          TickCommit.stage(spark, outPath, tick, Seq(
-            "counts" -> counts2,
-            "report" -> SimilarityOps.ivfAppendReport(index, counts2,
-              imbalanceFactor)))
-          TickCommit.seal(spark, outPath, tick)
-          counts = counts2
-        }
-        ()
-      }
-      .start()
-  }
+                           imbalanceFactor: Long = 2L): StreamingQuery =
+    TickCommit.sink(vectors, outPath, checkpointDir, Seq("counts" -> index.centers
+        .select(col("c_list_id").cast("long").as("list_id"), lit(0L).as("n_new")))) {
+      (batch, tick, st) =>
+        val assigned = SimilarityOps.ivfIncrementalAssign(index, batch)
+          .localCheckpoint(false) // sink write + count fold
+        assigned.write.mode("overwrite").parquet(s"$outPath/assign/tick=$tick")
+        val counts = st("counts").unionByName(
+            assigned.groupBy(col("list_id")).agg(count(lit(1)).as("n_new")))
+          .groupBy(col("list_id"))
+          .agg(sum(col("n_new")).cast("long").as("n_new"))
+          .localCheckpoint(false) // next fold + report
+        Tick(Seq("counts" -> counts,
+          "report" -> SimilarityOps.ivfAppendReport(index, counts, imbalanceFactor)))
+    }
 
   /** STREAMING IVF re-balance — the q259 applier composed into the
     * maintenance stream (VERDICT r13 #3): [[streamingIvfMaintain]]
@@ -788,59 +769,41 @@ object StreamOps {
     * assignment vs nLists broadcast centroids, flagged-member scans
     * pruned to flagged lists, ≤2·flags fitted children. Durable state
     * IS the sinks (ADVICE r15): the carried index snapshots
-    * ATOMICALLY per tick via [[TickCommit]] (`snap/tick=N/
+    * ATOMICALLY per tick via [[TickCommit.sink]] (`snap/tick=N/
     * index_assign` + `index_centers`, marker last — a crash between
     * the two writes must not leave assignments against a different
-    * tick's centroids), so a restart-from-checkpoint rebuilds `cur`
-    * from [[TickCommit.readLatest]] instead of silently resuming on
-    * the constructor index; at 100 TB the assignment relation is the
+    * tick's centroids), and a restart resumes from that pair; at
+    * 100 TB the assignment relation is the
     * persisted list_id-bucketed table
     * ([[SimilarityOps.ensureIvfTables]]) and a tick's durable write
     * is append(batch rows) + rewrite(flagged lists' partitions) —
     * batch-sized plus split-sized, never a corpus rewrite. */
   def streamingIvfRebalance(vectors: DataFrame, index: SimilarityOps.IvfIndex,
                             outPath: String, checkpointDir: String,
-                            imbalanceFactor: Long = 2L): StreamingQuery = {
-    val spark2 = vectors.sparkSession
-    var cur = index
-    vectors.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, tick: Long) =>
-        TickCommit.bind(spark2, outPath, checkpointDir)
-        // replay guard (ADVICE r17): a crash after seal() but before
-        // Spark's commit-log write replays this tick against the
-        // POST-tick index a restart loads via readLatest — without the
-        // guard the batch's assignments append twice
-        if (!batch.isEmpty && !TickCommit.isCommitted(spark2, outPath, tick)) {
-          val reb = SimilarityOps.ivfRebalanceApply(cur, batch, imbalanceFactor)
-          // tick-partitioned overwrites: an at-least-once replay
-          // rewrites its own partition, never appends duplicates
-          reb.report
-            .write.mode("overwrite").parquet(s"$outPath/report/tick=$tick")
-          reb.children
-            .select(col("parent_list_id"), col("child_list_id"))
-            .write.mode("overwrite").parquet(s"$outPath/splits/tick=$tick")
-          val cur2 = SimilarityOps.IvfIndex(
-            reb.updated.assigned.localCheckpoint(false),
-            reb.updated.centers.localCheckpoint(false),
-            reb.updated.nLists)
-          // durable state IS the sinks (ADVICE r15), and the TWO index
-          // frames commit ATOMICALLY (TickCommit — a crash between the
-          // assign and centers writes must not leave a restart loading
-          // assignments against a different tick's centroid set); the
-          // carried var advances only after the seal, so an in-JVM
-          // retry recomputes from the pre-tick state
-          TickCommit.stage(spark2, outPath, tick, Seq(
-            "index_assign" -> cur2.assigned,
-            "index_centers" -> cur2.centers))
-          TickCommit.seal(spark2, outPath, tick)
-          cur = cur2
-        }
-        ()
-      }
-      .start()
-  }
+                            imbalanceFactor: Long = 2L): StreamingQuery =
+    TickCommit.sink(vectors, outPath, checkpointDir, Seq(
+        "index_assign" -> index.assigned, "index_centers" -> index.centers)) {
+      (batch, tick, st) =>
+        val reb = SimilarityOps.ivfRebalanceApply(carriedIndex(st), batch,
+          imbalanceFactor)
+        reb.report
+          .write.mode("overwrite").parquet(s"$outPath/report/tick=$tick")
+        reb.children
+          .select(col("parent_list_id"), col("child_list_id"))
+          .write.mode("overwrite").parquet(s"$outPath/splits/tick=$tick")
+        Tick(Seq(
+          "index_assign" -> reb.updated.assigned.localCheckpoint(false),
+          "index_centers" -> reb.updated.centers.localCheckpoint(false)))
+    }
+
+  /** The IVF index a re-balancing sink carries, from its two frames:
+    * the appliers keep `nLists` equal to the number of live centroids
+    * (a split adds its live children, a merge drops its lists), so the
+    * count of the carried centers IS the list count, restored or not —
+    * one job over a ≤ 2·nLists-row pinned frame. */
+  private def carriedIndex(st: Map[String, DataFrame]): SimilarityOps.IvfIndex =
+    SimilarityOps.IvfIndex(st("index_assign"), st("index_centers"),
+      st("index_centers").count().toInt)
 
   /** STREAMING IVF-PQ code maintenance — q256 live (VERDICT r12 #2):
     * the codes-table write path as a standing stream. Each micro-batch
@@ -862,53 +825,33 @@ object StreamOps {
     * any corpus scale; the stored-codes side aggregates ONCE at start
     * (the persisted table is never re-scanned per tick). Durable
     * state is the codes sink + the per-tick atomic cells/report
-    * snapshot ([[TickCommit]], r18): the old "rebuild cells from
+    * snapshot ([[TickCommit.sink]], r18): the old "rebuild cells from
     * `outPath/codes`" restart recipe would double-fold the crashed
     * tick (its codes partition is already written when the tick
-    * replays). SELF-RESUMES like [[streamingIvfMaintain]]: a
-    * same-checkpoint restart loads the committed cells snapshot
-    * automatically; a replayed committed tick is skipped whole. */
+    * replays). */
   def streamingIvfPqCodeMaintain(vectors: DataFrame,
                                  index: SimilarityOps.IvfIndex,
                                  cb: SimilarityOps.PqCodebook,
                                  storedCodes: DataFrame, outPath: String,
                                  checkpointDir: String): StreamingQuery = {
-    val spark = vectors.sparkSession
     val before = SimilarityOps.pqCodeCells(storedCodes, cb.m, "n_before")
       .localCheckpoint(false) // every tick's report reads it
-    var cells = TickCommit.readLatest(spark, outPath, "cells")
-      .getOrElse(before
-        .select(col("list_id"), col("subspace"), col("code"),
-          lit(0L).as("n_new"))
-        .filter(lit(false))) // start empty; cells appear as ticks land
-      .localCheckpoint(false)
-    vectors.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, tick: Long) =>
-        TickCommit.bind(spark, outPath, checkpointDir)
-        if (!batch.isEmpty && !TickCommit.isCommitted(spark, outPath, tick)) {
-          val newCodes = SimilarityOps.ivfPqIncrementalCodes(index, cb, batch)
-            .localCheckpoint(false) // sink write + cell fold
-          // tick-partitioned overwrite (replay-idempotent), and the
-          // cell fold lands in a LOCAL successor assigned only after
-          // the writes — a retried tick must not double-fold
-          newCodes.write.mode("overwrite")
-            .parquet(s"$outPath/codes/tick=$tick")
-          val cells2 = cells.unionByName(
-              SimilarityOps.pqCodeCells(newCodes, cb.m, "n_new"))
-            .groupBy(col("list_id"), col("subspace"), col("code"))
-            .agg(sum(col("n_new")).cast("long").as("n_new"))
-            .localCheckpoint(false) // next fold + report
-          TickCommit.stage(spark, outPath, tick, Seq(
-            "cells" -> cells2,
-            "report" -> SimilarityOps.ivfPqCellReport(before, cells2)))
-          TickCommit.seal(spark, outPath, tick)
-          cells = cells2
-        }
-        ()
-      }
-      .start()
+    TickCommit.sink(vectors, outPath, checkpointDir, Seq("cells" -> before
+        .select(col("list_id"), col("subspace"), col("code"), lit(0L).as("n_new"))
+        .filter(lit(false)))) { // start empty; cells appear as ticks land
+      (batch, tick, st) =>
+        val newCodes = SimilarityOps.ivfPqIncrementalCodes(index, cb, batch)
+          .localCheckpoint(false) // sink write + cell fold
+        newCodes.write.mode("overwrite")
+          .parquet(s"$outPath/codes/tick=$tick")
+        val cells = st("cells").unionByName(
+            SimilarityOps.pqCodeCells(newCodes, cb.m, "n_new"))
+          .groupBy(col("list_id"), col("subspace"), col("code"))
+          .agg(sum(col("n_new")).cast("long").as("n_new"))
+          .localCheckpoint(false) // next fold + report
+        Tick(Seq("cells" -> cells,
+          "report" -> SimilarityOps.ivfPqCellReport(before, cells)))
+    }
   }
 
   /** STREAMING CDC vector-store maintenance — the whole index
@@ -937,9 +880,9 @@ object StreamOps {
     * durable write is append(adds) + delete(dels) + rewrite(flagged
     * lists' partitions). Durable state IS the sinks (ADVICE r15): the
     * repaired index (and, when carried, the codes table) snapshots
-    * ATOMICALLY per tick via [[TickCommit]] — codes are residuals
+    * ATOMICALLY per tick via [[TickCommit.sink]] — codes are residuals
     * against the tick's centroid set, so the snapshot pair must never
-    * mix ticks; restarts load [[TickCommit.readLatest]].
+    * mix ticks; a restart resumes from that snapshot.
     *
     * With `codes`/`cb` supplied, the persisted IVF-PQ codes table is
     * carried too: each tick runs [[SimilarityOps.ivfPqCodesRepair]]
@@ -960,74 +903,56 @@ object StreamOps {
       : StreamingQuery = {
     val spark = events.sparkSession
     import spark.implicits._
-    var cur = index
     // optional COMPRESSED-path maintenance (q288 live): carry the
     // persisted IVF-PQ codes table alongside the index, repairing it
     // through SimilarityOps.ivfPqCodesRepair after every tick's
     // dels/splits/merges — so the q255/q272/q282 serving path reads
     // codes that always match the tick's centroid set, closing the
     // "CDC maintains only the uncompressed index" seam (VERDICT r16).
-    var codesCur = codes.map(_.localCheckpoint(false))
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, tick: Long) =>
-        TickCommit.bind(spark, outPath, checkpointDir)
-        // replay guard (ADVICE r17): crash-after-seal must not re-run
-        // the dels/splits/merges (and the codes repair) against the
-        // post-tick state a restart loads via readLatest
-        if (!batch.isEmpty && !TickCommit.isCommitted(spark, outPath, tick)) {
-          val b = batch.localCheckpoint(false) // dels + adds + counts
-          val dels = b.filter(col("op") === "del")
-            .select(col("vec_id")).distinct()
-          val adds = b.filter(col("op") === "add")
-            .select(col("vec_id"), col("embedding"))
-          val afterDel = SimilarityOps.IvfIndex(
-            cur.assigned.join(broadcast(dels), Seq("vec_id"), "left_anti"),
-            cur.centers, cur.nLists)
-          val reb = SimilarityOps.ivfRebalanceApply(
-            afterDel, adds, imbalanceFactor)
-          val m = SimilarityOps.ivfMergeApply(reb.updated, underfullFactor)
-          m.report
-            .write.mode("overwrite").parquet(s"$outPath/report/tick=$tick")
-          Seq((adds.count(), dels.count(),
-              reb.children.select(col("parent_list_id")).distinct().count(),
-              m.report.filter(col("merged")).count()))
-            .toDF("n_add", "n_del", "n_splits", "n_merges")
-            .write.mode("overwrite").parquet(s"$outPath/ticks/tick=$tick")
-          // repair the codes table against the PRE-tick index the
-          // stored codes were encoded under: deleted rows drop,
-          // moved/re-centroided rows re-encode, the rest ride verbatim
-          val codesNext = (codesCur, cb) match {
-            case (Some(c), Some(book)) =>
-              val r = SimilarityOps.ivfPqCodesRepair(c, cur, m.updated, book)
-              r.report.write.mode("overwrite")
-                .parquet(s"$outPath/codes_report/tick=$tick")
-              Some(r.codes.localCheckpoint(false))
-            case _ => codesCur
-          }
-          val cur2 = SimilarityOps.IvfIndex(
-            m.updated.assigned.localCheckpoint(false),
-            m.updated.centers.localCheckpoint(false),
-            m.updated.nLists)
-          // durable state IS the sinks (ADVICE r15) and the THREE
-          // carried frames commit ATOMICALLY (TickCommit): codes are
-          // residuals against the tick's centroid set, so a crash
-          // between the index and codes writes would leave a restart
-          // repairing codes against the WRONG "old" centroids (the
-          // repair detects staleness by old-vs-new centroid diff — it
-          // needs a consistent snapshot pair to diff against)
-          TickCommit.stage(spark, outPath, tick, Seq(
-            "index_assign" -> cur2.assigned,
-            "index_centers" -> cur2.centers) ++
-            codesNext.map(c => "codes" -> c).toSeq)
-          TickCommit.seal(spark, outPath, tick)
-          // vars advance only after the seal (in-JVM retry safety)
-          cur = cur2; codesCur = codesNext
-        }
-        ()
+    TickCommit.sink(events, outPath, checkpointDir, Seq(
+        "index_assign" -> index.assigned, "index_centers" -> index.centers) ++
+        codes.map("codes" -> _)) { (batch, tick, st) =>
+      val cur = carriedIndex(st)
+      val b = batch.localCheckpoint(false) // dels + adds + counts
+      val dels = b.filter(col("op") === "del")
+        .select(col("vec_id")).distinct()
+      val adds = b.filter(col("op") === "add")
+        .select(col("vec_id"), col("embedding"))
+      val afterDel = SimilarityOps.IvfIndex(
+        cur.assigned.join(broadcast(dels), Seq("vec_id"), "left_anti"),
+        cur.centers, cur.nLists)
+      val reb = SimilarityOps.ivfRebalanceApply(
+        afterDel, adds, imbalanceFactor)
+      val m = SimilarityOps.ivfMergeApply(reb.updated, underfullFactor)
+      m.report
+        .write.mode("overwrite").parquet(s"$outPath/report/tick=$tick")
+      Seq((adds.count(), dels.count(),
+          reb.children.select(col("parent_list_id")).distinct().count(),
+          m.report.filter(col("merged")).count()))
+        .toDF("n_add", "n_del", "n_splits", "n_merges")
+        .write.mode("overwrite").parquet(s"$outPath/ticks/tick=$tick")
+      // repair the codes table against the PRE-tick index the
+      // stored codes were encoded under: deleted rows drop,
+      // moved/re-centroided rows re-encode, the rest ride verbatim
+      val codesNext = (st.get("codes"), cb) match {
+        case (Some(c), Some(book)) =>
+          val r = SimilarityOps.ivfPqCodesRepair(c, cur, m.updated, book)
+          r.report.write.mode("overwrite")
+            .parquet(s"$outPath/codes_report/tick=$tick")
+          Some(r.codes.localCheckpoint(false))
+        case (c, _) => c
       }
-      .start()
+      // the THREE carried frames commit ATOMICALLY: codes are
+      // residuals against the tick's centroid set, so a crash between
+      // the index and codes writes would leave a restart repairing
+      // codes against the WRONG "old" centroids (the repair detects
+      // staleness by old-vs-new centroid diff — it needs a consistent
+      // snapshot pair to diff against)
+      Tick(Seq(
+        "index_assign" -> m.updated.assigned.localCheckpoint(false),
+        "index_centers" -> m.updated.centers.localCheckpoint(false)) ++
+        codesNext.map("codes" -> _))
+    }
   }
 
   /** STREAMING takedown — q268/q270 live: right-to-be-forgotten
@@ -1047,13 +972,11 @@ object StreamOps {
     * final stores equal the one-shot q270 purge over everything
     * streamed — asserted in StreamingSpec, including an
     * already-removed id re-arriving. Durable state is the per-tick
-    * ATOMIC store snapshot ([[TickCommit]], r18 — the anti-join
+    * ATOMIC store snapshot ([[TickCommit.sink]], r18 — the anti-join
     * algebra made independent overwrites replay-SAFE, but a crash
     * mid-overwrite still corrupted a snapshot: parquet overwrite is
     * delete-then-write, so neither generation was readable; staging
-    * under the unsealed tick closes that); restart via
-    * `readLatest("postings"|"doclens"|"sketches")`, replayed
-    * committed ticks skipped (ledger recounts preserved). Per-tick
+    * under the unsealed tick closes that). Per-tick
     * cost is removal-bounded probes + the successor-store writes a
     * real purge pays anyway. */
   def streamingTakedown(removals: DataFrame, postings: DataFrame,
@@ -1061,41 +984,29 @@ object StreamOps {
                         outPath: String, checkpointDir: String): StreamingQuery = {
     val spark = postings.sparkSession
     import spark.implicits._
-    var post = postings.localCheckpoint(false)
-    var dl = docLengths.localCheckpoint(false)
-    var sk = sketches.localCheckpoint(false)
-    removals.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, tick: Long) =>
-        TickCommit.bind(spark, outPath, checkpointDir)
-        if (!batch.isEmpty && !TickCommit.isCommitted(spark, outPath, tick)) {
-          val rm = broadcast(batch.select(col("doc_id")).distinct()
-            .localCheckpoint(false)) // 3 semi-probes + 3 anti-joins
-          def purge(store: DataFrame): (DataFrame, Long, Long) = {
-            val removed = store.join(rm, Seq("doc_id"), "left_semi").count()
-            val next = store.join(rm, Seq("doc_id"), "left_anti")
-              .localCheckpoint(false) // ledger count + snapshot + next tick
-            (next, removed, next.count())
-          }
-          val (p2, pRm, pN) = purge(post)
-          val (d2, dRm, dN) = purge(dl)
-          val (s2, sRm, sN) = purge(sk)
-          // tick-IDEMPOTENT ledger (the streamingTakedownServe
-          // contract): a replayed at-least-once tick overwrites its
-          // own rows instead of appending duplicates
-          Seq(("postings", pRm, pN), ("doc_lengths", dRm, dN),
-              ("sketches", sRm, sN))
-            .toDF("artifact", "n_removed", "n_after")
-            .write.mode("overwrite").parquet(s"$outPath/ledger/tick=$tick")
-          TickCommit.stage(spark, outPath, tick, Seq(
-            "postings" -> p2, "doclens" -> d2, "sketches" -> s2))
-          TickCommit.seal(spark, outPath, tick)
-          post = p2; dl = d2; sk = s2
+    TickCommit.sink(removals, outPath, checkpointDir, Seq(
+        "postings" -> postings, "doclens" -> docLengths, "sketches" -> sketches)) {
+      (batch, tick, st) =>
+        val rm = broadcast(batch.select(col("doc_id")).distinct()
+          .localCheckpoint(false)) // 3 semi-probes + 3 anti-joins
+        def purge(store: DataFrame): (DataFrame, Long, Long) = {
+          val removed = store.join(rm, Seq("doc_id"), "left_semi").count()
+          val next = store.join(rm, Seq("doc_id"), "left_anti")
+            .localCheckpoint(false) // ledger count + snapshot + next tick
+          (next, removed, next.count())
         }
-        ()
-      }
-      .start()
+        val (p2, pRm, pN) = purge(st("postings"))
+        val (d2, dRm, dN) = purge(st("doclens"))
+        val (s2, sRm, sN) = purge(st("sketches"))
+        // tick-IDEMPOTENT ledger (the streamingTakedownServe
+        // contract): a replayed at-least-once tick overwrites its
+        // own rows instead of appending duplicates
+        Seq(("postings", pRm, pN), ("doc_lengths", dRm, dN),
+            ("sketches", sRm, sN))
+          .toDF("artifact", "n_removed", "n_after")
+          .write.mode("overwrite").parquet(s"$outPath/ledger/tick=$tick")
+        Tick(Seq("postings" -> p2, "doclens" -> d2, "sketches" -> s2))
+    }
   }
 
   /** STREAMING takedown of the q273 REMAINING stores — the ticked
@@ -1125,11 +1036,9 @@ object StreamOps {
     * idempotent, the queue-first ordering the anti-join monitor uses
     * is UNSAFE here (a crash between the queue and store writes
     * would lose the corrections forever) — so the whole tick commits
-    * atomically through [[TickCommit]]: every store plus the
+    * atomically through [[TickCommit.sink]]: every store plus the
     * cumulative queue stages under `outPath/snap/tick=N`, the ledger
-    * writes, and the `_COMMITTED` marker seals last. A restart loads
-    * state via [[TickCommit.readLatest]]; a replayed already-sealed
-    * tick is skipped whole (ledger rows preserved).
+    * writes, and the `_COMMITTED` marker seals last.
     *
     * Stream ≡ batch: gated decrements over disjoint effective sets
     * compose, so the final stores equal the one-shot q273 algebra
@@ -1142,68 +1051,57 @@ object StreamOps {
                               lm: TextOps.LmModel, cardState: DataFrame,
                               fpStore: DataFrame, binarySigs: DataFrame,
                               outPath: String, checkpointDir: String,
-                              heldoutMaxId: Long = 50,
-                              storedRemoved: Option[DataFrame] = None)
+                              heldoutMaxId: Long = 50)
       : StreamingQuery = {
     val spark = documents.sparkSession
     import spark.implicits._
-    var big = lm.bigrams.localCheckpoint(false)
-    var ctx = lm.contexts.localCheckpoint(false)
-    var voc = lm.vocab.localCheckpoint(false)
-    var card = cardState.localCheckpoint(false)
-    var fps = fpStore.localCheckpoint(false)
-    var sigs = binarySigs.localCheckpoint(false)
-    var removedAll = storedRemoved
-      .getOrElse(Seq.empty[Long].toDF("doc_id"))
-      .select(col("doc_id")).localCheckpoint(false)
-    removals.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, tick: Long) =>
-        TickCommit.bind(spark, outPath, checkpointDir)
-        if (!batch.isEmpty && !TickCommit.isCommitted(spark, outPath, tick)) {
-          // effective removal = tick ids minus the cumulative queue
-          val rmEff = broadcast(batch.select(col("doc_id")).distinct()
-            .join(removedAll, Seq("doc_id"), "left_anti")
-            .localCheckpoint(false))
-          val docsCur = documents.join(removedAll, Seq("doc_id"), "left_anti")
-          val rmDocs = docsCur.join(rmEff, Seq("doc_id"), "left_semi")
-            .localCheckpoint(false) // LM subtract + mass probe
-          val rOcc = TextOps.bigramStream(rmDocs).count()
-          val sub = TextOps.lmModelSubtract(TextOps.LmModel(big, ctx, voc), rmDocs)
-          val big2 = sub.bigrams // checkpointed inside subtract
-          val ctx2 = sub.contexts.localCheckpoint(false)
-          val voc2 = sub.vocab.localCheckpoint(false)
-          val card2 = CorpusOps.corpusCardTakedownState(card, fps, docsCur, rmEff)
-            .localCheckpoint(false)
-          val fps2 = fps.join(rmEff, Seq("doc_id"), "left_anti")
-            .localCheckpoint(false)
-          val rmVec = rmEff.select(col("doc_id").as("vec_id"))
-          val sigs2 = sigs.join(rmVec, Seq("vec_id"), "left_anti")
-            .localCheckpoint(false)
-          // the Bloom flag row: held-out-bounded gram counts
-          val heldB = docsCur.filter(col("doc_id") < heldoutMaxId)
-          val gramsB = TextOps.wordNgrams(heldB)
-            .select(col("gram")).distinct().count()
-          val gramsA = TextOps.wordNgrams(
-              heldB.join(rmEff, Seq("doc_id"), "left_anti"))
-            .select(col("gram")).distinct().count()
-          def mass(df: DataFrame, c: String): Long =
-            df.agg(coalesce(sum(col(c)), lit(0L)).cast("long")).head.getLong(0)
-          val (mB, mA) = (mass(big, "c2"), mass(big2, "c2"))
-          val (cB, cA) = (mass(ctx, "c1"), mass(ctx2, "c1"))
-          val newWords = voc2.join(voc, Seq("w"), "left_anti").count()
-          val negCard = card2.filter(col("n_docs") < 0 || col("n_tokens") < 0 ||
-            col("q_ppm_sum") < 0 || col("n_exact_dups") < 0).count()
-          // STAGE the whole tick (stores + queue) before any of it
-          // becomes visible — no marker yet, so a crash anywhere in
-          // here leaves the previous committed tick authoritative
-          val removedAll2 = removedAll.unionByName(rmEff)
-            .localCheckpoint(false)
-          TickCommit.stage(spark, outPath, tick, Seq(
-            "removed" -> removedAll2, "lm_bigrams" -> big2,
-            "lm_contexts" -> ctx2, "lm_vocab" -> voc2,
-            "card_state" -> card2, "fps" -> fps2, "sigs" -> sigs2))
+    TickCommit.sink(removals, outPath, checkpointDir, Seq(
+        "removed" -> Seq.empty[Long].toDF("doc_id"), "lm_bigrams" -> lm.bigrams,
+        "lm_contexts" -> lm.contexts, "lm_vocab" -> lm.vocab,
+        "card_state" -> cardState, "fps" -> fpStore, "sigs" -> binarySigs)) {
+      (batch, tick, st) =>
+        val (removedAll, big, ctx, voc) =
+          (st("removed"), st("lm_bigrams"), st("lm_contexts"), st("lm_vocab"))
+        val (card, fps, sigs) = (st("card_state"), st("fps"), st("sigs"))
+        // effective removal = tick ids minus the cumulative queue
+        val rmEff = broadcast(batch.select(col("doc_id")).distinct()
+          .join(removedAll, Seq("doc_id"), "left_anti")
+          .localCheckpoint(false))
+        val docsCur = documents.join(removedAll, Seq("doc_id"), "left_anti")
+        val rmDocs = docsCur.join(rmEff, Seq("doc_id"), "left_semi")
+          .localCheckpoint(false) // LM subtract + mass probe
+        val rOcc = TextOps.bigramStream(rmDocs).count()
+        val sub = TextOps.lmModelSubtract(TextOps.LmModel(big, ctx, voc), rmDocs)
+        val big2 = sub.bigrams // checkpointed inside subtract
+        val ctx2 = sub.contexts.localCheckpoint(false)
+        val voc2 = sub.vocab.localCheckpoint(false)
+        val card2 = CorpusOps.corpusCardTakedownState(card, fps, docsCur, rmEff)
+          .localCheckpoint(false)
+        val fps2 = fps.join(rmEff, Seq("doc_id"), "left_anti")
+          .localCheckpoint(false)
+        val rmVec = rmEff.select(col("doc_id").as("vec_id"))
+        val sigs2 = sigs.join(rmVec, Seq("vec_id"), "left_anti")
+          .localCheckpoint(false)
+        // the Bloom flag row: held-out-bounded gram counts
+        val heldB = docsCur.filter(col("doc_id") < heldoutMaxId)
+        val gramsB = TextOps.wordNgrams(heldB)
+          .select(col("gram")).distinct().count()
+        val gramsA = TextOps.wordNgrams(
+            heldB.join(rmEff, Seq("doc_id"), "left_anti"))
+          .select(col("gram")).distinct().count()
+        def mass(df: DataFrame, c: String): Long =
+          df.agg(coalesce(sum(col(c)), lit(0L)).cast("long")).head.getLong(0)
+        val (mB, mA) = (mass(big, "c2"), mass(big2, "c2"))
+        val (cB, cA) = (mass(ctx, "c1"), mass(ctx2, "c1"))
+        val newWords = voc2.join(voc, Seq("w"), "left_anti").count()
+        val negCard = card2.filter(col("n_docs") < 0 || col("n_tokens") < 0 ||
+          col("q_ppm_sum") < 0 || col("n_exact_dups") < 0).count()
+        // the whole tick (stores + queue) stages before any of it
+        // becomes visible; the ledger writes between stage and seal
+        Tick(Seq(
+          "removed" -> removedAll.unionByName(rmEff).localCheckpoint(false),
+          "lm_bigrams" -> big2, "lm_contexts" -> ctx2, "lm_vocab" -> voc2,
+          "card_state" -> card2, "fps" -> fps2, "sigs" -> sigs2), () => {
           // the sig clean probe certifies the PERSISTED staged bytes,
           // not the in-memory anti-join lineage it was derived from
           val sigDirty = TickCommit.readStaged(spark, outPath, tick, "sigs")
@@ -1219,14 +1117,8 @@ object StreamOps {
             .select(col("artifact"), col("n_before"), col("n_after"),
               (col("n_before") - col("n_after")).as("n_removed"), col("clean"))
             .write.mode("overwrite").parquet(s"$outPath/ledger/tick=$tick")
-          TickCommit.seal(spark, outPath, tick) // the commit point
-          big = big2; ctx = ctx2; voc = voc2
-          card = card2; fps = fps2; sigs = sigs2
-          removedAll = removedAll2
-        }
-        ()
-      }
-      .start()
+        })
+    }
   }
 
   /** STREAMING user-level takedown — q284's ticked twin: "delete user
@@ -1243,9 +1135,8 @@ object StreamOps {
     * that reach zero DROP — matching what a rebuild over the kept
     * events would emit, which is what StreamingSpec asserts store by
     * store over the union. Because the decrements are not idempotent,
-    * the tick commits atomically via [[TickCommit]] (stage stores +
-    * queue under `snap/tick=N`, ledger, marker last — restart loads
-    * [[TickCommit.readLatest]]; a replayed sealed tick is skipped).
+    * the tick commits atomically via [[TickCommit.sink]] (stage
+    * stores + queue under `snap/tick=N`, ledger, marker last).
     * Per-tick cost: one removal-user-bounded event slice +
     * dimension-sized store corrections. */
   def streamingUserTakedown(removals: DataFrame, events: DataFrame,
@@ -1253,101 +1144,96 @@ object StreamOps {
                             funnelStore: DataFrame, retentionStore: DataFrame,
                             transitionStore: DataFrame,
                             attributionStore: DataFrame,
-                            outPath: String, checkpointDir: String,
-                            storedRemoved: Option[DataFrame] = None)
+                            outPath: String, checkpointDir: String)
       : StreamingQuery = {
     val spark = events.sparkSession
     import spark.implicits._
-    var mani = manifest.localCheckpoint(false)
-    var sess = sessions.localCheckpoint(false)
-    var attr = attributionStore.localCheckpoint(false)
-    var fun = funnelStore.select(col("stage"), col("n_users").cast("long")
-      .as("n_users")).localCheckpoint(false)
-    var ret = retentionStore.select(col("cohort_week"), col("week_offset"),
-      col("n_active").cast("long").as("n_active")).localCheckpoint(false)
-    var trans = transitionStore.select(col("event_type"), col("next_type"),
-      col("n_transitions").cast("long").as("n_transitions"))
-      .localCheckpoint(false)
-    var removedAll = storedRemoved
-      .getOrElse(Seq.empty[Long].toDF("user_id"))
-      .select(col("user_id")).localCheckpoint(false)
-    removals.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, tick: Long) =>
-        TickCommit.bind(spark, outPath, checkpointDir)
-        if (!batch.isEmpty && !TickCommit.isCommitted(spark, outPath, tick)) {
-          val rmEff = broadcast(batch.select(col("user_id")).distinct()
-            .join(removedAll, Seq("user_id"), "left_anti")
-            .localCheckpoint(false))
-          val rmEvents = events.join(rmEff, Seq("user_id"), "left_semi")
-            .localCheckpoint(false) // reach + cells + edges
-          val mani2 = mani.join(rmEff, Seq("user_id"), "left_anti")
-            .localCheckpoint(false)
-          val sess2 = sess.join(rmEff, Seq("user_id"), "left_anti")
-            .localCheckpoint(false)
-          val attr2 = attr.join(rmEff, Seq("user_id"), "left_anti")
-            .localCheckpoint(false)
-          val fun2 = fun.crossJoin(broadcast(EventOps.removedReach(rmEvents)))
-            .select(col("stage"),
-              (col("n_users") - when(col("stage") === "view", col("d1"))
-                .when(col("stage") === "click", col("d2"))
-                .otherwise(col("d3"))).cast("long").as("n_users"))
-            .localCheckpoint(false)
-          val rmFirst = rmEvents.groupBy(col("user_id"))
-            .agg(date_trunc("week", min(col("ts"))).cast("date").as("cohort_week"))
-          val ret2 = ret.join(
-              broadcast(EventOps.removedRetentionCells(rmEvents, rmFirst)),
-              Seq("cohort_week", "week_offset"), "left_outer")
-            .select(col("cohort_week"), col("week_offset"),
-              (col("n_active") - coalesce(col("d"), lit(0L))).cast("long")
-                .as("n_active"))
-            .filter(col("n_active") > 0) // a rebuild never emits 0 cells
-            .localCheckpoint(false)
-          val trans2 = trans.join(broadcast(EventOps.removedEdges(rmEvents)),
-              Seq("event_type", "next_type"), "left_outer")
-            .select(col("event_type"), col("next_type"),
-              (col("n_transitions") - coalesce(col("d"), lit(0L))).cast("long")
-                .as("n_transitions"))
-            .filter(col("n_transitions") > 0)
-            .localCheckpoint(false)
-          // stage the whole tick, then probe the PERSISTED manifest
-          // snapshot for the clean flag (a semi-probe over the
-          // in-memory anti-join lineage is true by construction)
-          val removedAll2 = removedAll.unionByName(rmEff)
-            .localCheckpoint(false)
-          TickCommit.stage(spark, outPath, tick, Seq(
-            "removed" -> removedAll2, "manifest" -> mani2,
-            "sessions" -> sess2, "attribution" -> attr2, "funnel" -> fun2,
-            "retention" -> ret2, "transitions" -> trans2))
-          val maniDirty = TickCommit
-            .readStaged(spark, outPath, tick, "manifest")
-            .join(rmEff, Seq("user_id"), "left_semi").count()
-          Seq(
-            ("manifest", mani.count(), mani2.count(), maniDirty == 0L),
-            ("sessions", sess.count(), sess2.count(), true),
-            ("attribution", attr.count(), attr2.count(), true),
-            ("funnel", fun.agg(coalesce(sum(col("n_users")), lit(0L)))
-              .head.getLong(0),
-              fun2.agg(coalesce(sum(col("n_users")), lit(0L))).head.getLong(0),
-              true),
-            ("retention", ret.count(), ret2.count(), true),
-            ("transitions", trans.count(), trans2.count(), true))
-            .toDF("artifact", "n_before", "n_after", "persisted_ok")
-            .select(col("artifact"), col("n_before"), col("n_after"),
-              (col("n_before") - col("n_after")).as("n_removed"),
-              (col("n_after") <= col("n_before") && col("persisted_ok"))
-                .as("clean"))
-            .write.mode("overwrite").parquet(s"$outPath/ledger/tick=$tick")
-          TickCommit.seal(spark, outPath, tick) // the commit point
-          mani = mani2; sess = sess2; attr = attr2
-          fun = fun2; ret = ret2; trans = trans2
-          removedAll = removedAll2
-        }
-        ()
-      }
-      .start()
+    TickCommit.sink(removals, outPath, checkpointDir,
+        Seq("removed" -> Seq.empty[Long].toDF("user_id")) ++
+        eventStores(manifest, sessions, funnelStore, retentionStore,
+          transitionStore, attributionStore)) { (batch, tick, st) =>
+      val (removedAll, mani, sess, attr) =
+        (st("removed"), st("manifest"), st("sessions"), st("attribution"))
+      val (fun, ret, trans) = (st("funnel"), st("retention"), st("transitions"))
+      val rmEff = broadcast(batch.select(col("user_id")).distinct()
+        .join(removedAll, Seq("user_id"), "left_anti")
+        .localCheckpoint(false))
+      val rmEvents = events.join(rmEff, Seq("user_id"), "left_semi")
+        .localCheckpoint(false) // reach + cells + edges
+      val mani2 = mani.join(rmEff, Seq("user_id"), "left_anti")
+        .localCheckpoint(false)
+      val sess2 = sess.join(rmEff, Seq("user_id"), "left_anti")
+        .localCheckpoint(false)
+      val attr2 = attr.join(rmEff, Seq("user_id"), "left_anti")
+        .localCheckpoint(false)
+      val fun2 = fun.crossJoin(broadcast(EventOps.removedReach(rmEvents)))
+        .select(col("stage"),
+          (col("n_users") - when(col("stage") === "view", col("d1"))
+            .when(col("stage") === "click", col("d2"))
+            .otherwise(col("d3"))).cast("long").as("n_users"))
+        .localCheckpoint(false)
+      val rmFirst = rmEvents.groupBy(col("user_id"))
+        .agg(date_trunc("week", min(col("ts"))).cast("date").as("cohort_week"))
+      val ret2 = ret.join(
+          broadcast(EventOps.removedRetentionCells(rmEvents, rmFirst)),
+          Seq("cohort_week", "week_offset"), "left_outer")
+        .select(col("cohort_week"), col("week_offset"),
+          (col("n_active") - coalesce(col("d"), lit(0L))).cast("long")
+            .as("n_active"))
+        .filter(col("n_active") > 0) // a rebuild never emits 0 cells
+        .localCheckpoint(false)
+      val trans2 = trans.join(broadcast(EventOps.removedEdges(rmEvents)),
+          Seq("event_type", "next_type"), "left_outer")
+        .select(col("event_type"), col("next_type"),
+          (col("n_transitions") - coalesce(col("d"), lit(0L))).cast("long")
+            .as("n_transitions"))
+        .filter(col("n_transitions") > 0)
+        .localCheckpoint(false)
+      Tick(Seq(
+        "removed" -> removedAll.unionByName(rmEff).localCheckpoint(false),
+        "manifest" -> mani2, "sessions" -> sess2, "attribution" -> attr2,
+        "funnel" -> fun2, "retention" -> ret2, "transitions" -> trans2), () => {
+        // probe the PERSISTED manifest snapshot for the clean flag (a
+        // semi-probe over the in-memory anti-join lineage is true by
+        // construction)
+        val maniDirty = TickCommit
+          .readStaged(spark, outPath, tick, "manifest")
+          .join(rmEff, Seq("user_id"), "left_semi").count()
+        Seq(
+          ("manifest", mani.count(), mani2.count(), maniDirty == 0L),
+          ("sessions", sess.count(), sess2.count(), true),
+          ("attribution", attr.count(), attr2.count(), true),
+          ("funnel", fun.agg(coalesce(sum(col("n_users")), lit(0L)))
+            .head.getLong(0),
+            fun2.agg(coalesce(sum(col("n_users")), lit(0L))).head.getLong(0),
+            true),
+          ("retention", ret.count(), ret2.count(), true),
+          ("transitions", trans.count(), trans2.count(), true))
+          .toDF("artifact", "n_before", "n_after", "persisted_ok")
+          .select(col("artifact"), col("n_before"), col("n_after"),
+            (col("n_before") - col("n_after")).as("n_removed"),
+            (col("n_after") <= col("n_before") && col("persisted_ok"))
+              .as("clean"))
+          .write.mode("overwrite").parquet(s"$outPath/ledger/tick=$tick")
+      })
+    }
   }
+
+  /** The six q284 event-derived stores the user takedown and
+    * quarantine sinks carry, under their snapshot names, with the
+    * count columns cast to long. */
+  private def eventStores(manifest: DataFrame, sessions: DataFrame,
+                          funnelStore: DataFrame, retentionStore: DataFrame,
+                          transitionStore: DataFrame,
+                          attributionStore: DataFrame): Seq[(String, DataFrame)] =
+    Seq("manifest" -> manifest, "sessions" -> sessions,
+      "attribution" -> attributionStore,
+      "funnel" -> funnelStore.select(col("stage"),
+        col("n_users").cast("long").as("n_users")),
+      "retention" -> retentionStore.select(col("cohort_week"),
+        col("week_offset"), col("n_active").cast("long").as("n_active")),
+      "transitions" -> transitionStore.select(col("event_type"),
+        col("next_type"), col("n_transitions").cast("long").as("n_transitions")))
 
   /** STREAMING user-level quarantine/restore — q290 live: legal-hold
     * requests arrive as a stream of (user_id, op ∈ quarantine|restore)
@@ -1368,10 +1254,9 @@ object StreamOps {
     * via full-outer folds — merge ≡ the decrement run backwards.
     *
     * The corrections are not idempotent, so the tick commits
-    * atomically via [[TickCommit]]: every store, the stash, and the
-    * held-users set stage under `snap/tick=N` and the marker seals
-    * last; a restart loads [[TickCommit.readLatest]], a replayed
-    * sealed tick is skipped whole. Ledger rows (artifact, n_before,
+    * atomically via [[TickCommit.sink]]: every store, the stash, and
+    * the held-users set stage under `snap/tick=N` and the marker seals
+    * last. Ledger rows (artifact, n_before,
     * n_after, n_quarantined, n_restored) write idempotently per tick.
     *
     * Stream ≡ batch: after any tick the carried stores equal a
@@ -1385,145 +1270,122 @@ object StreamOps {
                               retentionStore: DataFrame,
                               transitionStore: DataFrame,
                               attributionStore: DataFrame,
-                              outPath: String, checkpointDir: String,
-                              storedHeld: Option[DataFrame] = None,
-                              storedStash: Option[DataFrame] = None)
+                              outPath: String, checkpointDir: String)
       : StreamingQuery = {
     val spark = events.sparkSession
     import spark.implicits._
-    var mani = manifest.localCheckpoint(false)
-    var sess = sessions.localCheckpoint(false)
-    var attr = attributionStore.localCheckpoint(false)
-    var fun = funnelStore.select(col("stage"), col("n_users").cast("long")
-      .as("n_users")).localCheckpoint(false)
-    var ret = retentionStore.select(col("cohort_week"), col("week_offset"),
-      col("n_active").cast("long").as("n_active")).localCheckpoint(false)
-    var trans = transitionStore.select(col("event_type"), col("next_type"),
-      col("n_transitions").cast("long").as("n_transitions"))
-      .localCheckpoint(false)
-    var held = storedHeld
-      .getOrElse(Seq.empty[Long].toDF("user_id"))
-      .select(col("user_id")).localCheckpoint(false)
-    var stash = storedStash
-      .getOrElse(events.filter(lit(false)))
-      .localCheckpoint(false)
-    requests.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, tick: Long) =>
-        TickCommit.bind(spark, outPath, checkpointDir)
-        if (!batch.isEmpty && !TickCommit.isCommitted(spark, outPath, tick)) {
-          val b = batch.localCheckpoint(false) // both request slices
-          val effQ = broadcast(b.filter(col("op") === "quarantine")
-            .select(col("user_id")).distinct()
-            .join(held, Seq("user_id"), "left_anti")
-            .localCheckpoint(false))
-          val effR = broadcast(b.filter(col("op") === "restore")
-            .select(col("user_id")).distinct()
-            .join(held, Seq("user_id"), "left_semi")
-            .join(effQ, Seq("user_id"), "left_anti")
-            .localCheckpoint(false))
-          val qEvents = events.join(effQ, Seq("user_id"), "left_semi")
-            .localCheckpoint(false) // stash + all quarantine d-frames
-          val rEvents = stash.join(effR, Seq("user_id"), "left_semi")
-            .localCheckpoint(false) // restore re-derive + d-frames
-          // partitioned stores: anti-join the quarantined, union the
-          // restored users' re-derived rows (from the stash alone)
-          def roundTrip(store: DataFrame, rederived: DataFrame): DataFrame = {
-            val cols = store.columns.map(col(_))
-            store.join(effQ, Seq("user_id"), "left_anti")
-              .select(cols: _*)
-              .unionByName(rederived.select(cols: _*))
-              .localCheckpoint(false)
-          }
-          val mani2 = roundTrip(mani, TemporalOps.sessionPackManifest(rEvents))
-          val sess2 = roundTrip(sess, EventOps.sessionize(rEvents))
-          val attr2 = roundTrip(attr, EventOps.lastTouchAttribution(rEvents))
-          // aggregates: decrement by the quarantined users' d-frames,
-          // re-increment by the restored users' (the exact inverse)
-          val dReachQ = broadcast(EventOps.removedReach(qEvents))
-          val dReachR = broadcast(EventOps.removedReach(rEvents))
-          def funnelShift(df: DataFrame, reach: DataFrame,
-                          sign: Long): DataFrame = df.crossJoin(reach)
-            .select(col("stage"),
-              (col("n_users") + lit(sign) *
-                when(col("stage") === "view", col("d1"))
-                  .when(col("stage") === "click", col("d2"))
-                  .otherwise(col("d3"))).cast("long").as("n_users"))
-          val fun2 = funnelShift(funnelShift(fun, dReachQ, -1L), dReachR, 1L)
-            .localCheckpoint(false)
-          def firstWeek(ev: DataFrame) = ev.groupBy(col("user_id"))
-            .agg(date_trunc("week", min(col("ts"))).cast("date")
-              .as("cohort_week"))
-          val dCellsQ = broadcast(
-            EventOps.removedRetentionCells(qEvents, firstWeek(qEvents)))
-          val dCellsR = broadcast(
-            EventOps.removedRetentionCells(rEvents, firstWeek(rEvents)))
-          val ret2 = ret.join(dCellsQ, Seq("cohort_week", "week_offset"),
-              "left_outer")
-            .select(col("cohort_week"), col("week_offset"),
-              (col("n_active") - coalesce(col("d"), lit(0L))).cast("long")
-                .as("n_active"))
-            .filter(col("n_active") > 0) // a rebuild never emits 0 cells
-            .join(dCellsR, Seq("cohort_week", "week_offset"), "full_outer")
-            .select(col("cohort_week"), col("week_offset"),
-              (coalesce(col("n_active"), lit(0L)) +
-                coalesce(col("d"), lit(0L))).cast("long").as("n_active"))
-            .localCheckpoint(false)
-          val dEdgesQ = broadcast(EventOps.removedEdges(qEvents))
-          val dEdgesR = broadcast(EventOps.removedEdges(rEvents))
-          val trans2 = trans.join(dEdgesQ, Seq("event_type", "next_type"),
-              "left_outer")
-            .select(col("event_type"), col("next_type"),
-              (col("n_transitions") - coalesce(col("d"), lit(0L)))
-                .cast("long").as("n_transitions"))
-            .filter(col("n_transitions") > 0)
-            .join(dEdgesR, Seq("event_type", "next_type"), "full_outer")
-            .select(col("event_type"), col("next_type"),
-              (coalesce(col("n_transitions"), lit(0L)) +
-                coalesce(col("d"), lit(0L))).cast("long")
-                .as("n_transitions"))
-            .localCheckpoint(false)
-          val held2 = held.unionByName(effQ)
-            .join(effR, Seq("user_id"), "left_anti")
-            .localCheckpoint(false)
-          val stash2 = stash.join(effR, Seq("user_id"), "left_anti")
-            .unionByName(qEvents)
-            .localCheckpoint(false)
-          // atomic tick: stage everything, probe persisted, ledger,
-          // seal (the non-idempotent crash contract)
-          TickCommit.stage(spark, outPath, tick, Seq(
-            "held" -> held2, "stash" -> stash2, "manifest" -> mani2,
-            "sessions" -> sess2, "attribution" -> attr2, "funnel" -> fun2,
-            "retention" -> ret2, "transitions" -> trans2))
-          val maniDirty = TickCommit
-            .readStaged(spark, outPath, tick, "manifest")
-            .join(effQ, Seq("user_id"), "left_semi").count()
-          val (nQ, nR) = (effQ.count(), effR.count())
-          Seq(
-            ("manifest", mani.count(), mani2.count(), maniDirty == 0L),
-            ("sessions", sess.count(), sess2.count(), true),
-            ("attribution", attr.count(), attr2.count(), true),
-            ("funnel", fun.agg(coalesce(sum(col("n_users")), lit(0L)))
-              .head.getLong(0),
-              fun2.agg(coalesce(sum(col("n_users")), lit(0L)))
-                .head.getLong(0), true),
-            ("retention", ret.count(), ret2.count(), true),
-            ("transitions", trans.count(), trans2.count(), true),
-            ("stash", stash.count(), stash2.count(), true))
-            .toDF("artifact", "n_before", "n_after", "persisted_ok")
-            .select(col("artifact"), col("n_before"), col("n_after"),
-              lit(nQ).as("n_quarantined"), lit(nR).as("n_restored"),
-              col("persisted_ok").as("clean"))
-            .write.mode("overwrite").parquet(s"$outPath/ledger/tick=$tick")
-          TickCommit.seal(spark, outPath, tick) // the commit point
-          mani = mani2; sess = sess2; attr = attr2
-          fun = fun2; ret = ret2; trans = trans2
-          held = held2; stash = stash2
-        }
-        ()
+    TickCommit.sink(requests, outPath, checkpointDir,
+        Seq("held" -> Seq.empty[Long].toDF("user_id"),
+          "stash" -> events.filter(lit(false))) ++
+        eventStores(manifest, sessions, funnelStore, retentionStore,
+          transitionStore, attributionStore)) { (batch, tick, st) =>
+      val (held, stash, mani, sess, attr) = (st("held"), st("stash"),
+        st("manifest"), st("sessions"), st("attribution"))
+      val (fun, ret, trans) = (st("funnel"), st("retention"), st("transitions"))
+      val b = batch.localCheckpoint(false) // both request slices
+      val effQ = broadcast(b.filter(col("op") === "quarantine")
+        .select(col("user_id")).distinct()
+        .join(held, Seq("user_id"), "left_anti")
+        .localCheckpoint(false))
+      val effR = broadcast(b.filter(col("op") === "restore")
+        .select(col("user_id")).distinct()
+        .join(held, Seq("user_id"), "left_semi")
+        .join(effQ, Seq("user_id"), "left_anti")
+        .localCheckpoint(false))
+      val qEvents = events.join(effQ, Seq("user_id"), "left_semi")
+        .localCheckpoint(false) // stash + all quarantine d-frames
+      val rEvents = stash.join(effR, Seq("user_id"), "left_semi")
+        .localCheckpoint(false) // restore re-derive + d-frames
+      // partitioned stores: anti-join the quarantined, union the
+      // restored users' re-derived rows (from the stash alone)
+      def roundTrip(store: DataFrame, rederived: DataFrame): DataFrame = {
+        val cols = store.columns.map(col(_))
+        store.join(effQ, Seq("user_id"), "left_anti")
+          .select(cols: _*)
+          .unionByName(rederived.select(cols: _*))
+          .localCheckpoint(false)
       }
-      .start()
+      val mani2 = roundTrip(mani, TemporalOps.sessionPackManifest(rEvents))
+      val sess2 = roundTrip(sess, EventOps.sessionize(rEvents))
+      val attr2 = roundTrip(attr, EventOps.lastTouchAttribution(rEvents))
+      // aggregates: decrement by the quarantined users' d-frames,
+      // re-increment by the restored users' (the exact inverse)
+      val dReachQ = broadcast(EventOps.removedReach(qEvents))
+      val dReachR = broadcast(EventOps.removedReach(rEvents))
+      def funnelShift(df: DataFrame, reach: DataFrame,
+                      sign: Long): DataFrame = df.crossJoin(reach)
+        .select(col("stage"),
+          (col("n_users") + lit(sign) *
+            when(col("stage") === "view", col("d1"))
+              .when(col("stage") === "click", col("d2"))
+              .otherwise(col("d3"))).cast("long").as("n_users"))
+      val fun2 = funnelShift(funnelShift(fun, dReachQ, -1L), dReachR, 1L)
+        .localCheckpoint(false)
+      def firstWeek(ev: DataFrame) = ev.groupBy(col("user_id"))
+        .agg(date_trunc("week", min(col("ts"))).cast("date")
+          .as("cohort_week"))
+      val dCellsQ = broadcast(
+        EventOps.removedRetentionCells(qEvents, firstWeek(qEvents)))
+      val dCellsR = broadcast(
+        EventOps.removedRetentionCells(rEvents, firstWeek(rEvents)))
+      val ret2 = ret.join(dCellsQ, Seq("cohort_week", "week_offset"),
+          "left_outer")
+        .select(col("cohort_week"), col("week_offset"),
+          (col("n_active") - coalesce(col("d"), lit(0L))).cast("long")
+            .as("n_active"))
+        .filter(col("n_active") > 0) // a rebuild never emits 0 cells
+        .join(dCellsR, Seq("cohort_week", "week_offset"), "full_outer")
+        .select(col("cohort_week"), col("week_offset"),
+          (coalesce(col("n_active"), lit(0L)) +
+            coalesce(col("d"), lit(0L))).cast("long").as("n_active"))
+        .localCheckpoint(false)
+      val dEdgesQ = broadcast(EventOps.removedEdges(qEvents))
+      val dEdgesR = broadcast(EventOps.removedEdges(rEvents))
+      val trans2 = trans.join(dEdgesQ, Seq("event_type", "next_type"),
+          "left_outer")
+        .select(col("event_type"), col("next_type"),
+          (col("n_transitions") - coalesce(col("d"), lit(0L)))
+            .cast("long").as("n_transitions"))
+        .filter(col("n_transitions") > 0)
+        .join(dEdgesR, Seq("event_type", "next_type"), "full_outer")
+        .select(col("event_type"), col("next_type"),
+          (coalesce(col("n_transitions"), lit(0L)) +
+            coalesce(col("d"), lit(0L))).cast("long")
+            .as("n_transitions"))
+        .localCheckpoint(false)
+      val stash2 = stash.join(effR, Seq("user_id"), "left_anti")
+        .unionByName(qEvents)
+        .localCheckpoint(false)
+      // atomic tick: stage everything, then probe the persisted
+      // manifest and write the ledger before the seal
+      Tick(Seq(
+        "held" -> held.unionByName(effQ).join(effR, Seq("user_id"), "left_anti")
+          .localCheckpoint(false),
+        "stash" -> stash2, "manifest" -> mani2, "sessions" -> sess2,
+        "attribution" -> attr2, "funnel" -> fun2, "retention" -> ret2,
+        "transitions" -> trans2), () => {
+        val maniDirty = TickCommit
+          .readStaged(spark, outPath, tick, "manifest")
+          .join(effQ, Seq("user_id"), "left_semi").count()
+        val (nQ, nR) = (effQ.count(), effR.count())
+        Seq(
+          ("manifest", mani.count(), mani2.count(), maniDirty == 0L),
+          ("sessions", sess.count(), sess2.count(), true),
+          ("attribution", attr.count(), attr2.count(), true),
+          ("funnel", fun.agg(coalesce(sum(col("n_users")), lit(0L)))
+            .head.getLong(0),
+            fun2.agg(coalesce(sum(col("n_users")), lit(0L)))
+              .head.getLong(0), true),
+          ("retention", ret.count(), ret2.count(), true),
+          ("transitions", trans.count(), trans2.count(), true),
+          ("stash", stash.count(), stash2.count(), true))
+          .toDF("artifact", "n_before", "n_after", "persisted_ok")
+          .select(col("artifact"), col("n_before"), col("n_after"),
+            lit(nQ).as("n_quarantined"), lit(nR).as("n_restored"),
+            col("persisted_ok").as("clean"))
+          .write.mode("overwrite").parquet(s"$outPath/ledger/tick=$tick")
+      })
+    }
   }
 
   /** STREAMING entity-alias takedown — q276's ticked twin: dim-record
@@ -1533,11 +1395,9 @@ object StreamOps {
     * the updated alias store forward. Re-submitted keys are gated
     * against the cumulative queue (honest no-op, zero-delta ledger
     * row). The re-close is not idempotent against a stale store, so
-    * the tick commits atomically via [[TickCommit]] (stage aliases +
-    * queue, ledger, marker last; restart loads
-    * [[TickCommit.readLatest]]; a replayed sealed tick is skipped)
-    * and the ledger's dirty probe re-reads the PERSISTED staged
-    * alias snapshot.
+    * the tick commits atomically via [[TickCommit.sink]] (stage
+    * aliases + queue, ledger, marker last) and the ledger's dirty
+    * probe re-reads the PERSISTED staged alias snapshot.
     *
     * Stream ≡ batch: each tick leaves the store equal to a full
     * rebuild over part-minus-queue (the q276 exactness argument), so
@@ -1546,36 +1406,27 @@ object StreamOps {
     * bounded, never history². */
   def streamingEntityTakedown(removals: DataFrame, part: DataFrame,
                               storedAliases: DataFrame, outPath: String,
-                              checkpointDir: String,
-                              storedRemoved: Option[DataFrame] = None)
-      : StreamingQuery = {
+                              checkpointDir: String): StreamingQuery = {
     val spark = part.sparkSession
     import spark.implicits._
-    var aliases = storedAliases.localCheckpoint(false)
-    var removedAll = storedRemoved
-      .getOrElse(Seq.empty[Long].toDF("p_partkey"))
-      .select(col("p_partkey")).localCheckpoint(false)
-    removals.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, tick: Long) =>
-        TickCommit.bind(spark, outPath, checkpointDir)
-        if (!batch.isEmpty && !TickCommit.isCommitted(spark, outPath, tick)) {
-          val rmEff = broadcast(batch.select(col("p_partkey")).distinct()
-            .join(removedAll, Seq("p_partkey"), "left_anti")
-            .localCheckpoint(false))
-          val partCur = part.join(removedAll, Seq("p_partkey"), "left_anti")
-          val next = DedupOps.entityTakedown(partCur, rmEff, aliases)
-            .localCheckpoint(false) // ledger counts + carried store
-          val nReclosed = next.filter(col("status") === "reclosed").count()
-          // status is per-tick provenance, not carried state
-          val aliases2 = next.select(col("p_partkey"), col("entity_id"),
-              col("n_members"), col("canonical_name"))
-            .localCheckpoint(false)
-          val removedAll2 = removedAll.unionByName(rmEff)
-            .localCheckpoint(false)
-          TickCommit.stage(spark, outPath, tick, Seq(
-            "removed" -> removedAll2, "aliases" -> aliases2))
+    TickCommit.sink(removals, outPath, checkpointDir, Seq(
+        "removed" -> Seq.empty[Long].toDF("p_partkey"), "aliases" -> storedAliases)) {
+      (batch, tick, st) =>
+        val (removedAll, aliases) = (st("removed"), st("aliases"))
+        val rmEff = broadcast(batch.select(col("p_partkey")).distinct()
+          .join(removedAll, Seq("p_partkey"), "left_anti")
+          .localCheckpoint(false))
+        val partCur = part.join(removedAll, Seq("p_partkey"), "left_anti")
+        val next = DedupOps.entityTakedown(partCur, rmEff, aliases)
+          .localCheckpoint(false) // ledger counts + carried store
+        val nReclosed = next.filter(col("status") === "reclosed").count()
+        // status is per-tick provenance, not carried state
+        val aliases2 = next.select(col("p_partkey"), col("entity_id"),
+            col("n_members"), col("canonical_name"))
+          .localCheckpoint(false)
+        Tick(Seq(
+          "removed" -> removedAll.unionByName(rmEff).localCheckpoint(false),
+          "aliases" -> aliases2), () => {
           // dirty probe against the PERSISTED staged alias snapshot
           val dirty = TickCommit.readStaged(spark, outPath, tick, "aliases")
             .join(rmEff, Seq("p_partkey"), "left_semi").count()
@@ -1583,13 +1434,8 @@ object StreamOps {
               dirty == 0L))
             .toDF("artifact", "n_before", "n_after", "n_reclosed", "clean")
             .write.mode("overwrite").parquet(s"$outPath/ledger/tick=$tick")
-          TickCommit.seal(spark, outPath, tick) // the commit point
-          aliases = aliases2
-          removedAll = removedAll2
-        }
-        ()
-      }
-      .start()
+        })
+    }
   }
 
   /** STREAMING takedown SERVING monitor — q277 live: the compliance
@@ -1609,11 +1455,9 @@ object StreamOps {
     * tick-stamped cert (surface, n_slots, n_leaked, clean) writes
     * idempotently to `outPath/cert/tick=N` (a replayed at-least-once
     * tick overwrites itself); the purged stores AND the cumulative
-    * removal queue snapshot per tick, queue FIRST so a mid-tick crash
-    * leaves it ahead of the stores, never behind (durable state IS
-    * the sinks — the
-    * restart contract the sibling takedown streams state; without the
-    * queue snapshot a restart would certify only post-restart ids).
+    * removal queue commit atomically per tick ([[TickCommit.sink]]) —
+    * without the queue in the snapshot a restart would certify only
+    * post-restart ids.
     *
     * Stream ≡ batch: anti-joins compose, so after the last tick every
     * carried store equals the one-shot purge over the union and the
@@ -1631,89 +1475,57 @@ object StreamOps {
                              sigs: DataFrame, ivfPqCodes: DataFrame,
                              ivfPqCb: SimilarityOps.PqCodebook,
                              outPath: String,
-                             checkpointDir: String,
-                             storedRemoved: Option[DataFrame] = None)
-      : StreamingQuery = {
+                             checkpointDir: String): StreamingQuery = {
     val spark = postings.sparkSession
     import spark.implicits._
-    var post = postings.localCheckpoint(false)
-    var dl = docLengths.localCheckpoint(false)
-    var emb = embeddings.localCheckpoint(false)
-    var asg = index.assigned.localCheckpoint(false)
-    var sg = sigs.localCheckpoint(false)
-    var cds = ivfPqCodes.localCheckpoint(false)
-    // restart contract: a monitor reconstructed from the on-disk
-    // snapshots passes `TickCommit.readLatest(outPath, "removed")`
-    // back in here, so the leak probe keeps covering ids removed
-    // before the restart
-    var removedAll = storedRemoved
-      .getOrElse(Seq.empty[Long].toDF("doc_id"))
-      .select(col("doc_id")).localCheckpoint(false)
-    removals.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, tick: Long) =>
-        TickCommit.bind(spark, outPath, checkpointDir)
-        // replay guard (r18): the anti-joins are idempotent, but a
-        // replayed committed tick would still redo seven store scans
-        // and overwrite the cert for nothing — skip it whole
-        if (!batch.isEmpty && !TickCommit.isCommitted(spark, outPath, tick)) {
-          val rm = broadcast(batch.select(col("doc_id")).distinct()
-            .localCheckpoint(false)) // five anti-joins
-          val rmVec = rm.select(col("doc_id").as("vec_id"))
-          removedAll = removedAll.unionByName(rm).distinct()
-            .localCheckpoint(false) // cert probe + next tick
-          post = post.join(rm, Seq("doc_id"), "left_anti")
+    TickCommit.sink(removals, outPath, checkpointDir, Seq(
+        "removed" -> Seq.empty[Long].toDF("doc_id"), "postings" -> postings,
+        "doclens" -> docLengths, "vectors" -> embeddings,
+        "assign" -> index.assigned, "sigs" -> sigs, "codes" -> ivfPqCodes)) {
+      (batch, tick, st) =>
+        val rm = broadcast(batch.select(col("doc_id")).distinct()
+          .localCheckpoint(false)) // five anti-joins
+        val rmVec = rm.select(col("doc_id").as("vec_id"))
+        val removedAll = st("removed").unionByName(rm).distinct()
+          .localCheckpoint(false) // cert probe + next tick
+        def purge(name: String, key: DataFrame, on: String): DataFrame =
+          st(name).join(key, Seq(on), "left_anti")
             .localCheckpoint(false) // listing + snapshot + next tick
-          dl = dl.join(rm, Seq("doc_id"), "left_anti").localCheckpoint(false)
-          emb = emb.join(rmVec, Seq("vec_id"), "left_anti")
-            .localCheckpoint(false)
-          asg = asg.join(rmVec, Seq("vec_id"), "left_anti")
-            .localCheckpoint(false)
-          sg = sg.join(rmVec, Seq("vec_id"), "left_anti")
-            .localCheckpoint(false)
-          cds = cds.join(rmVec, Seq("vec_id"), "left_anti")
-            .localCheckpoint(false)
-          // the PRODUCTION path serves from the CODES store — a purged
-          // assignment store does not silence it (the q282 point), so
-          // the monitor drives its listing too, from the carried codes
-          val ivfPqListing = SimilarityOps.topCut(
-              SimilarityOps.ivfPqAdcScored(index, ivfPqCb, emb, cds,
-                nQueries = 5, nProbe = 4),
-              col("adc_d2"), 10)
-            .select(lit("ivfpq_adc").as("surface"),
-              col("qid").cast("long").as("qid"),
-              col("vec_id").cast("long").as("id"))
-          val listings = CorpusOps.servingListings(post, dl, emb,
-            SimilarityOps.IvfIndex(asg, index.centers, index.nLists), pqCb, sg)
-            .unionByName(ivfPqListing)
-          // tick-IDEMPOTENT cert (ADVICE r15): foreachBatch is
-          // at-least-once, so a replayed tick must OVERWRITE its own
-          // cert rows, never append duplicates — the tick number is
-          // the partition directory (recovered as a column when
-          // `outPath/cert` is read), and mode("overwrite") on the
-          // tick-versioned path makes the replay a no-op.
-          CorpusOps.leakAgg(listings, removedAll, "n_slots", "n_leaked")
-            .withColumn("clean", col("n_leaked") === 0L)
-            .write.mode("overwrite").parquet(s"$outPath/cert/tick=$tick")
-          // the CUMULATIVE removal queue is carried state too: without
-          // this snapshot a restart-from-checkpoint would certify only
-          // post-restart ids and the standing invariant would silently
-          // weaken (the streamingIvfRebalance ADVICE class of bug).
-          // r18: the queue and all six stores commit ATOMICALLY per
-          // tick — the r15 queue-first ordering made a crash between
-          // independent writes replay-safe, but a crash mid-overwrite
-          // still corrupted whichever snapshot it interrupted
-          // (delete-then-write); the unsealed stage closes that while
-          // keeping the queue ≥ the stores in every visible state.
-          TickCommit.stage(spark, outPath, tick, Seq(
-            "removed" -> removedAll, "postings" -> post, "doclens" -> dl,
-            "vectors" -> emb, "assign" -> asg, "sigs" -> sg, "codes" -> cds))
-          TickCommit.seal(spark, outPath, tick)
-        }
-        ()
-      }
-      .start()
+        val post = purge("postings", rm, "doc_id")
+        val dl = purge("doclens", rm, "doc_id")
+        val emb = purge("vectors", rmVec, "vec_id")
+        val asg = purge("assign", rmVec, "vec_id")
+        val sg = purge("sigs", rmVec, "vec_id")
+        val cds = purge("codes", rmVec, "vec_id")
+        // the PRODUCTION path serves from the CODES store — a purged
+        // assignment store does not silence it (the q282 point), so
+        // the monitor drives its listing too, from the carried codes
+        val ivfPqListing = SimilarityOps.topCut(
+            SimilarityOps.ivfPqAdcScored(index, ivfPqCb, emb, cds,
+              nQueries = 5, nProbe = 4),
+            col("adc_d2"), 10)
+          .select(lit("ivfpq_adc").as("surface"),
+            col("qid").cast("long").as("qid"),
+            col("vec_id").cast("long").as("id"))
+        val listings = CorpusOps.servingListings(post, dl, emb,
+          SimilarityOps.IvfIndex(asg, index.centers, index.nLists), pqCb, sg)
+          .unionByName(ivfPqListing)
+        // tick-IDEMPOTENT cert (ADVICE r15): foreachBatch is
+        // at-least-once, so a replayed tick must OVERWRITE its own
+        // cert rows, never append duplicates — the tick number is
+        // the partition directory (recovered as a column when
+        // `outPath/cert` is read), and mode("overwrite") on the
+        // tick-versioned path makes the replay a no-op.
+        CorpusOps.leakAgg(listings, removedAll, "n_slots", "n_leaked")
+          .withColumn("clean", col("n_leaked") === 0L)
+          .write.mode("overwrite").parquet(s"$outPath/cert/tick=$tick")
+        // the CUMULATIVE removal queue commits with the six stores:
+        // without it a restart would certify only post-restart ids and
+        // the standing invariant would silently weaken
+        Tick(Seq(
+          "removed" -> removedAll, "postings" -> post, "doclens" -> dl,
+          "vectors" -> emb, "assign" -> asg, "sigs" -> sg, "codes" -> cds))
+    }
   }
 
   /** STREAMING ingest tick — q247 live: each micro-batch of documents
@@ -1731,50 +1543,39 @@ object StreamOps {
     * Scale: per-tick cost is the q247 bound — batch-sized scans, one
     * fp anti-join, the banded sketch probe; snapshots are store-sized.
     * Durable state is the two snapshots, not executor memory — and the
-    * PAIR commits atomically via [[TickCommit]] (ADVICE r17): a crash
+    * PAIR commits atomically via [[TickCommit.sink]] (ADVICE r17): a crash
     * between independent fps/sigs writes would persist the admitted
     * docs' fingerprints without their signatures, and on replay the
     * fps exact-dup gate filters those docs so the sigs store never
     * receives them (permanent loss — no write ordering fixes it;
-    * sigs-first makes replayed docs self-near-dup instead). After a
-    * restart, reconstruct via `TickCommit.readLatest(outPath,
-    * "fps"|"sigs")`. */
+    * sigs-first makes replayed docs self-near-dup instead). */
   def streamingIngestTick(batchDocs: DataFrame, storedFps: DataFrame,
                           storedSigs: DataFrame, outPath: String,
-                          checkpointDir: String): StreamingQuery = {
-    val spark = batchDocs.sparkSession
-    var fps = storedFps.select(col("fp_md5")).localCheckpoint(false)
-    var sigs = storedSigs.localCheckpoint(false)
-    batchDocs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, tick: Long) =>
-        TickCommit.bind(spark, outPath, checkpointDir)
-        // crash-after-seal replay must not re-run the funnel against
-        // the POST-tick stores a restart loads (it would overwrite the
-        // tick's funnel ledger with all-dropped rows)
-        if (!batch.isEmpty && !TickCommit.isCommitted(spark, outPath, tick)) {
-          val b = batch.localCheckpoint(false) // stages + report + fp growth
-          val bSigs = DedupOps.minhashSignatures(b).localCheckpoint(false)
-          val (exactKeep, gateKeep, ndKeep0) =
-            CorpusOps.ingestStages(fps, sigs, b, bSigs)
-          val admitted = ndKeep0.localCheckpoint(false) // report + both growths
-          CorpusOps.ingestReport(b, (exactKeep, gateKeep, admitted))
-            .write.mode("overwrite").parquet(s"$outPath/funnel/tick=$tick")
-          val fps2 = fps.unionByName(
-              b.join(admitted, "doc_id").select(md5(col("text")).as("fp_md5")))
-            .distinct().localCheckpoint(false)
-          val sigs2 = sigs.unionByName(bSigs.join(admitted, "doc_id"))
-            .localCheckpoint(false)
-          TickCommit.stage(spark, outPath, tick,
-            Seq("fps" -> fps2, "sigs" -> sigs2))
-          TickCommit.seal(spark, outPath, tick)
-          fps = fps2; sigs = sigs2
-        }
-        ()
-      }
-      .start()
-  }
+                          checkpointDir: String): StreamingQuery =
+    TickCommit.sink(batchDocs, outPath, checkpointDir, Seq(
+        "fps" -> storedFps.select(col("fp_md5")), "sigs" -> storedSigs)) {
+      (batch, tick, st) =>
+        val b = batch.localCheckpoint(false) // stages + report + fp growth
+        val bSigs = DedupOps.minhashSignatures(b).localCheckpoint(false)
+        val (exactKeep, gateKeep, ndKeep0) =
+          CorpusOps.ingestStages(st("fps"), st("sigs"), b, bSigs)
+        val admitted = ndKeep0.localCheckpoint(false) // report + both growths
+        CorpusOps.ingestReport(b, (exactKeep, gateKeep, admitted))
+          .write.mode("overwrite").parquet(s"$outPath/funnel/tick=$tick")
+        Tick(grownIngestStores(st, b, bSigs, admitted))
+    }
+
+  /** The two ingest stores grown by a tick's admitted docs: their
+    * text fingerprints and their minhash signatures. */
+  private def grownIngestStores(st: Map[String, DataFrame], b: DataFrame,
+                                bSigs: DataFrame,
+                                admitted: DataFrame): Seq[(String, DataFrame)] =
+    Seq(
+      "fps" -> st("fps").unionByName(
+          b.join(admitted, "doc_id").select(md5(col("text")).as("fp_md5")))
+        .distinct().localCheckpoint(false),
+      "sigs" -> st("sigs").unionByName(bSigs.join(admitted, "doc_id"))
+        .localCheckpoint(false))
 
   /** STREAMING licensed ingest tick — q262 live (VERDICT r12 #6):
     * [[streamingIngestTick]] with the q257 compliance stage composed
@@ -1790,7 +1591,7 @@ object StreamOps {
     *
     * Per-tick cost = q247's bound + one broadcast semi-join; durable
     * state is the two snapshots — committed ATOMICALLY per tick via
-    * [[TickCommit]] with a crash-after-seal replay guard, the same
+    * [[TickCommit.sink]] with a crash-after-seal replay guard, the same
     * contract (and the same fps-without-sigs loss window it closes;
     * ADVICE r17) as [[streamingIngestTick]]. `batchDocs` must carry
     * (doc_id, text, source). */
@@ -1798,35 +1599,18 @@ object StreamOps {
                                   storedSigs: DataFrame, licenseDim: DataFrame,
                                   outPath: String,
                                   checkpointDir: String): StreamingQuery = {
-    val spark = batchDocs.sparkSession
-    var fps = storedFps.select(col("fp_md5")).localCheckpoint(false)
-    var sigs = storedSigs.localCheckpoint(false)
     val dim = licenseDim.localCheckpoint(false) // static registry, pinned once
-    batchDocs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, tick: Long) =>
-        TickCommit.bind(spark, outPath, checkpointDir)
-        if (!batch.isEmpty && !TickCommit.isCommitted(spark, outPath, tick)) {
-          val b = batch.localCheckpoint(false) // stages + report + fp growth
-          val bSigs = DedupOps.minhashSignatures(b).localCheckpoint(false)
-          val stages = CorpusOps.licensedIngestStages(fps, sigs, b, bSigs, dim)
-          val admitted = stages.last._2.localCheckpoint(false) // report + growths
-          CorpusOps.ingestReportStages(b, stages.init :+ (stages.last._1 -> admitted))
-            .write.mode("overwrite").parquet(s"$outPath/funnel/tick=$tick")
-          val fps2 = fps.unionByName(
-              b.join(admitted, "doc_id").select(md5(col("text")).as("fp_md5")))
-            .distinct().localCheckpoint(false)
-          val sigs2 = sigs.unionByName(bSigs.join(admitted, "doc_id"))
-            .localCheckpoint(false)
-          TickCommit.stage(spark, outPath, tick,
-            Seq("fps" -> fps2, "sigs" -> sigs2))
-          TickCommit.seal(spark, outPath, tick)
-          fps = fps2; sigs = sigs2
-        }
-        ()
-      }
-      .start()
+    TickCommit.sink(batchDocs, outPath, checkpointDir, Seq(
+        "fps" -> storedFps.select(col("fp_md5")), "sigs" -> storedSigs)) {
+      (batch, tick, st) =>
+        val b = batch.localCheckpoint(false) // stages + report + fp growth
+        val bSigs = DedupOps.minhashSignatures(b).localCheckpoint(false)
+        val stages = CorpusOps.licensedIngestStages(st("fps"), st("sigs"), b, bSigs, dim)
+        val admitted = stages.last._2.localCheckpoint(false) // report + growths
+        CorpusOps.ingestReportStages(b, stages.init :+ (stages.last._1 -> admitted))
+          .write.mode("overwrite").parquet(s"$outPath/funnel/tick=$tick")
+        Tick(grownIngestStores(st, b, bSigs, admitted))
+    }
   }
 
   /** STREAMING cross-modal gate — q261 live: each micro-batch of
@@ -1840,53 +1624,37 @@ object StreamOps {
     * per tick. Stream ≡ batch by construction (StreamingSpec, across
     * a split with the pinned mismatch pair on the boundary). State is
     * source-count-sized; durable state is the verdict sink + the
-    * atomic counts/accounting snapshot ([[TickCommit]], r18 — the old
-    * "rebuild counts from the verdict sink" recipe had no constructor
-    * seam to inject the rebuilt counts AND would double-fold the
-    * crashed tick's already-written verdict partition on replay).
-    * This sink SELF-RESUMES: a restart against the same outPath loads
-    * the committed counts snapshot automatically and the replayed
-    * committed tick is skipped whole. */
+    * atomic counts/accounting snapshot ([[TickCommit.sink]], r18 — the
+    * old "rebuild counts from the verdict sink" recipe had no
+    * constructor seam to inject the rebuilt counts AND would
+    * double-fold the crashed tick's already-written verdict partition
+    * on replay). */
   def streamingCrossModalGate(docs: DataFrame, outPath: String,
                               checkpointDir: String, captionChars: Int = 64,
                               threshold: Double = 0.9): StreamingQuery = {
     val spark = docs.sparkSession
-    var counts: DataFrame =
-      TickCommit.readLatest(spark, outPath, "counts")
-        .map(_.localCheckpoint(false)).orNull
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, tick: Long) =>
-        TickCommit.bind(spark, outPath, checkpointDir)
-        if (!batch.isEmpty && !TickCommit.isCommitted(spark, outPath, tick)) {
-          val scores = MultimodalOps
-            .crossModalScores(batch, captionChars, threshold)
-            .localCheckpoint(false) // verdict sink + count fold
-          scores.write.mode("overwrite")
-            .parquet(s"$outPath/verdicts/tick=$tick")
-          val tickCounts = scores.groupBy(col("source"))
-            .agg(count(lit(1)).cast("long").as("n_docs"),
-              sum(when(col("aligned"), 1L).otherwise(0L)).cast("long").as("n_aligned"),
-              sum(when(col("aligned"), 0L).otherwise(1L)).cast("long").as("n_dropped"))
-          // LOCAL successor; the var advances only after the write
-          // lands (an in-JVM retry must not double-fold the tick)
-          val counts2 = (if (counts == null) tickCounts
-            else counts.unionByName(tickCounts)
-              .groupBy(col("source"))
-              .agg(sum(col("n_docs")).cast("long").as("n_docs"),
-                sum(col("n_aligned")).cast("long").as("n_aligned"),
-                sum(col("n_dropped")).cast("long").as("n_dropped")))
-            .localCheckpoint(false) // next fold + report
-          TickCommit.stage(spark, outPath, tick, Seq(
-            "counts" -> counts2,
-            "accounting" -> counts2.orderBy(col("source"))))
-          TickCommit.seal(spark, outPath, tick)
-          counts = counts2
-        }
-        ()
-      }
-      .start()
+    import spark.implicits._
+    TickCommit.sink(docs, outPath, checkpointDir, Seq("counts" ->
+        Seq.empty[(String, Long, Long, Long)]
+          .toDF("source", "n_docs", "n_aligned", "n_dropped"))) {
+      (batch, tick, st) =>
+        val scores = MultimodalOps
+          .crossModalScores(batch, captionChars, threshold)
+          .localCheckpoint(false) // verdict sink + count fold
+        scores.write.mode("overwrite")
+          .parquet(s"$outPath/verdicts/tick=$tick")
+        val tickCounts = scores.groupBy(col("source"))
+          .agg(count(lit(1)).cast("long").as("n_docs"),
+            sum(when(col("aligned"), 1L).otherwise(0L)).cast("long").as("n_aligned"),
+            sum(when(col("aligned"), 0L).otherwise(1L)).cast("long").as("n_dropped"))
+        val counts = st("counts").unionByName(tickCounts)
+          .groupBy(col("source"))
+          .agg(sum(col("n_docs")).cast("long").as("n_docs"),
+            sum(col("n_aligned")).cast("long").as("n_aligned"),
+            sum(col("n_dropped")).cast("long").as("n_dropped"))
+          .localCheckpoint(false) // next fold + report
+        Tick(Seq("counts" -> counts, "accounting" -> counts.orderBy(col("source"))))
+    }
   }
 
   /** STREAMING semantic dedup — the live verdict-first ingest loop
@@ -1904,46 +1672,33 @@ object StreamOps {
     * list_id) snapshot rewrite is assignment-sized — the same cadence
     * as the persisted table a maintenance job would append to.
     * Durable state is the per-tick atomic assign snapshot
-    * ([[TickCommit]], r18): after a restart, rebuild the index frame
-    * from `readLatest("assign")` joined to the vector store. The
+    * ([[TickCommit.sink]], r18), which holds every carried column
+    * (vec_id, vec, norm, list_id), so a restart resumes the index from
+    * it alone. The
     * growth itself is replay-convergent (a keeper probing an index
     * that already contains it flags dup and is not re-added), but an
     * unguarded replay would overwrite the tick's verdict ledger with
     * all-dup rows — the guard keeps the ledger honest. */
   def streamingSemanticDedup(vectors: DataFrame, stored: SimilarityOps.IvfIndex,
                              outPath: String, checkpointDir: String): StreamingQuery = {
-    val spark = vectors.sparkSession
     val cols = Seq(col("vec_id"), col("vec"), col("norm"), col("list_id"))
-    var index = SimilarityOps.IvfIndex(
-      stored.assigned.select(cols: _*).localCheckpoint(false),
-      stored.centers, stored.nLists)
-    vectors.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, tick: Long) =>
-        TickCommit.bind(spark, outPath, checkpointDir)
-        if (!batch.isEmpty && !TickCommit.isCommitted(spark, outPath, tick)) {
-          val b = batch.localCheckpoint(false) // probe + keeper assign
-          val verdicts = SimilarityOps.ivfSemanticProbe(index, b)
-            .localCheckpoint(false) // verdict write + keeper semi-join
-          verdicts.write.mode("overwrite")
-            .parquet(s"$outPath/verdicts/tick=$tick")
-          val keepers = b.join(
-            verdicts.filter(!col("is_dup")).select(col("vec_id")),
-            Seq("vec_id"), "left_semi")
-          val grown = index.assigned.unionByName(
-            SimilarityOps.withVec(keepers)
-              .join(SimilarityOps.ivfIncrementalAssign(index, keepers), "vec_id")
-              .select(cols: _*))
-            .localCheckpoint(false) // next probe + snapshot write
-          TickCommit.stage(spark, outPath, tick, Seq(
-            "assign" -> grown.select(col("vec_id"), col("list_id"))))
-          TickCommit.seal(spark, outPath, tick)
-          index = SimilarityOps.IvfIndex(grown, index.centers, index.nLists)
-        }
-        ()
-      }
-      .start()
+    TickCommit.sink(vectors, outPath, checkpointDir, Seq(
+        "assign" -> stored.assigned.select(cols: _*))) { (batch, tick, st) =>
+      val index = SimilarityOps.IvfIndex(st("assign"), stored.centers, stored.nLists)
+      val b = batch.localCheckpoint(false) // probe + keeper assign
+      val verdicts = SimilarityOps.ivfSemanticProbe(index, b)
+        .localCheckpoint(false) // verdict write + keeper semi-join
+      verdicts.write.mode("overwrite")
+        .parquet(s"$outPath/verdicts/tick=$tick")
+      val keepers = b.join(
+        verdicts.filter(!col("is_dup")).select(col("vec_id")),
+        Seq("vec_id"), "left_semi")
+      Tick(Seq("assign" -> index.assigned.unionByName(
+          SimilarityOps.withVec(keepers)
+            .join(SimilarityOps.ivfIncrementalAssign(index, keepers), "vec_id")
+            .select(cols: _*))
+        .localCheckpoint(false))) // next probe + snapshot write
+    }
   }
 
   /** STREAMING corpus-card maintenance — the live twin of
@@ -1962,47 +1717,28 @@ object StreamOps {
     * probe; the card snapshot is dimension-sized. Durable state is
     * the state + fingerprint snapshots, not executor memory — and the
     * pair (plus the derived display card) commits ATOMICALLY per tick
-    * via [[TickCommit]] (ADVICE r17): a crash between independent
+    * via [[TickCommit.sink]] (ADVICE r17): a crash between independent
     * state/fprints writes would persist a state that already folded
     * the batch next to a fingerprint store that never grew, so a
     * replay from those snapshots double-counts the batch's docs (or,
     * ordered the other way, drops them as dups before the fold —
-    * neither ordering is safe). After a restart, reconstruct via
-    * `TickCommit.readLatest(outPath, "state"|"fprints"|"card")`. */
+    * neither ordering is safe). */
   def streamingCorpusCard(batchDocs: DataFrame, storedState: DataFrame,
                           storedFprints: DataFrame, outPath: String,
-                          checkpointDir: String): StreamingQuery = {
-    val spark = batchDocs.sparkSession
-    var state = storedState.localCheckpoint(false)
-    var fps = storedFprints.localCheckpoint(false)
-    batchDocs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, tick: Long) =>
-        TickCommit.bind(spark, outPath, checkpointDir)
-        // crash-after-seal replay guard: the fold is NOT idempotent
-        // against the post-tick snapshots a restart loads
-        if (!batch.isEmpty && !TickCommit.isCommitted(spark, outPath, tick)) {
-          val b = batch.localCheckpoint(false) // state fold + fp growth
-          // fold into LOCAL successors; vars advance only after every
-          // write lands (an in-JVM retry must not double-fold)
-          val state2 = CorpusOps.corpusCardIncrementalState(state, fps, b)
-            .drop("n_batch_docs")
-            .localCheckpoint(false) // next fold + both snapshot writes
-          val fps2 = fps.unionByName(DedupOps.fingerprintStore(b))
-            .groupBy(col("fp_md5")).agg(min(col("keeper_id")).as("keeper_id"))
-            .localCheckpoint(false)
-          TickCommit.stage(spark, outPath, tick, Seq(
-            "state" -> state2,
-            "card" -> CorpusOps.cardFromState(state2),
-            "fprints" -> fps2))
-          TickCommit.seal(spark, outPath, tick)
-          state = state2; fps = fps2
-        }
-        ()
-      }
-      .start()
-  }
+                          checkpointDir: String): StreamingQuery =
+    TickCommit.sink(batchDocs, outPath, checkpointDir, Seq(
+        "state" -> storedState, "fprints" -> storedFprints)) { (batch, _, st) =>
+      val b = batch.localCheckpoint(false) // state fold + fp growth
+      val state = CorpusOps.corpusCardIncrementalState(st("state"), st("fprints"), b)
+        .drop("n_batch_docs")
+        .localCheckpoint(false) // next fold + both snapshot writes
+      Tick(Seq(
+        "state" -> state,
+        "card" -> CorpusOps.cardFromState(state),
+        "fprints" -> st("fprints").unionByName(DedupOps.fingerprintStore(b))
+          .groupBy(col("fp_md5")).agg(min(col("keeper_id")).as("keeper_id"))
+          .localCheckpoint(false)))
+    }
 
   /** STREAMING LM maintenance — the live twin of q245
     * ([[TextOps.lmModelMerge]]): each micro-batch of reference text
@@ -2018,44 +1754,39 @@ object StreamOps {
     * Scale: per micro-batch cost is one batch tokenize scan +
     * model-bounded merges; snapshots are model-sized. Durable state
     * is the snapshot triple — committed ATOMICALLY per tick via
-    * [[TickCommit]] (r18): the merge is NOT idempotent, so the three
-    * independent fixed-path writes this sink used to make carried
+    * [[TickCommit.sink]] (r18): the merge is NOT idempotent, so the
+    * three independent fixed-path writes this sink used to make carried
     * both failure modes the takedown protocol closed — a crash
     * BETWEEN the frame writes persisted a mixed-tick model (bigrams
     * merged, contexts not: corrupt probabilities forever), and a
     * crash after all three persisted but before Spark's commit log
-    * re-merged the batch on replay (double-counted n). A restart
-    * reconstructs from `readLatest("bigrams"|"contexts"|"vocab")`;
-    * a replayed committed tick is skipped whole. */
+    * re-merged the batch on replay (double-counted n). */
   def streamingLmMaintain(batchDocs: DataFrame, stored: TextOps.LmModel,
-                          outPath: String, checkpointDir: String): StreamingQuery = {
-    val spark = batchDocs.sparkSession
-    def pin(m: TextOps.LmModel): TextOps.LmModel = TextOps.LmModel(
-      m.bigrams.localCheckpoint(false),
-      m.contexts.localCheckpoint(false),
-      m.vocab.localCheckpoint(false))
-    var model = pin(stored)
-    batchDocs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, tick: Long) =>
-        TickCommit.bind(spark, outPath, checkpointDir)
-        if (!batch.isEmpty && !TickCommit.isCommitted(spark, outPath, tick)) {
-          val b = batch.localCheckpoint(false) // count fold + scoring
-          val model2 = pin(TextOps.lmModelMerge(model, b))
-          TextOps.lmScoreWith(model2, b)
-            .write.mode("overwrite").parquet(s"$outPath/scores/tick=$tick")
-          TickCommit.stage(spark, outPath, tick, Seq(
-            "bigrams" -> model2.bigrams,
-            "contexts" -> model2.contexts,
-            "vocab" -> model2.vocab))
-          TickCommit.seal(spark, outPath, tick)
-          model = model2
-        }
-        ()
-      }
-      .start()
-  }
+                          outPath: String, checkpointDir: String): StreamingQuery =
+    TickCommit.sink(batchDocs, outPath, checkpointDir, lmFrames("", stored)) {
+      (batch, tick, st) =>
+        val b = batch.localCheckpoint(false) // count fold + scoring
+        val model = pinned(TextOps.lmModelMerge(lmOf("", st), b))
+        TextOps.lmScoreWith(model, b)
+          .write.mode("overwrite").parquet(s"$outPath/scores/tick=$tick")
+        Tick(lmFrames("", model))
+    }
+
+  /** An LM's three count tables under their snapshot names
+    * (`<prefix>bigrams`, `<prefix>contexts`, `<prefix>vocab`), and the
+    * model back from them — how the LM sinks carry a model. */
+  private def lmFrames(prefix: String, m: TextOps.LmModel): Seq[(String, DataFrame)] =
+    Seq(s"${prefix}bigrams" -> m.bigrams, s"${prefix}contexts" -> m.contexts,
+      s"${prefix}vocab" -> m.vocab)
+
+  private def lmOf(prefix: String, st: Map[String, DataFrame]): TextOps.LmModel =
+    TextOps.LmModel(st(s"${prefix}bigrams"), st(s"${prefix}contexts"),
+      st(s"${prefix}vocab"))
+
+  private def pinned(m: TextOps.LmModel): TextOps.LmModel = TextOps.LmModel(
+    m.bigrams.localCheckpoint(false),
+    m.contexts.localCheckpoint(false),
+    m.vocab.localCheckpoint(false))
 
   /** STREAMING importance resampling — q251 live with an ADAPTIVE
     * proposal: the target LM is a STORED artifact (the frozen domain
@@ -2074,42 +1805,22 @@ object StreamOps {
     *
     * Scale: per micro-batch one batch tokenize + model-bounded
     * merges/joins; durable state is the pool snapshot triple via
-    * [[TickCommit]] (r18 — same non-idempotent-merge crash matrix as
-    * [[streamingLmMaintain]]): restart from
-    * `readLatest("pool_bigrams"|"pool_contexts"|"pool_vocab")`;
-    * a replayed committed tick is skipped whole. */
+    * [[TickCommit.sink]] (r18 — same non-idempotent-merge crash matrix
+    * as [[streamingLmMaintain]]). */
   def streamingImportanceResample(batchDocs: DataFrame,
                                   targetModel: TextOps.LmModel,
                                   storedPool: TextOps.LmModel,
                                   outPath: String,
                                   checkpointDir: String): StreamingQuery = {
-    val spark = batchDocs.sparkSession
-    def pin(m: TextOps.LmModel): TextOps.LmModel = TextOps.LmModel(
-      m.bigrams.localCheckpoint(false),
-      m.contexts.localCheckpoint(false),
-      m.vocab.localCheckpoint(false))
-    val target = pin(targetModel)
-    var pool = pin(storedPool)
-    batchDocs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, tick: Long) =>
-        TickCommit.bind(spark, outPath, checkpointDir)
-        if (!batch.isEmpty && !TickCommit.isCommitted(spark, outPath, tick)) {
-          val b = batch.localCheckpoint(false) // count fold + scoring
-          val pool2 = pin(TextOps.lmModelMerge(pool, b))
-          TextOps.importanceVerdicts(target, pool2, b)
-            .write.mode("overwrite").parquet(s"$outPath/verdicts/tick=$tick")
-          TickCommit.stage(spark, outPath, tick, Seq(
-            "pool_bigrams" -> pool2.bigrams,
-            "pool_contexts" -> pool2.contexts,
-            "pool_vocab" -> pool2.vocab))
-          TickCommit.seal(spark, outPath, tick)
-          pool = pool2
-        }
-        ()
-      }
-      .start()
+    val target = pinned(targetModel)
+    TickCommit.sink(batchDocs, outPath, checkpointDir, lmFrames("pool_", storedPool)) {
+      (batch, tick, st) =>
+        val b = batch.localCheckpoint(false) // count fold + scoring
+        val pool = pinned(TextOps.lmModelMerge(lmOf("pool_", st), b))
+        TextOps.importanceVerdicts(target, pool, b)
+          .write.mode("overwrite").parquet(s"$outPath/verdicts/tick=$tick")
+        Tick(lmFrames("pool_", pool))
+    }
   }
 
   /** STREAMING mixture monitor — q296 live: the mixture-realization
@@ -2126,70 +1837,53 @@ object StreamOps {
     * q235 argument; asserted in StreamingSpec across a split with a
     * planted flood on the boundary). State is source-dimension-sized;
     * durable state is the per-tick atomic counts/report snapshot
-    * ([[TickCommit]]); SELF-RESUMES from its own committed counts on
-    * a same-checkpoint restart; replayed committed ticks are skipped
-    * whole. */
+    * ([[TickCommit.sink]]). */
   def streamingMixMonitor(batchDocs: DataFrame, targetWeights: DataFrame,
                           outPath: String, checkpointDir: String,
                           driftPpm: Long = 50000L): StreamingQuery = {
     val spark = batchDocs.sparkSession
+    import spark.implicits._
     val target = targetWeights.select(col("source"), col("w_sqrt"))
       .localCheckpoint(false) // static design dim, pinned once
-    var counts: DataFrame =
-      TickCommit.readLatest(spark, outPath, "counts")
-        .map(_.localCheckpoint(false)).orNull
-    batchDocs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, tick: Long) =>
-        TickCommit.bind(spark, outPath, checkpointDir)
-        if (!batch.isEmpty && !TickCommit.isCommitted(spark, outPath, tick)) {
-          val tickCounts = batch
+    TickCommit.sink(batchDocs, outPath, checkpointDir, Seq("counts" ->
+        Seq.empty[(String, Long)].toDF("source", "realized_tokens"))) {
+      (batch, _, st) =>
+        val counts = st("counts").unionByName(batch
             .select(col("source"),
               size(expr(s"regexp_extract_all(text, '${TextOps.tokenRe}', 0)"))
-                .cast("long").as("n_toks"))
-            .groupBy(col("source"))
-            .agg(sum(col("n_toks")).cast("long").as("realized_tokens"))
-          val counts2 = (if (counts == null) tickCounts
-            else counts.unionByName(tickCounts)
-              .groupBy(col("source"))
-              .agg(sum(col("realized_tokens")).cast("long").as("realized_tokens")))
-            .localCheckpoint(false) // next fold + report
-          // FULL outer (ADVICE-class fix): a source streaming in that
-          // the launch design never listed must surface with target
-          // share 0 and its full realized mass — a left join dropped
-          // it from the report AND from tot_realized, deflating every
-          // other source's denominator, so the exact flood this
-          // monitor promises to flag stayed invisible
-          val joined = target.join(counts2, Seq("source"), "full_outer")
-            .withColumn("realized_tokens",
-              coalesce(col("realized_tokens"), lit(0L)))
-            .withColumn("w_sqrt", coalesce(col("w_sqrt"), lit(0L)))
-          val tot = joined.agg(
-            sum(col("w_sqrt")).cast("long").as("tot_w"),
-            sum(col("realized_tokens")).cast("long").as("tot_realized"))
-          val report = joined.crossJoin(broadcast(tot))
-            .withColumn("target_share_ppm",
-              expr("(w_sqrt * 1000000L) div tot_w").cast("long"))
-            .withColumn("realized_share_ppm",
-              when(col("tot_realized") > 0,
-                expr("(realized_tokens * 1000000L) div tot_realized"))
-                .otherwise(lit(0L)).cast("long"))
-            .withColumn("drift_ppm",
-              (col("realized_share_ppm") - col("target_share_ppm")).cast("long"))
-            .withColumn("drifted", abs(col("drift_ppm")) > driftPpm)
-            .select(col("source"), col("realized_tokens"),
-              col("target_share_ppm"), col("realized_share_ppm"),
-              col("drift_ppm"), col("drifted"))
-            .orderBy(col("source"))
-          TickCommit.stage(spark, outPath, tick, Seq(
-            "counts" -> counts2, "report" -> report))
-          TickCommit.seal(spark, outPath, tick)
-          counts = counts2
-        }
-        ()
-      }
-      .start()
+                .cast("long").as("realized_tokens")))
+          .groupBy(col("source"))
+          .agg(sum(col("realized_tokens")).cast("long").as("realized_tokens"))
+          .localCheckpoint(false) // next fold + report
+        // FULL outer (ADVICE-class fix): a source streaming in that
+        // the launch design never listed must surface with target
+        // share 0 and its full realized mass — a left join dropped
+        // it from the report AND from tot_realized, deflating every
+        // other source's denominator, so the exact flood this
+        // monitor promises to flag stayed invisible
+        val joined = target.join(counts, Seq("source"), "full_outer")
+          .withColumn("realized_tokens",
+            coalesce(col("realized_tokens"), lit(0L)))
+          .withColumn("w_sqrt", coalesce(col("w_sqrt"), lit(0L)))
+        val tot = joined.agg(
+          sum(col("w_sqrt")).cast("long").as("tot_w"),
+          sum(col("realized_tokens")).cast("long").as("tot_realized"))
+        val report = joined.crossJoin(broadcast(tot))
+          .withColumn("target_share_ppm",
+            expr("(w_sqrt * 1000000L) div tot_w").cast("long"))
+          .withColumn("realized_share_ppm",
+            when(col("tot_realized") > 0,
+              expr("(realized_tokens * 1000000L) div tot_realized"))
+              .otherwise(lit(0L)).cast("long"))
+          .withColumn("drift_ppm",
+            (col("realized_share_ppm") - col("target_share_ppm")).cast("long"))
+          .withColumn("drifted", abs(col("drift_ppm")) > driftPpm)
+          .select(col("source"), col("realized_tokens"),
+            col("target_share_ppm"), col("realized_share_ppm"),
+            col("drift_ppm"), col("drifted"))
+          .orderBy(col("source"))
+        Tick(Seq("counts" -> counts, "report" -> report))
+    }
   }
 
   /** STREAMING referential audit — q306 live: the per-load DQ pass as
@@ -2204,12 +1898,13 @@ object StreamOps {
     * TICK with the offending rows already isolated for replay-safe
     * re-ingest once the parent lands. Counts are additive ⇒ stream ≡
     * batch (the final ledger equals q306's fk rows over everything
-    * streamed); TickCommit ledger, bind, self-resume, replay guard. */
+    * streamed); the ledger commits through [[TickCommit.sink]]. */
   def streamingReferentialAudit(facts: DataFrame, orders: DataFrame,
                                 part: DataFrame, supplier: DataFrame,
                                 outPath: String,
                                 checkpointDir: String): StreamingQuery = {
     val spark = facts.sparkSession
+    import spark.implicits._
     val edges: Seq[(String, String, DataFrame, String)] = Seq(
       ("fk lineitem.l_orderkey -> orders.o_orderkey", "l_orderkey",
         orders.select(col("o_orderkey")).localCheckpoint(false), "o_orderkey"),
@@ -2217,46 +1912,35 @@ object StreamOps {
         part.select(col("p_partkey")).localCheckpoint(false), "p_partkey"),
       ("fk lineitem.l_suppkey -> supplier.s_suppkey", "l_suppkey",
         supplier.select(col("s_suppkey")).localCheckpoint(false), "s_suppkey"))
-    var ledger: DataFrame = TickCommit.readLatest(spark, outPath, "ledger")
-      .map(_.localCheckpoint(false)).orNull
-    facts.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, tick: Long) =>
-        TickCommit.bind(spark, outPath, checkpointDir)
-        if (!batch.isEmpty && !TickCommit.isCommitted(spark, outPath, tick)) {
-          val b = batch.localCheckpoint(false) // three edges read it
-          val perEdge = edges.map { case (name, ck, parent, pk) =>
-            val present = b.filter(col(ck).isNotNull)
-              .localCheckpoint(false) // row count + anti-join + quarantine
-            val orphans = present.join(parent, col(ck) === col(pk), "left_anti")
-              .localCheckpoint(false) // count + quarantine write
-            orphans.write.mode("overwrite")
-              .parquet(s"$outPath/quarantine/edge=${ck}/tick=$tick")
-            present.agg(count(lit(1)).cast("long").as("n_rows"))
-              .crossJoin(orphans.agg(count(lit(1)).cast("long")
-                .as("n_violations")))
-              .select(lit(name).as("check_name"), col("n_rows"),
-                col("n_violations"))
-          }.reduce(_ unionByName _)
-          val ledger2 = (if (ledger == null) perEdge
-            else ledger
-              .select(col("check_name"), col("n_rows"), col("n_violations"))
-              .unionByName(perEdge)
-              .groupBy(col("check_name"))
-              .agg(sum(col("n_rows")).cast("long").as("n_rows"),
-                   sum(col("n_violations")).cast("long").as("n_violations")))
-            .withColumn("ok", col("n_violations") === 0L)
-            .select(col("check_name"), col("n_rows"), col("n_violations"),
-              col("ok"))
-            .localCheckpoint(false) // next fold + snapshot
-          TickCommit.stage(spark, outPath, tick, Seq("ledger" -> ledger2))
-          TickCommit.seal(spark, outPath, tick)
-          ledger = ledger2
-        }
-        ()
-      }
-      .start()
+    TickCommit.sink(facts, outPath, checkpointDir, Seq("ledger" ->
+        Seq.empty[(String, Long, Long, Boolean)]
+          .toDF("check_name", "n_rows", "n_violations", "ok"))) {
+      (batch, tick, st) =>
+        val b = batch.localCheckpoint(false) // three edges read it
+        val perEdge = edges.map { case (name, ck, parent, pk) =>
+          val present = b.filter(col(ck).isNotNull)
+            .localCheckpoint(false) // row count + anti-join + quarantine
+          val orphans = present.join(parent, col(ck) === col(pk), "left_anti")
+            .localCheckpoint(false) // count + quarantine write
+          orphans.write.mode("overwrite")
+            .parquet(s"$outPath/quarantine/edge=${ck}/tick=$tick")
+          present.agg(count(lit(1)).cast("long").as("n_rows"))
+            .crossJoin(orphans.agg(count(lit(1)).cast("long")
+              .as("n_violations")))
+            .select(lit(name).as("check_name"), col("n_rows"),
+              col("n_violations"))
+        }.reduce(_ unionByName _)
+        Tick(Seq("ledger" -> st("ledger")
+          .select(col("check_name"), col("n_rows"), col("n_violations"))
+          .unionByName(perEdge)
+          .groupBy(col("check_name"))
+          .agg(sum(col("n_rows")).cast("long").as("n_rows"),
+               sum(col("n_violations")).cast("long").as("n_violations"))
+          .withColumn("ok", col("n_violations") === 0L)
+          .select(col("check_name"), col("n_rows"), col("n_violations"),
+            col("ok"))
+          .localCheckpoint(false))) // next fold + snapshot
+    }
   }
 
   /** STREAMING training-progress monitor — q298 live: a training run
@@ -2280,14 +1964,13 @@ object StreamOps {
     * prunes to the spans the tick actually touched); the hw dim is
     * nShards rows and BROADCASTS into the delta join; state writes
     * are source/shard-dimension-sized. Durable state is the per-tick
-    * atomic (hw, consumed, report) triple via [[TickCommit]];
-    * SELF-RESUMES from its committed snapshots; replayed committed
-    * ticks are skipped whole. */
+    * atomic (hw, consumed, report) triple via [[TickCommit.sink]]. */
   def streamingLoaderProgress(stepEvents: DataFrame, documents: DataFrame,
                               outPath: String, checkpointDir: String,
                               budgetMult: Long = 4L, maxEpochs: Long = 4L,
                               nShards: Int = 8, seqLen: Int = 2048): StreamingQuery = {
     val spark = stepEvents.sparkSession
+    import spark.implicits._
     val manifest = CorpusOps.epochPackManifest(documents, budgetMult,
         maxEpochs, nShards, seqLen)
       .select(col("shard"), col("source"), col("n_toks"), col("cum"),
@@ -2296,60 +1979,45 @@ object StreamOps {
     val totals = manifest.groupBy(col("source"))
       .agg(sum(col("n_toks")).cast("long").as("total_toks"))
       .localCheckpoint(false)
-    var hw: DataFrame = TickCommit.readLatest(spark, outPath, "hw")
-      .map(_.localCheckpoint(false)).orNull
-    var consumed: DataFrame = TickCommit.readLatest(spark, outPath, "consumed")
-      .map(_.localCheckpoint(false)).orNull
-    stepEvents.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, tick: Long) =>
-        TickCommit.bind(spark, outPath, checkpointDir)
-        if (!batch.isEmpty && !TickCommit.isCommitted(spark, outPath, tick)) {
-          val bHw = batch.groupBy(col("shard"))
-            .agg((max(col("step")) + 1L).cast("long").as("b_hw"))
-          val hwPair = (if (hw == null)
-              bHw.select(col("shard"), lit(0L).as("old_hw"), col("b_hw").as("new_hw"))
-            else hw.join(bHw, Seq("shard"), "full_outer")
-              .select(col("shard"),
-                coalesce(col("hw_step"), lit(0L)).as("old_hw"),
-                greatest(coalesce(col("hw_step"), lit(0L)),
-                  coalesce(col("b_hw"), lit(0L))).as("new_hw")))
-            .localCheckpoint(false) // delta join + the hw snapshot
-          def consumedAt(s: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-            greatest(lit(0L), least(col("cum"), s * seqLen) -
-              (col("cum") - col("n_toks")))
-          val delta = manifest.join(broadcast(hwPair), "shard")
-            .filter(col("end_seq") >= col("old_hw") &&
-              col("start_seq") < col("new_hw"))
-            .withColumn("d",
-              (consumedAt(col("new_hw")) - consumedAt(col("old_hw"))).cast("long"))
-            .groupBy(col("source"))
-            .agg(sum(col("d")).cast("long").as("consumed_toks"))
-          val consumed2 = (if (consumed == null) delta
-            else consumed.unionByName(delta)
-              .groupBy(col("source"))
-              .agg(sum(col("consumed_toks")).cast("long").as("consumed_toks")))
-            .localCheckpoint(false) // next fold + report
-          val hw2 = hwPair.select(col("shard"), col("new_hw").as("hw_step"))
-            .localCheckpoint(false)
-          val report = totals.join(consumed2, Seq("source"), "left_outer")
-            .withColumn("consumed_toks", coalesce(col("consumed_toks"), lit(0L)))
-            .withColumn("consumed_ppm",
-              expr("(consumed_toks * 1000000L) div total_toks").cast("long"))
-            .withColumn("done", col("consumed_toks") === col("total_toks"))
-            .select(col("source"), col("total_toks"), col("consumed_toks"),
-              col("consumed_ppm"), col("done"))
-            .orderBy(col("source"))
-          TickCommit.stage(spark, outPath, tick, Seq(
-            "hw" -> hw2, "consumed" -> consumed2, "report" -> report))
-          TickCommit.seal(spark, outPath, tick)
-          hw = hw2
-          consumed = consumed2
-        }
-        ()
-      }
-      .start()
+    TickCommit.sink(stepEvents, outPath, checkpointDir, Seq(
+        "hw" -> Seq.empty[(Long, Long)].toDF("shard", "hw_step"),
+        "consumed" -> Seq.empty[(String, Long)].toDF("source", "consumed_toks"))) {
+      (batch, _, st) =>
+        val bHw = batch.groupBy(col("shard"))
+          .agg((max(col("step")) + 1L).cast("long").as("b_hw"))
+        val hwPair = st("hw").join(bHw, Seq("shard"), "full_outer")
+          .select(col("shard"),
+            coalesce(col("hw_step"), lit(0L)).as("old_hw"),
+            greatest(coalesce(col("hw_step"), lit(0L)),
+              coalesce(col("b_hw"), lit(0L))).as("new_hw"))
+          .localCheckpoint(false) // delta join + the hw snapshot
+        def consumedAt(s: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+          greatest(lit(0L), least(col("cum"), s * seqLen) -
+            (col("cum") - col("n_toks")))
+        val delta = manifest.join(broadcast(hwPair), "shard")
+          .filter(col("end_seq") >= col("old_hw") &&
+            col("start_seq") < col("new_hw"))
+          .withColumn("d",
+            (consumedAt(col("new_hw")) - consumedAt(col("old_hw"))).cast("long"))
+          .groupBy(col("source"))
+          .agg(sum(col("d")).cast("long").as("consumed_toks"))
+        val consumed = st("consumed").unionByName(delta)
+          .groupBy(col("source"))
+          .agg(sum(col("consumed_toks")).cast("long").as("consumed_toks"))
+          .localCheckpoint(false) // next fold + report
+        val report = totals.join(consumed, Seq("source"), "left_outer")
+          .withColumn("consumed_toks", coalesce(col("consumed_toks"), lit(0L)))
+          .withColumn("consumed_ppm",
+            expr("(consumed_toks * 1000000L) div total_toks").cast("long"))
+          .withColumn("done", col("consumed_toks") === col("total_toks"))
+          .select(col("source"), col("total_toks"), col("consumed_toks"),
+            col("consumed_ppm"), col("done"))
+          .orderBy(col("source"))
+        Tick(Seq(
+          "hw" -> hwPair.select(col("shard"), col("new_hw").as("hw_step"))
+            .localCheckpoint(false),
+          "consumed" -> consumed, "report" -> report))
+    }
   }
 
   /** STREAMING incremental entity resolution — q226's alias-store
@@ -2376,44 +2044,27 @@ object StreamOps {
     * groups); the store snapshot write is dim-sized, the same
     * overwrite cadence as the q80 streaming MV maintain. Durable
     * state is the per-tick ATOMIC (store, dim) snapshot pair
-    * ([[TickCommit]], r18): the old contract snapshotted only the
+    * ([[TickCommit.sink]], r18): the old contract snapshotted only the
     * alias store, so a restart silently FORGOT the streamed records'
     * names (the grown dim lived in executor memory alone — a later
     * record within match distance of an earlier streamed record could
     * no longer bridge), and an unguarded replay re-unioned the batch
-    * into the dim (duplicate dim rows inflate n_members). After a
-    * restart, pass `readLatest("store")` as `storedAliases` and
-    * `readLatest("dim")` as `storedDim`; a replayed committed tick is
-    * skipped whole. */
+    * into the dim (duplicate dim rows inflate n_members). */
   def streamingEntityResolution(batchRecords: DataFrame, storedAliases: DataFrame,
                                 storedDim: DataFrame, outPath: String,
-                                checkpointDir: String): StreamingQuery = {
-    val spark = batchRecords.sparkSession
-    var aliases = storedAliases.localCheckpoint(false)
-    var dim = storedDim.localCheckpoint(false)
-    batchRecords.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, tick: Long) =>
-        TickCommit.bind(spark, outPath, checkpointDir)
-        if (!batch.isEmpty && !TickCommit.isCommitted(spark, outPath, tick)) {
-          val b = batch.localCheckpoint(false) // edges + verdict join + dim growth
-          val resolved = DedupOps.incrementalEntityGroups(aliases, dim, b)
-            .localCheckpoint(false) // verdict write + store update
-          resolved.join(b.select(col("p_partkey")), Seq("p_partkey"), "left_semi")
-            .write.mode("overwrite").parquet(s"$outPath/verdicts/tick=$tick")
-          val aliases2 = resolved.select(col("p_partkey"), col("entity_id"),
-            col("n_members"), col("canonical_name")).localCheckpoint(false)
-          val dim2 = dim.unionByName(
-              b.select(col("p_partkey"), col("p_name"), col("p_brand")))
-            .localCheckpoint(false)
-          TickCommit.stage(spark, outPath, tick, Seq(
-            "store" -> aliases2, "dim" -> dim2))
-          TickCommit.seal(spark, outPath, tick)
-          aliases = aliases2; dim = dim2
-        }
-        ()
-      }
-      .start()
-  }
+                                checkpointDir: String): StreamingQuery =
+    TickCommit.sink(batchRecords, outPath, checkpointDir, Seq(
+        "store" -> storedAliases, "dim" -> storedDim)) { (batch, tick, st) =>
+      val b = batch.localCheckpoint(false) // edges + verdict join + dim growth
+      val resolved = DedupOps.incrementalEntityGroups(st("store"), st("dim"), b)
+        .localCheckpoint(false) // verdict write + store update
+      resolved.join(b.select(col("p_partkey")), Seq("p_partkey"), "left_semi")
+        .write.mode("overwrite").parquet(s"$outPath/verdicts/tick=$tick")
+      Tick(Seq(
+        "store" -> resolved.select(col("p_partkey"), col("entity_id"),
+          col("n_members"), col("canonical_name")).localCheckpoint(false),
+        "dim" -> st("dim").unionByName(
+            b.select(col("p_partkey"), col("p_name"), col("p_brand")))
+          .localCheckpoint(false)))
+    }
 }

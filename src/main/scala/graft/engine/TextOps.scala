@@ -1950,8 +1950,8 @@ object TextOps {
     * vocabulary application (VERDICT r7 #3). Both stored relations are
     * distinct-token-sized — millions of rows at 100 TB, never
     * corpus-sized — and keyed by (rounds, the documents' identity), so
-    * a restarted session reloads the vocabulary with zero training
-    * rounds. */
+    * later queries in the same process reload the vocabulary with zero
+    * training rounds. */
   def bpeMergesFor(documents: DataFrame, rounds: Int = 5): DataFrame =
     bpeStateFor(documents, rounds)._1.orderBy(col("round"))
 

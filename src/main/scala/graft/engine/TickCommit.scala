@@ -2,6 +2,7 @@ package graft.engine
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Atomic, tick-versioned snapshot commits for the streaming sinks
   * that apply NON-IDEMPOTENT corrections (LM count subtraction, card
@@ -47,8 +48,78 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * directory, so disk holds at most the committed tick plus the one
   * being staged. The marker create and directory listing are pure
   * filesystem metadata operations.
+  *
+  * Every stateful stream sink runs this protocol through [[sink]],
+  * the one commit loop; nothing else calls bind/stage/seal.
   */
 object TickCommit {
+  /** What one tick of a [[sink]] hands back: every frame to stage
+    * under `snap/tick=N` (each carried frame under its carried name,
+    * plus any derived snapshot such as a report), and a check that
+    * runs after the stage and before the seal — where a probe re-reads
+    * the persisted bytes ([[readStaged]]) and the ledger recording it
+    * is written. */
+  final case class Tick(staged: Seq[(String, DataFrame)],
+                        check: () => Unit = () => ())
+
+  /** The commit loop of every stateful stream sink: a `foreachBatch`
+    * query over `source` whose state is the set of carried frames
+    * named by `initial`.
+    *
+    * Restart contract (the one place it is written): at construction
+    * each carried frame loads from the largest committed tick under
+    * `outPath` when there is one, and is the caller's `initial` frame
+    * otherwise. So a sink rebuilt with its ORIGINAL arguments over the
+    * same outPath and checkpoint continues from the last sealed tick;
+    * a crashed tick (staged, never sealed) is invisible and replays
+    * against the state before it; and a tick re-delivered after its
+    * seal (the crash window before Spark's commit log) is skipped
+    * whole, its side outputs and ledger untouched. A run continued
+    * under a fresh checkpoint takes a fresh outPath seeded by
+    * [[resumeInto]] ([[bind]] refuses the other way round).
+    *
+    * Per micro-batch: [[bind]]; then, unless the batch is empty or the
+    * tick is already sealed, `step(batch, tick, carried)` writes the
+    * tick's side outputs (`…/tick=N`, overwrite, so an at-least-once
+    * replay rewrites its own partition) and returns the [[Tick]];
+    * [[stage]]; the tick's check; [[seal]]; and only then do the
+    * carried frames advance to the staged frames of the same names, so
+    * an in-JVM retry recomputes from the pre-tick state. Every carried
+    * name must be staged each tick — the carried state IS the snapshot.
+    *
+    * Cost: one `localCheckpoint` per initial or restored frame at
+    * construction, and no Spark job per tick beyond what `step` runs
+    * and the stage writes. */
+  def sink(source: DataFrame, outPath: String, checkpointDir: String,
+           initial: Seq[(String, DataFrame)])(
+      step: (DataFrame, Long, Map[String, DataFrame]) => Tick): StreamingQuery = {
+    val spark = source.sparkSession
+    val from = latestTick(spark, outPath)
+    var carried: Map[String, DataFrame] = initial.map { case (name, df) =>
+      name -> from.fold(df)(t => spark.read.parquet(s"${snapDir(outPath, t)}/$name"))
+        .localCheckpoint(false)
+    }.toMap
+    source.writeStream
+      .outputMode("append")
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, tick: Long) =>
+        bind(spark, outPath, checkpointDir)
+        if (!batch.isEmpty && !isCommitted(spark, outPath, tick)) {
+          val t = step(batch, tick, carried)
+          val staged = t.staged.toMap
+          val unstaged = carried.keySet -- staged.keySet
+          require(unstaged.isEmpty,
+            s"TickCommit: tick $tick under $outPath stages no ${unstaged.mkString(", ")}")
+          stage(spark, outPath, tick, t.staged)
+          t.check()
+          seal(spark, outPath, tick)
+          carried = staged.filter { case (name, _) => carried.contains(name) }
+        }
+        ()
+      }
+      .start()
+  }
+
   private def fsOf(spark: SparkSession, p: Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -164,8 +235,8 @@ object TickCommit {
       .sorted.lastOption
   }
 
-  /** One store from the latest COMMITTED snapshot — the restart
-    * loader every caller of the non-idempotent sinks must use. */
+  /** One store from the latest COMMITTED snapshot — how a reader sees
+    * a sink's current state ([[sink]] restores from the same tick). */
   def readLatest(spark: SparkSession, outPath: String,
                  name: String): Option[DataFrame] =
     latestTick(spark, outPath)

@@ -284,7 +284,7 @@ class ArtifactsSpec extends SparkSpec {
     val warm = pass()
     assert(Artifacts.builds == built, "a warm pass must build no artifact")
     assert(warm == cold, "warm rows must equal the cold pass")
-    Artifacts.releaseAll() // what a restarted session over the same warehouse sees
+    Artifacts.releaseAll() // in-session values dropped; the catalog tables stay
     val restarted = pass()
     assert(Artifacts.builds == built, "a released session must reload every artifact, not rebuild")
     assert(restarted == cold, "rows after releaseAll must equal the cold pass")
@@ -317,7 +317,8 @@ class ArtifactsSpec extends SparkSpec {
       s"an Artifacts.memo key that is not an Artifacts.nameFor:\n${looseMemoKeys.mkString("\n")}")
     // operators read their own stored inputs: the only Option dual
     // paths left are the manifest-certificate operators (a staleness
-    // check on a caller-supplied manifest) and StreamOps' carried state
+    // check on a caller-supplied manifest); a stream sink's carried
+    // state resumes from its own committed snapshot
     val certOps = Set("takedownApply", "takedownApplyFrom", "takedownPropagation",
       "docRetentionSweep")
     val defRe = """\bdef (\w+)""".r
@@ -325,10 +326,16 @@ class ArtifactsSpec extends SparkSpec {
       defRe.findFirstMatchIn(t).map(_.group(1)).getOrElse(d) }.tail
     val storedOption = """\bstored[A-Z]\w*: Option\[""".r
     val strayOptions = code.zip(enclosingDef).collect {
-      case ((f, n, t), d) if storedOption.findFirstIn(t).isDefined && f != "StreamOps.scala" &&
+      case ((f, n, t), d) if storedOption.findFirstIn(t).isDefined &&
           !(certOps(d) && t.contains("storedManifest:")) => s"$f:$n ($d): $t"
     }
     assert(strayOptions.isEmpty, s"a stored*: Option dual path:\n${strayOptions.mkString("\n")}")
+    // one tick-commit loop: only TickCommit.sink drives the protocol
+    val tickSteps = offenders { case (f, _, t) =>
+      f != "TickCommit.scala" &&
+        """TickCommit\.(?:bind|isCommitted|stage|seal)\(""".r.findFirstIn(t).isDefined }
+    assert(tickSteps.isEmpty,
+      s"a tick-commit step outside TickCommit.sink:\n${tickSteps.mkString("\n")}")
     // store keys carry parameters and input identity, not a caller tag
     // (the PQ serving pointer is mutable state a tag names)
     val keyCall = """Artifacts\.(?:table|ensure|nameFor|memo)\(""".r

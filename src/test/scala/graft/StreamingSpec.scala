@@ -1346,19 +1346,16 @@ class StreamingSpec extends SparkSpec {
     assert(TickCommit.readLatest(spark, out, "removed").get.collect()
       .map(_.getLong(0)).toSet == Set(3L, 20L),
       "the restart queue must NOT contain the crashed tick's id")
-    // restart: reconstruct the monitor from the committed snapshot
-    // alone and replay the crashed tick's batch
-    def committed(p: String) =
-      TickCommit.readLatest(spark, out, p).get.localCheckpoint(false)
+    // restart: seed a fresh outPath from the committed snapshot and
+    // rebuild the monitor with its original arguments — every store
+    // and the queue load from the seed — then replay the crashed
+    // tick's batch
     val out2 = java.nio.file.Files.createTempDirectory("graft_stc_out2_").toString + "/td"
     val ckpt2 = java.nio.file.Files.createTempDirectory("graft_stc_ckpt2_").toString
+    TickCommit.resumeInto(spark, out, out2)
     val input2 = MemoryStream[Long]
     val q2 = StreamOps.streamingTakedownStores(
-      input2.toDS().toDF("doc_id"), docs,
-      TextOps.LmModel(committed("lm_bigrams"), committed("lm_contexts"),
-        committed("lm_vocab")),
-      committed("card_state"), committed("fps"), committed("sigs"),
-      out2, ckpt2, storedRemoved = Some(committed("removed")))
+      input2.toDS().toDF("doc_id"), docs, lm0, card0, fp0, sigs0, out2, ckpt2)
     try {
       input2.addData(41L) // the crashed tick, re-delivered
       q2.processAllAvailable()
@@ -1616,16 +1613,12 @@ class StreamingSpec extends SparkSpec {
     // the cumulative removal queue reload; tick 2 then re-submits an
     // already-purged PRE-RESTART id, which must stay an honest no-op
     // certified against the full queue
-    def snap1(p: String) = graft.engine.TickCommit.readLatest(spark, out, p)
-      .get.localCheckpoint(false)
     val out2 = java.nio.file.Files.createTempDirectory("graft_ssm_out2_").toString + "/serve"
     val ckpt2 = java.nio.file.Files.createTempDirectory("graft_ssm_ckpt2_").toString
+    graft.engine.TickCommit.resumeInto(spark, out, out2)
     val input2 = MemoryStream[Long]
     val q2 = StreamOps.streamingTakedownServe(input2.toDS().toDF("doc_id"),
-      snap1("postings"), snap1("doclens"), snap1("vectors"),
-      SimilarityOps.IvfIndex(snap1("assign"), idx.centers, idx.nLists),
-      cb, snap1("sigs"), snap1("codes"), ivfPqCb, out2, ckpt2,
-      storedRemoved = Some(snap1("removed")))
+      postings, doclens, emb, idx, cb, sigs, ivfPqCodes, ivfPqCb, out2, ckpt2)
     try {
       input2.addData((t2 :+ t1.head).toSeq: _*)
       q2.processAllAvailable()
@@ -2324,6 +2317,114 @@ class StreamingSpec extends SparkSpec {
     val assigned = spark.read.parquet(s"$out/assign").count()
     assert(assigned == fA.length + fC.length,
       "the replayed tick's assign partition is untouched, the new tick appends")
+  }
+
+  test("a stateful sink rebuilt with its original arguments resumes from its committed snapshot") {
+    // Per sink: run tick 0, stop the query, build the sink AGAIN with
+    // its ORIGINAL constructor arguments over the same outPath and
+    // checkpoint, feed tick 1 — every committed snapshot and every
+    // tick-1 side output must equal an uninterrupted two-tick run's.
+    // One row per carried-state shape; streamingIvfMaintain is the
+    // control that reloaded its own snapshot all along.
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.{DataFrame, Encoder}
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.streaming.StreamingQuery
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import spark.implicits._
+    import graft.engine.{DedupOps, EventOps, RetrievalOps, SimilarityOps, StreamOps,
+      Tables, TemporalOps, TextOps}
+    // a fresh feed and the sink over it: (add tick i's rows, build(out, ckpt))
+    type Run = (Int => Unit, (String, String) => StreamingQuery)
+    def row[T: Encoder](ticks: Seq[T]*)(
+        build: (DataFrame, String, String) => StreamingQuery): () => Run = () => {
+      val in = MemoryStream[T]
+      (i => in.addData(ticks(i)), (out, ck) => build(in.toDF(), out, ck))
+    }
+    val docs = Tables.documents(spark, sf)
+    val emb = Tables.embeddings(spark, sf)
+    val index = SimilarityOps.ivfIndexFor(emb)
+    val ev = Tables.events(spark, sf).localCheckpoint(false)
+    val postings = RetrievalOps.bm25PostingsFor(docs).localCheckpoint(false)
+    val doclens = RetrievalOps.bm25DocLengthsFor(docs).localCheckpoint(false)
+    val sketches = DedupOps.docSketchesFor(docs).localCheckpoint(false)
+    val rmUsers = ev.filter(pmod(col("user_id"), lit(5)) === 2)
+      .select(col("user_id")).distinct().collect().map(_.getLong(0)).sorted.toSeq
+    val userStores = Seq(TemporalOps.sessionPackManifest(ev), EventOps.sessionize(ev),
+      EventOps.funnel(ev), EventOps.retentionCohorts(ev), EventOps.eventTransitions(ev),
+      EventOps.lastTouchAttribution(ev)).map(_.localCheckpoint(false))
+    def vecs(keep: org.apache.spark.sql.Column, base: Long) = emb.filter(keep)
+      .select(col("vec_id") + lit(base), col("embedding"))
+      .as[(Long, Array[Float])].collect().sortBy(_._1).toSeq
+    val dim = emb.select(org.apache.spark.sql.functions.size(col("embedding")))
+      .head().getInt(0)
+    // tick 0: a far cluster one split separates from its landing
+    // list's members; tick 1: enough ordinary rows that the flood child
+    // clears the gate, so no fit runs after the restart
+    val flood = (0 until 100).map(i =>
+      (5600000L + i, Array.tabulate(dim)(d => 100.0f + (i * dim + d) * 1e-4f)))
+    val lm0 = TextOps.lmModel(docs.select(col("doc_id"), col("text")))
+    val k = "a restartable keeper document about orchard irrigation " +
+      "channels and the spring pruning of old pear trees"
+    val rows: Seq[(String, () => Run)] = Seq(
+      "streamingTakedown" -> row(Seq(3L, 20L), Seq(3L, 41L)) { (src, out, ck) =>
+        StreamOps.streamingTakedown(src.toDF("doc_id"), postings, doclens, sketches,
+          out, ck) },
+      "streamingUserTakedown" -> row(rmUsers.take(2), rmUsers.drop(2) :+ rmUsers.head) {
+        (src, out, ck) =>
+          val Seq(mani, sess, fun, ret, trans, attr) = userStores
+          StreamOps.streamingUserTakedown(src.toDF("user_id"), ev, mani, sess, fun, ret,
+            trans, attr, out, ck) },
+      "streamingIvfRebalance" -> row(flood, vecs(col("vec_id") % 5 =!= 0, 5700000L)) { (src, out, ck) =>
+        StreamOps.streamingIvfRebalance(src.toDF("vec_id", "embedding"), index, out, ck) },
+      "streamingLmMaintain" -> row(Seq((9100011L, "zzqp alpha beta"),
+          (9100012L, "plain older text")), Seq((9100013L, "zzqp alpha beta"))) {
+        (src, out, ck) =>
+          StreamOps.streamingLmMaintain(src.toDF("doc_id", "text"), lm0, out, ck) },
+      "streamingIngestTick" -> row(Seq((9400011L, k)),
+          Seq((9400012L, k + " extras"), (9400013L, k))) { (src, out, ck) =>
+        StreamOps.streamingIngestTick(src.toDF("doc_id", "text"),
+          DedupOps.fingerprintStore(docs), DedupOps.minhashSignatures(docs), out, ck) },
+      "streamingIvfMaintain" -> row(vecs(col("vec_id") % 11 === 1, 5800000L),
+          vecs(col("vec_id") % 11 === 3, 5900000L)) {
+        (src, out, ck) =>
+          StreamOps.streamingIvfMaintain(src.toDF("vec_id", "embedding"), index, out, ck) })
+    // every parquet output of tick 1 — the committed snapshot frames
+    // and the tick-partitioned side outputs — as sorted row strings
+    def tickOne(out: String): Map[String, Seq[String]] = {
+      val root = java.nio.file.Paths.get(out)
+      java.nio.file.Files.walk(root).iterator().asScala.toSeq
+        .filter(p => java.nio.file.Files.exists(p.resolve("_SUCCESS")))
+        .map(p => root.relativize(p).toString)
+        .filter(_.split('/').contains("tick=1"))
+        .map(d => d -> spark.read.parquet(s"$out/$d").collect().map(_.toString).sorted.toSeq)
+        .toMap
+    }
+    def dirs() = {
+      val d = java.nio.file.Files.createTempDirectory("graft_rsr_").toString
+      (s"$d/out", s"$d/ckpt")
+    }
+    val diverged = rows.flatMap { case (name, mk) =>
+      val (feedU, buildU) = mk()
+      val (outU, ckU) = dirs()
+      val qU = buildU(outU, ckU)
+      try { feedU(0); qU.processAllAvailable(); feedU(1); qU.processAllAvailable() }
+      finally qU.stop()
+      if (name == "streamingIvfRebalance") // the restored index is not the constructor's
+        assert(Seq(0, 1).map(t => spark.read.parquet(s"$outU/splits/tick=$t").count()) ==
+          Seq(2L, 0L), "the flood splits its landing list at tick 0, nothing at tick 1")
+      val (feedR, buildR) = mk()
+      val (outR, ckR) = dirs()
+      val q0 = buildR(outR, ckR)
+      try { feedR(0); q0.processAllAvailable() } finally q0.stop()
+      val q1 = buildR(outR, ckR) // the restart: original arguments again
+      try { feedR(1); q1.processAllAvailable() } finally q1.stop()
+      val (u, r) = (tickOne(outU), tickOne(outR))
+      assert(u.keySet.exists(_.startsWith("snap/tick=1/")), s"$name committed tick 1: ${u.keySet}")
+      (u.keySet ++ r.keySet).toSeq.sorted.filter(p => u.get(p) != r.get(p)).map(p => s"$name $p")
+    }
+    assert(diverged.isEmpty,
+      s"restarted sinks diverged from the uninterrupted run:\n${diverged.mkString("\n")}")
   }
 
   test("TickCommit refuses to seal backwards against a later committed tick") {

@@ -41,36 +41,26 @@ object AggregateOps {
   /** Exact interpolated percentiles (generalizes the reference's
     * approxQuantile median, app/machine_learning_models.py:237-238).
     * `percentile` sorts per-group values exactly; at 100 TB swap in
-    * [[approxQuantileRow]] (Greenwald-Khanna sketch). */
+    * [[approxQuantiles]] (Greenwald-Khanna sketch). */
   def quantiles(orders: DataFrame): DataFrame =
     orders.agg(
       expr("percentile(o_totalprice, 0.25)").as("p25"),
       expr("percentile(o_totalprice, 0.5)").as("p50"),
       expr("percentile(o_totalprice, 0.75)").as("p75"))
 
-  /** Sketch-based quantiles — the reference's actual operator (A6). */
-  def approxQuantileRow(orders: DataFrame, relErr: Double = 0.001): DataFrame = {
+  /** Sketch-based quantiles — the reference's actual operator (A6):
+    * p25/p50/p75 of `o_totalprice` from Spark's Greenwald-Khanna
+    * summary at relative error `relErr`. Production runs 0.001. The
+    * oracle form (q19) pins `relErr` below 1/(2n), so the sketch's
+    * ±εn rank window collapses to a single rank and the answer is the
+    * unique order statistic at rank ⌈p·n⌉, which DuckDB names
+    * directly as `quantile_disc`. That setting is deterministic by
+    * construction (no rounding-bucket straddle risk) and costs GK its
+    * compression (all n samples survive); the sketch is still the
+    * operator under test — a broken summary would return a wrong
+    * element and hash-mismatch. */
+  def approxQuantiles(orders: DataFrame, relErr: Double): DataFrame = {
     import orders.sparkSession.implicits._
-    val Array(p25, p50, p75) =
-      orders.stat.approxQuantile("o_totalprice", Array(0.25, 0.5, 0.75), relErr)
-    Seq((p25, p50, p75)).toDF("p25", "p50", "p75")
-  }
-
-  /** The ORACLE form of the sketch quantiles (q19): same GK code path
-    * as [[approxQuantileRow]], but with the relative error pinned
-    * below 1/(2n) so the sketch's ±εn rank window collapses to a
-    * single rank — the answer is then the unique order statistic at
-    * rank ⌈p·n⌉, which DuckDB names directly as `quantile_disc`.
-    * Deterministic by construction (no rounding-bucket straddle risk);
-    * the sketch is still the operator under test — a broken summary
-    * would return a wrong element and hash-mismatch. This tolerance
-    * costs GK its compression (all n samples survive), so it is the
-    * CONFORMANCE setting: production uses [[approxQuantileRow]] at
-    * 0.001, whose answer this form brackets. */
-  def approxQuantileOracle(orders: DataFrame): DataFrame = {
-    import orders.sparkSession.implicits._
-    val n = orders.count()
-    val relErr = 0.49 / math.max(n, 1L)
     val Array(p25, p50, p75) =
       orders.stat.approxQuantile("o_totalprice", Array(0.25, 0.5, 0.75), relErr)
     Seq((p25, p50, p75)).toDF("p25", "p50", "p75")

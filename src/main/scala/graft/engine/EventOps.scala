@@ -920,7 +920,7 @@ object EventOps {
       .na.fill(0L, Seq("d", "a"))
     val retRows = retentionStore
       .select(col("cohort_week"), col("week_offset"), col("n_active"))
-      .join(broadcast(cellDelta), Seq("cohort_week", "week_offset"),
+      .join(cellDelta, Seq("cohort_week", "week_offset"),
         "full_outer")
       .na.fill(0L, Seq("n_active", "d", "a"))
       .select(concat(col("cohort_week").cast("string"), lit(":"),
@@ -935,7 +935,7 @@ object EventOps {
       .na.fill(0L, Seq("d", "a"))
     val sizeRows = retentionStore.filter(col("week_offset") === 0)
       .select(col("cohort_week"), col("n_active"))
-      .join(broadcast(sizeDelta), Seq("cohort_week"), "full_outer")
+      .join(sizeDelta, Seq("cohort_week"), "full_outer")
       .na.fill(0L, Seq("n_active", "d", "a"))
       .select(col("cohort_week").cast("string").as("key"),
         col("n_active").as("n_before"),
@@ -1147,11 +1147,11 @@ object EventOps {
     // dropped cells resurrect
     val rmFirst = qEvents.groupBy(col("user_id"))
       .agg(date_trunc("week", min(col("ts"))).cast("date").as("cohort_week"))
-    val dCells = broadcast(removedRetentionCells(qEvents, rmFirst)
-      .localCheckpoint(false)) // purge + restore
+    val dCells = removedRetentionCells(qEvents, rmFirst)
+      .localCheckpoint(false) // purge + restore
     val rp = retentionStore.select(col("cohort_week"), col("week_offset"),
       col("n_active").cast("long").as("n_active"))
-    val retPurged = rp.join(dCells, Seq("cohort_week", "week_offset"),
+    val retPurged = rp.join(broadcast(dCells), Seq("cohort_week", "week_offset"),
         "left_outer")
       .select(col("cohort_week"), col("week_offset"),
         (col("n_active") - coalesce(col("d"), lit(0L))).cast("long")
@@ -1167,11 +1167,11 @@ object EventOps {
       (retPurged, Seq("p")),
       (retRestored, Seq("r"))))
     // transitions: the same decrement/fold-back pattern on edges
-    val dEdges = broadcast(removedEdges(qEvents)
-      .localCheckpoint(false)) // purge + restore
+    val dEdges = removedEdges(qEvents)
+      .localCheckpoint(false) // purge + restore
     val tp = transitionStore.select(col("event_type"), col("next_type"),
       col("n_transitions").cast("long").as("n_transitions"))
-    val transPurged = tp.join(dEdges, Seq("event_type", "next_type"),
+    val transPurged = tp.join(broadcast(dEdges), Seq("event_type", "next_type"),
         "left_outer")
       .select(col("event_type"), col("next_type"),
         (col("n_transitions") - coalesce(col("d"), lit(0L))).cast("long")

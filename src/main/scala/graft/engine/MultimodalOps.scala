@@ -72,30 +72,6 @@ object MultimodalOps {
     }
   }
 
-  /** RESIZE STUB — stands in for image resizing (no codecs in this
-    * environment): deterministically downsample the payload to a fixed
-    * `outBytes`-byte array by even stride sampling, the same
-    * fixed-output-shape contract a real thumbnail/resize kernel has.
-    * Runs in the same partition-batched typed pipeline as
-    * [[decodeStub]]; a real codec swaps in with the identical
-    * signature. */
-  def resizeStub(media: Dataset[MediaRecord], outBytes: Int = 16): Dataset[(Long, Array[Byte])] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { batch =>
-      batch.map { rec =>
-        val out = new Array[Byte](outBytes)
-        if (rec.payload.nonEmpty) {
-          var i = 0
-          while (i < outBytes) {
-            out(i) = rec.payload((i.toLong * rec.payload.length / outBytes).toInt)
-            i += 1
-          }
-        }
-        (rec.media_id, out)
-      }
-    }
-  }
-
   /** Frame sampling — the video-pipeline shape: every `step`-th
     * fixed-length window of the payload becomes one "frame" row with
     * its content fingerprint (stand-in for a decoded video frame; with

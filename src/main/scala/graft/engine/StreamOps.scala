@@ -741,7 +741,7 @@ object StreamOps {
             assigned.groupBy(col("list_id")).agg(count(lit(1)).as("n_new")))
           .groupBy(col("list_id"))
           .agg(sum(col("n_new")).cast("long").as("n_new"))
-          .localCheckpoint(false) // next fold + report
+          .localCheckpoint(false) // snapshot write + report
         Tick(Seq("counts" -> counts,
           "report" -> SimilarityOps.ivfAppendReport(index, counts, imbalanceFactor)))
     }
@@ -792,15 +792,15 @@ object StreamOps {
           .select(col("parent_list_id"), col("child_list_id"))
           .write.mode("overwrite").parquet(s"$outPath/splits/tick=$tick")
         Tick(Seq(
-          "index_assign" -> reb.updated.assigned.localCheckpoint(false),
-          "index_centers" -> reb.updated.centers.localCheckpoint(false)))
+          "index_assign" -> reb.updated.assigned,
+          "index_centers" -> reb.updated.centers))
     }
 
   /** The IVF index a re-balancing sink carries, from its two frames:
     * the appliers keep `nLists` equal to the number of live centroids
     * (a split adds its live children, a merge drops its lists), so the
-    * count of the carried centers IS the list count, restored or not —
-    * one job over a ≤ 2·nLists-row pinned frame. */
+    * count of the carried centers IS the list count — one job over
+    * the ≤ 2·nLists-row centers snapshot. */
   private def carriedIndex(st: Map[String, DataFrame]): SimilarityOps.IvfIndex =
     SimilarityOps.IvfIndex(st("index_assign"), st("index_centers"),
       st("index_centers").count().toInt)
@@ -848,7 +848,7 @@ object StreamOps {
             SimilarityOps.pqCodeCells(newCodes, cb.m, "n_new"))
           .groupBy(col("list_id"), col("subspace"), col("code"))
           .agg(sum(col("n_new")).cast("long").as("n_new"))
-          .localCheckpoint(false) // next fold + report
+          .localCheckpoint(false) // snapshot write + report
         Tick(Seq("cells" -> cells,
           "report" -> SimilarityOps.ivfPqCellReport(before, cells)))
     }
@@ -875,10 +875,10 @@ object StreamOps {
     *
     * Scale posture: per-tick cost = one batch-sized anti-join + the
     * two appliers' bounds (flagged-member scans pruned on list_id,
-    * broadcast centroid sets); the carried relation is localCheckpoint
-    * locally and the list_id-bucketed table at 100 TB, where a tick's
-    * durable write is append(adds) + delete(dels) + rewrite(flagged
-    * lists' partitions). Durable state IS the sinks (ADVICE r15): the
+    * broadcast centroid sets); the carried relation is the tick's
+    * snapshot locally and the list_id-bucketed table at 100 TB, where
+    * a tick's durable write is append(adds) + delete(dels) +
+    * rewrite(flagged lists' partitions). Durable state IS the sinks (ADVICE r15): the
     * repaired index (and, when carried, the codes table) snapshots
     * ATOMICALLY per tick via [[TickCommit.sink]] — codes are residuals
     * against the tick's centroid set, so the snapshot pair must never
@@ -939,7 +939,7 @@ object StreamOps {
           val r = SimilarityOps.ivfPqCodesRepair(c, cur, m.updated, book)
           r.report.write.mode("overwrite")
             .parquet(s"$outPath/codes_report/tick=$tick")
-          Some(r.codes.localCheckpoint(false))
+          Some(r.codes)
         case (c, _) => c
       }
       // the THREE carried frames commit ATOMICALLY: codes are
@@ -949,8 +949,8 @@ object StreamOps {
       // staleness by old-vs-new centroid diff — it needs a consistent
       // snapshot pair to diff against)
       Tick(Seq(
-        "index_assign" -> m.updated.assigned.localCheckpoint(false),
-        "index_centers" -> m.updated.centers.localCheckpoint(false)) ++
+        "index_assign" -> m.updated.assigned,
+        "index_centers" -> m.updated.centers) ++
         codesNext.map("codes" -> _))
     }
   }
@@ -989,23 +989,19 @@ object StreamOps {
       (batch, tick, st) =>
         val rm = broadcast(batch.select(col("doc_id")).distinct()
           .localCheckpoint(false)) // 3 semi-probes + 3 anti-joins
-        def purge(store: DataFrame): (DataFrame, Long, Long) = {
-          val removed = store.join(rm, Seq("doc_id"), "left_semi").count()
-          val next = store.join(rm, Seq("doc_id"), "left_anti")
-            .localCheckpoint(false) // ledger count + snapshot + next tick
-          (next, removed, next.count())
-        }
-        val (p2, pRm, pN) = purge(st("postings"))
-        val (d2, dRm, dN) = purge(st("doclens"))
-        val (s2, sRm, sN) = purge(st("sketches"))
-        // tick-IDEMPOTENT ledger (the streamingTakedownServe
-        // contract): a replayed at-least-once tick overwrites its
-        // own rows instead of appending duplicates
-        Seq(("postings", pRm, pN), ("doc_lengths", dRm, dN),
-            ("sketches", sRm, sN))
-          .toDF("artifact", "n_removed", "n_after")
-          .write.mode("overwrite").parquet(s"$outPath/ledger/tick=$tick")
-        Tick(Seq("postings" -> p2, "doclens" -> d2, "sketches" -> s2))
+        // snapshot name -> ledger artifact name
+        val stores = Seq("postings" -> "postings", "doclens" -> "doc_lengths",
+          "sketches" -> "sketches")
+        Tick(stores.map { case (n, _) => n -> st(n).join(rm, Seq("doc_id"), "left_anti") },
+          persisted =>
+            // tick-IDEMPOTENT ledger (the streamingTakedownServe
+            // contract): a replayed at-least-once tick overwrites its
+            // own rows instead of appending duplicates
+            stores.map { case (n, artifact) => (artifact,
+                st(n).join(rm, Seq("doc_id"), "left_semi").count(),
+                persisted(n).count()) }
+              .toDF("artifact", "n_removed", "n_after")
+              .write.mode("overwrite").parquet(s"$outPath/ledger/tick=$tick"))
     }
   }
 
@@ -1030,9 +1026,9 @@ object StreamOps {
     * `outPath/ledger/tick=N` with mass-conservation probes (bigram/
     * context occurrence mass decrements by exactly the tick's
     * measured occurrence count; vocab only shrinks; no card cell
-    * goes negative; no removed signature survives the PERSISTED
-    * staged snapshot — the probe re-reads the written bytes, never
-    * the in-memory purge lineage). Because the decrements are not
+    * goes negative; no removed signature survives — every probe
+    * re-reads the written bytes of the PERSISTED staged snapshot,
+    * never the in-memory purge lineage). Because the decrements are not
     * idempotent, the queue-first ordering the anti-join monitor uses
     * is UNSAFE here (a crash between the queue and store writes
     * would lose the corrections forever) — so the whole tick commits
@@ -1072,16 +1068,7 @@ object StreamOps {
           .localCheckpoint(false) // LM subtract + mass probe
         val rOcc = TextOps.bigramStream(rmDocs).count()
         val sub = TextOps.lmModelSubtract(TextOps.LmModel(big, ctx, voc), rmDocs)
-        val big2 = sub.bigrams // checkpointed inside subtract
-        val ctx2 = sub.contexts.localCheckpoint(false)
-        val voc2 = sub.vocab.localCheckpoint(false)
-        val card2 = CorpusOps.corpusCardTakedownState(card, fps, docsCur, rmEff)
-          .localCheckpoint(false)
-        val fps2 = fps.join(rmEff, Seq("doc_id"), "left_anti")
-          .localCheckpoint(false)
         val rmVec = rmEff.select(col("doc_id").as("vec_id"))
-        val sigs2 = sigs.join(rmVec, Seq("vec_id"), "left_anti")
-          .localCheckpoint(false)
         // the Bloom flag row: held-out-bounded gram counts
         val heldB = docsCur.filter(col("doc_id") < heldoutMaxId)
         val gramsB = TextOps.wordNgrams(heldB)
@@ -1091,24 +1078,29 @@ object StreamOps {
           .select(col("gram")).distinct().count()
         def mass(df: DataFrame, c: String): Long =
           df.agg(coalesce(sum(col(c)), lit(0L)).cast("long")).head.getLong(0)
-        val (mB, mA) = (mass(big, "c2"), mass(big2, "c2"))
-        val (cB, cA) = (mass(ctx, "c1"), mass(ctx2, "c1"))
-        val newWords = voc2.join(voc, Seq("w"), "left_anti").count()
-        val negCard = card2.filter(col("n_docs") < 0 || col("n_tokens") < 0 ||
-          col("q_ppm_sum") < 0 || col("n_exact_dups") < 0).count()
         // the whole tick (stores + queue) stages before any of it
         // becomes visible; the ledger writes between stage and seal
         Tick(Seq(
-          "removed" -> removedAll.unionByName(rmEff).localCheckpoint(false),
-          "lm_bigrams" -> big2, "lm_contexts" -> ctx2, "lm_vocab" -> voc2,
-          "card_state" -> card2, "fps" -> fps2, "sigs" -> sigs2), () => {
-          // the sig clean probe certifies the PERSISTED staged bytes,
-          // not the in-memory anti-join lineage it was derived from
-          val sigDirty = TickCommit.readStaged(spark, outPath, tick, "sigs")
-            .join(rmVec, Seq("vec_id"), "left_semi").count()
+          "removed" -> removedAll.unionByName(rmEff),
+          "lm_bigrams" -> sub.bigrams, "lm_contexts" -> sub.contexts,
+          "lm_vocab" -> sub.vocab,
+          "card_state" -> CorpusOps.corpusCardTakedownState(card, fps, docsCur, rmEff),
+          "fps" -> fps.join(rmEff, Seq("doc_id"), "left_anti"),
+          "sigs" -> sigs.join(rmVec, Seq("vec_id"), "left_anti")), persisted => {
+          // every probe certifies the PERSISTED staged bytes, not the
+          // in-memory lineage they were derived from
+          val (big2, ctx2, voc2, card2, sigs2) = (persisted("lm_bigrams"),
+            persisted("lm_contexts"), persisted("lm_vocab"),
+            persisted("card_state"), persisted("sigs"))
+          val newWords = voc2.join(voc, Seq("w"), "left_anti").count()
+          val negCard = card2.filter(col("n_docs") < 0 || col("n_tokens") < 0 ||
+            col("q_ppm_sum") < 0 || col("n_exact_dups") < 0).count()
+          val sigDirty = sigs2.join(rmVec, Seq("vec_id"), "left_semi").count()
           Seq(
-            ("lm_bigrams", big.count(), big2.count(), mA == mB - rOcc),
-            ("lm_contexts", ctx.count(), ctx2.count(), cA == cB - rOcc),
+            ("lm_bigrams", big.count(), big2.count(),
+              mass(big2, "c2") == mass(big, "c2") - rOcc),
+            ("lm_contexts", ctx.count(), ctx2.count(),
+              mass(ctx2, "c1") == mass(ctx, "c1") - rOcc),
             ("lm_vocab", voc.count(), voc2.count(), newWords == 0L),
             ("card_state", card.count(), card2.count(), negCard == 0L),
             ("binary_sigs", sigs.count(), sigs2.count(), sigDirty == 0L),
@@ -1160,18 +1152,11 @@ object StreamOps {
         .localCheckpoint(false))
       val rmEvents = events.join(rmEff, Seq("user_id"), "left_semi")
         .localCheckpoint(false) // reach + cells + edges
-      val mani2 = mani.join(rmEff, Seq("user_id"), "left_anti")
-        .localCheckpoint(false)
-      val sess2 = sess.join(rmEff, Seq("user_id"), "left_anti")
-        .localCheckpoint(false)
-      val attr2 = attr.join(rmEff, Seq("user_id"), "left_anti")
-        .localCheckpoint(false)
       val fun2 = fun.crossJoin(broadcast(EventOps.removedReach(rmEvents)))
         .select(col("stage"),
           (col("n_users") - when(col("stage") === "view", col("d1"))
             .when(col("stage") === "click", col("d2"))
             .otherwise(col("d3"))).cast("long").as("n_users"))
-        .localCheckpoint(false)
       val rmFirst = rmEvents.groupBy(col("user_id"))
         .agg(date_trunc("week", min(col("ts"))).cast("date").as("cohort_week"))
       val ret2 = ret.join(
@@ -1181,34 +1166,31 @@ object StreamOps {
           (col("n_active") - coalesce(col("d"), lit(0L))).cast("long")
             .as("n_active"))
         .filter(col("n_active") > 0) // a rebuild never emits 0 cells
-        .localCheckpoint(false)
       val trans2 = trans.join(broadcast(EventOps.removedEdges(rmEvents)),
           Seq("event_type", "next_type"), "left_outer")
         .select(col("event_type"), col("next_type"),
           (col("n_transitions") - coalesce(col("d"), lit(0L))).cast("long")
             .as("n_transitions"))
         .filter(col("n_transitions") > 0)
-        .localCheckpoint(false)
       Tick(Seq(
-        "removed" -> removedAll.unionByName(rmEff).localCheckpoint(false),
-        "manifest" -> mani2, "sessions" -> sess2, "attribution" -> attr2,
-        "funnel" -> fun2, "retention" -> ret2, "transitions" -> trans2), () => {
+        "removed" -> removedAll.unionByName(rmEff),
+        "manifest" -> mani.join(rmEff, Seq("user_id"), "left_anti"),
+        "sessions" -> sess.join(rmEff, Seq("user_id"), "left_anti"),
+        "attribution" -> attr.join(rmEff, Seq("user_id"), "left_anti"),
+        "funnel" -> fun2, "retention" -> ret2, "transitions" -> trans2), persisted => {
         // probe the PERSISTED manifest snapshot for the clean flag (a
         // semi-probe over the in-memory anti-join lineage is true by
-        // construction)
-        val maniDirty = TickCommit
-          .readStaged(spark, outPath, tick, "manifest")
+        // construction); every n_after counts the persisted bytes
+        val maniDirty = persisted("manifest")
           .join(rmEff, Seq("user_id"), "left_semi").count()
+        def n(name: String) = persisted(name).count()
         Seq(
-          ("manifest", mani.count(), mani2.count(), maniDirty == 0L),
-          ("sessions", sess.count(), sess2.count(), true),
-          ("attribution", attr.count(), attr2.count(), true),
-          ("funnel", fun.agg(coalesce(sum(col("n_users")), lit(0L)))
-            .head.getLong(0),
-            fun2.agg(coalesce(sum(col("n_users")), lit(0L))).head.getLong(0),
-            true),
-          ("retention", ret.count(), ret2.count(), true),
-          ("transitions", trans.count(), trans2.count(), true))
+          ("manifest", mani.count(), n("manifest"), maniDirty == 0L),
+          ("sessions", sess.count(), n("sessions"), true),
+          ("attribution", attr.count(), n("attribution"), true),
+          ("funnel", userMass(fun), userMass(persisted("funnel")), true),
+          ("retention", ret.count(), n("retention"), true),
+          ("transitions", trans.count(), n("transitions"), true))
           .toDF("artifact", "n_before", "n_after", "persisted_ok")
           .select(col("artifact"), col("n_before"), col("n_after"),
             (col("n_before") - col("n_after")).as("n_removed"),
@@ -1218,6 +1200,11 @@ object StreamOps {
       })
     }
   }
+
+  /** Total users over the funnel store's stages: the funnel row of the
+    * user takedown and quarantine ledgers. */
+  private def userMass(funnel: DataFrame): Long =
+    funnel.agg(coalesce(sum(col("n_users")), lit(0L))).head.getLong(0)
 
   /** The six q284 event-derived stores the user takedown and
     * quarantine sinks carry, under their snapshot names, with the
@@ -1303,7 +1290,6 @@ object StreamOps {
         store.join(effQ, Seq("user_id"), "left_anti")
           .select(cols: _*)
           .unionByName(rederived.select(cols: _*))
-          .localCheckpoint(false)
       }
       val mani2 = roundTrip(mani, TemporalOps.sessionPackManifest(rEvents))
       val sess2 = roundTrip(sess, EventOps.sessionize(rEvents))
@@ -1320,14 +1306,14 @@ object StreamOps {
               .when(col("stage") === "click", col("d2"))
               .otherwise(col("d3"))).cast("long").as("n_users"))
       val fun2 = funnelShift(funnelShift(fun, dReachQ, -1L), dReachR, 1L)
-        .localCheckpoint(false)
       def firstWeek(ev: DataFrame) = ev.groupBy(col("user_id"))
         .agg(date_trunc("week", min(col("ts"))).cast("date")
           .as("cohort_week"))
       val dCellsQ = broadcast(
         EventOps.removedRetentionCells(qEvents, firstWeek(qEvents)))
-      val dCellsR = broadcast(
-        EventOps.removedRetentionCells(rEvents, firstWeek(rEvents)))
+      // the restore d-frames join full outer, which cannot build a
+      // broadcast right side, so they carry no broadcast hint
+      val dCellsR = EventOps.removedRetentionCells(rEvents, firstWeek(rEvents))
       val ret2 = ret.join(dCellsQ, Seq("cohort_week", "week_offset"),
           "left_outer")
         .select(col("cohort_week"), col("week_offset"),
@@ -1338,9 +1324,8 @@ object StreamOps {
         .select(col("cohort_week"), col("week_offset"),
           (coalesce(col("n_active"), lit(0L)) +
             coalesce(col("d"), lit(0L))).cast("long").as("n_active"))
-        .localCheckpoint(false)
       val dEdgesQ = broadcast(EventOps.removedEdges(qEvents))
-      val dEdgesR = broadcast(EventOps.removedEdges(rEvents))
+      val dEdgesR = EventOps.removedEdges(rEvents)
       val trans2 = trans.join(dEdgesQ, Seq("event_type", "next_type"),
           "left_outer")
         .select(col("event_type"), col("next_type"),
@@ -1352,33 +1337,27 @@ object StreamOps {
           (coalesce(col("n_transitions"), lit(0L)) +
             coalesce(col("d"), lit(0L))).cast("long")
             .as("n_transitions"))
-        .localCheckpoint(false)
-      val stash2 = stash.join(effR, Seq("user_id"), "left_anti")
-        .unionByName(qEvents)
-        .localCheckpoint(false)
       // atomic tick: stage everything, then probe the persisted
-      // manifest and write the ledger before the seal
+      // manifest and write the ledger over the persisted bytes before
+      // the seal
       Tick(Seq(
-        "held" -> held.unionByName(effQ).join(effR, Seq("user_id"), "left_anti")
-          .localCheckpoint(false),
-        "stash" -> stash2, "manifest" -> mani2, "sessions" -> sess2,
+        "held" -> held.unionByName(effQ).join(effR, Seq("user_id"), "left_anti"),
+        "stash" -> stash.join(effR, Seq("user_id"), "left_anti").unionByName(qEvents),
+        "manifest" -> mani2, "sessions" -> sess2,
         "attribution" -> attr2, "funnel" -> fun2, "retention" -> ret2,
-        "transitions" -> trans2), () => {
-        val maniDirty = TickCommit
-          .readStaged(spark, outPath, tick, "manifest")
+        "transitions" -> trans2), persisted => {
+        val maniDirty = persisted("manifest")
           .join(effQ, Seq("user_id"), "left_semi").count()
         val (nQ, nR) = (effQ.count(), effR.count())
+        def n(name: String) = persisted(name).count()
         Seq(
-          ("manifest", mani.count(), mani2.count(), maniDirty == 0L),
-          ("sessions", sess.count(), sess2.count(), true),
-          ("attribution", attr.count(), attr2.count(), true),
-          ("funnel", fun.agg(coalesce(sum(col("n_users")), lit(0L)))
-            .head.getLong(0),
-            fun2.agg(coalesce(sum(col("n_users")), lit(0L)))
-              .head.getLong(0), true),
-          ("retention", ret.count(), ret2.count(), true),
-          ("transitions", trans.count(), trans2.count(), true),
-          ("stash", stash.count(), stash2.count(), true))
+          ("manifest", mani.count(), n("manifest"), maniDirty == 0L),
+          ("sessions", sess.count(), n("sessions"), true),
+          ("attribution", attr.count(), n("attribution"), true),
+          ("funnel", userMass(fun), userMass(persisted("funnel")), true),
+          ("retention", ret.count(), n("retention"), true),
+          ("transitions", trans.count(), n("transitions"), true),
+          ("stash", stash.count(), n("stash"), true))
           .toDF("artifact", "n_before", "n_after", "persisted_ok")
           .select(col("artifact"), col("n_before"), col("n_after"),
             lit(nQ).as("n_quarantined"), lit(nR).as("n_restored"),
@@ -1418,18 +1397,16 @@ object StreamOps {
           .localCheckpoint(false))
         val partCur = part.join(removedAll, Seq("p_partkey"), "left_anti")
         val next = DedupOps.entityTakedown(partCur, rmEff, aliases)
-          .localCheckpoint(false) // ledger counts + carried store
+          .localCheckpoint(false) // reclosed count + alias snapshot
         val nReclosed = next.filter(col("status") === "reclosed").count()
         // status is per-tick provenance, not carried state
-        val aliases2 = next.select(col("p_partkey"), col("entity_id"),
-            col("n_members"), col("canonical_name"))
-          .localCheckpoint(false)
         Tick(Seq(
-          "removed" -> removedAll.unionByName(rmEff).localCheckpoint(false),
-          "aliases" -> aliases2), () => {
+          "removed" -> removedAll.unionByName(rmEff),
+          "aliases" -> next.select(col("p_partkey"), col("entity_id"),
+            col("n_members"), col("canonical_name"))), persisted => {
           // dirty probe against the PERSISTED staged alias snapshot
-          val dirty = TickCommit.readStaged(spark, outPath, tick, "aliases")
-            .join(rmEff, Seq("p_partkey"), "left_semi").count()
+          val aliases2 = persisted("aliases")
+          val dirty = aliases2.join(rmEff, Seq("p_partkey"), "left_semi").count()
           Seq(("alias_store", aliases.count(), aliases2.count(), nReclosed,
               dirty == 0L))
             .toDF("artifact", "n_before", "n_after", "n_reclosed", "clean")
@@ -1487,10 +1464,10 @@ object StreamOps {
           .localCheckpoint(false)) // five anti-joins
         val rmVec = rm.select(col("doc_id").as("vec_id"))
         val removedAll = st("removed").unionByName(rm).distinct()
-          .localCheckpoint(false) // cert probe + next tick
+          .localCheckpoint(false) // cert probe + snapshot write
         def purge(name: String, key: DataFrame, on: String): DataFrame =
           st(name).join(key, Seq(on), "left_anti")
-            .localCheckpoint(false) // listing + snapshot + next tick
+            .localCheckpoint(false) // listing + snapshot write
         val post = purge("postings", rm, "doc_id")
         val dl = purge("doclens", rm, "doc_id")
         val emb = purge("vectors", rmVec, "vec_id")
@@ -1573,9 +1550,8 @@ object StreamOps {
     Seq(
       "fps" -> st("fps").unionByName(
           b.join(admitted, "doc_id").select(md5(col("text")).as("fp_md5")))
-        .distinct().localCheckpoint(false),
-      "sigs" -> st("sigs").unionByName(bSigs.join(admitted, "doc_id"))
-        .localCheckpoint(false))
+        .distinct(),
+      "sigs" -> st("sigs").unionByName(bSigs.join(admitted, "doc_id")))
 
   /** STREAMING licensed ingest tick — q262 live (VERDICT r12 #6):
     * [[streamingIngestTick]] with the q257 compliance stage composed
@@ -1652,7 +1628,7 @@ object StreamOps {
           .agg(sum(col("n_docs")).cast("long").as("n_docs"),
             sum(col("n_aligned")).cast("long").as("n_aligned"),
             sum(col("n_dropped")).cast("long").as("n_dropped"))
-          .localCheckpoint(false) // next fold + report
+          .localCheckpoint(false) // snapshot write + accounting
         Tick(Seq("counts" -> counts, "accounting" -> counts.orderBy(col("source"))))
     }
   }
@@ -1696,8 +1672,7 @@ object StreamOps {
       Tick(Seq("assign" -> index.assigned.unionByName(
           SimilarityOps.withVec(keepers)
             .join(SimilarityOps.ivfIncrementalAssign(index, keepers), "vec_id")
-            .select(cols: _*))
-        .localCheckpoint(false))) // next probe + snapshot write
+            .select(cols: _*))))
     }
   }
 
@@ -1731,13 +1706,12 @@ object StreamOps {
       val b = batch.localCheckpoint(false) // state fold + fp growth
       val state = CorpusOps.corpusCardIncrementalState(st("state"), st("fprints"), b)
         .drop("n_batch_docs")
-        .localCheckpoint(false) // next fold + both snapshot writes
+        .localCheckpoint(false) // state + card snapshot writes
       Tick(Seq(
         "state" -> state,
         "card" -> CorpusOps.cardFromState(state),
         "fprints" -> st("fprints").unionByName(DedupOps.fingerprintStore(b))
-          .groupBy(col("fp_md5")).agg(min(col("keeper_id")).as("keeper_id"))
-          .localCheckpoint(false)))
+          .groupBy(col("fp_md5")).agg(min(col("keeper_id")).as("keeper_id"))))
     }
 
   /** STREAMING LM maintenance — the live twin of q245
@@ -1783,6 +1757,9 @@ object StreamOps {
     TextOps.LmModel(st(s"${prefix}bigrams"), st(s"${prefix}contexts"),
       st(s"${prefix}vocab"))
 
+  /** The model with each table pinned: a tick's merged model feeds
+    * both its scoring and its snapshot writes, and a static target
+    * model every tick's scoring. */
   private def pinned(m: TextOps.LmModel): TextOps.LmModel = TextOps.LmModel(
     m.bigrams.localCheckpoint(false),
     m.contexts.localCheckpoint(false),
@@ -1854,7 +1831,7 @@ object StreamOps {
                 .cast("long").as("realized_tokens")))
           .groupBy(col("source"))
           .agg(sum(col("realized_tokens")).cast("long").as("realized_tokens"))
-          .localCheckpoint(false) // next fold + report
+          .localCheckpoint(false) // snapshot write + report
         // FULL outer (ADVICE-class fix): a source streaming in that
         // the launch design never listed must surface with target
         // share 0 and its full realized mass — a left join dropped
@@ -1938,8 +1915,7 @@ object StreamOps {
                sum(col("n_violations")).cast("long").as("n_violations"))
           .withColumn("ok", col("n_violations") === 0L)
           .select(col("check_name"), col("n_rows"), col("n_violations"),
-            col("ok"))
-          .localCheckpoint(false))) // next fold + snapshot
+            col("ok"))))
     }
   }
 
@@ -2004,7 +1980,7 @@ object StreamOps {
         val consumed = st("consumed").unionByName(delta)
           .groupBy(col("source"))
           .agg(sum(col("consumed_toks")).cast("long").as("consumed_toks"))
-          .localCheckpoint(false) // next fold + report
+          .localCheckpoint(false) // snapshot write + report
         val report = totals.join(consumed, Seq("source"), "left_outer")
           .withColumn("consumed_toks", coalesce(col("consumed_toks"), lit(0L)))
           .withColumn("consumed_ppm",
@@ -2014,8 +1990,7 @@ object StreamOps {
             col("consumed_ppm"), col("done"))
           .orderBy(col("source"))
         Tick(Seq(
-          "hw" -> hwPair.select(col("shard"), col("new_hw").as("hw_step"))
-            .localCheckpoint(false),
+          "hw" -> hwPair.select(col("shard"), col("new_hw").as("hw_step")),
           "consumed" -> consumed, "report" -> report))
     }
   }
@@ -2062,9 +2037,8 @@ object StreamOps {
         .write.mode("overwrite").parquet(s"$outPath/verdicts/tick=$tick")
       Tick(Seq(
         "store" -> resolved.select(col("p_partkey"), col("entity_id"),
-          col("n_members"), col("canonical_name")).localCheckpoint(false),
+          col("n_members"), col("canonical_name")),
         "dim" -> st("dim").unionByName(
-            b.select(col("p_partkey"), col("p_name"), col("p_brand")))
-          .localCheckpoint(false)))
+          b.select(col("p_partkey"), col("p_name"), col("p_brand")))))
     }
 }

@@ -3,6 +3,7 @@ package graft.engine
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 /** Atomic, tick-versioned snapshot commits for the streaming sinks
   * that apply NON-IDEMPOTENT corrections (LM count subtraction, card
@@ -56,54 +57,60 @@ object TickCommit {
   /** What one tick of a [[sink]] hands back: every frame to stage
     * under `snap/tick=N` (each carried frame under its carried name,
     * plus any derived snapshot such as a report), and a check that
-    * runs after the stage and before the seal — where a probe re-reads
-    * the persisted bytes ([[readStaged]]) and the ledger recording it
-    * is written. */
+    * runs after the stage and before the seal. The check receives the
+    * staged frames re-read from their persisted bytes, by name; its
+    * probes and ledger counts read those, and it writes the ledger. */
   final case class Tick(staged: Seq[(String, DataFrame)],
-                        check: () => Unit = () => ())
+                        check: Map[String, DataFrame] => Unit = _ => ())
 
   /** The commit loop of every stateful stream sink: a `foreachBatch`
     * query over `source` whose state is the set of carried frames
     * named by `initial`.
     *
-    * Restart contract (the one place it is written): at construction
-    * each carried frame loads from the largest committed tick under
-    * `outPath` when there is one, and is the caller's `initial` frame
-    * otherwise. So a sink rebuilt with its ORIGINAL arguments over the
-    * same outPath and checkpoint continues from the last sealed tick;
-    * a crashed tick (staged, never sealed) is invisible and replays
-    * against the state before it; and a tick re-delivered after its
-    * seal (the crash window before Spark's commit log) is skipped
-    * whole, its side outputs and ledger untouched. A run continued
-    * under a fresh checkpoint takes a fresh outPath seeded by
-    * [[resumeInto]] ([[bind]] refuses the other way round).
+    * Restart contract (the one place it is written): a sink's state is
+    * its last sealed snapshot. At construction [[bind]] ties `outPath`
+    * to `checkpointDir`, and each carried frame is a read of the
+    * largest committed tick under `outPath` when there is one (its
+    * schema inferred from the bytes: a staged frame need not keep the
+    * initial frame's column order or types), and the caller's
+    * `initial` frame otherwise. After every seal each carried frame is
+    * a read of the bytes just sealed, so continuing in the same
+    * process and restarting load the same state the same way. A
+    * sink rebuilt with its ORIGINAL arguments over the same outPath and
+    * checkpoint continues from the last sealed tick; a crashed tick
+    * (staged, never sealed) is invisible and replays against the state
+    * before it; and a tick re-delivered after its seal (the crash
+    * window before Spark's commit log) is skipped whole, its side
+    * outputs and ledger untouched. A run continued under a fresh
+    * checkpoint takes a fresh outPath seeded by [[resumeInto]]; a
+    * fresh checkpoint over a live outPath makes the constructor throw.
     *
-    * Per micro-batch: [[bind]]; then, unless the batch is empty or the
-    * tick is already sealed, `step(batch, tick, carried)` writes the
-    * tick's side outputs (`…/tick=N`, overwrite, so an at-least-once
-    * replay rewrites its own partition) and returns the [[Tick]];
-    * [[stage]]; the tick's check; [[seal]]; and only then do the
-    * carried frames advance to the staged frames of the same names, so
-    * an in-JVM retry recomputes from the pre-tick state. Every carried
-    * name must be staged each tick — the carried state IS the snapshot.
+    * Per micro-batch, unless the batch is empty or the tick is already
+    * sealed: `step(batch, tick, carried)` writes the tick's side
+    * outputs (`…/tick=N`, overwrite, so an at-least-once replay
+    * rewrites its own partition) and returns the [[Tick]]; [[stage]];
+    * the tick's check over the staged bytes; [[seal]]; and only then
+    * do the carried frames advance, so an in-JVM retry recomputes from
+    * the pre-tick state. Every carried name must be staged each tick —
+    * the carried state IS the snapshot.
     *
-    * Cost: one `localCheckpoint` per initial or restored frame at
-    * construction, and no Spark job per tick beyond what `step` runs
-    * and the stage writes. */
+    * Cost: at construction, one `localCheckpoint` per initial frame,
+    * or one schema-inference job per restored frame; per tick, no
+    * Spark job beyond what `step` runs, the stage writes and the
+    * check — each re-read takes the staged frame's schema. */
   def sink(source: DataFrame, outPath: String, checkpointDir: String,
            initial: Seq[(String, DataFrame)])(
       step: (DataFrame, Long, Map[String, DataFrame]) => Tick): StreamingQuery = {
     val spark = source.sparkSession
+    bind(spark, outPath, checkpointDir)
     val from = latestTick(spark, outPath)
     var carried: Map[String, DataFrame] = initial.map { case (name, df) =>
-      name -> from.fold(df)(t => spark.read.parquet(s"${snapDir(outPath, t)}/$name"))
-        .localCheckpoint(false)
+      name -> from.fold(df.localCheckpoint(false))(snapshot(spark, outPath, _, name))
     }.toMap
     source.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, tick: Long) =>
-        bind(spark, outPath, checkpointDir)
         if (!batch.isEmpty && !isCommitted(spark, outPath, tick)) {
           val t = step(batch, tick, carried)
           val staged = t.staged.toMap
@@ -111,14 +118,24 @@ object TickCommit {
           require(unstaged.isEmpty,
             s"TickCommit: tick $tick under $outPath stages no ${unstaged.mkString(", ")}")
           stage(spark, outPath, tick, t.staged)
-          t.check()
+          val persisted = staged.map { case (name, df) =>
+            name -> snapshot(spark, outPath, tick, name, Some(df.schema)) }
+          t.check(persisted)
           seal(spark, outPath, tick)
-          carried = staged.filter { case (name, _) => carried.contains(name) }
+          carried = persisted.filter { case (name, _) => carried.contains(name) }
         }
         ()
       }
       .start()
   }
+
+  /** Frame `name` of tick N's snapshot — every snapshot read goes
+    * through here. With the schema the frame was staged with, the read
+    * runs no Spark job; without it (a restart, a reader) the schema is
+    * inferred, which does. */
+  private def snapshot(spark: SparkSession, outPath: String, tick: Long,
+                       name: String, schema: Option[StructType] = None): DataFrame =
+    schema.fold(spark.read)(spark.read.schema).parquet(s"${snapDir(outPath, tick)}/$name")
 
   private def fsOf(spark: SparkSession, p: Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -137,7 +154,7 @@ object TickCommit {
   }
 
   /** Bind an outPath to the checkpoint directory that numbers its
-    * ticks — called ONCE at sink construction. Closes the hole the
+    * ticks — called once, by [[sink]]'s constructor. Closes the hole the
     * backwards-seal guard cannot see: a fresh-checkpoint restart
     * whose batch ids collide with the old run's high-water tick is
     * silently SKIPPED by [[isCommitted]] (the batch's data is lost
@@ -148,7 +165,7 @@ object TickCommit {
     * over live committed ticks (≥ 0) → throw with the
     * [[resumeInto]] remedy; different checkpoint over only a seed
     * tick (−1, what resumeInto plants) → rebind to the new run. */
-  def bind(spark: SparkSession, outPath: String, checkpointDir: String): Unit = {
+  private def bind(spark: SparkSession, outPath: String, checkpointDir: String): Unit = {
     val p = new Path(s"$outPath/run_binding")
     val fs = fsOf(spark, p)
     def write(): Unit = {
@@ -218,12 +235,6 @@ object TickCommit {
     }
   }
 
-  /** A frame from the staged (not yet sealed) tick, re-read from the
-    * persisted bytes — what the clean probes certify against. */
-  def readStaged(spark: SparkSession, outPath: String, tick: Long,
-                 name: String): DataFrame =
-    spark.read.parquet(s"${snapDir(outPath, tick)}/$name")
-
   /** Largest committed tick, if any — aborted stages are skipped. */
   def latestTick(spark: SparkSession, outPath: String): Option[Long] = {
     val root = new Path(s"$outPath/snap")
@@ -239,8 +250,7 @@ object TickCommit {
     * a sink's current state ([[sink]] restores from the same tick). */
   def readLatest(spark: SparkSession, outPath: String,
                  name: String): Option[DataFrame] =
-    latestTick(spark, outPath)
-      .map(t => spark.read.parquet(s"${snapDir(outPath, t)}/$name"))
+    latestTick(spark, outPath).map(snapshot(spark, outPath, _, name))
 
   /** Seed a FRESH outPath from another run's latest committed
     * snapshot — the remedy [[seal]]'s backwards-refusal prescribes,
@@ -266,8 +276,7 @@ object TickCommit {
     val fs = fsOf(spark, dir)
     val frames = fs.listStatus(dir).toSeq.map(_.getPath.getName)
       .filter(_ != "_COMMITTED")
-    stage(spark, toOut, -1L, frames.map(n =>
-      n -> spark.read.parquet(s"${snapDir(fromOut, t)}/$n")))
+    stage(spark, toOut, -1L, frames.map(n => n -> snapshot(spark, fromOut, t, n)))
     seal(spark, toOut, -1L)
     t
   }

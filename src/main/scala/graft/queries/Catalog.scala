@@ -461,7 +461,10 @@ object Catalog {
     // missing item 5 — q19 converted from rows-only to hash-match).
     QuerySpec(
       "q19_approx_quantiles",
-      (s, dir) => AggregateOps.approxQuantileOracle(Tables.orders(s, dir)),
+      (s, dir) => {
+        val orders = Tables.orders(s, dir)
+        AggregateOps.approxQuantiles(orders, 0.49 / math.max(orders.count(), 1L))
+      },
       Some("""SELECT quantile_disc(o_totalprice, 0.25) AS p25,
              |       quantile_disc(o_totalprice, 0.5)  AS p50,
              |       quantile_disc(o_totalprice, 0.75) AS p75

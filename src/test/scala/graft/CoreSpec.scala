@@ -42,7 +42,7 @@ class CoreSpec extends SparkSpec {
 
   test("approxQuantile(relErr 0.001) brackets the exact median") {
     val o = Tables.orders(spark, sf)
-    val approx = AggregateOps.approxQuantileRow(o).head().getDouble(1)
+    val approx = AggregateOps.approxQuantiles(o, 0.001).head().getDouble(1)
     val exact = AggregateOps.quantiles(o).head().getDouble(1)
     // rank error <= relErr * n; translate to a loose value tolerance
     assert(math.abs(approx - exact) / exact < 0.05)

@@ -172,17 +172,6 @@ class SimilarityMultimodalSpec extends SparkSpec {
     }, "stub features normalized to [0,1]")
   }
 
-  test("resize stub emits fixed-size deterministic byte arrays") {
-    import spark.implicits._
-    val docs = Tables.documents(spark, sf)
-    val media = MultimodalOps.mediaTable(docs).as[MultimodalOps.MediaRecord]
-    val a = MultimodalOps.resizeStub(media, outBytes = 16).collect().toMap
-    val b = MultimodalOps.resizeStub(media, outBytes = 16).collect().toMap
-    assert(a.size == docs.count())
-    assert(a.values.forall(_.length == 16), "fixed output shape")
-    assert(a.keys.forall(k => a(k).toSeq == b(k).toSeq), "deterministic")
-  }
-
   test("media ANN ranks an injected identical payload first with score 1") {
     val docs = Tables.documents(spark, sf)
     val dup = docs.filter(col("doc_id") === 0).withColumn("doc_id", lit(999999L))

@@ -1875,19 +1875,16 @@ class StreamingSpec extends SparkSpec {
     try { inA.addData((0L, 0L)); qA.processAllAvailable() } finally qA.stop()
     // the misconfiguration the seal guard can't see: batch ids restart
     // at 0 and collide with the committed tick — without the binding
-    // the first new batch would be silently skipped as a replay
+    // the first new batch would be silently skipped as a replay. The
+    // sink refuses at construction, before any batch runs.
     val inB = MemoryStream[(Long, Long)]
-    val qB = StreamOps.streamingLoaderProgress(
-      inB.toDS().toDF("shard", "step"), docs, out, ckptB,
-      budgetMult = 2L, nShards = 2, seqLen = 16)
-    try {
-      inB.addData((1L, 3L))
-      val e = intercept[Exception] { qB.processAllAvailable() }
-      def chain(t: Throwable): Seq[String] =
-        if (t == null) Nil else Option(t.getMessage).toSeq ++ chain(t.getCause)
-      assert(chain(e).exists(_.contains("bound to checkpoint")),
-        s"expected the binding error, got: ${chain(e)}")
-    } finally qB.stop()
+    val e = intercept[IllegalStateException] {
+      StreamOps.streamingLoaderProgress(
+        inB.toDS().toDF("shard", "step"), docs, out, ckptB,
+        budgetMult = 2L, nShards = 2, seqLen = 16).stop()
+    }
+    assert(e.getMessage.contains("bound to checkpoint"),
+      s"expected the binding error, got: ${e.getMessage}")
   }
 
   test("streaming entity resolution equals one-shot incremental across a bridging boundary") {

@@ -253,12 +253,11 @@ object IngestOps {
       .foreachBatch { (batch: DF, _: Long) =>
         if (!batch.isEmpty)
           WriteOps.refreshPartitions(batch, mvPath, Seq("o_orderpriority"))
-        ()
       }
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    spark.read.parquet(mvPath)
+    spark.read.schema(agg.schema).parquet(mvPath)
   }
 
   /** Deterministic malformed lines for the quarantine fixture — the

@@ -1059,10 +1059,14 @@ object StreamOps {
         val (removedAll, big, ctx, voc) =
           (st("removed"), st("lm_bigrams"), st("lm_contexts"), st("lm_vocab"))
         val (card, fps, sigs) = (st("card_state"), st("fps"), st("sigs"))
-        // effective removal = tick ids minus the cumulative queue
-        val rmEff = broadcast(batch.select(col("doc_id")).distinct()
+        // effective removal = tick ids minus the cumulative queue; the
+        // queue union and the card fold (which hints its own distinct
+        // ids) take the un-hinted ids: a hint outside a join is dropped
+        // with a warning
+        val rmIds = batch.select(col("doc_id")).distinct()
           .join(removedAll, Seq("doc_id"), "left_anti")
-          .localCheckpoint(false))
+          .localCheckpoint(false)
+        val rmEff = broadcast(rmIds)
         val docsCur = documents.join(removedAll, Seq("doc_id"), "left_anti")
         val rmDocs = docsCur.join(rmEff, Seq("doc_id"), "left_semi")
           .localCheckpoint(false) // LM subtract + mass probe
@@ -1081,10 +1085,10 @@ object StreamOps {
         // the whole tick (stores + queue) stages before any of it
         // becomes visible; the ledger writes between stage and seal
         Tick(Seq(
-          "removed" -> removedAll.unionByName(rmEff),
+          "removed" -> removedAll.unionByName(rmIds),
           "lm_bigrams" -> sub.bigrams, "lm_contexts" -> sub.contexts,
           "lm_vocab" -> sub.vocab,
-          "card_state" -> CorpusOps.corpusCardTakedownState(card, fps, docsCur, rmEff),
+          "card_state" -> CorpusOps.corpusCardTakedownState(card, fps, docsCur, rmIds),
           "fps" -> fps.join(rmEff, Seq("doc_id"), "left_anti"),
           "sigs" -> sigs.join(rmVec, Seq("vec_id"), "left_anti")), persisted => {
           // every probe certifies the PERSISTED staged bytes, not the
@@ -1147,9 +1151,10 @@ object StreamOps {
       val (removedAll, mani, sess, attr) =
         (st("removed"), st("manifest"), st("sessions"), st("attribution"))
       val (fun, ret, trans) = (st("funnel"), st("retention"), st("transitions"))
-      val rmEff = broadcast(batch.select(col("user_id")).distinct()
+      val rmIds = batch.select(col("user_id")).distinct()
         .join(removedAll, Seq("user_id"), "left_anti")
-        .localCheckpoint(false))
+        .localCheckpoint(false)
+      val rmEff = broadcast(rmIds) // joins only; the queue unions rmIds
       val rmEvents = events.join(rmEff, Seq("user_id"), "left_semi")
         .localCheckpoint(false) // reach + cells + edges
       val fun2 = fun.crossJoin(broadcast(EventOps.removedReach(rmEvents)))
@@ -1173,7 +1178,7 @@ object StreamOps {
             .as("n_transitions"))
         .filter(col("n_transitions") > 0)
       Tick(Seq(
-        "removed" -> removedAll.unionByName(rmEff),
+        "removed" -> removedAll.unionByName(rmIds),
         "manifest" -> mani.join(rmEff, Seq("user_id"), "left_anti"),
         "sessions" -> sess.join(rmEff, Seq("user_id"), "left_anti"),
         "attribution" -> attr.join(rmEff, Seq("user_id"), "left_anti"),
@@ -1270,15 +1275,18 @@ object StreamOps {
         st("manifest"), st("sessions"), st("attribution"))
       val (fun, ret, trans) = (st("funnel"), st("retention"), st("transitions"))
       val b = batch.localCheckpoint(false) // both request slices
-      val effQ = broadcast(b.filter(col("op") === "quarantine")
+      val qIds = b.filter(col("op") === "quarantine")
         .select(col("user_id")).distinct()
         .join(held, Seq("user_id"), "left_anti")
-        .localCheckpoint(false))
-      val effR = broadcast(b.filter(col("op") === "restore")
+        .localCheckpoint(false)
+      val effQ = broadcast(qIds) // joins only: a hint outside a join
+      // (the held-set union, the ledger counts) is dropped with a warning
+      val rIds = b.filter(col("op") === "restore")
         .select(col("user_id")).distinct()
         .join(held, Seq("user_id"), "left_semi")
         .join(effQ, Seq("user_id"), "left_anti")
-        .localCheckpoint(false))
+        .localCheckpoint(false)
+      val effR = broadcast(rIds)
       val qEvents = events.join(effQ, Seq("user_id"), "left_semi")
         .localCheckpoint(false) // stash + all quarantine d-frames
       val rEvents = stash.join(effR, Seq("user_id"), "left_semi")
@@ -1341,14 +1349,14 @@ object StreamOps {
       // manifest and write the ledger over the persisted bytes before
       // the seal
       Tick(Seq(
-        "held" -> held.unionByName(effQ).join(effR, Seq("user_id"), "left_anti"),
+        "held" -> held.unionByName(qIds).join(effR, Seq("user_id"), "left_anti"),
         "stash" -> stash.join(effR, Seq("user_id"), "left_anti").unionByName(qEvents),
         "manifest" -> mani2, "sessions" -> sess2,
         "attribution" -> attr2, "funnel" -> fun2, "retention" -> ret2,
         "transitions" -> trans2), persisted => {
         val maniDirty = persisted("manifest")
           .join(effQ, Seq("user_id"), "left_semi").count()
-        val (nQ, nR) = (effQ.count(), effR.count())
+        val (nQ, nR) = (qIds.count(), rIds.count())
         def n(name: String) = persisted(name).count()
         Seq(
           ("manifest", mani.count(), n("manifest"), maniDirty == 0L),
@@ -1392,16 +1400,19 @@ object StreamOps {
         "removed" -> Seq.empty[Long].toDF("p_partkey"), "aliases" -> storedAliases)) {
       (batch, tick, st) =>
         val (removedAll, aliases) = (st("removed"), st("aliases"))
-        val rmEff = broadcast(batch.select(col("p_partkey")).distinct()
+        val rmIds = batch.select(col("p_partkey")).distinct()
           .join(removedAll, Seq("p_partkey"), "left_anti")
-          .localCheckpoint(false))
+          .localCheckpoint(false)
+        // joins only; the queue union and entityTakedown (which hints
+        // its own distinct ids) take the un-hinted rmIds
+        val rmEff = broadcast(rmIds)
         val partCur = part.join(removedAll, Seq("p_partkey"), "left_anti")
-        val next = DedupOps.entityTakedown(partCur, rmEff, aliases)
+        val next = DedupOps.entityTakedown(partCur, rmIds, aliases)
           .localCheckpoint(false) // reclosed count + alias snapshot
         val nReclosed = next.filter(col("status") === "reclosed").count()
         // status is per-tick provenance, not carried state
         Tick(Seq(
-          "removed" -> removedAll.unionByName(rmEff),
+          "removed" -> removedAll.unionByName(rmIds),
           "aliases" -> next.select(col("p_partkey"), col("entity_id"),
             col("n_members"), col("canonical_name"))), persisted => {
           // dirty probe against the PERSISTED staged alias snapshot
@@ -1460,10 +1471,11 @@ object StreamOps {
         "doclens" -> docLengths, "vectors" -> embeddings,
         "assign" -> index.assigned, "sigs" -> sigs, "codes" -> ivfPqCodes)) {
       (batch, tick, st) =>
-        val rm = broadcast(batch.select(col("doc_id")).distinct()
-          .localCheckpoint(false)) // five anti-joins
+        val rmIds = batch.select(col("doc_id")).distinct()
+          .localCheckpoint(false)
+        val rm = broadcast(rmIds) // five anti-joins; the queue unions rmIds
         val rmVec = rm.select(col("doc_id").as("vec_id"))
-        val removedAll = st("removed").unionByName(rm).distinct()
+        val removedAll = st("removed").unionByName(rmIds).distinct()
           .localCheckpoint(false) // cert probe + snapshot write
         def purge(name: String, key: DataFrame, on: String): DataFrame =
           st(name).join(key, Seq(on), "left_anti")

@@ -24,18 +24,6 @@ object WriteOps {
     df.sparkSession.read.parquet(path)
   }
 
-  /** INCREMENTAL keyed refresh: overwrite ONLY the partitions present
-    * in `slice`, leaving every other partition's files untouched — the
-    * parquet analogue of the reference's per-key upsert into a keyed
-    * aggregate table (reference: app/spark_cassandra_groupby.py:74-82,
-    * mode("append") into a Cassandra table whose primary key makes the
-    * append an upsert). Spark-native form: `partitionOverwriteMode=
-    * dynamic` scopes mode("overwrite") to the partitions the incoming
-    * frame actually contains. At 100 TB a one-key refresh rewrites one
-    * directory, not the view (untouched partition files are asserted
-    * byte-identical in IngestWriteSpec). The session-level conf is set
-    * per-write via the DataFrameWriter option, so concurrent full
-    * rebuilds keep their whole-view overwrite semantics. */
   /** Data-file bytes under `path`, resolved through the Hadoop
     * FileSystem of the path's scheme — a `file:` URI, a plain local
     * path and an object-store/HDFS path all size correctly (a raw
@@ -140,14 +128,28 @@ object WriteOps {
     ()
   }
 
-  def refreshPartitions(slice: DataFrame, path: String, partitionKeys: Seq[String]): DataFrame = {
+  /** INCREMENTAL keyed refresh: overwrite ONLY the partitions present
+    * in `slice`, leaving every other partition's files untouched — the
+    * parquet analogue of the reference's per-key upsert into a keyed
+    * aggregate table (reference: app/spark_cassandra_groupby.py:74-82,
+    * mode("append") into a Cassandra table whose primary key makes the
+    * append an upsert). Spark-native form: `partitionOverwriteMode=
+    * dynamic` scopes mode("overwrite") to the partitions the incoming
+    * frame actually contains. At 100 TB a one-key refresh rewrites one
+    * directory, not the view (untouched partition files are asserted
+    * byte-identical in IngestWriteSpec). The session-level conf is set
+    * per-write via the DataFrameWriter option, so concurrent full
+    * rebuilds keep their whole-view overwrite semantics. Returns
+    * nothing: a re-read here would run a schema-inference job per
+    * call (per micro-batch in [[IngestOps.runMvMaintain]]) that no
+    * caller uses. */
+  def refreshPartitions(slice: DataFrame, path: String, partitionKeys: Seq[String]): Unit = {
     require(partitionKeys.nonEmpty, "incremental refresh needs partition keys")
     slice.write
       .mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionKeys: _*)
       .parquet(path)
-    slice.sparkSession.read.parquet(path)
   }
 
   /** Columnar-format interop: land a slice as ORC (Spark's second

@@ -1,14 +1,19 @@
 package graft.engine
 
-import org.apache.spark.ml.{Pipeline, PipelineModel, PipelineStage}
-import org.apache.spark.ml.classification.LogisticRegression
+import scala.reflect.ClassTag
+
+import org.apache.spark.ml.{Pipeline, PipelineModel, PipelineStage, Transformer}
+import org.apache.spark.ml.classification.{LogisticRegression, LogisticRegressionModel}
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.evaluation.{BinaryClassificationEvaluator, RegressionEvaluator}
-import org.apache.spark.ml.feature.{OneHotEncoder, StringIndexer, VectorAssembler}
+import org.apache.spark.ml.feature.{OneHotEncoder, OneHotEncoderModel, StringIndexer,
+  StringIndexerModel, VectorAssembler}
 import org.apache.spark.ml.functions.vector_to_array
+import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.ml.regression.LinearRegression
 import org.apache.spark.ml.stat.Correlation
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Literal, Round}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -277,19 +282,6 @@ object MLPipelines {
       .orderBy(col("component"))
   }
 
-  /** Single-row inference (the reference's Flask POST path, §3.3):
-    * unseen categories → handleInvalid=skip drops the row → caller
-    * must handle the empty frame. */
-  def predictOne(spark: SparkSession, model: PipelineModel,
-                 priority: String, status: String, segment: String,
-                 monthV: Int, yearV: Int): DataFrame = {
-    import spark.implicits._
-    val in = Seq((0L, 0.0, monthV, yearV, priority, status, segment))
-      .toDF("o_orderkey", "o_totalprice", "o_month", "o_year",
-            "o_orderpriority", "o_orderstatus", "c_mktsegment")
-    model.transform(in)
-  }
-
   /** S9: engine-level model persistence. The reference trains offline
     * and loads saved PipelineModels at serving startup
     * (app/ml_app.py:68-74); artifact layout is Spark ML's native one —
@@ -316,4 +308,111 @@ object MLPipelines {
       .withColumn("confidence",
         round(element_at(vector_to_array(col("probability")),
                          col("prediction").cast("int") + 1) * 100, 2))
+
+  private val ScorerShape =
+    "StringIndexerModel…, OneHotEncoderModel, VectorAssembler, binary LogisticRegressionModel"
+
+  /** [[withConfidence]] over a fitted [[classification]] pipeline for
+    * one request, as a driver-local function: the serving path's
+    * single-row classify (app/ml_app.py:262-298) with no Dataset, so
+    * no analysis, no optimization and no collect per call. It is built
+    * once from the fitted stages' own public state:
+    *  - each StringIndexerModel's labels, as a label → index map: an
+    *    unseen or null value gives None, as handleInvalid=skip drops
+    *    the row;
+    *  - the OneHotEncoderModel's category sizes and dropLast: an index
+    *    at or past the block width is an empty block;
+    *  - the VectorAssembler's input order: numerics as doubles, zeros
+    *    skipped, then `Vectors.sparse(…).compressed`, exactly as the
+    *    assembler builds the vector, so the model's dot product takes
+    *    the same sparse or dense path;
+    *  - the LogisticRegressionModel's own `predictRaw` and
+    *    `predictProbability`. The prediction is `raw(1) > log(t/(1-t))`,
+    *    as its `raw2prediction` computes it; the confidence is rounded
+    *    by Spark's own `Round` expression evaluated on a literal.
+    *
+    * The answers equal `withConfidence(model.transform(…))` exactly
+    * (ServingSpec checks every input perfbench draws). A model of any
+    * other shape is rejected here, naming the stage, not at its first
+    * request. The arguments are [[CategoricalCols]] ++ [[NumericCols]]
+    * in order; the function keeps no mutable state, so any number of
+    * threads may call it. */
+  def localScorer(model: PipelineModel): (String, String, String, Int, Int) => Option[(String, Double)] = {
+    def reject(stage: Transformer, why: String): Nothing = throw new IllegalArgumentException(
+      s"classifier stage ${stage.uid} (${stage.getClass.getSimpleName}) $why; a local scorer takes $ScorerShape")
+    def as[T <: Transformer](stage: Transformer)(implicit t: ClassTag[T]): T = stage match {
+      case m: T => m
+      case _ => reject(stage, s"is not a ${t.runtimeClass.getSimpleName}")
+    }
+    val stages = model.stages
+    if (stages.length < 4)
+      throw new IllegalArgumentException(s"classifier has ${stages.length} stages; a local scorer takes $ScorerShape")
+    val indexers = stages.dropRight(3).map(as[StringIndexerModel](_))
+    val encoder = as[OneHotEncoderModel](stages(stages.length - 3))
+    val assembler = as[VectorAssembler](stages(stages.length - 2))
+    val logreg = as[LogisticRegressionModel](stages.last)
+
+    // every indexer, as [[fitEncoders]] builds it (one column each):
+    // (argument position, indexed column, label → index)
+    val indexed = indexers.map { m =>
+      if (m.getHandleInvalid != "skip") reject(m, s"handles unseen values by ${m.getHandleInvalid}, not skip")
+      val pos = CategoricalCols.indexOf(m.getInputCol)
+      if (pos < 0) reject(m, s"indexes ${m.getInputCol}, which is not a request category")
+      (pos, m.getOutputCol, m.labelsArray.head.zipWithIndex.toMap)
+    }
+    // every one-hot column: (its slot in `indexed`, block width)
+    val keep = encoder.getHandleInvalid == "keep"
+    val dropLast = encoder.getDropLast
+    val encoded = encoder.getInputCols.zip(encoder.getOutputCols)
+    val oneHot: Map[String, (Int, Int)] = encoded.zip(encoder.categorySizes).map { case ((in, out), size) =>
+      val slot = indexed.indexWhere(_._2 == in)
+      if (slot < 0) reject(encoder, s"encodes $in, which no StringIndexerModel writes")
+      if (size != indexed(slot)._3.size)
+        reject(encoder, s"has $size categories for $in, its indexer ${indexed(slot)._3.size}")
+      out -> (slot, if (dropLast && !keep) size - 1 else if (keep && !dropLast) size + 1 else size)
+    }.toMap
+    // every assembler input in order: Left(numeric argument position) or Right(one-hot column)
+    val parts: Array[Either[Int, (Int, Int)]] = assembler.getInputCols.map { c =>
+      oneHot.get(c) match {
+        case Some(block) => Right(block)
+        case None =>
+          val pos = NumericCols.indexOf(c)
+          if (pos < 0) reject(assembler, s"assembles $c, which is neither one-hot nor a request numeric")
+          Left(pos)
+      }
+    }
+    if (assembler.getOutputCol != logreg.getFeaturesCol)
+      reject(assembler, s"writes ${assembler.getOutputCol}, but the model reads ${logreg.getFeaturesCol}")
+    if (logreg.numClasses != 2 || logreg.coefficientMatrix.numRows != 1) reject(logreg, "is not binomial")
+    if (logreg.getRawPredictionCol.isEmpty || logreg.getProbabilityCol != "probability" ||
+        logreg.getPredictionCol != "prediction")
+      reject(logreg, "does not write the rawPrediction, probability and prediction columns")
+    val t = logreg.getThreshold
+    val rawThreshold =
+      if (t == 0.0) Double.NegativeInfinity else if (t == 1.0) Double.PositiveInfinity else math.log(t / (1.0 - t))
+
+    (priority, status, segment, month, year) => {
+      val cats = Array(priority, status, segment)
+      val idx = indexed.map { case (pos, _, labels) => labels.getOrElse(cats(pos), -1) }
+      if (idx.contains(-1)) None
+      else {
+        val nums = Array(month.toDouble, year.toDouble)
+        val (ids, vals) = (Array.newBuilder[Int], Array.newBuilder[Double])
+        var offset = 0
+        parts.foreach {
+          case Left(pos) =>
+            if (nums(pos) != 0.0) { ids += offset; vals += nums(pos) }
+            offset += 1
+          case Right((slot, width)) =>
+            if (idx(slot) < width) { ids += offset + idx(slot); vals += 1.0 }
+            offset += width
+        }
+        val features = Vectors.sparse(offset, ids.result(), vals.result()).compressed
+        val prediction = if (logreg.predictRaw(features)(1) > rawThreshold) 1 else 0
+        val confidence = logreg.predictProbability(features)(prediction) * 100
+        Some((if (prediction == 1) "HIGH" else "LOW",
+              Round(Literal(confidence), Literal(2)).eval().asInstanceOf[Double]))
+      }
+    }
+  }
 }

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.ml.PipelineModel
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.engine.{MLPipelines, Tables}
@@ -13,6 +15,18 @@ class MLSpec extends SparkSpec {
 
   private lazy val feats =
     MLPipelines.featureTable(Tables.orders(spark, sf), Tables.customer(spark, sf)).cache()
+
+  /** Single-row inference through the Spark `transform` path (the
+    * reference's Flask POST, §3.3): an unseen category is dropped by
+    * handleInvalid=skip, so the frame is empty. */
+  private def predictOne(model: PipelineModel, priority: String, status: String, segment: String,
+                         monthV: Int, yearV: Int): DataFrame = {
+    val s = spark
+    import s.implicits._
+    model.transform(Seq((0L, 0.0, monthV, yearV, priority, status, segment))
+      .toDF("o_orderkey", "o_totalprice", "o_month", "o_year",
+            "o_orderpriority", "o_orderstatus", "c_mktsegment"))
+  }
 
   test("feature table applies dropna and positive-amount filter") {
     assert(feats.count() > 0)
@@ -53,10 +67,10 @@ class MLSpec extends SparkSpec {
 
   test("handleInvalid=skip drops rows with unseen categories at inference") {
     val (model, _) = MLPipelines.regression(feats)
-    val known = MLPipelines.predictOne(spark, model,
+    val known = predictOne(model,
       "1-URGENT", "O", "BUILDING", 6, 1996)
     assert(!known.isEmpty, "known categories should predict")
-    val unseen = MLPipelines.predictOne(spark, model,
+    val unseen = predictOne(model,
       "NO-SUCH-PRIORITY", "O", "BUILDING", 6, 1996)
     assert(unseen.isEmpty, "unseen category must be skipped (empty prediction)")
   }
@@ -99,7 +113,7 @@ class MLSpec extends SparkSpec {
       assert(r.getDouble(1) > 50.0 - 1e-6 && r.getDouble(1) <= 100.0,
         s"confidence ${r.getDouble(1)} out of range")
     }
-    val unseen = MLPipelines.predictOne(spark, model,
+    val unseen = predictOne(model,
       "NO-SUCH-PRIORITY", "O", "BUILDING", 6, 1996)
     assert(unseen.isEmpty, "unseen category must be skipped (empty prediction)")
   }

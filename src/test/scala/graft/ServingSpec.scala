@@ -1,12 +1,14 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+import java.util.concurrent.{Callable, ConcurrentHashMap, CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
   SparkListenerStageSubmitted, SparkListenerTaskEnd}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.engine.{MLPipelines, RelationalOps, Tables}
 import graft.serving.ServingFacade
@@ -66,6 +68,58 @@ class ServingSpec extends SparkSpec {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** Query executions that `body` records — every Dataset action,
+    * whether it runs a job or the optimizer folds it to local rows —
+    * counted by a QueryExecutionListener. Listener events arrive in
+    * order, so once a marker query run afterwards is seen, every
+    * execution of `body` has been counted. */
+  private def queryExecutions(body: => Any): Int = {
+    val marker = s"serving_spec_marker_${System.nanoTime()}"
+    val seen = new AtomicInteger
+    val markerDone = new CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      private def record(qe: QueryExecution): Unit =
+        if (qe.analyzed.output.exists(_.name == marker)) markerDone.countDown()
+        else seen.incrementAndGet()
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = record(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = record(qe)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).toDF(marker).collect()
+      assert(markerDone.await(60, TimeUnit.SECONDS), "listener queue did not drain")
+      seen.get
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  private type Input = (String, String, String, Int, Int)
+
+  /** Every input the perfbench serving workload draws:
+    * 5 priorities × F/O/P × 5 segments × months 1–12 × years 1995–2001. */
+  private val domain: Seq[Input] = for {
+    p <- Seq("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW")
+    s <- Seq("F", "O", "P")
+    g <- Seq("AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY")
+    m <- 1 to 12
+    y <- 1995 to 2001
+  } yield (p, s, g, m, y)
+
+  private def classifyOne(in: Input): Option[(String, Double)] = facade.classify(in._1, in._2, in._3, in._4, in._5)
+
+  /** [[ServingFacade.classifyBatch]] over `inputs` as one frame, answered
+    * per input; a row the indexers skip is None. */
+  private def batchAnswers(inputs: Seq[Input]): Seq[Option[(String, Double)]] = {
+    val s = spark
+    import s.implicits._
+    val got = facade.classifyBatch(inputs.zipWithIndex.map { case ((p, st, g, m, y), i) =>
+        (i.toLong, 0.0, m, y, p, st, g) }
+      .toDF("o_orderkey", "o_totalprice", "o_month", "o_year", "o_orderpriority",
+        "o_orderstatus", "c_mktsegment"))
+      .collect().map(r => r.getLong(0).toInt -> ((r.getString(1), r.getDouble(2)))).toMap
+    inputs.indices.map(got.get)
+  }
+
   private def pieRows(rows: Array[org.apache.spark.sql.Row]) =
     rows.map(r => (r.getString(0), r.getDouble(1), r.getLong(2))).toSeq
   private def lineRows(rows: Array[org.apache.spark.sql.Row]) =
@@ -113,6 +167,63 @@ class ServingSpec extends SparkSpec {
 
   test("unseen category returns None (handleInvalid=skip serving branch)") {
     assert(facade.classify("NO-SUCH-PRIORITY", "O", "BUILDING", 6, 1996).isEmpty)
+  }
+
+  test("classify equals classifyBatch exactly on every input perfbench draws and on the edges") {
+    val skipped: Seq[Input] = Seq(
+      ("NO-SUCH-PRIORITY", "O", "BUILDING", 6, 1996), (null, "O", "BUILDING", 6, 1996),
+      ("1-URGENT", "X", "BUILDING", 6, 1996), ("1-URGENT", null, "BUILDING", 6, 1996),
+      ("1-URGENT", "O", "NO-SUCH-SEGMENT", 6, 1996), ("1-URGENT", "O", null, 6, 1996))
+    // month 0 and year 0 take the assembler's zero-skip branch; 1980
+    // and 2030 lie outside the training years
+    val edges: Seq[Input] = Seq(
+      ("1-URGENT", "O", "BUILDING", 0, 1996), ("1-URGENT", "O", "BUILDING", 6, 0),
+      ("2-HIGH", "F", "MACHINERY", 0, 0), ("3-MEDIUM", "P", "HOUSEHOLD", 12, 2030),
+      ("5-LOW", "F", "AUTOMOBILE", 1, 1980))
+    val inputs = domain ++ skipped ++ edges
+    assert(domain.size == 6300)
+    val want = batchAnswers(inputs)
+    assert(want.take(domain.size).forall(_.isDefined), "every domain input has known categories")
+    assert(want.slice(domain.size, domain.size + skipped.size).forall(_.isEmpty),
+      "an unseen or null category is skipped by the transform path")
+    assert(want.takeRight(edges.size).forall(_.isDefined))
+    val bad = inputs.indices.filter(i => classifyOne(inputs(i)) != want(i))
+    assert(bad.isEmpty, s"${bad.size} inputs differ, e.g. " +
+      bad.take(3).map(i => s"${inputs(i)}: ${classifyOne(inputs(i))} vs ${want(i)}").mkString("; "))
+  }
+
+  test("classify plans no query; the listener does see a transform-path request") {
+    classifyOne(domain.head) // construction done
+    assert(queryExecutions(domain.take(50).foreach(classifyOne)) == 0,
+      "a single-row classify must not plan or execute a Dataset")
+    assert(queryExecutions(classifyOne(("NO-SUCH-PRIORITY", "O", "BUILDING", 6, 1996))) == 0)
+    assert(queryExecutions(batchAnswers(domain.take(1))) >= 1,
+      "the listener must record the transform path, or the zero above proves nothing")
+  }
+
+  test("classify from 3 threads × 200 calls answers as one thread does") {
+    val r = new scala.util.Random(7)
+    val calls = Seq.fill(200)(domain(r.nextInt(domain.size)))
+    val want = calls.map(classifyOne)
+    val pool = Executors.newFixedThreadPool(3)
+    val start = new CountDownLatch(1)
+    try {
+      val answers = (0 until 3).map(_ => pool.submit(new Callable[Seq[Option[(String, Double)]]] {
+        def call(): Seq[Option[(String, Double)]] = { start.await(); calls.map(classifyOne) }
+      }))
+      start.countDown()
+      answers.foreach(a => assert(a.get(60, TimeUnit.SECONDS) == want))
+    } finally pool.shutdownNow()
+  }
+
+  test("a facade over a model that is not a binary classifier fails at construction, naming the stage") {
+    val (model, _) = MLPipelines.regression(
+      MLPipelines.featureTable(Tables.orders(spark, sf), Tables.customer(spark, sf)))
+    val dir = Files.createTempDirectory("graft_serving_reg_").toString + "/reg"
+    MLPipelines.saveModel(model, dir)
+    val e = intercept[IllegalArgumentException](new ServingFacade(spark, sf, dir))
+    assert(e.getMessage.contains(model.stages.last.uid) &&
+      e.getMessage.contains("LinearRegressionModel"), e.getMessage)
   }
 
   test("each dashboard call is one single-stage, single-task job; classify runs none") {

@@ -43,9 +43,17 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   */
 object Artifacts {
 
-  /** Bucketed, sorted table layout — for artifacts whose readers join
-    * or probe on `by` (the IVF lists, the bucketed fact tables). */
-  final case class Buckets(n: Int, by: String, sortBy: String)
+  /** A stored table's physical layout, kept in its catalog entry. */
+  sealed trait Layout
+
+  /** Bucketed and sorted — for artifacts whose readers join or probe
+    * on `by` (the IVF lists, the bucketed fact tables). */
+  final case class Buckets(n: Int, by: String, sortBy: String) extends Layout
+
+  /** Partitioned by one column — for facts whose readers filter or
+    * join on it, so the scan prunes directories (the month-partitioned
+    * orders). */
+  final case class PartitionedBy(column: String) extends Layout
 
   private val builtBy = mutable.Map.empty[String, Int]
   private val memos = mutable.Map.empty[Any, Any]
@@ -61,18 +69,22 @@ object Artifacts {
     * absent. `build` runs at most once per name, under the store's
     * lock. */
   def table(family: String, params: Seq[Any], inputs: Seq[DataFrame],
-            buckets: Option[Buckets] = None)(build: => DataFrame): DataFrame =
-    inputs.head.sparkSession.read.table(ensure(family, params, inputs, buckets)(build))
+            layout: Option[Layout] = None)(build: => DataFrame): DataFrame =
+    inputs.head.sparkSession.read.table(ensure(family, params, inputs, layout)(build))
 
   /** [[table]] returning the catalog table name instead of the frame. */
   def ensure(family: String, params: Seq[Any], inputs: Seq[DataFrame],
-             buckets: Option[Buckets] = None)(build: => DataFrame): String = {
+             layout: Option[Layout] = None)(build: => DataFrame): String = {
     val spark = inputs.head.sparkSession
     val name = nameFor(family, params, inputs)
     if (!spark.catalog.tableExists(name)) synchronized {
       if (!spark.catalog.tableExists(name)) {
         val w = build.write.mode("overwrite")
-        buckets.fold(w)(b => w.bucketBy(b.n, b.by).sortBy(b.sortBy)).saveAsTable(name)
+        (layout match {
+          case Some(Buckets(n, by, sortBy)) => w.bucketBy(n, by).sortBy(sortBy)
+          case Some(PartitionedBy(c)) => w.partitionBy(c)
+          case None => w
+        }).saveAsTable(name)
         builtBy(family) = builtBy.getOrElse(family, 0) + 1
       }
     }

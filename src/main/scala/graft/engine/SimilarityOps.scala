@@ -673,7 +673,7 @@ object SimilarityOps {
     * expensive, amortizable step — it belongs OUTSIDE the query path
     * (a real ANN service builds its index offline and probes it per
     * request; the same build-once pattern as
-    * [[PartitionedTables.ensureBucketed]]). Locally the assignments
+    * [[PartitionedTables.ordersBucketedFor]]). Locally the assignments
     * are an eagerly-materialized localCheckpoint; at 100 TB they
     * persist as a table PARTITIONED/bucketed by `list_id`, so each
     * probe prunes to nProbe/nLists of the corpus at the scan. */
@@ -694,31 +694,24 @@ object SimilarityOps {
     IvfIndex(assigned, centers, nLists)
   }
 
-  /** Materialize the IVF index as two [[Artifacts]] tables —
-    * assignments and centroids, keyed by (nLists, the embeddings'
-    * identity) — then load it from the catalog, so a brand-new session
-    * (or another process sharing the warehouse) loads the assignments
-    * with NO quantizer refit (asserted in ScaleSpec): the build is an
-    * offline job, probes are table scans. The assignments table is
-    * BUCKETED on `list_id` (the probe key): locally that pins the
-    * layout; on a cluster the same bucketing means an in-list probe
-    * with a literal `list_id IN (…)` filter (the probe set is
-    * nQueries×nProbe ints — driver-collectable by construction) prunes
-    * the scan to nProbe/nLists of the corpus before any join. */
-  def ensureIvfTables(embeddings: DataFrame, nLists: Int = 16): (String, String) = {
-    lazy val idx = buildIvfIndex(embeddings, nLists)
-    (Artifacts.ensure("ivf_assign", Seq(nLists), Seq(embeddings),
-       Some(Artifacts.Buckets(nLists, "list_id", "vec_id")))(
-       idx.assigned.select(col("vec_id"), col("vec"), col("norm"), col("list_id"))),
-     Artifacts.ensure("ivf_centers", Seq(nLists), Seq(embeddings))(idx.centers))
-  }
-
+  /** The IVF index as two [[Artifacts]] tables — assignments and
+    * centroids, keyed by (nLists, the embeddings' identity) — loaded
+    * from the catalog, so a reload later in the process (after
+    * [[Artifacts.releaseAll]] too) reads the assignments with NO
+    * quantizer refit (asserted in ScaleSpec): the build is an offline
+    * job, probes are table scans. The assignments table is BUCKETED
+    * on `list_id` (the probe key): locally that pins the layout; on a
+    * cluster the same bucketing means an in-list probe with a literal
+    * `list_id IN (…)` filter (the probe set is nQueries×nProbe ints —
+    * driver-collectable by construction) prunes the scan to
+    * nProbe/nLists of the corpus before any join. */
   def ivfIndexFor(embeddings: DataFrame, nLists: Int = 16): IvfIndex = {
-    val (at, ct) = ensureIvfTables(embeddings, nLists)
-    val spark = embeddings.sparkSession
+    lazy val idx = buildIvfIndex(embeddings, nLists)
     IvfIndex(
-      spark.read.table(at).select(col("vec_id"), col("vec"), col("norm"), col("list_id")),
-      spark.read.table(ct),
+      Artifacts.table("ivf_assign", Seq(nLists), Seq(embeddings),
+          Some(Artifacts.Buckets(nLists, "list_id", "vec_id")))(
+        idx.assigned.select(col("vec_id"), col("vec"), col("norm"), col("list_id"))),
+      Artifacts.table("ivf_centers", Seq(nLists), Seq(embeddings))(idx.centers),
       nLists)
   }
 
@@ -1138,18 +1131,13 @@ object SimilarityOps {
     PqCodebook(rows.toDF("subspace", "code", "centroid"), m, k, subDim)
   }
 
-  /** The codebook as an [[Artifacts]] table — the cross-session
-    * persistence contract ([[ensureIvfTables]]): a new session loads it
-    * with no quantizer refit (ScaleSpec). */
-  def ensurePqTable(embeddings: DataFrame, m: Int = 4, k: Int = 16): String =
-    Artifacts.ensure("pq_centers", Seq(m, k), Seq(embeddings))(
-      buildPqCodebook(embeddings, m, k).centers)
-
-  /** The stored codebook; its sub-vector width is read from the table
+  /** The codebook as an [[Artifacts]] table, stored like the IVF index
+    * ([[ivfIndexFor]]): a reload later in the process runs no quantizer
+    * refit (ScaleSpec). Its sub-vector width is read from the table
     * once per session. */
   def pqCodebookFor(embeddings: DataFrame, m: Int = 4, k: Int = 16): PqCodebook = {
-    val t = ensurePqTable(embeddings, m, k)
-    val centers = embeddings.sparkSession.read.table(t)
+    val centers = Artifacts.table("pq_centers", Seq(m, k), Seq(embeddings))(
+      buildPqCodebook(embeddings, m, k).centers)
     PqCodebook(centers, m, k,
       Artifacts.memo(Artifacts.nameFor("pq_centers", Seq(m, k), Seq(embeddings)))(
         centers.select(size(col("centroid"))).head().getInt(0)))
@@ -1246,8 +1234,8 @@ object SimilarityOps {
     * ([[pqDrift]]) touch only the new batch, never the stored
     * corpus — the q235/q243 incremental contract applied to codebook
     * staleness. */
-  def ensurePqBaseline(embeddings: DataFrame, m: Int = 4, k: Int = 16): String =
-    Artifacts.ensure("pq_baseline", Seq(m, k), Seq(embeddings))(
+  def pqBaselineFor(embeddings: DataFrame, m: Int = 4, k: Int = 16): DataFrame =
+    Artifacts.table("pq_baseline", Seq(m, k), Seq(embeddings))(
       pqErrStats(pqCodebookFor(embeddings, m, k), embeddings))
 
   /** PQ codebook DRIFT audit — the refit trigger for the stored
@@ -1378,9 +1366,8 @@ object SimilarityOps {
   def pqRefitApply(embeddings: DataFrame, batch: DataFrame,
                    m: Int = 4, k: Int = 16, refitRatio: Double = 2.0,
                    nQueries: Int = 5, topK: Int = 10): DataFrame = {
-    val spark = embeddings.sparkSession
     val cb1 = pqCodebookFor(embeddings, m, k)
-    val baseline = spark.read.table(ensurePqBaseline(embeddings, m, k))
+    val baseline = pqBaselineFor(embeddings, m, k)
     // m rows by construction — bounded driver decision
     val fired = pqDrift(cb1, baseline, batch, refitRatio)
       .filter(col("refit")).limit(1).count() > 0
@@ -1456,7 +1443,7 @@ object SimilarityOps {
 
   /** Persisted FLAT-PQ codes table for a corpus under its own
     * [[pqCodebookFor]] codebook — the serving artifact the q289
-    * pointer resolves (the [[ensureIvfPqCodesTable]] pattern without
+    * pointer resolves (the [[ivfPqCodesFor]] pattern without
     * the coarse stage). Build is one map-only corpus encode, paid
     * once. */
   def ensurePqCodesTable(embeddings: DataFrame, m: Int = 4, k: Int = 16): String =
@@ -1779,20 +1766,14 @@ object SimilarityOps {
     * corpus. Bucketed by `list_id` like the assignment table, so a
     * probe with a literal `list_id IN (…)` prunes to nProbe/nLists of
     * the codes at the scan. Build is offline/amortized: one corpus
-    * encode (map-only) + one assignment join, paid once. */
-  def ensureIvfPqCodesTable(index: IvfIndex, m: Int = 4, k: Int = 16): String =
-    Artifacts.ensure("ivfpq_codes", Seq(m, k, index.nLists),
+    * encode (map-only) + one assignment join, paid once; a warm
+    * catalog load fits no sub-quantizer or coarse quantizer
+    * (ScaleSpec). */
+  def ivfPqCodesFor(index: IvfIndex, m: Int = 4, k: Int = 16): DataFrame =
+    Artifacts.table("ivfpq_codes", Seq(m, k, index.nLists),
         Seq(index.assigned, index.centers),
         Some(Artifacts.Buckets(index.nLists, "list_id", "vec_id")))(
       pqEncodeWithList(ivfPqCodebookFor(index, m, k), residualFrame(index)))
-
-  /** Load the persisted codes table (building it if absent) — zero
-    * sub-quantizer or coarse-quantizer fits on a warm catalog
-    * (ScaleSpec). */
-  def ivfPqCodesFor(index: IvfIndex, m: Int = 4, k: Int = 16): DataFrame = {
-    val spark = index.assigned.sparkSession
-    spark.read.table(ensureIvfPqCodesTable(index, m, k))
-  }
 
   /** INCREMENTAL codes for a NEW batch (q256) — the maintenance path
     * for the stored codes table, composing the two stored models the
@@ -2046,9 +2027,8 @@ object SimilarityOps {
     * list ids are stable forever. One round may leave a degenerate
     * flood-child still over the gate (the report says so via its
     * `imbalanced` column, recomputed against the grown list count);
-    * [[ivfRebalanceUntilBalanced]] is that loop — re-apply on the
-    * returned `updated` index until no flags, exactly like FAISS
-    * re-training cadences.
+    * a caller re-applies on the returned `updated` index with an
+    * empty batch until no flags, like FAISS re-training cadences.
     *
     * Scale: the flag set is ≤ nLists ids (driver-collectable by
     * construction); each 2-means fit reads one list — at 100 TB with
@@ -2292,38 +2272,6 @@ object SimilarityOps {
     IvfRebalance(report, children, updated)
   }
 
-  /** The applier's CONVERGENCE loop: append the batch and keep
-    * splitting over-full lists (each round = [[ivfRebalanceApply]] on
-    * the previous round's repaired index with an empty batch) until
-    * no list exceeds the gate or `maxRounds` is hit — the complete
-    * repair story for a degenerate flood that one split can't clear
-    * (round 1 separates flood from stored; round 2 halves the flood;
-    * …). Per round the work is bounded exactly like one applier call
-    * (flagged-list member scans + ≤2·flags k=2 fits); round count is
-    * logarithmic in how far the worst list is over its fair share,
-    * and `maxRounds` caps a pathological all-identical-vector flood
-    * (which no geometry can separate — the report says so honestly).
-    * `rounds` = applier calls made; `report` = the final round's. */
-  final case class IvfRebalanceLoop(index: IvfIndex, report: DataFrame,
-                                    rounds: Int)
-
-  def ivfRebalanceUntilBalanced(index: IvfIndex, batch: DataFrame,
-                                imbalanceFactor: Long = 2L,
-                                maxRounds: Int = 4): IvfRebalanceLoop = {
-    def emptyBatch(of: IvfIndex): DataFrame =
-      of.assigned.select(col("vec_id"),
-        expr("transform(vec, x -> CAST(x AS FLOAT))").as("embedding"))
-        .filter(lit(false))
-    var cur = ivfRebalanceApply(index, batch, imbalanceFactor)
-    var rounds = 1
-    // the report is (lists + flags) rows — a bounded per-round check
-    while (rounds < maxRounds && cur.report.filter(col("imbalanced")).count() > 0) {
-      cur = ivfRebalanceApply(cur.updated, emptyBatch(cur.updated), imbalanceFactor)
-      rounds += 1
-    }
-    IvfRebalanceLoop(cur.updated, cur.report, rounds)
-  }
-
   /** Stable oracle-facing dump of the fitted child centroids — the
     * [[IvfOracleDumpPath]] contract for the q259 applier: with the
     * children exported, the flag computation, member reassignment
@@ -2370,7 +2318,7 @@ object SimilarityOps {
     * stale set is bounded by the touched lists' membership plus the
     * appended batch — never the corpus; the re-encode is the map-only
     * q256 chain over that slice; the kept side is one anti-join. With
-    * the codes table bucketed by list_id (the [[ensureIvfPqCodesTable]]
+    * the codes table bucketed by list_id (the [[ivfPqCodesFor]]
     * layout), the durable write is a rewrite of ONLY the touched
     * lists' partitions plus the moved rows' destinations — split-sized,
     * never a corpus rewrite. Repaired ≡ a from-scratch encode of the

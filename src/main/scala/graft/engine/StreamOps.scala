@@ -775,7 +775,7 @@ object StreamOps {
     * tick's centroids), and a restart resumes from that pair; at
     * 100 TB the assignment relation is the
     * persisted list_id-bucketed table
-    * ([[SimilarityOps.ensureIvfTables]]) and a tick's durable write
+    * ([[SimilarityOps.ivfIndexFor]]) and a tick's durable write
     * is append(batch rows) + rewrite(flagged lists' partitions) —
     * batch-sized plus split-sized, never a corpus rewrite. */
   def streamingIvfRebalance(vectors: DataFrame, index: SimilarityOps.IvfIndex,

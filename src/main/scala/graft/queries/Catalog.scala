@@ -5493,7 +5493,7 @@ object Catalog {
         val emb = Tables.embeddings(s, dir)
         SimilarityOps.pqDrift(
           SimilarityOps.pqCodebookFor(emb),
-          s.read.table(SimilarityOps.ensurePqBaseline(emb)),
+          SimilarityOps.pqBaselineFor(emb),
           driftBatch(emb))
       },
       Some("""WITH cb AS (

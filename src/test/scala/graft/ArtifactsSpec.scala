@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
 
 import graft.engine._
@@ -18,11 +17,11 @@ class ArtifactsSpec extends SparkSpec {
   private def columns(df: DataFrame): Seq[(String, String)] =
     df.schema.fields.toSeq.map(f => f.name -> f.dataType.simpleString)
 
-  private def catalogTable(df: DataFrame) =
-    df.queryExecution.analyzed.collectFirst { case l: LogicalRelation => l.catalogTable }.flatten
-
   private def bucketCount(df: DataFrame): Option[Int] =
     catalogTable(df).flatMap(_.bucketSpec).map(_.numBuckets)
+
+  private def partitionColumns(df: DataFrame): Seq[String] =
+    catalogTable(df).toSeq.flatMap(_.partitionColumnNames)
 
   /** Non-comment lines of the engine sources: (file, line number, text). */
   private lazy val sourceLines: Seq[(String, Int, String)] = {
@@ -51,14 +50,14 @@ class ArtifactsSpec extends SparkSpec {
   private val writtenElsewhere = Map(
     "pq_serving_ptr" -> "mutable serving pointer, rewritten on promotion",
     "pq_promotion" -> "Artifacts.memo key of an in-session decision, no table",
-    "ivf_rebalance" -> "Artifacts.memo key of in-session fits, no table",
-    "orders_by_month" -> "external table registered over PartitionedTables.ensure's files")
+    "ivf_rebalance" -> "Artifacts.memo key of in-session fits, no table")
 
   /** One stored artifact under one parameter setting: its read-back
     * frame against the build body the store runs for it. */
   private final case class Row(group: String, setting: String, family: String,
                                stored: () => DataFrame, build: () => DataFrame,
-                               buckets: Option[Int] = None)
+                               buckets: Option[Int] = None,
+                               partitionedBy: Seq[String] = Nil)
 
   test("changing any parameter or the input rebuilds the artifact and returns its own rows") {
     val docs = Tables.documents(spark, sf)
@@ -72,6 +71,8 @@ class ArtifactsSpec extends SparkSpec {
       .select((col("vec_id") + lit(1000000L)).as("vec_id"), col("embedding"))
     val ev = Tables.events(spark, sf)
     val part = Tables.part(spark, sf)
+    val orders = Tables.orders(spark, sf)
+    val customer = Tables.customer(spark, sf)
     def table(name: String) = spark.read.table(name)
     lazy val idx = SimilarityOps.ivfIndexFor(emb)
     // the q247 ingest split over the stored sketch table
@@ -118,32 +119,38 @@ class ArtifactsSpec extends SparkSpec {
     def bpe(rounds: Int) = parts("bpe", s"rounds=$rounds", "bpe_", Seq("merges", "words"),
       Seq("merges" -> TextOps.bpeMergesFor(docs, rounds), "words" -> TextOps.bpeWordsFor(docs, rounds)),
       { val (m, w) = TextOps.bpeLearnState(docs, rounds); Seq("merges" -> m, "words" -> w) })
-    def bucketed(n: Int) = {
-      lazy val (ot, ct) = PartitionedTables.ensureBucketed(spark, sf, n)
-      Seq(Row("bucketed", s"buckets=$n", "orders_bkt", () => table(ot),
-            () => Tables.orders(spark, sf)
-              .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice")), Some(n)),
-          Row("bucketed", s"buckets=$n", "customer_bkt", () => table(ct),
-            () => Tables.customer(spark, sf).select(col("c_custkey"), col("c_mktsegment")), Some(n)))
-    }
+    def bucketed(n: Int) =
+      Seq(Row("bucketed", s"buckets=$n", "orders_bkt",
+            () => PartitionedTables.ordersBucketedFor(orders, n),
+            () => orders.select(col("o_orderkey"), col("o_custkey"), col("o_totalprice")), Some(n)),
+          Row("bucketed", s"buckets=$n", "customer_bkt",
+            () => PartitionedTables.customerBucketedFor(customer, n),
+            () => customer.select(col("c_custkey"), col("c_mktsegment")), Some(n)))
+    val partitioned = Seq(
+      Row("orders_by_month", "", "orders_by_month", () => PartitionedTables.ordersByMonthFor(orders),
+        () => orders.withColumn("o_month", month(col("o_orderdate"))), partitionedBy = Seq("o_month")),
+      Row("month_dim", "", "month_dim", () => PartitionedTables.monthDimFor(orders), () => {
+        import spark.implicits._
+        (1 to 12).map(m => (m, (m - 1) / 3 + 1)).toDF("m_month", "m_quarter")
+      }))
     def ivf(n: Int) = {
-      lazy val (at, ct) = SimilarityOps.ensureIvfTables(emb, n)
+      lazy val stored = SimilarityOps.ivfIndexFor(emb, n)
       lazy val built = SimilarityOps.buildIvfIndex(emb, n)
-      Seq(Row("ivf", s"nLists=$n", "ivf_assign", () => table(at),
+      Seq(Row("ivf", s"nLists=$n", "ivf_assign", () => stored.assigned,
             () => built.assigned.select(col("vec_id"), col("vec"), col("norm"), col("list_id")),
             Some(n)),
-          Row("ivf", s"nLists=$n", "ivf_centers", () => table(ct), () => built.centers))
+          Row("ivf", s"nLists=$n", "ivf_centers", () => stored.centers, () => built.centers))
     }
     def pq(k: Int) = Seq(
-      Row("pq", s"k=$k", "pq_centers", () => table(SimilarityOps.ensurePqTable(emb, 4, k)),
+      Row("pq", s"k=$k", "pq_centers", () => SimilarityOps.pqCodebookFor(emb, 4, k).centers,
         () => SimilarityOps.buildPqCodebook(emb, 4, k).centers),
-      Row("pq", s"k=$k", "pq_baseline", () => table(SimilarityOps.ensurePqBaseline(emb, 4, k)),
+      Row("pq", s"k=$k", "pq_baseline", () => SimilarityOps.pqBaselineFor(emb, 4, k),
         () => SimilarityOps.pqErrStats(SimilarityOps.pqCodebookFor(emb, 4, k), emb)),
       Row("pq", s"k=$k", "pq_codes", () => table(SimilarityOps.ensurePqCodesTable(emb, 4, k)),
         () => SimilarityOps.pqEncode(SimilarityOps.pqCodebookFor(emb, 4, k), emb)
           .select(col("vec_id") +: (0 until 4).map(s => col(s"code_$s")): _*)),
       Row("ivfpq_codes", s"k=$k", "ivfpq_codes",
-        () => table(SimilarityOps.ensureIvfPqCodesTable(idx, 4, k)),
+        () => SimilarityOps.ivfPqCodesFor(idx, 4, k),
         () => SimilarityOps.pqEncodeWithList(SimilarityOps.ivfPqCodebookFor(idx, 4, k),
           SimilarityOps.residualFrame(idx)), Some(16)))
     def sweeps(nProbes: Seq[Int]) = {
@@ -194,7 +201,7 @@ class ArtifactsSpec extends SparkSpec {
         SimilarityOps.annLadderBuild(emb, 5, 10, Set("int8_sym127", "trunc"))),
       param("ann_ladder", "trunc", SimilarityOps.annLadder(emb, rungs = Seq("trunc")),
         SimilarityOps.annLadderBuild(emb, 5, 10, Set("trunc")))) ++
-      bucketed(8) ++ bucketed(4) ++ ivf(16) ++ ivf(8) ++ pq(16) ++ pq(8) ++
+      bucketed(8) ++ bucketed(4) ++ partitioned ++ ivf(16) ++ ivf(8) ++ pq(16) ++ pq(8) ++
       sweeps(Seq(1, 2, 4, 8, 16)) ++ sweeps(Seq(1, 2)) ++
       curation(None) ++ curation(Some(noEdges)) ++ bpe(5) ++ bpe(3) ++ ingest ++ lm ++
       one("card_state", CorpusOps.corpusCardStateFor(docs), CorpusOps.corpusCardState(docs)) ++
@@ -247,6 +254,7 @@ class ArtifactsSpec extends SparkSpec {
       val got = rows(s)
       assert(got == rows(b), s"$what: stored rows differ from the build body")
       r.buckets.foreach(n => assert(bucketCount(s).contains(n), s"$what: bucket spec ${bucketCount(s)}"))
+      assert(partitionColumns(s) == r.partitionedBy, s"$what: partition columns ${partitionColumns(s)}")
       val name = catalogTable(s).map(_.identifier.table)
         .getOrElse(fail(s"$what: not read back from a catalog table"))
       assert(name.startsWith(r.family + "_"), s"$what: read from $name")
@@ -295,12 +303,19 @@ class ArtifactsSpec extends SparkSpec {
     def offenders(p: ((String, Int, String)) => Boolean) =
       code.filter(p).map { case (f, n, t) => s"$f:$n: $t" }
     val writers = Set("Artifacts.scala", "WriteOps.scala")
+    val defRe = """\bdef (\w+)""".r
+    val enclosingDef = code.scanLeft("") { case (d, (_, _, t)) =>
+      defRe.findFirstMatchIn(t).map(_.group(1)).getOrElse(d) }.tail
     assert(offenders { case (f, _, t) =>
       t.contains("saveAsTable(") && !writers(f) && !t.contains("saveAsTable(ptrT)") }.isEmpty,
       "saveAsTable outside Artifacts, WriteOps and the PQ serving-pointer writer")
-    assert(offenders { case (_, _, t) =>
-      t.contains("toHexString(") && t.contains("hashCode") && !t.contains("tmpdir") }.isEmpty,
-      "a catalog-table name built from a hashCode")
+    // Catalog.tmpDir names the write-path queries' output directories,
+    // not a store
+    val hashNamed = code.zip(enclosingDef).collect {
+      case ((f, n, t), d) if t.contains("toHexString(") && t.contains("hashCode") &&
+          !(f == "Catalog.scala" && d == "tmpDir") => s"$f:$n ($d): $t"
+    }
+    assert(hashNamed.isEmpty, s"a name built from a hashCode:\n${hashNamed.mkString("\n")}")
     assert(offenders { case (_, _, t) => "def release\\s*\\(".r.findFirstIn(t).isDefined }.isEmpty,
       "a release hook besides Artifacts.releaseAll")
     assert(offenders { case (f, _, t) =>
@@ -321,9 +336,6 @@ class ArtifactsSpec extends SparkSpec {
     // state resumes from its own committed snapshot
     val certOps = Set("takedownApply", "takedownApplyFrom", "takedownPropagation",
       "docRetentionSweep")
-    val defRe = """\bdef (\w+)""".r
-    val enclosingDef = code.scanLeft("") { case (d, (_, _, t)) =>
-      defRe.findFirstMatchIn(t).map(_.group(1)).getOrElse(d) }.tail
     val storedOption = """\bstored[A-Z]\w*: Option\[""".r
     val strayOptions = code.zip(enclosingDef).collect {
       case ((f, n, t), d) if storedOption.findFirstIn(t).isDefined &&

@@ -11,7 +11,7 @@ import graft.engine.Exact._
 class ScaleSpec extends SparkSpec {
 
   test("partitioned layout round-trips orders exactly") {
-    val part = PartitionedTables.ordersByMonth(spark, sf)
+    val part = PartitionedTables.ordersByMonthFor(Tables.orders(spark, sf))
     val raw = Tables.orders(spark, sf)
     assert(part.count() == raw.count())
     // partition column equals the derived month for every row
@@ -19,8 +19,10 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("partitioned layout resolves through the session catalog via spark.read.table") {
-    val name = PartitionedTables.registerCatalog(spark, sf)
-    val viaTable = spark.read.table(name)
+    val viaTable = PartitionedTables.ordersByMonthFor(Tables.orders(spark, sf))
+    // the layout lives in the table's own catalog entry
+    assert(catalogTable(viaTable).map(_.partitionColumnNames).contains(Seq("o_month")),
+      s"expected a catalog table partitioned on o_month: ${catalogTable(viaTable)}")
     assert(viaTable.count() == Tables.orders(spark, sf).count())
     // the partition column survives catalog resolution and still
     // prunes statically: a single-month read scans one partition
@@ -33,9 +35,8 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("bucketed orders-customer join plans with no join-side shuffle, matches raw join") {
-    val (ot, ct) = PartitionedTables.ensureBucketed(spark, sf)
-    val o = spark.read.table(ot)
-    val c = spark.read.table(ct)
+    val o = PartitionedTables.ordersBucketedFor(Tables.orders(spark, sf))
+    val c = PartitionedTables.customerBucketedFor(Tables.customer(spark, sf))
     val joined = o.join(c, o("o_custkey") === c("c_custkey"))
     val plan = joined.queryExecution.executedPlan.toString
     // both sides are pre-distributed by the bucketing — a hash exchange
@@ -154,19 +155,41 @@ class ScaleSpec extends SparkSpec {
       s"expected dynamic partition pruning in the physical plan:\n$plan")
   }
 
-  test("IVF index persists across sessions: fresh probe scans the bucketed table, no refit") {
+  test("quarter rollup after its orders are rewritten reads the new rows: no stale layout") {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val dir = Files.createTempDirectory("graft_ptables_rewrite_")
+    Files.copy(Paths.get(s"$sf/orders.parquet"), dir.resolve("orders.parquet"))
+    def rollup() = PartitionedTables.quarterRollup(spark, dir.toString, quarter = 1).collect()
+      .map(r => r.getLong(0) -> (r.getDouble(1), r.getLong(2))).toMap
+    val before = rollup()
+    // a strict subset, swapped in for the same orders path
+    val staged = dir.resolve("orders_subset").toString
+    Tables.orders(spark, sf).filter(col("o_orderkey") % 3 =!= 0).coalesce(1).write.parquet(staged)
+    val part = new java.io.File(staged).listFiles().find(_.getName.endsWith(".parquet")).get
+    Files.move(part.toPath, dir.resolve("orders.parquet"), StandardCopyOption.REPLACE_EXISTING)
+    val direct = Tables.orders(spark, dir.toString)
+      .filter(month(col("o_orderdate")).isin(1, 2, 3))
+      .groupBy(month(col("o_orderdate")).cast("long").as("o_month"))
+      .agg(decSum(col("o_totalprice")).as("total_price"), count(lit(1)).as("n_orders"))
+      .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getLong(2))).toMap
+    assert(direct != before, "the rewrite must change the quarter's rollup")
+    assert(rollup() == direct, "the rollup must read the rewritten orders")
+  }
+
+  test("IVF index reloads after releaseAll: probe scans the bucketed table, no refit") {
     import graft.engine.SimilarityOps
     val emb = Tables.embeddings(spark, sf)
     // first call: builds the quantizer and persists the catalog tables
     SimilarityOps.ivfIndexFor(emb)
-    // simulate a new session: drop the in-session state; the catalog
-    // tables survive (same warehouse — what a restarted job sees)
+    // drop the in-session state; the catalog tables stay for the rest
+    // of the process
     Artifacts.releaseAll()
     val buildsBefore = Artifacts.builds("ivf_assign")
     val idx = SimilarityOps.ivfIndexFor(emb)
     assert(Artifacts.builds("ivf_assign") == buildsBefore,
       "loading a persisted IVF index must not refit the quantizer")
-    val (at, _) = SimilarityOps.ensureIvfTables(emb, 16)
+    val at = catalogTable(idx.assigned).map(_.identifier.table)
+      .getOrElse(fail("the loaded index must read a catalog table"))
     val optimized = idx.assigned.queryExecution.optimizedPlan.toString
     assert(optimized.contains("ivf_assign_"),
       s"expected the probe side to scan the catalog table $at:\n$optimized")
@@ -557,7 +580,7 @@ class ScaleSpec extends SparkSpec {
     // the drift report's baseline x probe join is m-row metadata on
     // both sides: anything but a broadcast is a plan bug
     val dr = SimilarityOps.pqDrift(cb,
-      spark.read.table(SimilarityOps.ensurePqBaseline(emb)), emb)
+      SimilarityOps.pqBaselineFor(emb), emb)
     dr.collect()
     val dp = dr.queryExecution.executedPlan.toString
     assert(!dp.contains("SortMergeJoin"),

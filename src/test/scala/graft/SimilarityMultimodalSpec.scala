@@ -501,14 +501,15 @@ class SimilarityMultimodalSpec extends SparkSpec {
 
   test("PQ drift fixture: stored baseline loads with zero refits and equals a recompute") {
     val cb = SimilarityOps.pqCodebookFor(emb)
-    val t = SimilarityOps.ensurePqBaseline(emb)
-    val builds0 = Artifacts.builds("pq_centers")
-    val t2 = SimilarityOps.ensurePqBaseline(emb)
-    assert(t == t2 && Artifacts.builds("pq_centers") == builds0,
+    val baseline = SimilarityOps.pqBaselineFor(emb)
+    val builds0 = (Artifacts.builds("pq_centers"), Artifacts.builds("pq_baseline"))
+    val again = SimilarityOps.pqBaselineFor(emb)
+    assert(catalogTable(again).map(_.identifier) == catalogTable(baseline).map(_.identifier) &&
+      (Artifacts.builds("pq_centers"), Artifacts.builds("pq_baseline")) == builds0,
       "baseline reuse must not refit the quantizers")
     def key(r: org.apache.spark.sql.Row) =
       (r.getLong(0), r.getLong(1), r.getDouble(2))
-    val stored = spark.read.table(t).collect().map(key).toSet
+    val stored = baseline.collect().map(key).toSet
     val re = SimilarityOps.pqErrStats(cb, emb).collect().map(key).toSet
     assert(stored == re,
       "stored baseline must equal a rebuild (decimal sums are order-independent)")
@@ -517,10 +518,12 @@ class SimilarityMultimodalSpec extends SparkSpec {
   test("IVF-PQ codes table: persisted with list_id, zero refits on reload, incremental ≡ build") {
     val idx = SimilarityOps.ivfIndexFor(emb)
     val cb = SimilarityOps.ivfPqCodebookFor(idx)
-    val t = SimilarityOps.ensureIvfPqCodesTable(idx)
+    SimilarityOps.ivfPqCodesFor(idx)
     val pq0 = Artifacts.builds("pq_centers")
     val iv0 = Artifacts.builds("ivf_assign")
     val codes = SimilarityOps.ivfPqCodesFor(idx)
+    val t = catalogTable(codes).map(_.identifier.table)
+      .getOrElse(fail("the codes must read a catalog table"))
     assert(Artifacts.builds("pq_centers") == pq0 && Artifacts.builds("ivf_assign") == iv0,
       "loading the persisted codes table must fit nothing")
     val desc = spark.sql(s"DESCRIBE EXTENDED $t")
@@ -693,14 +696,17 @@ class SimilarityMultimodalSpec extends SparkSpec {
     assert(rep2.codes.count() == m.updated.assigned.count())
     // deletion path: the dropped victims' rows are GONE, not kept
     assert(rep2.codes.filter(col("vec_id").isin(victimIds: _*)).count() == 0L)
-    // MULTI-ROUND: the convergence loop may split across several
-    // rounds; one repair against (initial, final) still detects every
-    // stale row (staleness is content-diffed, not round-counted)
-    val loop = SimilarityOps.ivfRebalanceUntilBalanced(index, batch)
-    val rep3 = SimilarityOps.ivfPqCodesRepair(codes, index, loop.index, cb)
+    // MULTI-ROUND: a second split round re-applies on round 1's
+    // repaired index with an empty batch; one repair against (initial,
+    // final) still detects every stale row (staleness is
+    // content-diffed, not round-counted)
+    val round2 = SimilarityOps.ivfRebalanceApply(reb.updated,
+      reb.updated.assigned.select(col("vec_id"),
+        expr("transform(vec, x -> CAST(x AS FLOAT))").as("embedding")).filter(lit(false))).updated
+    val rep3 = SimilarityOps.ivfPqCodesRepair(codes, index, round2, cb)
     assert(key(rep3.codes) == key(SimilarityOps.pqEncodeWithList(cb,
-        SimilarityOps.residualFrame(loop.index))),
-      "one repair spans the whole convergence loop")
+        SimilarityOps.residualFrame(round2))),
+      "one repair spans both split rounds")
   }
 
   test("PQ v2 promotion: approved flip serves the v2 encode via the pointer; rejected gate is a no-op on artifacts") {
@@ -1051,12 +1057,11 @@ class SimilarityMultimodalSpec extends SparkSpec {
     }
   }
 
-  test("IVF rebalance convergence loop: a one-split-resistant flood clears in a later round") {
-    import spark.implicits._
+  test("IVF rebalance round 1: a one-split-resistant flood stays flagged") {
     val index = SimilarityOps.ivfIndexFor(emb)
     // the q259 catalog flood: 1/7 of the corpus near (100, …) — round
     // 1 separates flood from stored but the flood child stays over
-    // the gate; round 2 halves the flood along its jitter
+    // the gate
     val batch = emb.filter(col("vec_id") % 7 === 3)
       .select((col("vec_id") + lit(1000000L)).as("vec_id"),
         expr("transform(embedding, x -> 100.0D + CAST(x AS DOUBLE) * 0.01D)")
@@ -1064,15 +1069,6 @@ class SimilarityMultimodalSpec extends SparkSpec {
     val r1 = SimilarityOps.ivfRebalanceApply(index, batch)
     assert(r1.report.filter(col("imbalanced")).count() > 0,
       "round 1 must leave the flood child flagged (the one-split-resistant case)")
-    val loop = SimilarityOps.ivfRebalanceUntilBalanced(index, batch)
-    assert(loop.rounds >= 2, "convergence must take the later-round path")
-    assert(loop.report.filter(col("imbalanced")).count() == 0,
-      s"loop must end balanced (rounds=${loop.rounds})")
-    // conservation through every round, and a coherent final relation
-    assert(loop.index.assigned.count() == emb.count() + batch.count())
-    assert(loop.index.centers.count() == loop.index.nLists.toLong)
-    assert(SimilarityOps.ivfTopK(loop.index, nQueries = 2, k = 5, nProbe = 4)
-      .count() > 0, "the converged index serves probes")
   }
 
   test("PQ refit applier: in-distribution batch is a no-op on artifacts") {
@@ -1081,8 +1077,8 @@ class SimilarityMultimodalSpec extends SparkSpec {
     // this batch (vec_id + 9800000) is used by no other test, so the
     // no-op claim is tested on artifacts only this test could create
     SimilarityOps.pqCodebookFor(emb) // v1 (at most one fit)
-    SimilarityOps.ensurePqBaseline(emb)
-    val v1Table = SimilarityOps.ensurePqTable(emb)
+    SimilarityOps.pqBaselineFor(emb)
+    val v1Table = Artifacts.nameFor("pq_centers", Seq(4, 16), Seq(emb))
     val v1Before = spark.table(v1Table).collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2)).toMap
     val batch = emb.filter(col("vec_id") % 5 === 2)
@@ -1105,7 +1101,7 @@ class SimilarityMultimodalSpec extends SparkSpec {
   test("PQ refit applier: drifting batch fires, v2 is a new versioned table, v1 untouched") {
     import spark.implicits._
     SimilarityOps.pqCodebookFor(emb)
-    val v1Table = SimilarityOps.ensurePqTable(emb)
+    val v1Table = Artifacts.nameFor("pq_centers", Seq(4, 16), Seq(emb))
     val v1Before = spark.table(v1Table).collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2)).toMap
     val batch = emb.filter(col("vec_id") % 5 === 2)

@@ -2647,60 +2647,19 @@ object CorpusOps {
       .localCheckpoint(false) // the quarantined SOURCE (text side)
     val qEmb = embeddings.join(rmVec, Seq("vec_id"), "left_semi")
       .localCheckpoint(false) // the quarantined SOURCE (vector side)
-    // row-identity via an order-insensitive MULTISET COMMITMENT: per
-    // store, (count, Σ xxhash64(row) as DECIMAL(38,0)) on each side —
-    // two map-only scans instead of a symmetric exceptAll's
-    // shuffle-compare (measured 5.5 → ~1.5 s at sf0.1; at 100 TB the
-    // difference is a scan vs a full-store join). The sum carries
-    // multiplicity, so duplicate rows can't cancel; a single drifted
-    // row flips the commitment.
-    //
-    // ONE tag-union aggregate for the WHOLE ledger (r18, guide
-    // §2.3/§2.4): the previous shape cross-joined three single-row
-    // aggregates per artifact — 12 artifacts, ~36 aggregate subtrees,
-    // each its own AQE stage job, with the purged frame's lineage
-    // planned twice wherever the restore unions on top of it. Every
-    // distinct input now enters ONCE as (artifact, side, row-hash) —
-    // a purged frame that is also the restore's base explodes into
-    // both tags — and a single groupBy(artifact) computes every count
-    // and commitment with conditional sums. Values are bit-identical:
-    // counts and the commutative decimal hash sums cannot change
-    // under regrouping.
-    val ledgerParts =
-      scala.collection.mutable.ArrayBuffer.empty[(String, DataFrame, Seq[String])]
+    val parts = scala.collection.mutable.ArrayBuffer.empty[RoundTripPart]
     def row(artifact: String, original: DataFrame, purged: DataFrame,
-            rederived: DataFrame): Unit = {
-      ledgerParts += ((artifact, original, Seq("b")))
-      ledgerParts += ((artifact, purged, Seq("p", "r")))
-      ledgerParts += ((artifact, rederived, Seq("r")))
-    }
+            rederived: DataFrame): Unit = parts ++= Seq(
+      RoundTripPart(artifact, original, Seq("b")),
+      RoundTripPart(artifact, purged, Seq("p", "r")),
+      RoundTripPart(artifact, rederived, Seq("r")))
     // non-union restores (LM decrement/merge, card fold-out/fold-in):
     // each side is its own frame
     def rowSides(artifact: String, original: DataFrame, purged: DataFrame,
-                 restored: DataFrame): Unit = {
-      ledgerParts += ((artifact, original, Seq("b")))
-      ledgerParts += ((artifact, purged, Seq("p")))
-      ledgerParts += ((artifact, restored, Seq("r")))
-    }
-    def ledger(): DataFrame =
-      ledgerParts.map { case (artifact, df, sides) =>
-        df.select(lit(artifact).as("artifact"),
-          explode(array(sides.map(lit(_)): _*)).as("side"),
-          xxhash64(df.columns.map(col(_)): _*).cast("decimal(38,0)").as("h"))
-      }.reduce(_ unionByName _)
-        .groupBy(col("artifact"))
-        .agg(
-          count(when(col("side") === "b", lit(1))).cast("long").as("n_before"),
-          count(when(col("side") === "p", lit(1))).cast("long").as("n_purged"),
-          count(when(col("side") === "r", lit(1))).cast("long").as("n_restored"),
-          coalesce(sum(when(col("side") === "b", col("h"))),
-            lit(0).cast("decimal(38,0)")).as("h_before"),
-          coalesce(sum(when(col("side") === "r", col("h"))),
-            lit(0).cast("decimal(38,0)")).as("h_restored"))
-        .select(col("artifact"), lit("all").as("key"),
-          col("n_before"), col("n_purged"), col("n_restored"),
-          (col("h_restored") === col("h_before") &&
-            col("n_restored") === col("n_before")).as("clean"))
+                 restored: DataFrame): Unit = parts ++= Seq(
+      RoundTripPart(artifact, original, Seq("b")),
+      RoundTripPart(artifact, purged, Seq("p")),
+      RoundTripPart(artifact, restored, Seq("r")))
     // the using-join moves the key column to the front; re-select the
     // store's own column ORDER so the identity probes (positional
     // exceptAll) and the re-derived unions stay aligned
@@ -2754,7 +2713,58 @@ object CorpusOps {
         SimilarityOps.binarySignaturesWide(qEmbWide)
           .select(col("vec_id"), col("sig")))
     }
-    ledger().orderBy(col("artifact"))
+    roundTripLedger(parts.toSeq)
+  }
+
+  /** One frame of a round-trip ledger: `frame`'s rows on the ledger
+    * `sides` of `artifact` — "b" the original store, "p" the purged
+    * one, "r" the restored one (a purged frame that is also the
+    * restore's verbatim half carries both "p" and "r"). Its counts are
+    * row counts, or the sum of `mass` where given. */
+  final case class RoundTripPart(artifact: String, frame: DataFrame, sides: Seq[String],
+                                 mass: Option[String] = None)
+
+  /** The round-trip commitment ledger of [[quarantineRoundTrip]]
+    * (q287) and [[EventOps.userQuarantineRoundTrip]] (q290): one
+    * (artifact, key, n_before, n_purged, n_restored, clean) row per
+    * artifact, clean = the restored store is ROW-IDENTICAL to the
+    * original — equal row counts AND equal order-insensitive multiset
+    * commitments (Σ xxhash64(row) in exact decimal). The commitment
+    * is two map-only scans per store instead of a symmetric
+    * exceptAll's shuffle-compare (measured 5.5 → ~1.5 s at sf0.1; at
+    * 100 TB the difference is a scan vs a full-store join); the sum
+    * carries multiplicity, so duplicate rows can't cancel, and a
+    * single drifted row flips it.
+    *
+    * ONE tag-union aggregate for the whole ledger: every distinct
+    * input enters once as (artifact, h, m, side) — exploded into each
+    * of its sides — and a single groupBy(artifact) computes every
+    * count, mass and commitment with conditional sums, instead of
+    * three single-row aggregates per artifact, each its own stage job.
+    * Values cannot change under regrouping: counts and masses are
+    * exact integer sums, the commitment a commutative decimal sum. */
+  private[engine] def roundTripLedger(parts: Seq[RoundTripPart]): DataFrame = {
+    def onSide(s: String, c: Column) = when(col("side") === s, c)
+    val zero = lit(0).cast("decimal(38,0)")
+    parts.map { p =>
+      p.frame.select(lit(p.artifact).as("artifact"),
+        xxhash64(p.frame.columns.map(col(_)): _*).cast("decimal(38,0)").as("h"),
+        p.mass.fold(lit(1L))(col(_).cast("long")).as("m"),
+        explode(array(p.sides.map(lit(_)): _*)).as("side"))
+    }.reduce(_ unionByName _)
+      .groupBy(col("artifact")).agg(
+        coalesce(sum(onSide("b", col("m"))), lit(0L)).cast("long").as("n_before"),
+        coalesce(sum(onSide("p", col("m"))), lit(0L)).cast("long").as("n_purged"),
+        coalesce(sum(onSide("r", col("m"))), lit(0L)).cast("long").as("n_restored"),
+        count(onSide("b", lit(1))).as("n_rows_b"),
+        count(onSide("r", lit(1))).as("n_rows_r"),
+        coalesce(sum(onSide("b", col("h"))), zero).as("h_before"),
+        coalesce(sum(onSide("r", col("h"))), zero).as("h_restored"))
+      .select(col("artifact"), lit("all").as("key"),
+        col("n_before"), col("n_purged"), col("n_restored"),
+        (col("h_restored") === col("h_before") &&
+          col("n_rows_r") === col("n_rows_b")).as("clean"))
+      .orderBy(col("artifact"))
   }
 
   /** TAKEDOWN of the REMAINING persisted stores (q273, r15 — VERDICT

@@ -735,24 +735,6 @@ object DedupOps {
     ids.toSeq.map(id => (id, find(id))).toDF("doc_id", "cluster_id")
   }
 
-  /** Convergence diagnostics for one [[connectedComponents]] run —
-    * `symEdges` is the DIRECTED symmetric edge count (2× the input
-    * pairs; input duplicates would be counted, the pair generators
-    * emit distinct pairs); `rounds` is propagation rounds to fixpoint
-    * including the one detection round. Recorded per edge set in
-    * SCALE.md so the "near-dup clusters are shallow" claim is
-    * measured, not asserted. */
-  final case class CCStats(nodes: Long, symEdges: Long, rounds: Int)
-
-  def connectedComponentsWithStats(nodes: DataFrame, edges: DataFrame,
-                                   maxIter: Int = 100,
-                                   checkpoint: CcCheckpoint = CcCheckpoint.Local): (DataFrame, CCStats) = {
-    val (labels, rounds, nNodes, sym) = ccRun(nodes, edges, maxIter, checkpoint)
-    val st = CCStats(nNodes, sym.count(), rounds)
-    sym.unpersist(blocking = false)
-    (labels, st)
-  }
-
   /** The iterative core, on partitioner-aware cached RDDs — the one
     * operator in the engine where the DataFrame API is the WRONG tool:
     * Catalyst re-analyzes, re-optimizes and re-plans every round,
@@ -780,8 +762,14 @@ object DedupOps {
     * changes; the sum is the round's ONE action and doubles as the
     * cache materializer. Lineage is truncated by caching each round
     * and unpersisting the previous one (at cluster scale swap the
-    * final cache for a reliable checkpoint, as before). */
-  private def ccRun(nodes: DataFrame, edges: DataFrame, maxIter: Int,
+    * final cache for a reliable checkpoint, as before).
+    *
+    * Returns (labels, rounds, node count, the persisted symmetric
+    * edges — 2× the input pairs; the caller unpersists them). Rounds
+    * count propagation rounds to fixpoint including the one detection
+    * round; ScaleSpec records them per edge set (SCALE.md) so the
+    * "near-dup clusters are shallow" claim is measured. */
+  private[graft] def ccRun(nodes: DataFrame, edges: DataFrame, maxIter: Int,
                     checkpoint: CcCheckpoint = CcCheckpoint.Local)
       : (DataFrame, Int, Long, org.apache.spark.rdd.RDD[(Long, Long)]) = {
     import org.apache.spark.HashPartitioner

@@ -30,24 +30,13 @@ object EventOps {
     * Scale: ONE shuffle on user_id shared by all three window layers
     * (same partitioning, one sort), then a user-count-sized
     * aggregate. Never joins events to events. */
-  def funnel(events: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val flagged = events
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-      .withColumn("s1", max(when(col("event_type") === "view", 1).otherwise(0)).over(w))
-      .withColumn("s2", max(when(col("event_type") === "click" && col("s1") === 1, 1)
-        .otherwise(0)).over(w))
-      .withColumn("s3", max(when(col("event_type") === "purchase" && col("s2") === 1, 1)
-        .otherwise(0)).over(w))
-    val perUser = flagged.groupBy(col("user_id"))
-      .agg(max(col("s1")).as("r1"), max(col("s2")).as("r2"), max(col("s3")).as("r3"))
-    val one = perUser.agg(
-      count(lit(1)).cast("long").as("total"),
-      sum(col("r1")).cast("long").as("n1"),
-      sum(col("r2")).cast("long").as("n2"),
-      sum(col("r3")).cast("long").as("n3"))
-    one.select(expr(
+  def funnel(events: DataFrame): DataFrame =
+    funnelReach(events).agg(
+        count(lit(1)).cast("long").as("total"),
+        sum(col("r1")).cast("long").as("n1"),
+        sum(col("r2")).cast("long").as("n2"),
+        sum(col("r3")).cast("long").as("n3"))
+      .select(expr(
         "stack(3, 1L, 'view', n1, total, " +
         "2L, 'click', n2, n1, " +
         "3L, 'purchase', n3, n2) AS (stage_idx, stage, n_users, prev)"),
@@ -57,6 +46,23 @@ object EventOps {
         (col("n_users").cast("double") / nullif(col("prev"), lit(0L)))
           .as("frac_of_prev"))
       .orderBy(col("stage_idx"))
+
+  /** [[funnel]]'s count body: one row per user, (user_id, r1, r2, r3)
+    * with r_k = 1 where the user converts stage k. Reach is within-user,
+    * so a stage count is the sum of r_k over any user set — what
+    * [[restatement]] adds and subtracts. */
+  private[engine] def funnelReach(events: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    events
+      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
+      .withColumn("s1", max(when(col("event_type") === "view", 1).otherwise(0)).over(w))
+      .withColumn("s2", max(when(col("event_type") === "click" && col("s1") === 1, 1)
+        .otherwise(0)).over(w))
+      .withColumn("s3", max(when(col("event_type") === "purchase" && col("s2") === 1, 1)
+        .otherwise(0)).over(w))
+      .groupBy(col("user_id"))
+      .agg(max(col("s1")).as("r1"), max(col("s2")).as("r2"), max(col("s3")).as("r3"))
   }
 
   /** The stored [[funnel]] of `events` — one of the six event-derived
@@ -85,24 +91,33 @@ object EventOps {
     * throughout; the only division is retention, exact BIGINT ÷
     * BIGINT per row. */
   def retentionCohorts(events: DataFrame): DataFrame = {
-    val firstSeen = events.groupBy(col("user_id"))
-      .agg(date_trunc("week", min(col("ts"))).cast("date").as("cohort_week"))
-    val active = events
-      .select(col("user_id"), date_trunc("week", col("ts")).cast("date").as("wk"))
-      .distinct()
-    val joined = active.join(firstSeen, "user_id")
-      .select(col("user_id"), col("cohort_week"),
-        expr("CAST(datediff(wk, cohort_week) DIV 7 AS BIGINT)").as("week_offset"))
-    val sizes = firstSeen.groupBy(col("cohort_week"))
+    val sizes = cohortWeeks(events).groupBy(col("cohort_week"))
       .agg(count(lit(1)).cast("long").as("cohort_size"))
-    joined
-      .groupBy(col("cohort_week"), col("week_offset"))
-      .agg(count(lit(1)).cast("long").as("n_active"))
+    retentionCells(events)
       .join(sizes, "cohort_week")
       .select(col("cohort_week"), col("week_offset"), col("n_active"),
         (col("n_active").cast("double") / col("cohort_size")).as("retention"))
       .orderBy(col("cohort_week"), col("week_offset"))
   }
+
+  /** [[retentionCohorts]]' count body: the (cohort_week, week_offset,
+    * n_active) activity cells. A user's cohort is their own first
+    * week, so cells are within-user sums. A user is always active in
+    * their cohort week, so the offset-0 cell is the cohort size. */
+  private[engine] def retentionCells(events: DataFrame): DataFrame =
+    events
+      .select(col("user_id"), date_trunc("week", col("ts")).cast("date").as("wk"))
+      .distinct()
+      .join(cohortWeeks(events), "user_id")
+      .select(col("cohort_week"),
+        expr("CAST(datediff(wk, cohort_week) DIV 7 AS BIGINT)").as("week_offset"))
+      .groupBy(col("cohort_week"), col("week_offset"))
+      .agg(count(lit(1)).cast("long").as("n_active"))
+
+  /** Each user's cohort: the week of their first event. */
+  private def cohortWeeks(events: DataFrame): DataFrame =
+    events.groupBy(col("user_id"))
+      .agg(date_trunc("week", min(col("ts"))).cast("date").as("cohort_week"))
 
   /** The stored [[retentionCohorts]] of `events` (see [[funnelFor]]). */
   def retentionCohortsFor(events: DataFrame): DataFrame =
@@ -570,66 +585,200 @@ object EventOps {
       .orderBy(col("event_type"), col("d"))
   }
 
-  /** First-order next-event transition matrix — the user-journey
-    * Markov table ("what follows a view?") behind funnel design and
-    * anomaly detection (a transition whose share shifts between
-    * releases is a regression signal; pair with the q191 TV gate to
-    * alert on it). Each user's event sequence contributes its
-    * adjacent pairs via one `lead` over the SAME (user, ts, event_id)
-    * sort every event operator here shares — one user-keyed shuffle,
-    * never an event×event join; the matrix is |types|² rows, so the
-    * totals join is dimension-scale. Probabilities are floor-divided
-    * ppm integers — bit-identical on any engine, no fp accumulation. */
+  /** The six user-derived stores a user-level correction restates, by
+    * snapshot name: the user-PARTITIONED conversation manifest (q280),
+    * sessions (q161) and attribution rows (q172), and the ADDITIVE
+    * funnel (q146), retention cells (q147) and transition matrix
+    * (q199), each additive one as its (key…, count) projection with a
+    * long count. The one definition of the six stores: the batch
+    * corrections read them from the stored tables of their `events`
+    * ([[storedUserStores]]), the streaming twins from their carried
+    * snapshots. */
+  private[engine] def userStores(manifest: DataFrame, sessions: DataFrame,
+                                 funnel: DataFrame, retention: DataFrame,
+                                 transitions: DataFrame,
+                                 attribution: DataFrame): Seq[(String, DataFrame)] =
+    Seq("manifest" -> manifest, "sessions" -> sessions, "attribution" -> attribution) ++
+      additiveStores.zip(Seq(funnel, retention, transitions)).map { case (a, store) =>
+        a.name -> store.select(a.keys.map(col) :+ col(a.count).cast("long").as(a.count): _*)
+      }
+
+  /** The six stored tables of `events` itself ([[funnelFor]] and its
+    * siblings), built on first use. */
+  private def storedUserStores(events: DataFrame): Map[String, DataFrame] =
+    userStores(TemporalOps.sessionPackManifestFor(events), sessionsFor(events),
+      funnelFor(events), retentionCohortsFor(events), eventTransitionsFor(events),
+      lastTouchAttributionFor(events)).toMap
+
+  /** An additive store: its key columns, its count column and its
+    * count body — rows whose per-key sum of `count` is the store's
+    * count over any set of users' events. A `dense` store has a row
+    * for every key, even at zero (a rebuild always emits all three
+    * funnel stages); a sparse one has a row only where the count is
+    * positive. */
+  private final case class Additive(name: String, keys: Seq[String], count: String,
+                                    dense: Boolean, counts: DataFrame => DataFrame)
+
+  private val additiveStores = Seq(
+    Additive("funnel", Seq("stage"), "n_users", dense = true, ev => funnelReach(ev)
+      .select(expr("stack(3, 'view', r1, 'click', r2, 'purchase', r3) AS (stage, n_users)"))),
+    Additive("retention", Seq("cohort_week", "week_offset"), "n_active", dense = false,
+      retentionCells),
+    Additive("transitions", Seq("event_type", "next_type"), "n_transitions",
+      dense = false, transitionEdges))
+
+  private val partitionedBuilds: Seq[(String, DataFrame => DataFrame)] = Seq(
+    "manifest" -> (TemporalOps.sessionPackManifest(_)),
+    "sessions" -> (sessionize(_)),
+    "attribution" -> lastTouchAttribution)
+
+  /** The snapshot names of [[userStores]], in order. */
+  private[engine] val userStoreNames: Seq[String] =
+    partitionedBuilds.map(_._1) ++ additiveStores.map(_.name)
+
+  /** THE RESTATEMENT of the user-derived stores — the one correction
+    * behind the user takedown (q284), the retention sweep (q286), the
+    * quarantine round trip (q290) and their streaming twins. A set of
+    * users' events changes from `old` to `nu`: a takedown or
+    * quarantine has nu = ∅, a restore old = ∅, a retention sweep old =
+    * the touched users' full events and nu = their kept events.
+    *   - Each additive store becomes, per key, (key…, n_before,
+    *     n_after) with n_after = stored − counts(old) + counts(nu): the
+    *     store left-outer-joins the broadcast keyed sums of each count
+    *     body, and the keys only counts(nu) has (a migrated cohort, a
+    *     restored cell) union in. A plan that needs only the stored
+    *     keys (a row count) drops both joins.
+    *   - Each user-partitioned store becomes anti-join(`users`) ∪
+    *     build(nu), with the store's own column order.
+    * Every count body and build is within-user, so the untouched
+    * users' rows and contributions cannot change and the result
+    * equals a rebuild over the changed events. `users` must cover
+    * every user whose rows change; it is only joined, so it may carry
+    * a broadcast hint. */
+  private[engine] def restatement(stores: Map[String, DataFrame], users: DataFrame,
+                                  old: DataFrame, nu: DataFrame): Map[String, DataFrame] = {
+    val partitioned = partitionedBuilds.map { case (name, build) =>
+      val cols = stores(name).columns.map(col(_))
+      name -> stores(name).join(users, Seq("user_id"), "left_anti").select(cols: _*)
+        .unionByName(build(nu).select(cols: _*))
+    }
+    val additive = additiveStores.map { a =>
+      val keys = a.keys.map(col)
+      val n = col(a.count)
+      def sums(events: DataFrame) = a.counts(events).groupBy(keys: _*)
+        .agg(sum(n.cast("long")).as(a.count))
+      val stored = stores(a.name).select(keys :+ n.cast("long").as("n_before"): _*)
+      val (removed, gained) = (sums(old), sums(nu))
+      // the two sides join in turn and rename after the join, so a
+      // round trip's equal count sums (q290) plan one broadcast
+      val minus = stored.join(broadcast(removed), a.keys, "left_outer")
+        .select(keys :+ col("n_before") :+
+          (col("n_before") - coalesce(n, lit(0L))).as("n_after"): _*)
+      val plus = minus.join(broadcast(gained), a.keys, "left_outer")
+        .select(keys :+ col("n_before") :+
+          (col("n_after") + coalesce(n, lit(0L))).as("n_after"): _*)
+      // a key a sparse store never had (a migrated cohort, a restored
+      // cell) comes from counts(nu) alone: a store that is current for
+      // the events before the change holds every key of counts(old)
+      a.name -> (if (a.dense) plus
+        else plus.unionByName(gained.join(broadcast(stored), a.keys, "left_anti")
+          .select(keys :+ lit(0L).as("n_before") :+ n.as("n_after"): _*)))
+    }
+    (partitioned ++ additive).toMap
+  }
+
+  /** The restated stores themselves, in [[userStores]] form: what a
+    * rebuild over the changed events emits (a sparse store keeps only
+    * its positive counts). */
+  private[engine] def restated(stores: Map[String, DataFrame], users: DataFrame,
+                               old: DataFrame, nu: DataFrame): Map[String, DataFrame] = {
+    val r = restatement(stores, users, old, nu)
+    r ++ additiveStores.map { a =>
+      a.name -> (if (a.dense) r(a.name) else r(a.name).filter(col("n_after") > 0))
+        .select(a.keys.map(col) :+ col("n_after").as(a.count): _*)
+    }
+  }
+
+  /** A store's size in a streaming ledger: its row count, or for the
+    * dense funnel its user mass (Σ n_users — it always has three rows). */
+  private[engine] def storeSize(name: String, store: DataFrame): Long =
+    additiveStores.find(a => a.name == name && a.dense) match {
+      case Some(a) => store.agg(coalesce(sum(col(a.count)), lit(0L))).head.getLong(0)
+      case None => store.count()
+    }
+
+  /** One (artifact, key, n_before, n_after, n_removed, clean) ledger
+    * section — the q284/q286 row shape. */
+  private def section(name: String, df: DataFrame): DataFrame =
+    df.select(lit(name).as("artifact"), col("key").cast("string").as("key"),
+      col("n_before").cast("long").as("n_before"),
+      col("n_after").cast("long").as("n_after"),
+      (col("n_before") - col("n_after")).cast("long").as("n_removed"),
+      col("clean"))
+
+  /** The per-key sections of the restated additive stores (q284,
+    * q286): every funnel stage, retention cell, cohort size (the
+    * offset-0 cell) and transition edge the store has or gains.
+    * clean = no count goes negative, and no funnel stage grows (a
+    * user's reach over fewer events cannot rise). */
+  private def additiveSections(funnel: DataFrame, retention: DataFrame,
+                               transitions: DataFrame): DataFrame = {
+    val nonNegative = col("n_after") >= 0
+    val cells = retention
+      .localCheckpoint(false) // cell rows + the offset-0 size slice
+    section("funnel", funnel.select(col("stage").as("key"), col("n_before"),
+        col("n_after"), (nonNegative && col("n_after") <= col("n_before")).as("clean")))
+      .unionByName(section("retention", cells.select(
+        concat(col("cohort_week").cast("string"), lit(":"), col("week_offset")).as("key"),
+        col("n_before"), col("n_after"), nonNegative.as("clean"))))
+      .unionByName(section("retention_size", cells.filter(col("week_offset") === 0)
+        .select(col("cohort_week").as("key"), col("n_before"), col("n_after"),
+          nonNegative.as("clean"))))
+      .unionByName(section("transitions", transitions.select(
+        concat(col("event_type"), lit(":"), col("next_type")).as("key"),
+        col("n_before"), col("n_after"), nonNegative.as("clean"))))
+  }
+
   /** USER-LEVEL takedown over the event-derived stores (q284, r16 —
     * VERDICT r15 missing #2): "delete user X" is the GDPR request
     * shape, and the engine persists USER-derived artifacts the
     * doc/vector-keyed takedown family (q268-q283) never reaches. One
     * conservation-checked ledger + post-purge cert across all of
-    * them, each corrected by the mechanism its structure allows:
+    * them:
     *   - user-PARTITIONED stores — the q280 conversation manifest,
     *     q161 sessions, q172 attribution rows — purge by anti-join:
     *     per-user independence means dropping a user's rows IS the
     *     rebuild (packing offsets, session ordinals and attribution
     *     never cross users). Totals row + one affected-keys row per
-    *     removed user (the q268 listing shape); clean = a semi-probe
-    *     proving no removed user survives the purge.
-    *   - user-DECOMPOSABLE aggregates — funnel stage counts (q146),
-    *     retention cells and cohort sizes (q147), the transition
-    *     matrix (q199) — DECREMENT by the removed users' own
-    *     contributions, computed from their events alone (reach
-    *     flags, activity cells and edges are all within-user, so
-    *     kept users' contributions cannot change): the lmModelSubtract
-    *     algebra applied to behavioral rollups. clean = no count goes
-    *     negative and stages stay monotone.
+    *     removed user (the q268 listing shape).
+    *   - ADDITIVE stores — funnel stage counts (q146), retention cells
+    *     and cohort sizes (q147), the transition matrix (q199) — are
+    *     the [[restatement]] with old = the removed users' events and
+    *     nu = ∅: stored − the removed users' own contributions (the
+    *     lmModelSubtract algebra applied to behavioral rollups). One
+    *     (n_before, n_after, clean) row per key; clean = no count goes
+    *     negative and no stage grows.
     * The oracle recomputes EVERY section from raw events and
     * events-minus-users, so a hash match proves both store freshness
     * (the before column) and decrement ≡ rebuild (the after column).
     *
-    * Cohort sizes fold out of the stored retention relation itself:
-    * a user is always active at their own cohort week, so the
-    * offset-0 cell IS the cohort size — no side-channel store needed.
+    * Cohort sizes fold out of the restated retention cells: a user is
+    * always active at their own cohort week, so the offset-0 cell IS
+    * the cohort size — no side-channel store needed.
     *
     * Scale: the removal set broadcasts; corrections are
-    * removal-bounded (windows over removed users' events only); the
-    * stores contribute anti/semi probes plus dimension-sized reads;
-    * the only full event passes are the distinct-user anchor and the
-    * removed-slice semi-join — the two passes a post-purge cert owes
-    * (the q277 posture). Declarative end-to-end: no driver-side
-    * action anywhere. The stores are the six stored tables of `events`
-    * itself ([[funnelFor]] and its siblings), built on first use. */
+    * removal-bounded (count bodies over removed users' events only);
+    * the stores contribute anti/semi probes plus dimension-sized
+    * reads; the only full event passes are the distinct-user anchor
+    * and the removed-slice semi-join — the two passes a post-purge
+    * cert owes (the q277 posture). Declarative end-to-end: no
+    * driver-side action anywhere. */
   def userTakedown(events: DataFrame, removal: DataFrame): DataFrame = {
-    val (manifest, sessions, funnelStore, retentionStore, transitionStore,
-      attributionStore) = sweepStores(events)
+    val stores = storedUserStores(events)
     val rmU = broadcast(removal.select(col("user_id")).distinct()
       .localCheckpoint(false)) // every section probes it
     val rmEvents = events.join(rmU, Seq("user_id"), "left_semi")
-      .localCheckpoint(false) // funnel flags + retention cells + edges
-    def section(name: String, df: DataFrame): DataFrame =
-      df.select(lit(name).as("artifact"), col("key").cast("string").as("key"),
-        col("n_before").cast("long").as("n_before"),
-        col("n_after").cast("long").as("n_after"),
-        (col("n_before") - col("n_after")).cast("long").as("n_removed"),
-        col("clean"))
+      .localCheckpoint(false) // the three count bodies
     // anchor: distinct users before/after (the q268 removal row) —
     // ONE distinct shuffle + a broadcast membership flag instead of
     // two cross-joined countDistinct subtrees (and deliberately NOT
@@ -645,28 +794,19 @@ object EventOps {
            count(when(col("side") === "m", lit(1))).as("n_rm"))
       .select(lit("all").as("key"), col("n_before"),
         (col("n_before") - col("n_rm")).as("n_after"), lit(true).as("clean"))
-    // user-partitioned stores: totals + per-removed-user listing.
-    // The totals clean flag is a CONSERVATION recount, not a
-    // semi-probe over the purge's own lineage (which is true by
-    // construction and certifies nothing — ADVICE r16): the purge
-    // delta (anti-join path) must equal an independent semi-join
-    // recount of the removed users' rows on the pre-purge store.
-    //
-    // ONE derivation pass per store (r19, guide §2.4): the previous
-    // shape read each store THREE times (before recount, anti-join
-    // purge, semi listing), re-planning the window derivation per use
-    // — 44 events scans / 47 exchanges in the committed before-plan.
-    // Every store's rows now enter one union as (artifact, user_id);
-    // one broadcast membership flag replays the anti/semi split
-    // exactly (left_anti ≡ the no-match rows of the left_outer flag
-    // join, left_semi ≡ the matched rows — the same relational
-    // algebra, the flag join IS the purge mechanism), and the
-    // per-(artifact, user, flag) counts feed both the conservation
-    // totals and the per-removed-user listing. Counts are exact
-    // integer sums, so the two-level rollup is value-identical.
-    val flagged = manifest.select(lit("manifest").as("artifact"), col("user_id"))
-      .unionByName(sessions.select(lit("sessions").as("artifact"), col("user_id")))
-      .unionByName(attributionStore.select(
+    // user-partitioned stores: totals + per-removed-user listing, a
+    // ledger over the stores rather than a store, so it reads the
+    // flags in one pass instead of restating. The totals clean flag
+    // is a CONSERVATION recount, not a semi-probe over the purge's
+    // own lineage (which is true by construction and certifies
+    // nothing): the purge delta (the no-match rows of the flag join,
+    // i.e. the anti-join) must equal the recount of the removed users'
+    // rows (the matched rows, i.e. the semi-join). Every store's rows
+    // enter one union as (artifact, user_id), and the per-(artifact,
+    // user, flag) counts feed both the totals and the listing.
+    val flagged = stores("manifest").select(lit("manifest").as("artifact"), col("user_id"))
+      .unionByName(stores("sessions").select(lit("sessions").as("artifact"), col("user_id")))
+      .unionByName(stores("attribution").select(
         lit("attribution").as("artifact"), col("user_id")))
       .join(rmU.withColumn("__rm", lit(1)), Seq("user_id"), "left_outer")
       .groupBy(col("artifact"), col("user_id"), col("__rm"))
@@ -685,101 +825,44 @@ object EventOps {
         .select(col("artifact"), col("user_id").cast("string").as("key"),
           col("c").cast("long").as("n_before"), lit(0L).as("n_after"),
           col("c").cast("long").as("n_removed"), lit(true).as("clean")))
-    // funnel: stage decrements from the removed users' OWN reach flags
-    val rmReach = removedReach(rmEvents)
-    val funnelRows = funnelStore.select(col("stage"), col("n_users"))
-      .crossJoin(broadcast(rmReach))
-      .select(col("stage").as("key"), col("n_users").as("n_before"),
-        (col("n_users") - when(col("stage") === "view", col("d1"))
-          .when(col("stage") === "click", col("d2"))
-          .otherwise(col("d3"))).as("n_after"))
-      .withColumn("clean", col("n_after") >= 0 && col("n_after") <= col("n_before"))
-    // retention: cell + cohort-size decrements from removed activity
-    val rmFirst = rmEvents.groupBy(col("user_id"))
-      .agg(date_trunc("week", min(col("ts"))).cast("date").as("cohort_week"))
-    val rmCells = removedRetentionCells(rmEvents, rmFirst)
-    // ONE retention-store read for cells AND cohort sizes (r19): the
-    // offset-0 cell IS the size — a removed user's min(ts) week is
-    // their cohort week, so they contribute exactly one (cohort, 0)
-    // activity row and rmCells at offset 0 equals the per-cohort
-    // removed-user count the old rmSizes aggregate computed. The
-    // joined frame is checkpointed (≤ cohorts × offsets rows) so the
-    // store derivation and the decrement join run once, not twice.
-    val retJoined = retentionStore
-      .select(col("cohort_week"), col("week_offset"), col("n_active"))
-      .join(broadcast(rmCells), Seq("cohort_week", "week_offset"), "left_outer")
-      .localCheckpoint(false) // cell rows + the offset-0 size slice
-    val retRows = retJoined
-      .select(concat(col("cohort_week").cast("string"), lit(":"),
-          col("week_offset")).as("key"),
-        col("n_active").as("n_before"),
-        (col("n_active") - coalesce(col("d"), lit(0L))).as("n_after"))
-      .withColumn("clean", col("n_after") >= 0)
-    val sizeRows = retJoined.filter(col("week_offset") === 0)
-      .select(col("cohort_week").cast("string").as("key"),
-        col("n_active").as("n_before"),
-        (col("n_active") - coalesce(col("d"), lit(0L))).as("n_after"))
-      .withColumn("clean", col("n_after") >= 0)
-    // transitions: edge decrements (edges are within-user)
-    val rmEdges = removedEdges(rmEvents)
-    val transRows = transitionStore
-      .select(col("event_type"), col("next_type"), col("n_transitions"))
-      .join(broadcast(rmEdges), Seq("event_type", "next_type"), "left_outer")
-      .select(concat(col("event_type"), lit(":"), col("next_type")).as("key"),
-        col("n_transitions").as("n_before"),
-        (col("n_transitions") - coalesce(col("d"), lit(0L))).as("n_after"))
-      .withColumn("clean", col("n_after") >= 0)
+    val r = restatement(stores, rmU, rmEvents, rmEvents.filter(lit(false)))
     section("users", usersRow)
       .unionByName(keyedRows)
-      .unionByName(section("funnel", funnelRows))
-      .unionByName(section("retention", retRows))
-      .unionByName(section("retention_size", sizeRows))
-      .unionByName(section("transitions", transRows))
+      .unionByName(additiveSections(r("funnel"), r("retention"), r("transitions")))
       .orderBy(col("artifact"), col("key"))
   }
-
-  /** The six stored tables of `events` the sweeps correct:
-    * (manifest, sessions, funnel, retention, transitions,
-    * attribution). */
-  private def sweepStores(events: DataFrame)
-      : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) =
-    (TemporalOps.sessionPackManifestFor(events), sessionsFor(events), funnelFor(events),
-     retentionCohortsFor(events), eventTransitionsFor(events), lastTouchAttributionFor(events))
 
   /** AGE-BASED RETENTION SWEEP (q286, r16) — the TIME-keyed
     * complement to the id-keyed takedown family: a data-retention
     * policy ("drop everything older than the horizon") expires every
     * event with ts < cutoff and corrects the event-derived stores.
-    * Unlike q284's user deletion, age expiry is NOT a per-user drop,
-    * so each store corrects by the mechanism its order-sensitivity
-    * allows:
-    *   - VERBATIM — untouched users (no expired events) pass through
-    *     every store unchanged. (In a long-lived system the touched
-    *     set is the long-tenured users; new users ride this path.)
-    *   - RE-DERIVE, touched-bounded — session ordinals, packing
-    *     offsets, funnel reach and cohort assignment all depend on a
-    *     user's FIRST events, which expiry removes: the q280
-    *     manifest, q161 sessions and q172 attribution rebuild from
-    *     the touched users' KEPT events only (the q281 touched-user
-    *     machinery on the time axis); funnel stages and retention
-    *     cells correct as stored − touched-old-contribution +
-    *     touched-new-contribution, both contributions computed from
-    *     touched users' events alone. Cohort MIGRATION is handled
-    *     honestly: a touched user's cohort moves to their first kept
-    *     week, which can create cells the store never had.
-    *   - DECREMENT — the transition matrix: expiry removes a strict
-    *     per-user (ts, event_id)-prefix, so no NEW adjacency can
-    *     appear and the corrected counts are stored − edges WITHIN
-    *     the expired slice − the one (last-expired → first-kept)
-    *     BOUNDARY edge per user with both; pure removal-bounded
-    *     probes, no rebuild.
+    * Unlike q284's user deletion, age expiry is NOT a per-user drop —
+    * session ordinals, packing offsets, funnel reach and cohort
+    * assignment all depend on a user's FIRST events, which expiry
+    * removes — but it is still a per-user change, so it is the same
+    * [[restatement]] with old = the touched users' full events and
+    * nu = their kept events:
+    *   - untouched users (no expired events) pass through every store
+    *     verbatim. (In a long-lived system the touched set is the
+    *     long-tenured users; new users ride this path.)
+    *   - the q280 manifest, q161 sessions and q172 attribution rebuild
+    *     the touched users' rows from their KEPT events only (the q281
+    *     touched-user machinery on the time axis).
+    *   - funnel stages, retention cells and transition edges become
+    *     stored − touched-old-contribution + touched-new-contribution.
+    *     A touched user's cohort moves to their first kept week, which
+    *     can create cells the store never had. On the edges this is
+    *     the pure decrement it looks like: the kept events are a
+    *     per-user suffix, so edges(full) − edges(kept) is exactly the
+    *     edges within the expired slice plus the one (last-expired →
+    *     first-kept) boundary edge per user with both.
     * Conservation identities ride as clean flags: every kept event
     * lands in exactly one manifest/session row (token mass ≡ kept
     * count), every kept purchase gets an attribution row, corrected
     * edges total kept_events − users_with_kept, funnel/retention
     * counts stay in [0, before]. The oracle recomputes every section
     * from events-at-or-after-cutoff, so a hash match proves the
-    * verbatim/decrement/re-derive classification ≡ a full rebuild.
+    * restatement ≡ a full rebuild.
     *
     * Scale: the expired slice and the touched users' kept events
     * bound all window work; untouched users never rescan; the only
@@ -787,27 +870,24 @@ object EventOps {
     * the slice filters themselves. Declarative end-to-end. Reads the
     * six stored tables of `events` itself, as [[userTakedown]]. */
   def retentionSweep(events: DataFrame, cutoff: String): DataFrame = {
-    val (manifest, sessions, funnelStore, retentionStore, transitionStore,
-      attributionStore) = sweepStores(events)
+    val stores = storedUserStores(events)
     val cut = lit(cutoff).cast("timestamp")
     val expired = events.filter(col("ts") < cut)
-      .localCheckpoint(false) // edges + boundary + reach + cells + aggs
+      .localCheckpoint(false) // the touched set + the old events + the anchor
     val touched = broadcast(expired.select(col("user_id")).distinct()
       .localCheckpoint(false)) // every store probes it
     val keptTouched = events.filter(col("ts") >= cut)
       .join(touched, Seq("user_id"), "left_semi")
-      .localCheckpoint(false) // re-derives + new contributions
+      .localCheckpoint(false) // re-derives + new contributions + the anchor
     val touchedFull = expired.unionByName(keptTouched)
-      .localCheckpoint(false) // old reach + old cells
+      .localCheckpoint(false) // old contributions
     // anchor counts: ONE tag-union aggregate instead of three
-    // cross-joined single-row aggregates + their three checkpoint
-    // actions (r19, the q290 collapse on the anchor): groupBy(side)
-    // keeps exactly one DISTINCT column per group, so the plan stays a
-    // two-phase distinct aggregate (no Expand), and the one-row pivot
-    // re-derives the identical ne/nu/nx/nt/xp/ntk — counts and the
-    // purchase mass are exact integer sums, value-identical under
-    // regrouping. Empty sides coalesce to 0 exactly as the empty-frame
-    // aggregates did.
+    // cross-joined single-row aggregates: groupBy(side) keeps exactly
+    // one DISTINCT column per group, so the plan stays a two-phase
+    // distinct aggregate (no Expand), and the one-row pivot derives
+    // ne/nu/nx/nt/xp/ntk — counts and the purchase mass are exact
+    // integer sums, value-identical under regrouping. Empty sides
+    // coalesce to 0.
     val base = events.select(lit("e").as("side"), col("user_id"),
         col("event_type"))
       .unionByName(expired.select(lit("x").as("side"), col("user_id"),
@@ -825,12 +905,6 @@ object EventOps {
            coalesce(max(when(col("side") === "x", col("np"))), lit(0L)).as("xp"),
            coalesce(max(when(col("side") === "k", col("nd"))), lit(0L)).as("ntk"))
       .localCheckpoint(false) // anchor + conservation identities
-    def section(name: String, df: DataFrame): DataFrame =
-      df.select(lit(name).as("artifact"), col("key").cast("string").as("key"),
-        col("n_before").cast("long").as("n_before"),
-        col("n_after").cast("long").as("n_after"),
-        (col("n_before") - col("n_after")).cast("long").as("n_removed"),
-        col("clean"))
     val eventsRow = base.select(lit("all").as("key"),
       col("ne").as("n_before"), (col("ne") - col("nx")).as("n_after"),
       lit(true).as("clean"))
@@ -841,138 +915,41 @@ object EventOps {
           col("ntk").as("n_after")))).as("s"))
       .select(col("s.key").as("key"), col("s.n_before").as("n_before"),
         col("s.n_after").as("n_after"), lit(true).as("clean"))
-    // user-partitioned row stores: untouched verbatim + touched
-    // re-derived, with the token-mass conservation identity as clean
-    // one tag-union aggregate instead of three cross-joined single-row
-    // aggregates (the q290 r18 collapse — counts/masses are exact
-    // integer sums, so regrouping is value-identical)
-    def rowStore(store: DataFrame, rederived: DataFrame,
-                 massCol: Option[String]): DataFrame = {
-      val untouched = store.join(touched, Seq("user_id"), "left_anti")
-      def tag(df: DataFrame, s: String) = df.select(lit(s).as("side"),
-        massCol.map(col(_).cast("long")).getOrElse(lit(0L)).as("m"))
-      tag(store, "b").unionByName(tag(untouched, "u"))
-        .unionByName(tag(rederived, "d"))
-        .agg(
-          count(when(col("side") === "b", lit(1))).as("n_before"),
-          count(when(col("side") === "u", lit(1))).as("n_unt"),
-          count(when(col("side") === "d", lit(1))).as("n_red"),
-          coalesce(sum(when(col("side") === "u", col("m"))), lit(0L)).as("m_unt"),
-          coalesce(sum(when(col("side") === "d", col("m"))), lit(0L)).as("m_red"))
+    val r = restatement(stores, touched, touchedFull, keptTouched)
+    val transitions = r("transitions")
+      .localCheckpoint(false) // per-edge rows + the conservation total
+    // user-partitioned row stores: one tag-union aggregate each over
+    // the stored and the restated rows, with a conservation identity
+    // over the restated rows as clean
+    def rowStore(name: String, after: DataFrame, mass: Column,
+                 clean: Column): DataFrame =
+      stores(name).select(lit("b").as("side"), lit(0L).as("m"))
+        .unionByName(after.select(lit("a").as("side"), mass.cast("long").as("m")))
+        .agg(count(when(col("side") === "b", lit(1))).as("n_before"),
+             count(when(col("side") === "a", lit(1))).as("n_after"),
+             coalesce(sum(col("m")), lit(0L)).as("m_after"))
         .crossJoin(base)
-        .select(lit("rows").as("key"), col("n_before"),
-          (col("n_unt") + col("n_red")).as("n_after"),
-          (massCol.map(_ => col("m_unt") + col("m_red") === col("ne") - col("nx"))
-            .getOrElse(lit(true))).as("clean"))
-    }
-    val maniRederived = TemporalOps.sessionPackManifest(keptTouched)
-      .localCheckpoint(false) // rows + mass + per-user listing
-    val sessRederived = sessionize(keptTouched)
-    val attrRederived = lastTouchAttribution(keptTouched)
-    val maniRow = rowStore(manifest, maniRederived, Some("n_events"))
-    val sessRow = rowStore(sessions, sessRederived, Some("n_events"))
-    // attribution clean: corrected rows ≡ kept purchases (untouched
-    // users' purchases are all kept; touched re-derive covers theirs)
-    val attrRow = attributionStore.select(lit("b").as("side"))
-      .unionByName(attributionStore.join(touched, Seq("user_id"), "left_anti")
-        .select(lit("u").as("side")))
-      .unionByName(attrRederived.select(lit("d").as("side")))
-      .agg(count(when(col("side") === "b", lit(1))).as("n_before"),
-           count(when(col("side") === "u", lit(1))).as("n_unt"),
-           count(when(col("side") === "d", lit(1))).as("n_red"))
-      .crossJoin(base)
-      .select(lit("rows").as("key"), col("n_before"),
-        (col("n_unt") + col("n_red")).as("n_after"),
-        (col("n_unt") + col("n_red") === col("n_before") - col("xp"))
-          .as("clean"))
-    // per-touched-user manifest listing: stored rows vs re-derived
-    val maniTouched = manifest.join(touched, Seq("user_id"), "left_semi")
-      .groupBy(col("user_id")).agg(count(lit(1)).as("n_before"))
-      .join(maniRederived.groupBy(col("user_id"))
-          .agg(count(lit(1)).as("n_after")),
-        Seq("user_id"), "left_outer")
+        .select(lit("rows").as("key"), col("n_before"), col("n_after"),
+          clean.as("clean"))
+    // token mass ≡ kept events
+    val keptMass = col("m_after") === col("ne") - col("nx")
+    val maniRow = rowStore("manifest", r("manifest"), col("n_events"), keptMass)
+    val sessRow = rowStore("sessions", r("sessions"), col("n_events"), keptMass)
+    // attribution: corrected rows ≡ kept purchases (untouched users'
+    // purchases are all kept; the touched re-derive covers theirs)
+    val attrRow = rowStore("attribution", r("attribution"), lit(0L),
+      col("n_after") === col("n_before") - col("xp"))
+    // per-touched-user manifest listing: stored rows vs restated
+    def perTouchedUser(df: DataFrame, n: String) =
+      df.join(touched, Seq("user_id"), "left_semi")
+        .groupBy(col("user_id")).agg(count(lit(1)).as(n))
+    val maniTouched = perTouchedUser(stores("manifest"), "n_before")
+      .join(perTouchedUser(r("manifest"), "n_after"), Seq("user_id"), "left_outer")
       .na.fill(0L, Seq("n_after"))
       .select(col("user_id").cast("string").as("key"), col("n_before"),
         col("n_after"), lit(true).as("clean"))
-    // funnel: stored − touched-old-reach + touched-new-reach
-    val oldReach = removedReach(touchedFull)
-      .select(col("d1").as("o1"), col("d2").as("o2"), col("d3").as("o3"))
-    val newReach = removedReach(keptTouched)
-    val funnelRows = funnelStore.select(col("stage"), col("n_users"))
-      .crossJoin(broadcast(oldReach)).crossJoin(broadcast(newReach))
-      .select(col("stage").as("key"), col("n_users").as("n_before"),
-        (col("n_users") - when(col("stage") === "view", col("o1") - col("d1"))
-          .when(col("stage") === "click", col("o2") - col("d2"))
-          .otherwise(col("o3") - col("d3"))).as("n_after"))
-      .withColumn("clean", col("n_after") >= 0 && col("n_after") <= col("n_before"))
-    // retention cells: stored − old contributions + new contributions;
-    // a migrated cohort can CREATE cells (full outer on the key)
-    val oldFirst = touchedFull.groupBy(col("user_id"))
-      .agg(date_trunc("week", min(col("ts"))).cast("date").as("cohort_week"))
-      .localCheckpoint(false)
-    val newFirst = keptTouched.groupBy(col("user_id"))
-      .agg(date_trunc("week", min(col("ts"))).cast("date").as("cohort_week"))
-      .localCheckpoint(false)
-    val cellDelta = removedRetentionCells(touchedFull, oldFirst)
-      .join(removedRetentionCells(keptTouched, newFirst)
-          .withColumnRenamed("d", "a"),
-        Seq("cohort_week", "week_offset"), "full_outer")
-      .na.fill(0L, Seq("d", "a"))
-    val retRows = retentionStore
-      .select(col("cohort_week"), col("week_offset"), col("n_active"))
-      .join(cellDelta, Seq("cohort_week", "week_offset"),
-        "full_outer")
-      .na.fill(0L, Seq("n_active", "d", "a"))
-      .select(concat(col("cohort_week").cast("string"), lit(":"),
-          col("week_offset")).as("key"),
-        col("n_active").as("n_before"),
-        (col("n_active") - col("d") + col("a")).as("n_after"))
-      .filter(col("n_before") > 0 || col("n_after") > 0)
-      .withColumn("clean", col("n_after") >= 0)
-    val sizeDelta = oldFirst.groupBy(col("cohort_week")).agg(count(lit(1)).as("d"))
-      .join(newFirst.groupBy(col("cohort_week")).agg(count(lit(1)).as("a")),
-        Seq("cohort_week"), "full_outer")
-      .na.fill(0L, Seq("d", "a"))
-    val sizeRows = retentionStore.filter(col("week_offset") === 0)
-      .select(col("cohort_week"), col("n_active"))
-      .join(sizeDelta, Seq("cohort_week"), "full_outer")
-      .na.fill(0L, Seq("n_active", "d", "a"))
-      .select(col("cohort_week").cast("string").as("key"),
-        col("n_active").as("n_before"),
-        (col("n_active") - col("d") + col("a")).as("n_after"))
-      .filter(col("n_before") > 0 || col("n_after") > 0)
-      .withColumn("clean", col("n_after") >= 0)
-    // transitions: pure decrement — expiry is a strict per-user
-    // prefix, so corrected = stored − within-expired − boundary edges
-    val within = removedEdges(expired)
-    val wDesc = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts").desc, col("event_id").desc)
-    val wAsc = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val boundary = expired
-      .withColumn("rn", row_number().over(wDesc)).filter(col("rn") === 1)
-      .select(col("user_id"), col("event_type"))
-      .join(keptTouched
-          .withColumn("rn", row_number().over(wAsc)).filter(col("rn") === 1)
-          .select(col("user_id"), col("event_type").as("next_type")),
-        "user_id")
-      .groupBy(col("event_type"), col("next_type"))
-      .agg(count(lit(1)).as("b"))
-    val transCorrected = transitionStore
-      .select(col("event_type"), col("next_type"), col("n_transitions"))
-      .join(broadcast(within), Seq("event_type", "next_type"), "left_outer")
-      .join(broadcast(boundary), Seq("event_type", "next_type"), "left_outer")
-      .na.fill(0L, Seq("d", "b"))
-      .select(col("event_type"), col("next_type"),
-        col("n_transitions").as("n_before"),
-        (col("n_transitions") - col("d") - col("b")).as("n_after"))
-      .localCheckpoint(false) // per-edge rows + the conservation total
-    val transRows = transCorrected
-      .select(concat(col("event_type"), lit(":"), col("next_type")).as("key"),
-        col("n_before"), col("n_after"))
-      .withColumn("clean", col("n_after") >= 0)
     // Σ corrected edges ≡ kept_events − users_with_kept
-    val transTotal = transCorrected
+    val transTotal = transitions
       .agg(coalesce(sum(col("n_before")), lit(0L)).as("n_before"),
            coalesce(sum(col("n_after")), lit(0L)).as("n_after"))
       .crossJoin(base)
@@ -986,10 +963,7 @@ object EventOps {
       .unionByName(section("manifest_touched", maniTouched))
       .unionByName(section("sessions", sessRow))
       .unionByName(section("attribution", attrRow))
-      .unionByName(section("funnel", funnelRows))
-      .unionByName(section("retention", retRows))
-      .unionByName(section("retention_size", sizeRows))
-      .unionByName(section("transitions", transRows))
+      .unionByName(additiveSections(r("funnel"), r("retention"), transitions))
       .unionByName(section("transitions_total", transTotal))
       .orderBy(col("artifact"), col("key"))
   }
@@ -1002,253 +976,73 @@ object EventOps {
     * loses nothing.
     *
     * Quarantine: the removed users' events are the single retained
-    * artifact. Purge = exactly the q284 corrections: user-partitioned
-    * stores (the q280 conversation manifest, q161 sessions, q172
-    * attribution) anti-join — per-user independence makes the purge
-    * THE rebuild; user-decomposable aggregates (funnel stages,
-    * retention cells, the transition matrix) DECREMENT by the
-    * quarantined users' own contributions ([[removedReach]] /
-    * [[removedRetentionCells]] / [[removedEdges]]), zero cells
-    * dropping as a rebuild would. Restore = the same algebra run
-    * backwards, from the quarantined events alone: the partitioned
-    * stores re-derive their users' rows through the engine's own
-    * builders (per-user windows mean the re-derived rows land
-    * byte-identical — conversation boundaries, packing offsets and
-    * session ordinals included) and union back; the aggregates
-    * RE-INCREMENT by the identical d-frames, resurrecting dropped
-    * cells via a full-outer fold.
+    * artifact. Purge = the [[restatement]] with old = the quarantined
+    * events and nu = ∅ (the q284 corrections: partitioned stores
+    * anti-join, additive stores subtract, zero cells dropping as a
+    * rebuild would). Restore = the same restatement run backwards over
+    * the purged stores, old = ∅ and nu = the quarantined events alone:
+    * the partitioned stores re-derive their users' rows through the
+    * engine's own builders (per-user windows mean the re-derived rows
+    * land byte-identical — conversation boundaries, packing offsets
+    * and session ordinals included), and the additive stores add the
+    * same count bodies back, resurrecting dropped cells.
     *
-    * One ledger row per store: (artifact, key, n_before, n_purged,
-    * n_restored, clean) — counts are row counts for partitioned
-    * stores and value masses (Σ n_users / Σ n_active /
-    * Σ n_transitions) for the decrement stores, and clean is the
-    * q287 identity proof: the restored store is ROW-IDENTICAL to the
-    * original (equal counts AND equal order-insensitive Σ xxhash64
-    * multiset commitments — two map-only scans, never a store×store
-    * compare). The decrement stores certify on their carried
-    * (key, count) projection — the exact relation the q284 streaming
-    * twins persist.
+    * One ledger row per store through
+    * [[graft.engine.CorpusOps.roundTripLedger]]: (artifact, key,
+    * n_before, n_purged, n_restored, clean) — counts are row counts
+    * for partitioned stores and value masses (Σ n_users / Σ n_active /
+    * Σ n_transitions) for the additive stores, and clean is the q287
+    * identity proof: the restored store is ROW-IDENTICAL to the
+    * original (equal row counts AND equal order-insensitive
+    * Σ xxhash64 multiset commitments — map-only scans, never a
+    * store×store compare). The additive stores certify on their
+    * (key, count) projection — the exact relation the streaming twins
+    * carry.
     *
     * Scale: the removal set broadcasts; purges are anti-joins;
-    * re-derivations and d-frames are quarantine-bounded window work;
-    * the identity probes are commitment aggregates. Declarative
+    * re-derivations and count bodies are quarantine-bounded window
+    * work; the identity probes are commitment aggregates. Declarative
     * end-to-end. Reads the six stored tables of `events` itself, as
     * [[userTakedown]]. */
   def userQuarantineRoundTrip(events: DataFrame, removal: DataFrame): DataFrame = {
-    val (manifest, sessions, funnelStore, retentionStore, transitionStore,
-      attributionStore) = sweepStores(events)
+    import CorpusOps.RoundTripPart
+    val stores = storedUserStores(events)
     val rmU = broadcast(removal.select(col("user_id")).distinct()
       .localCheckpoint(false)) // every purge + the quarantine slice
     // the QUARANTINE: only these raw events are retained
     val qEvents = events.join(rmU, Seq("user_id"), "left_semi")
-      .localCheckpoint(false) // re-derivations + all three d-frames
-    // ONE tag-union aggregate per artifact (r18 optimization, guide
-    // §2.3/§2.4): the previous shape cross-joined FIVE single-row
-    // aggregates (two commitments + three masses), so every input's
-    // lineage — including the expensive per-user window re-derivations
-    // on the restore side — planned and ran multiple times (Spark has
-    // no cross-subtree CSE beyond exchange reuse; Profile r18 measured
-    // 110 jobs / 34-42 s summed task time for q290). Each distinct
-    // input now enters ONCE, tagged with the ledger side(s) it belongs
-    // to ('b'efore / 'p'urged / 'r'estored — a purged frame that is
-    // also the restore's base explodes into both tags), and one global
-    // aggregate computes every count, mass and commitment hash with
-    // conditional sums. Values are bit-identical: the commitment is a
-    // commutative decimal SUM of row hashes and the masses are exact
-    // integer sums, so regrouping cannot change them.
-    // ONE groupBy(artifact) ledger for ALL seven artifacts (r19 — the
-    // q287 whole-ledger shape applied here): the r18 collapse already
-    // made each artifact a single tag-union aggregate, but seven
-    // single-row aggregates still union seven aggregate subtrees, each
-    // its own exchange/stage pair. Every part now enters one union as
-    // (artifact, h, m, side) and a single keyed aggregate computes
-    // every artifact's counts, masses and commitments — value-identical
-    // (counts/masses are exact integer sums, commitments commutative
-    // decimal sums of row hashes; regrouping by artifact cannot change
-    // any group's value).
-    val ledgerParts = scala.collection.mutable.ArrayBuffer
-      .empty[(String, DataFrame, Option[String], Seq[String])]
-    def row(artifact: String, mass: Option[String],
-            parts: Seq[(DataFrame, Seq[String])]): Unit =
-      parts.foreach { case (df, sides) =>
-        ledgerParts += ((artifact, df, mass, sides))
-      }
-    def ledger(): DataFrame = {
-      val tagged = ledgerParts.map { case (artifact, df, mass, sides) =>
-        df.select(
-          lit(artifact).as("artifact"),
-          xxhash64(df.columns.map(col(_)): _*).cast("decimal(38,0)").as("h"),
-          (mass match {
-            case Some(c) => col(c).cast("long")
-            case None => lit(1L)
-          }).as("m"),
-          explode(array(sides.map(lit(_)): _*)).as("side"))
-      }.reduce(_ unionByName _)
-      def onSide(s: String, c: Column) = when(col("side") === s, c)
-      tagged.groupBy(col("artifact")).agg(
-          coalesce(sum(onSide("b", col("m"))), lit(0L)).cast("long").as("n_before"),
-          coalesce(sum(onSide("p", col("m"))), lit(0L)).cast("long").as("n_purged"),
-          coalesce(sum(onSide("r", col("m"))), lit(0L)).cast("long").as("n_restored"),
-          count(onSide("b", lit(1))).cast("long").as("n_rows_b"),
-          count(onSide("r", lit(1))).cast("long").as("n_rows_r"),
-          coalesce(sum(onSide("b", col("h"))),
-            lit(0).cast("decimal(38,0)")).as("h_before"),
-          coalesce(sum(onSide("r", col("h"))),
-            lit(0).cast("decimal(38,0)")).as("h_restored"))
-        .select(col("artifact"), lit("all").as("key"),
-          col("n_before"), col("n_purged"), col("n_restored"),
-          (col("h_restored") === col("h_before") &&
-            col("n_rows_r") === col("n_rows_b")).as("clean"))
-    }
-    // user-partitioned stores: purge anti-joins; restore re-derives
-    // the quarantined users' rows through the engine's own builder
-    // and unions back (per-user windows ⇒ byte-identical rows). The
-    // purged frame carries both the 'p' tag and (as the restore's
-    // verbatim half) the 'r' tag.
-    def partitioned(name: String, store: DataFrame,
-                    rederived: DataFrame): Unit = {
-      val cols = store.columns.map(col(_))
-      val purged = store.join(rmU, Seq("user_id"), "left_anti")
-        .select(cols: _*)
-      row(name, None, Seq(
-        (store, Seq("b")),
-        (purged, Seq("p", "r")),
-        (rederived.select(cols: _*), Seq("r"))))
-    }
+      .localCheckpoint(false) // both restatements
+    val none = qEvents.filter(lit(false))
+    val purged = restated(stores, rmU, qEvents, none)
+    val restored = restated(purged, rmU, none, qEvents)
     // users anchor: the distinct-user relation itself round-trips
     val usersAll = events.select(col("user_id")).distinct()
       .localCheckpoint(false) // commitment + purge + restore
-    val usersKept = usersAll.join(rmU, Seq("user_id"), "left_anti")
-    row("users", None, Seq(
-      (usersAll, Seq("b")),
-      (usersKept, Seq("p", "r")),
-      (qEvents.select(col("user_id")).distinct(), Seq("r"))))
-    // funnel: decrement by the quarantined users' reach, re-increment
-    // by the SAME frame — merge ≡ the q284 decrement run backwards
-    val reach = broadcast(removedReach(qEvents)
-      .localCheckpoint(false)) // purge + restore
-    val fp = funnelStore.select(col("stage"),
-      col("n_users").cast("long").as("n_users"))
-    def funnelShift(df: DataFrame, sign: Int) = df.crossJoin(reach)
-      .select(col("stage"),
-        (col("n_users") + lit(sign.toLong) *
-          when(col("stage") === "view", col("d1"))
-            .when(col("stage") === "click", col("d2"))
-            .otherwise(col("d3"))).cast("long").as("n_users"))
-    // funPurged's lineage is one broadcast crossJoin over the store —
-    // cheap to re-derive for the restore side, no checkpoint needed
-    val funPurged = funnelShift(fp, -1)
-    row("funnel", Some("n_users"), Seq(
-      (fp, Seq("b")),
-      (funPurged, Seq("p")),
-      (funnelShift(funPurged, 1), Seq("r"))))
-    // retention: cells decrement (zero cells DROP, the rebuild
-    // semantic); restore folds the same d-frame back full-outer so
-    // dropped cells resurrect
-    val rmFirst = qEvents.groupBy(col("user_id"))
-      .agg(date_trunc("week", min(col("ts"))).cast("date").as("cohort_week"))
-    val dCells = removedRetentionCells(qEvents, rmFirst)
-      .localCheckpoint(false) // purge + restore
-    val rp = retentionStore.select(col("cohort_week"), col("week_offset"),
-      col("n_active").cast("long").as("n_active"))
-    val retPurged = rp.join(broadcast(dCells), Seq("cohort_week", "week_offset"),
-        "left_outer")
-      .select(col("cohort_week"), col("week_offset"),
-        (col("n_active") - coalesce(col("d"), lit(0L))).cast("long")
-          .as("n_active"))
-      .filter(col("n_active") > 0)
-    val retRestored = retPurged
-      .join(dCells, Seq("cohort_week", "week_offset"), "full_outer")
-      .select(col("cohort_week"), col("week_offset"),
-        (coalesce(col("n_active"), lit(0L)) + coalesce(col("d"), lit(0L)))
-          .cast("long").as("n_active"))
-    row("retention", Some("n_active"), Seq(
-      (rp, Seq("b")),
-      (retPurged, Seq("p")),
-      (retRestored, Seq("r"))))
-    // transitions: the same decrement/fold-back pattern on edges
-    val dEdges = removedEdges(qEvents)
-      .localCheckpoint(false) // purge + restore
-    val tp = transitionStore.select(col("event_type"), col("next_type"),
-      col("n_transitions").cast("long").as("n_transitions"))
-    val transPurged = tp.join(broadcast(dEdges), Seq("event_type", "next_type"),
-        "left_outer")
-      .select(col("event_type"), col("next_type"),
-        (col("n_transitions") - coalesce(col("d"), lit(0L))).cast("long")
-          .as("n_transitions"))
-      .filter(col("n_transitions") > 0)
-    val transRestored = transPurged
-      .join(dEdges, Seq("event_type", "next_type"), "full_outer")
-      .select(col("event_type"), col("next_type"),
-        (coalesce(col("n_transitions"), lit(0L)) + coalesce(col("d"), lit(0L)))
-          .cast("long").as("n_transitions"))
-    row("transitions", Some("n_transitions"), Seq(
-      (tp, Seq("b")),
-      (transPurged, Seq("p")),
-      (transRestored, Seq("r"))))
-    partitioned("manifest", manifest,
-      TemporalOps.sessionPackManifest(qEvents))
-    partitioned("sessions", sessions, sessionize(qEvents))
-    partitioned("attribution", attributionStore,
-      lastTouchAttribution(qEvents))
-    ledger().orderBy(col("artifact"), col("key"))
+    val users = Seq(
+      RoundTripPart("users", usersAll, Seq("b")),
+      RoundTripPart("users", usersAll.join(rmU, Seq("user_id"), "left_anti"),
+        Seq("p", "r")),
+      RoundTripPart("users", qEvents.select(col("user_id")).distinct(), Seq("r")))
+    CorpusOps.roundTripLedger(users ++ userStoreNames.flatMap { name =>
+      val mass = additiveStores.find(_.name == name).map(_.count)
+      Seq(RoundTripPart(name, stores(name), Seq("b"), mass),
+        RoundTripPart(name, purged(name), Seq("p"), mass),
+        RoundTripPart(name, restored(name), Seq("r"), mass))
+    })
   }
 
-  /** The removed users' own funnel-reach counts (one row: d1/d2/d3) —
-    * reach flags are within-user, so kept users' flags cannot change
-    * and the stored stage counts decrement by exactly these. Shared
-    * by [[userTakedown]] and the streaming twin. */
-  private[engine] def removedReach(rmEvents: DataFrame): DataFrame = {
-    val wU = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    rmEvents
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-      .withColumn("s1", max(when(col("event_type") === "view", 1).otherwise(0)).over(wU))
-      .withColumn("s2", max(when(col("event_type") === "click" && col("s1") === 1, 1)
-        .otherwise(0)).over(wU))
-      .withColumn("s3", max(when(col("event_type") === "purchase" && col("s2") === 1, 1)
-        .otherwise(0)).over(wU))
-      .groupBy(col("user_id"))
-      .agg(max(col("s1")).as("r1"), max(col("s2")).as("r2"), max(col("s3")).as("r3"))
-      .agg(coalesce(sum(col("r1")), lit(0L)).as("d1"),
-           coalesce(sum(col("r2")), lit(0L)).as("d2"),
-           coalesce(sum(col("r3")), lit(0L)).as("d3"))
-  }
-
-  /** The removed users' (cohort_week, week_offset) activity-cell
-    * counts — a user's cohort derives from their OWN min(ts), so the
-    * removal slice alone determines every decrement. */
-  private[engine] def removedRetentionCells(rmEvents: DataFrame,
-                                            rmFirst: DataFrame): DataFrame =
-    rmEvents
-      .select(col("user_id"), date_trunc("week", col("ts")).cast("date").as("wk"))
-      .distinct()
-      .join(rmFirst, "user_id")
-      .select(col("cohort_week"),
-        expr("CAST(datediff(wk, cohort_week) DIV 7 AS BIGINT)").as("week_offset"))
-      .groupBy(col("cohort_week"), col("week_offset"))
-      .agg(count(lit(1)).as("d"))
-
-  /** The removed users' transition-edge counts — adjacent pairs never
-    * cross users, so the matrix decrements by exactly these. */
-  private[engine] def removedEdges(rmEvents: DataFrame): DataFrame = {
-    val wL = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    rmEvents
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-      .withColumn("next_type", lead(col("event_type"), 1).over(wL))
-      .filter(col("next_type").isNotNull)
-      .groupBy(col("event_type"), col("next_type"))
-      .agg(count(lit(1)).as("d"))
-  }
-
+  /** First-order next-event transition matrix — the user-journey
+    * Markov table ("what follows a view?") behind funnel design and
+    * anomaly detection (a transition whose share shifts between
+    * releases is a regression signal; pair with the q191 TV gate to
+    * alert on it). Each user's event sequence contributes its
+    * adjacent pairs via one `lead` over the SAME (user, ts, event_id)
+    * sort every event operator here shares — one user-keyed shuffle,
+    * never an event×event join; the matrix is |types|² rows, so the
+    * totals join is dimension-scale. Probabilities are floor-divided
+    * ppm integers — bit-identical on any engine, no fp accumulation. */
   def eventTransitions(events: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val pairs = events
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-      .withColumn("next_type", lead(col("event_type"), 1).over(w))
-      .filter(col("next_type").isNotNull)
-      .groupBy(col("event_type"), col("next_type"))
-      .agg(count(lit(1)).cast("long").as("n_transitions"))
+    val pairs = transitionEdges(events)
     val totals = pairs.groupBy(col("event_type"))
       .agg(sum(col("n_transitions")).cast("long").as("n_from"))
     pairs.join(broadcast(totals), "event_type")
@@ -1256,6 +1050,19 @@ object EventOps {
       .select(col("event_type"), col("next_type"), col("n_transitions"),
         col("n_from"), col("p_ppm"))
       .orderBy(col("event_type"), col("next_type"))
+  }
+
+  /** [[eventTransitions]]' count body: (event_type, next_type,
+    * n_transitions) edge counts. Adjacent pairs never cross users, so
+    * edge counts are within-user sums. */
+  private[engine] def transitionEdges(events: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
+    events
+      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
+      .withColumn("next_type", lead(col("event_type"), 1).over(w))
+      .filter(col("next_type").isNotNull)
+      .groupBy(col("event_type"), col("next_type"))
+      .agg(count(lit(1)).cast("long").as("n_transitions"))
   }
 
   /** The stored [[eventTransitions]] of `events` (see [[funnelFor]]). */

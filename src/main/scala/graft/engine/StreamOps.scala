@@ -1119,22 +1119,21 @@ object StreamOps {
 
   /** STREAMING user-level takedown — q284's ticked twin: "delete user
     * X" requests stream in and each tick folds them out of every
-    * carried event-derived store. User-partitioned stores (the q280
+    * carried event-derived store through the same
+    * [[EventOps.restatement]] the one-shot q284 applies (old = the
+    * tick users' events, nu = ∅): user-partitioned stores (the q280
     * conversation manifest, q161 sessions, q172 attribution rows)
-    * anti-join; user-decomposable aggregates (funnel stage counts,
-    * retention cells, the transition matrix) DECREMENT by the tick
-    * users' own contributions ([[EventOps.removedReach]] /
-    * [[EventOps.removedRetentionCells]] / [[EventOps.removedEdges]] —
-    * the exact frames the one-shot q284 applies). Decrements are NOT
-    * idempotent, so tick users gate against the cumulative queue
-    * first (re-submission = honest zero-delta no-op). Cells/edges
-    * that reach zero DROP — matching what a rebuild over the kept
-    * events would emit, which is what StreamingSpec asserts store by
-    * store over the union. Because the decrements are not idempotent,
-    * the tick commits atomically via [[TickCommit.sink]] (stage
-    * stores + queue under `snap/tick=N`, ledger, marker last).
-    * Per-tick cost: one removal-user-bounded event slice +
-    * dimension-sized store corrections. */
+    * anti-join, additive stores (funnel stage counts, retention cells,
+    * the transition matrix) subtract the tick users' own
+    * contributions. Decrements are NOT idempotent, so tick users gate
+    * against the cumulative queue first (re-submission = honest
+    * zero-delta no-op). Cells/edges that reach zero DROP — matching
+    * what a rebuild over the kept events would emit, which is what
+    * StreamingSpec asserts store by store over the union. Because the
+    * decrements are not idempotent, the tick commits atomically via
+    * [[TickCommit.sink]] (stage stores + queue under `snap/tick=N`,
+    * ledger, marker last). Per-tick cost: one removal-user-bounded
+    * event slice + dimension-sized store corrections. */
   def streamingUserTakedown(removals: DataFrame, events: DataFrame,
                             manifest: DataFrame, sessions: DataFrame,
                             funnelStore: DataFrame, retentionStore: DataFrame,
@@ -1145,58 +1144,28 @@ object StreamOps {
     val spark = events.sparkSession
     import spark.implicits._
     TickCommit.sink(removals, outPath, checkpointDir,
-        Seq("removed" -> Seq.empty[Long].toDF("user_id")) ++
-        eventStores(manifest, sessions, funnelStore, retentionStore,
+        ("removed" -> Seq.empty[Long].toDF("user_id")) +:
+        EventOps.userStores(manifest, sessions, funnelStore, retentionStore,
           transitionStore, attributionStore)) { (batch, tick, st) =>
-      val (removedAll, mani, sess, attr) =
-        (st("removed"), st("manifest"), st("sessions"), st("attribution"))
-      val (fun, ret, trans) = (st("funnel"), st("retention"), st("transitions"))
+      val removedAll = st("removed")
       val rmIds = batch.select(col("user_id")).distinct()
         .join(removedAll, Seq("user_id"), "left_anti")
         .localCheckpoint(false)
       val rmEff = broadcast(rmIds) // joins only; the queue unions rmIds
       val rmEvents = events.join(rmEff, Seq("user_id"), "left_semi")
-        .localCheckpoint(false) // reach + cells + edges
-      val fun2 = fun.crossJoin(broadcast(EventOps.removedReach(rmEvents)))
-        .select(col("stage"),
-          (col("n_users") - when(col("stage") === "view", col("d1"))
-            .when(col("stage") === "click", col("d2"))
-            .otherwise(col("d3"))).cast("long").as("n_users"))
-      val rmFirst = rmEvents.groupBy(col("user_id"))
-        .agg(date_trunc("week", min(col("ts"))).cast("date").as("cohort_week"))
-      val ret2 = ret.join(
-          broadcast(EventOps.removedRetentionCells(rmEvents, rmFirst)),
-          Seq("cohort_week", "week_offset"), "left_outer")
-        .select(col("cohort_week"), col("week_offset"),
-          (col("n_active") - coalesce(col("d"), lit(0L))).cast("long")
-            .as("n_active"))
-        .filter(col("n_active") > 0) // a rebuild never emits 0 cells
-      val trans2 = trans.join(broadcast(EventOps.removedEdges(rmEvents)),
-          Seq("event_type", "next_type"), "left_outer")
-        .select(col("event_type"), col("next_type"),
-          (col("n_transitions") - coalesce(col("d"), lit(0L))).cast("long")
-            .as("n_transitions"))
-        .filter(col("n_transitions") > 0)
-      Tick(Seq(
-        "removed" -> removedAll.unionByName(rmIds),
-        "manifest" -> mani.join(rmEff, Seq("user_id"), "left_anti"),
-        "sessions" -> sess.join(rmEff, Seq("user_id"), "left_anti"),
-        "attribution" -> attr.join(rmEff, Seq("user_id"), "left_anti"),
-        "funnel" -> fun2, "retention" -> ret2, "transitions" -> trans2), persisted => {
+        .localCheckpoint(false) // the three count bodies
+      val next = EventOps.restated(st, rmEff, rmEvents, rmEvents.filter(lit(false)))
+      Tick(("removed" -> removedAll.unionByName(rmIds)) +:
+          EventOps.userStoreNames.map(n => n -> next(n)), persisted => {
         // probe the PERSISTED manifest snapshot for the clean flag (a
         // semi-probe over the in-memory anti-join lineage is true by
         // construction); every n_after counts the persisted bytes
         val maniDirty = persisted("manifest")
           .join(rmEff, Seq("user_id"), "left_semi").count()
-        def n(name: String) = persisted(name).count()
-        Seq(
-          ("manifest", mani.count(), n("manifest"), maniDirty == 0L),
-          ("sessions", sess.count(), n("sessions"), true),
-          ("attribution", attr.count(), n("attribution"), true),
-          ("funnel", userMass(fun), userMass(persisted("funnel")), true),
-          ("retention", ret.count(), n("retention"), true),
-          ("transitions", trans.count(), n("transitions"), true))
-          .toDF("artifact", "n_before", "n_after", "persisted_ok")
+        EventOps.userStoreNames.map { n =>
+          (n, EventOps.storeSize(n, st(n)), EventOps.storeSize(n, persisted(n)),
+            n != "manifest" || maniDirty == 0L)
+        }.toDF("artifact", "n_before", "n_after", "persisted_ok")
           .select(col("artifact"), col("n_before"), col("n_after"),
             (col("n_before") - col("n_after")).as("n_removed"),
             (col("n_after") <= col("n_before") && col("persisted_ok"))
@@ -1205,27 +1174,6 @@ object StreamOps {
       })
     }
   }
-
-  /** Total users over the funnel store's stages: the funnel row of the
-    * user takedown and quarantine ledgers. */
-  private def userMass(funnel: DataFrame): Long =
-    funnel.agg(coalesce(sum(col("n_users")), lit(0L))).head.getLong(0)
-
-  /** The six q284 event-derived stores the user takedown and
-    * quarantine sinks carry, under their snapshot names, with the
-    * count columns cast to long. */
-  private def eventStores(manifest: DataFrame, sessions: DataFrame,
-                          funnelStore: DataFrame, retentionStore: DataFrame,
-                          transitionStore: DataFrame,
-                          attributionStore: DataFrame): Seq[(String, DataFrame)] =
-    Seq("manifest" -> manifest, "sessions" -> sessions,
-      "attribution" -> attributionStore,
-      "funnel" -> funnelStore.select(col("stage"),
-        col("n_users").cast("long").as("n_users")),
-      "retention" -> retentionStore.select(col("cohort_week"),
-        col("week_offset"), col("n_active").cast("long").as("n_active")),
-      "transitions" -> transitionStore.select(col("event_type"),
-        col("next_type"), col("n_transitions").cast("long").as("n_transitions")))
 
   /** STREAMING user-level quarantine/restore — q290 live: legal-hold
     * requests arrive as a stream of (user_id, op ∈ quarantine|restore)
@@ -1236,14 +1184,15 @@ object StreamOps {
     * Per tick: effective quarantines = requested users not already
     * held (re-submission = honest no-op); effective restores =
     * requested users currently held and not re-quarantined this tick.
-    * Quarantine side stashes the users' events and applies exactly
-    * the q284 corrections (partitioned stores anti-join, aggregates
-    * decrement by the users' own d-frames, zero cells/edges drop);
-    * restore side re-derives the users' rows FROM THE STASH ALONE
-    * through the engine's own builders (per-user windows ⇒
-    * byte-identical conversation boundaries) and re-increments the
-    * aggregates by the identical d-frames, resurrecting dropped cells
-    * via full-outer folds — merge ≡ the decrement run backwards.
+    * The tick stashes the quarantined users' events and applies one
+    * [[EventOps.restatement]] with old = those events and nu = the
+    * restored users' events FROM THE STASH ALONE: partitioned stores
+    * anti-join the quarantined users and re-derive the restored users'
+    * rows through the engine's own builders (per-user windows ⇒
+    * byte-identical conversation boundaries); additive stores subtract
+    * the one side's count bodies and add the other's, so dropped cells
+    * resurrect and zero cells/edges drop — merge ≡ the decrement run
+    * backwards.
     *
     * The corrections are not idempotent, so the tick commits
     * atomically via [[TickCommit.sink]]: every store, the stash, and
@@ -1269,11 +1218,9 @@ object StreamOps {
     TickCommit.sink(requests, outPath, checkpointDir,
         Seq("held" -> Seq.empty[Long].toDF("user_id"),
           "stash" -> events.filter(lit(false))) ++
-        eventStores(manifest, sessions, funnelStore, retentionStore,
+        EventOps.userStores(manifest, sessions, funnelStore, retentionStore,
           transitionStore, attributionStore)) { (batch, tick, st) =>
-      val (held, stash, mani, sess, attr) = (st("held"), st("stash"),
-        st("manifest"), st("sessions"), st("attribution"))
-      val (fun, ret, trans) = (st("funnel"), st("retention"), st("transitions"))
+      val (held, stash) = (st("held"), st("stash"))
       val b = batch.localCheckpoint(false) // both request slices
       val qIds = b.filter(col("op") === "quarantine")
         .select(col("user_id")).distinct()
@@ -1288,84 +1235,26 @@ object StreamOps {
         .localCheckpoint(false)
       val effR = broadcast(rIds)
       val qEvents = events.join(effQ, Seq("user_id"), "left_semi")
-        .localCheckpoint(false) // stash + all quarantine d-frames
+        .localCheckpoint(false) // stash + the old count bodies
       val rEvents = stash.join(effR, Seq("user_id"), "left_semi")
-        .localCheckpoint(false) // restore re-derive + d-frames
-      // partitioned stores: anti-join the quarantined, union the
-      // restored users' re-derived rows (from the stash alone)
-      def roundTrip(store: DataFrame, rederived: DataFrame): DataFrame = {
-        val cols = store.columns.map(col(_))
-        store.join(effQ, Seq("user_id"), "left_anti")
-          .select(cols: _*)
-          .unionByName(rederived.select(cols: _*))
-      }
-      val mani2 = roundTrip(mani, TemporalOps.sessionPackManifest(rEvents))
-      val sess2 = roundTrip(sess, EventOps.sessionize(rEvents))
-      val attr2 = roundTrip(attr, EventOps.lastTouchAttribution(rEvents))
-      // aggregates: decrement by the quarantined users' d-frames,
-      // re-increment by the restored users' (the exact inverse)
-      val dReachQ = broadcast(EventOps.removedReach(qEvents))
-      val dReachR = broadcast(EventOps.removedReach(rEvents))
-      def funnelShift(df: DataFrame, reach: DataFrame,
-                      sign: Long): DataFrame = df.crossJoin(reach)
-        .select(col("stage"),
-          (col("n_users") + lit(sign) *
-            when(col("stage") === "view", col("d1"))
-              .when(col("stage") === "click", col("d2"))
-              .otherwise(col("d3"))).cast("long").as("n_users"))
-      val fun2 = funnelShift(funnelShift(fun, dReachQ, -1L), dReachR, 1L)
-      def firstWeek(ev: DataFrame) = ev.groupBy(col("user_id"))
-        .agg(date_trunc("week", min(col("ts"))).cast("date")
-          .as("cohort_week"))
-      val dCellsQ = broadcast(
-        EventOps.removedRetentionCells(qEvents, firstWeek(qEvents)))
-      // the restore d-frames join full outer, which cannot build a
-      // broadcast right side, so they carry no broadcast hint
-      val dCellsR = EventOps.removedRetentionCells(rEvents, firstWeek(rEvents))
-      val ret2 = ret.join(dCellsQ, Seq("cohort_week", "week_offset"),
-          "left_outer")
-        .select(col("cohort_week"), col("week_offset"),
-          (col("n_active") - coalesce(col("d"), lit(0L))).cast("long")
-            .as("n_active"))
-        .filter(col("n_active") > 0) // a rebuild never emits 0 cells
-        .join(dCellsR, Seq("cohort_week", "week_offset"), "full_outer")
-        .select(col("cohort_week"), col("week_offset"),
-          (coalesce(col("n_active"), lit(0L)) +
-            coalesce(col("d"), lit(0L))).cast("long").as("n_active"))
-      val dEdgesQ = broadcast(EventOps.removedEdges(qEvents))
-      val dEdgesR = EventOps.removedEdges(rEvents)
-      val trans2 = trans.join(dEdgesQ, Seq("event_type", "next_type"),
-          "left_outer")
-        .select(col("event_type"), col("next_type"),
-          (col("n_transitions") - coalesce(col("d"), lit(0L)))
-            .cast("long").as("n_transitions"))
-        .filter(col("n_transitions") > 0)
-        .join(dEdgesR, Seq("event_type", "next_type"), "full_outer")
-        .select(col("event_type"), col("next_type"),
-          (coalesce(col("n_transitions"), lit(0L)) +
-            coalesce(col("d"), lit(0L))).cast("long")
-            .as("n_transitions"))
+        .localCheckpoint(false) // re-derivations + the new count bodies
+      // the restored users hold no rows, so only the quarantined ones
+      // anti-join
+      val next = EventOps.restated(st, effQ, qEvents, rEvents)
       // atomic tick: stage everything, then probe the persisted
       // manifest and write the ledger over the persisted bytes before
       // the seal
       Tick(Seq(
         "held" -> held.unionByName(qIds).join(effR, Seq("user_id"), "left_anti"),
-        "stash" -> stash.join(effR, Seq("user_id"), "left_anti").unionByName(qEvents),
-        "manifest" -> mani2, "sessions" -> sess2,
-        "attribution" -> attr2, "funnel" -> fun2, "retention" -> ret2,
-        "transitions" -> trans2), persisted => {
+        "stash" -> stash.join(effR, Seq("user_id"), "left_anti").unionByName(qEvents)) ++
+        EventOps.userStoreNames.map(n => n -> next(n)), persisted => {
         val maniDirty = persisted("manifest")
           .join(effQ, Seq("user_id"), "left_semi").count()
         val (nQ, nR) = (qIds.count(), rIds.count())
-        def n(name: String) = persisted(name).count()
-        Seq(
-          ("manifest", mani.count(), n("manifest"), maniDirty == 0L),
-          ("sessions", sess.count(), n("sessions"), true),
-          ("attribution", attr.count(), n("attribution"), true),
-          ("funnel", userMass(fun), userMass(persisted("funnel")), true),
-          ("retention", ret.count(), n("retention"), true),
-          ("transitions", trans.count(), n("transitions"), true),
-          ("stash", stash.count(), n("stash"), true))
+        (EventOps.userStoreNames.map { n =>
+          (n, EventOps.storeSize(n, st(n)), EventOps.storeSize(n, persisted(n)),
+            n != "manifest" || maniDirty == 0L)
+        } :+ (("stash", stash.count(), persisted("stash").count(), true)))
           .toDF("artifact", "n_before", "n_after", "persisted_ok")
           .select(col("artifact"), col("n_before"), col("n_after"),
             lit(nQ).as("n_quarantined"), lit(nR).as("n_restored"),

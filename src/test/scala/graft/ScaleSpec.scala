@@ -38,11 +38,20 @@ class ScaleSpec extends SparkSpec {
     val o = PartitionedTables.ordersBucketedFor(Tables.orders(spark, sf))
     val c = PartitionedTables.customerBucketedFor(Tables.customer(spark, sf))
     val joined = o.join(c, o("o_custkey") === c("c_custkey"))
-    val plan = joined.queryExecution.executedPlan.toString
+    // with broadcasting off the join must be a sort-merge join, which
+    // shuffles both sides unless the layout pre-distributes them
+    // (a broadcast join has no hash exchange whatever the layout)
+    val conf = spark.conf
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = conf.getOption(threshold)
+    val plan = try {
+      conf.set(threshold, "-1")
+      joined.queryExecution.executedPlan.toString
+    } finally saved.fold(conf.unset(threshold))(conf.set(threshold, _))
     // both sides are pre-distributed by the bucketing — a hash exchange
     // under the join would mean the layout was ignored
-    assert(!plan.contains("Exchange hashpartitioning"),
-      s"bucketed join must not shuffle either side:\n$plan")
+    assert(plan.contains("SortMergeJoin") && !plan.contains("Exchange hashpartitioning"),
+      s"bucketed join must sort-merge without shuffling either side:\n$plan")
     val ro = Tables.orders(spark, sf)
     val rc = Tables.customer(spark, sf)
     assert(joined.count() == ro.join(rc, ro("o_custkey") === rc("c_custkey")).count())
@@ -98,20 +107,27 @@ class ScaleSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf)
     // q61's edge set (capped exhaustive Jaccard) and q70's sketch set
     val exact = DedupOps.jaccardPairs(docs).select(col("doc_i"), col("doc_j"))
-    val (labels, st) = DedupOps.connectedComponentsWithStats(
-      docs.select(col("doc_id")), exact)
-    info(s"q61 edge set: nodes=${st.nodes} symEdges=${st.symEdges} rounds=${st.rounds}")
-    assert(labels.count() == st.nodes)
+    // one propagation run: (labels, nodes, directed symmetric edges —
+    // 2× the input pairs —, rounds to fixpoint incl. the detection round)
+    def converge(edges: org.apache.spark.sql.DataFrame) = {
+      val (labels, rounds, nodes, sym) =
+        DedupOps.ccRun(docs.select(col("doc_id")), edges, maxIter = 100)
+      val symEdges = sym.count()
+      sym.unpersist(blocking = false)
+      (labels, nodes, symEdges, rounds)
+    }
+    val (labels, nodes, symEdges, rounds) = converge(exact)
+    info(s"q61 edge set: nodes=$nodes symEdges=$symEdges rounds=$rounds")
+    assert(labels.count() == nodes)
     // rounds = cluster diameter + 1 detection round; near-dup clusters
     // are shallow, so propagation must finish far below the maxIter
     // guard (recorded per scale factor in SCALE.md)
-    assert(st.rounds <= 8, s"expected shallow clusters, took ${st.rounds} rounds")
+    assert(rounds <= 8, s"expected shallow clusters, took $rounds rounds")
     val sketch = DedupOps.minhashPairsFor(docs)
       .filter(col("est_jaccard") >= 0.5).select(col("doc_i"), col("doc_j"))
-    val (_, st2) = DedupOps.connectedComponentsWithStats(
-      docs.select(col("doc_id")), sketch)
-    info(s"minhash edge set: nodes=${st2.nodes} symEdges=${st2.symEdges} rounds=${st2.rounds}")
-    assert(st2.rounds <= 8)
+    val (_, nodes2, symEdges2, rounds2) = converge(sketch)
+    info(s"minhash edge set: nodes=$nodes2 symEdges=$symEdges2 rounds=$rounds2")
+    assert(rounds2 <= 8)
   }
 
   test("round-5 plan shapes: broadcast anti-join, single Expand, decorrelated semi join") {

@@ -1536,6 +1536,48 @@ class StreamingSpec extends SparkSpec {
     assert(led1.forall(_.getBoolean(5)), "tick-1 rows clean")
     assert(led1.forall(r => r.getLong(3) == 0L && r.getLong(4) == a.length.toLong),
       s"tick 1: zero effective quarantines (re-submission no-op), ${a.length} restores")
+    // tick 2, MIXED: re-quarantine some restored users and restore some
+    // held ones in the same tick — the one tick that subtracts and adds
+    // in one correction. The sink is rebuilt with its original
+    // arguments over the same outPath and checkpoint, so it resumes
+    // from sealed tick 1.
+    val (aq, br) = (a.take(math.max(1, a.length / 2)), b.take(math.max(1, b.length / 2)))
+    val q2 = StreamOps.streamingUserQuarantine(
+      input.toDS().toDF("user_id", "op"), ev, mani0, sess0, fun0, ret0,
+      trans0, attr0, out, ckpt)
+    try {
+      input.addData((aq.map(u => (u, "quarantine")) ++ br.map(u => (u, "restore"))).toSeq: _*)
+      q2.processAllAvailable()
+    } finally q2.stop()
+    val held2 = b.toSet -- br ++ aq
+    val kept2 = ev.join(held2.toSeq.toDF("user_id"), Seq("user_id"), "left_anti")
+      .localCheckpoint(false)
+    assert(maniKey(snap("manifest")) == maniKey(TemporalOps.sessionPackManifest(kept2)),
+      "mixed tick: manifest ≡ rebuild over events minus held")
+    assert(sessKey(snap("sessions")) == sessKey(EventOps.sessionize(kept2)),
+      "mixed tick: sessions ≡ rebuild")
+    assert(attrKey(snap("attribution")) == attrKey(EventOps.lastTouchAttribution(kept2)),
+      "mixed tick: attribution ≡ rebuild")
+    assert(snap("funnel").collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap ==
+      EventOps.funnel(kept2).collect()
+        .map(r => r.getString(1) -> r.getLong(2)).toMap,
+      "mixed tick: funnel ≡ rebuild stage counts")
+    assert(retKey(snap("retention")) == retKey(EventOps.retentionCohorts(kept2)),
+      "mixed tick: retention cells ≡ rebuild")
+    assert(trKey(snap("transitions")) == trKey(EventOps.eventTransitions(kept2)
+      .select(col("event_type"), col("next_type"), col("n_transitions"))),
+      "mixed tick: transitions ≡ rebuild")
+    assert(snap("held").collect().map(_.getLong(0)).toSet == held2)
+    assert(snap("stash").count() ==
+      ev.join(held2.toSeq.toDF("user_id"), Seq("user_id"), "left_semi").count(),
+      "mixed tick: the stash retains exactly the held users' raw events")
+    val led2 = spark.read.parquet(s"$out/ledger")
+      .filter(col("tick") === 2).collect()
+    assert(led2.nonEmpty && led2.forall(_.getBoolean(5)), "tick-2 rows clean")
+    assert(led2.forall(r => r.getLong(3) == aq.length.toLong &&
+        r.getLong(4) == br.length.toLong),
+      s"tick 2: ${aq.length} quarantines and ${br.length} restores in one tick")
   }
 
   test("streaming entity takedown equals the one-shot q276 re-close over the union") {
